@@ -68,7 +68,7 @@ def _resolve_source(engine, name: str) -> DataFrame:
             # raw parquet (rewriteRlsPolicy applies to every scan; PG
             # likewise runs COPY under the caller's policies)
             return engine.spark.table(name)
-        return engine.spark.read.parquet(engine.managed_tables._path(name))
+        return engine.managed_tables.scan(name)
     return engine.spark.table(name)
 
 
@@ -144,7 +144,7 @@ def try_handle_stmt(engine, query_text: str) -> DataFrame | None:
     else:  # FROM — target managed table must exist (copy.cpp semantics)
         if name not in engine.managed_tables.tables:
             raise KeyError(f"COPY FROM: managed table {name!r} does not exist")
-        target = engine.spark.read.parquet(engine.managed_tables._path(name))
+        target = engine.managed_tables.scan(name)
         schema = target.schema
         if fmt == "binary":
             df = readers.read_pg_binary(engine.spark, path, schema)

@@ -112,6 +112,15 @@ class TableManager:
             meta["barrier_csn"] = csn
 
     def _register_view(self, name: str) -> None:
+        """The post-mutation hook for code that changes a table's files
+        outside this class (partition DDL, recyclebin restore, rename):
+        the scan schema of the live generation is forgotten, since
+        those paths may have moved in files of another shape, then the
+        table is published."""
+        self.tables[name].pop("scan_schema", None)
+        self._publish(name)
+
+    def _publish(self, name: str) -> None:
         """THE single view-registration point after any write.  When
         the engine has RLS or masking state on this table, route
         through rls._refresh_views so DML never clobbers the
@@ -145,11 +154,69 @@ class TableManager:
         if meta.get("partition_spec") and meta.get("schema_ddl") \
                 and not self._has_data(name):
             return self.spark.createDataFrame([], meta["schema_ddl"])
-        df = self.spark.read.parquet(self._path(name))
+        df = self.scan(name)
         for hidden in (PART_COL, SUBPART_COL):
             if hidden in df.columns:
                 df = df.drop(hidden)
         return df
+
+    def scan(self, name: str) -> DataFrame:
+        """The live generation as stored: ``spark.read.parquet`` of its
+        directory, hidden partition-label columns included.
+
+        Spark infers a parquet schema with one job per read, so the
+        schema of the data columns is kept per generation: taken from
+        the first read, carried across appends and same-shape rewrites,
+        dropped by any write of another shape.  Directory partition
+        columns are left out of it and still discovered from the
+        directory names, as an inferring read types them from the
+        values present.  A partitioned table without data files reads
+        the inferring way, as before."""
+        name = name.lower()
+        meta = self.tables[name]
+        path = self._path(name)
+        gen = meta.get("gen", 0)
+        memo = meta.get("scan_schema")
+        if memo is not None and memo[0] == gen and not (
+            self._dir_cols(name) and not self._has_data(name)
+        ):
+            return self.spark.read.schema(memo[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        meta["scan_schema"] = (gen, self._data_schema(name, df))
+        return df
+
+    def _dir_cols(self, name: str) -> list[str]:
+        """Columns stored as directory names rather than in the files."""
+        meta = self.tables[name]
+        if meta.get("partition_spec"):
+            from .partition_ddl import PartitionSpec
+
+            return PartitionSpec.from_meta(
+                meta["partition_spec"]
+            ).partition_cols()
+        return [meta["partition_by"]] if meta.get("partition_by") else []
+
+    def _data_schema(self, name: str, df: DataFrame):
+        """``df``'s schema without the table's directory columns."""
+        from pyspark.sql.types import StructType
+
+        drop = {c.lower() for c in self._dir_cols(name)}
+        return StructType(
+            [f for f in df.schema.fields if f.name.lower() not in drop]
+        )
+
+    def _keeps_shape(self, name: str, df: DataFrame) -> bool:
+        """Whether writing ``df`` leaves the data columns' names and
+        types as the kept scan schema has them (nullability aside:
+        parquet reads every column as nullable)."""
+        memo = self.tables[name].get("scan_schema")
+        if memo is None:
+            return False
+
+        def shape(schema):
+            return [(f.name, f.dataType.simpleString()) for f in schema]
+
+        return shape(memo[1]) == shape(self._data_schema(name, df))
 
     def _has_data(self, name: str) -> bool:
         import glob as _glob
@@ -178,7 +245,7 @@ class TableManager:
             **(extra_meta or {}),
         }
         self._write(name, df, mode="overwrite")
-        return self.spark.read.parquet(self._path(name)).count()
+        return self.scan(name).count()
 
     def insert_into(self, name: str, df: DataFrame,
                     transform=None,
@@ -449,17 +516,9 @@ class TableManager:
         n_out = max(1, -(-total // target_file_bytes))
         compacting = self.next_gen_dir(name)
         shutil.rmtree(compacting, ignore_errors=True)
-        pcols = []
-        if self.tables[name].get("partition_by"):
-            pcols = [self.tables[name]["partition_by"]]
-        if self.tables[name].get("partition_spec"):
-            from .partition_ddl import PartitionSpec
-
-            # label column(s) already materialized on disk
-            pcols = PartitionSpec.from_meta(
-                self.tables[name]["partition_spec"]
-            ).partition_cols()
-        df = self.spark.read.parquet(path)
+        # label column(s) already materialized on disk
+        pcols = self._dir_cols(name)
+        df = self.scan(name)
         if pcols:
             # partitioned layout: compact WITHIN each partition dir
             # (repartition on the key; coalesce would merge across keys
@@ -479,7 +538,7 @@ class TableManager:
         # generational swap: the new generation becomes live, the old
         # one stays on disk so TIMECAPSULE can still read prior CSNs —
         # a reader never observes a partial table (PURGE reclaims)
-        self.bump_gen(name)
+        self.bump_gen(name, written=df)
         return before, len(
             _glob.glob(
                 os.path.join(self._path(name), "**", "part-*"),
@@ -540,7 +599,7 @@ class TableManager:
             if NO_HOME_MSG[:20] in str(e):
                 raise ValueError(NO_HOME_MSG) from None
             raise
-        self.bump_gen(name)
+        self.bump_gen(name, written=df)
 
     def _path(self, name: str) -> str:
         """The LIVE generation's directory.  gen 0 keeps the historic
@@ -558,11 +617,20 @@ class TableManager:
         """Target directory for the NEXT generation (not yet live)."""
         return self._gen_path(name, self.tables[name].get("gen", 0) + 1)
 
-    def bump_gen(self, name: str) -> None:
-        """Make the next generation live and commit its manifest."""
-        self.tables[name]["gen"] = self.tables[name].get("gen", 0) + 1
-        self.tables[name]["version"] += 1
-        self._register_view(name)
+    def bump_gen(self, name: str, written: DataFrame | None = None
+                 ) -> None:
+        """Make the next generation live and commit its manifest.
+        ``written`` is the frame the new generation was written from:
+        when it has the old generation's shape, the kept scan schema
+        carries over (see scan())."""
+        meta = self.tables[name]
+        keep = written is not None and self._keeps_shape(name, written)
+        memo = meta.pop("scan_schema", None)
+        meta["gen"] = meta.get("gen", 0) + 1
+        meta["version"] += 1
+        if keep:
+            meta["scan_schema"] = (meta["gen"], memo[1])
+        self._publish(name)
 
     def read_snapshot(self, name: str, csn: int) -> DataFrame:
         """The relation AS OF a commit sequence number — the
@@ -664,6 +732,8 @@ class TableManager:
             # (openGauss raises each skip to a WARNING); two bounded
             # count jobs, paid ONLY on the ignore path
             self.last_insert_skipped = n0 - df.count()
+        if not self._keeps_shape(name, df):
+            self.tables[name].pop("scan_schema", None)
         try:
             writer.parquet(self._path(name))
         except Exception as e:  # noqa: BLE001 — translate routing abort
@@ -673,7 +743,35 @@ class TableManager:
                 raise ValueError(NO_HOME_MSG) from None
             raise
         self.tables[name]["version"] += 1
-        self._register_view(name)
+        self._publish(name)
+
+
+class FlagCount:
+    """The number of rows of ``df`` whose boolean column ``flag`` is
+    true, counted by whatever action consumes ``.frame`` — the
+    ModifyTable affected-row count taken in the rewrite's own pass
+    (``DataFrame.observe``) instead of a separate count() job.
+
+    The flag is a column, not an expression, so no constant condition
+    can fold through the observation and let the optimizer prune it
+    (a DELETE without WHERE filters on a flag that is always true)."""
+
+    def __init__(self, df: DataFrame, flag: str):
+        from pyspark.sql import Observation
+
+        self._df, self._flag = df, flag
+        self._obs = Observation()
+        self.frame = df.observe(
+            self._obs, F.count_if(F.col(flag)).alias("n")
+        )
+
+    def value(self) -> int:
+        # a bounded wait (Observation.get blocks until the metric
+        # arrives, which is forever if no action ran the observed plan)
+        row = self._obs._jo.getRowOrEmpty()
+        if row.isDefined():
+            return int(row.get().getLong(0))
+        return self._df.filter(F.col(self._flag)).count()
 
 
 # OptTemp (gram.y:6480 CreateStmt): TEMPORARY | TEMP | LOCAL TEMP |
@@ -1141,7 +1239,7 @@ def _handle_alter_table(engine, query: str) -> DataFrame | None:
                 "declared schema lives in the catalog until the first "
                 "INSERT — recreate the table with the desired columns"
             )
-    df = engine.spark.read.parquet(mt._path(name))
+    df = mt.scan(name)
     mm = _ALTER_ADD.match(query)
     if mm:
         col, typ = mm.group("col").lower(), mm.group("type")
@@ -1467,7 +1565,7 @@ def _handle_update_from(engine, m: re.Match) -> DataFrame:
         )
     ta = (m.group("talias") or name).lower()
     sa = (m.group("salias") or m.group("src")).lower()
-    t = engine.spark.read.parquet(mt._path(name))
+    t = mt.scan(name)
     s = engine.spark.table(m.group("src").lower())
     tid = "__t_rowid"
     t2 = t.withColumn(tid, F.monotonically_increasing_id())
@@ -1502,7 +1600,6 @@ def _handle_update_from(engine, m: re.Match) -> DataFrame:
             for c, e in sets.items()
         ],
     )
-    n_hit = upd.count()
     merged = t2.join(upd, tid, "left")
     cols = []
     for f in t.schema.fields:
@@ -1530,7 +1627,9 @@ def _handle_update_from(engine, m: re.Match) -> DataFrame:
         returning = _returning_frame(
             engine, out.filter(F.col(flag)).drop(flag), m.group("ret")
         )
-    mt.rewrite(name, out.drop(flag))
+    hits = FlagCount(out, flag)
+    mt.rewrite(name, hits.frame.drop(flag))
+    n_hit = hits.value()
     if returning is not None:
         return returning
     return status_frame(engine.spark, ("UPDATE", name, n_hit), "tag STRING, tbl STRING, rows BIGINT")
@@ -1548,7 +1647,7 @@ def _handle_delete_using(engine, m: re.Match) -> DataFrame:
     mt = engine.managed_tables
     ta = (m.group("talias") or name).lower()
     sa = (m.group("salias") or m.group("src")).lower()
-    t = engine.spark.read.parquet(mt._path(name))
+    t = mt.scan(name)
     s = engine.spark.table(m.group("src").lower())
     tid = "__t_rowid"
     t2 = t.withColumn(tid, F.monotonically_increasing_id())
@@ -1558,14 +1657,22 @@ def _handle_delete_using(engine, m: re.Match) -> DataFrame:
     rls_pred = role_predicate(engine, name)
     if rls_pred is not None:
         doomed = doomed.filter(rls_pred)
-    n_del = doomed.count()
-    kept = t2.join(doomed.select(tid), tid, "left_anti").drop(tid)
     returning = None
     if m.group("ret"):
         returning = _returning_frame(
             engine, doomed.drop(tid), m.group("ret")
         )
-    mt.rewrite(name, kept)
+    # the semi join yields each target row at most once, so the left
+    # join flags the doomed rows without duplicating any
+    flag = "__del_hit"
+    marked = FlagCount(
+        t2.join(doomed.select(tid, F.lit(True).alias(flag)), tid, "left"),
+        flag,
+    )
+    mt.rewrite(
+        name, marked.frame.filter(F.col(flag).isNull()).drop(flag, tid)
+    )
+    n_del = marked.value()
     if returning is not None:
         return returning
     return status_frame(engine.spark, ("DELETE", name, n_del), "tag STRING, tbl STRING, rows BIGINT")
@@ -1859,7 +1966,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
             os.makedirs(mt.next_gen_dir(name), exist_ok=True)
             mt.bump_gen(name)
             return status_frame(engine.spark, ("TRUNCATE", name), "tag STRING, tbl STRING")
-        schema = engine.spark.read.parquet(mt._path(name)).schema
+        schema = mt.scan(name).schema
         # a fresh empty frame, NOT limit(0) of the path being
         # superseded — Spark refuses (or races) self-overwrites
         empty = engine.spark.createDataFrame([], schema)
@@ -1875,8 +1982,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         # write-path helper).
         name = m.group("name").lower()
         col = m.group("col")
-        path = engine.managed_tables._path(name)
-        df = engine.spark.read.parquet(path)
+        df = engine.managed_tables.scan(name)
         import shutil as _shutil
 
         compacting = engine.managed_tables.next_gen_dir(name)
@@ -1891,8 +1997,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
                 engine.managed_tables.tables[name]["partition_spec"]
             ).partition_cols()
             (
-                engine.spark.read.parquet(path)
-                .repartition(*pcols)
+                df.repartition(*pcols)
                 .sortWithinPartitions(*pcols, col)
                 .write.mode("overwrite")
                 .partitionBy(*pcols)
@@ -1905,7 +2010,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
             clustered.write.mode("overwrite").parquet(compacting)
         # data-only reorder: new generation goes live, old one stays
         # readable for TIMECAPSULE (no barrier — same rows)
-        engine.managed_tables.bump_gen(name)
+        engine.managed_tables.bump_gen(name, written=df)
         return status_frame(engine.spark, ("CLUSTER", name, col), "tag STRING, tbl STRING, key STRING")
     m = _CREATE_PLAIN.match(query)
     if m and not _re_is_ctas(query):
@@ -2119,7 +2224,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
 
         name = m.group("name").lower()
         check_privilege(engine, name, "update")
-        df = engine.spark.read.parquet(engine.managed_tables._path(name))
+        df = engine.managed_tables.scan(name)
         where = m.group("where") or "TRUE"
         cond = F.expr(where)
         # rewriteRlsPolicy.cpp applies policy quals to UPDATE scans
@@ -2128,12 +2233,11 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         if rls_pred is not None:
             cond = cond & rls_pred
         sets = dict(_split_set_clauses(m.group("sets")))
-        upd_skipped = 0
         if ignore_hint:
             # UPDATE /*+ ignore_error */ (sql_ignore): rows whose NEW
             # enum value would abort keep their OLD values — the hit
             # condition narrows to valid rows, the skipped count is
-            # the difference (two bounded counts, hint path only)
+            # the difference (one more count, hint path only)
             enum_cols = (engine.managed_tables.tables[name]
                          .get("enum_cols") or {})
             n_want = df.filter(cond).count()
@@ -2148,10 +2252,6 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
                     f"(({texpr}) IS NULL OR array_contains({arr},"
                     f" CAST(({texpr}) AS STRING)))"
                 )
-            n_hit = df.filter(cond).count()
-            upd_skipped = n_want - n_hit
-        else:
-            n_hit = df.filter(cond).count()
         by_name = {f.name: f for f in df.schema.fields}
         gen_cols = engine.managed_tables.tables[name].get("generated") or {}
         bad = [c for c in sets if c in gen_cols]
@@ -2197,11 +2297,13 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
                 engine, updated_f.filter(F.col(flag)).drop(flag),
                 m.group("ret"),
             )
-        engine.managed_tables.rewrite(name, updated_f.drop(flag))
+        hits = FlagCount(updated_f, flag)
+        engine.managed_tables.rewrite(name, hits.frame.drop(flag))
+        n_hit = hits.value()
         if returning is not None:
             return returning
         if ignore_hint:
-            return status_frame(engine.spark, ("UPDATE", name, n_hit, int(upd_skipped)), "tag STRING, tbl STRING, rows BIGINT, skipped BIGINT",)
+            return status_frame(engine.spark, ("UPDATE", name, n_hit, n_want - n_hit), "tag STRING, tbl STRING, rows BIGINT, skipped BIGINT",)
         return status_frame(engine.spark, ("UPDATE", name, n_hit), "tag STRING, tbl STRING, rows BIGINT")
     m = _DELETE.match(query)
     if m and m.group("name").lower() in engine.managed_tables.tables:
@@ -2212,27 +2314,27 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
 
         name = m.group("name").lower()
         check_privilege(engine, name, "delete")
-        df = engine.spark.read.parquet(engine.managed_tables._path(name))
+        df = engine.managed_tables.scan(name)
         where = m.group("where")
         # policy quals apply to DELETE scans as well: a restricted role
         # may only delete rows its policies expose
         rls_pred = role_predicate(engine, name)
-        if where is None and rls_pred is None:
-            kept = df.limit(0)
-            deleted = df
-            n_del = df.count()
-        else:
-            cond = F.expr(where) if where is not None else F.lit(True)
-            if rls_pred is not None:
-                cond = cond & rls_pred
-            deleted = df.filter(cond)
-            n_del = deleted.count()
-            kept = df.filter(~cond | cond.isNull())
+        cond = F.expr(where) if where is not None else F.lit(True)
+        if rls_pred is not None:
+            cond = cond & rls_pred
         returning = None
         if m.group("ret"):
             # OLD row values, as PG's DELETE RETURNING
-            returning = _returning_frame(engine, deleted, m.group("ret"))
-        engine.managed_tables.rewrite(name, kept)
+            returning = _returning_frame(
+                engine, df.filter(cond), m.group("ret")
+            )
+        flag = "__del_hit"
+        doomed = FlagCount(df.select("*", cond.alias(flag)), flag)
+        fc = F.col(flag)
+        engine.managed_tables.rewrite(
+            name, doomed.frame.filter(~fc | fc.isNull()).drop(flag)
+        )
+        n_del = doomed.value()
         if returning is not None:
             return returning
         return status_frame(engine.spark, ("DELETE", name, n_del), "tag STRING, tbl STRING, rows BIGINT")

@@ -394,7 +394,7 @@ def try_handle_stmt(engine, query: str):
     talias = (m.group("talias") or m.group("target")).lower()
     salias = (m.group("salias") or
               (src_text if not src_text.startswith("(") else "s")).lower()
-    target = engine.spark.read.parquet(mt._path(tname))
+    target = mt.scan(tname)
 
     on_text = _norm_aliases(m.group("on"), talias, salias)
     keys: list[str] = []
@@ -522,7 +522,7 @@ def try_handle_stmt(engine, query: str):
     )
     before = target.count()
     mt.rewrite(tname, merged)
-    after = engine.spark.read.parquet(mt._path(tname)).count()
+    after = mt.scan(tname).count()
     return status_frame(engine.spark, ("MERGE", tname, before, after), "tag STRING, tbl STRING, rows_before BIGINT, rows_after BIGINT",)
 
 

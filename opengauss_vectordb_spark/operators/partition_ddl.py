@@ -527,7 +527,7 @@ def pruned_scan(engine, name: str, predicate: str) -> DataFrame:
     )
     if spec is None or not mt._has_data(name):
         return mt.read(name).filter(F.expr(predicate))
-    df = engine.spark.read.parquet(mt._path(name))
+    df = mt.scan(name)
     # resolve declared key types from the typed scan so hash pruning
     # hashes literals exactly as the write-side routing did
     types = {f.name.lower(): f.dataType.simpleString()
@@ -2239,7 +2239,7 @@ def split_subpartition(spark, sf_dir):
             " INTO (SUBPARTITION s_mid, SUBPARTITION s_low)"
         )
         rows = (
-            eng.spark.read.parquet(eng.managed_tables._path("spg"))
+            eng.managed_tables.scan("spg")
             .groupBy(PART_COL, SUBPART_COL)
             .agg(
                 F.count(F.lit(1)).alias("n"),

@@ -219,7 +219,7 @@ def _refresh_views(engine, only: str | None = None) -> None:
         if tbl not in engine.managed_tables.tables:
             continue  # state for a dropped table (purged on DROP, but
             # stay defensive: never read a nonexistent path)
-        base = engine.spark.read.parquet(engine.managed_tables._path(tbl))
+        base = engine.managed_tables.scan(tbl)
         if not has_privilege(engine, tbl, "select"):
             # the denial IS the view: base schema over a row source
             # whose FILTER raises — so every execution path, including

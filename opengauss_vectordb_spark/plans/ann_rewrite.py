@@ -78,10 +78,13 @@ class AnnCatalog:
             ids = [r.id for r in hits.collect()]
             qlit = F.array(*[F.lit(float(v)) for v in qvec])
             dist = DISTANCES[metric](as_double(F.col(vec_col)), qlit)
+            # the limit makes the sort a TakeOrderedAndProject (one
+            # job); a bare orderBy plans a range-partitioned full sort
             return (
                 df.filter(F.col(id_col).isin(ids))
                 .withColumn("distance", dist)
                 .orderBy(F.col("distance").asc(), F.col(id_col).asc())
+                .limit(k)
             )
         if idx is not None and idx.metric == metric:
             return idx.search(

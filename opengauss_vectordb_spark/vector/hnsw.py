@@ -458,11 +458,22 @@ class HnswIndex:
         graph.write.mode("overwrite").partitionBy("shard").parquet(
             os.path.join(path, "graph")
         )
+        idx._graph_changed()
         return idx
 
     # ---------------------------------------------------------------- load
     def graph(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.path, "graph"))
+        """The graph table, as a memoized lazy handle (no schema
+        inference job per search); build, append and vacuum_delete
+        drop it after they rewrite the layout."""
+        from ..catalog import parquet_handle
+
+        return parquet_handle(spark, os.path.join(self.path, "graph"))
+
+    def _graph_changed(self) -> None:
+        from ..catalog import invalidate_table_cache
+
+        invalidate_table_cache(os.path.join(self.path, "graph"))
 
     # --------------------------------------------------------------- append
     def append(self, spark: SparkSession, new_rows: DataFrame, vec_col: str,
@@ -555,6 +566,7 @@ class HnswIndex:
             if os.path.exists(old):
                 shutil.rmtree(old)
         shutil.rmtree(staging, ignore_errors=True)
+        self._graph_changed()
 
     # --------------------------------------------------------------- search
     def search(self, spark: SparkSession, qvec: Sequence[float], k: int = 10,
@@ -639,6 +651,7 @@ class HnswIndex:
                 os.makedirs(dst_part)  # every node in the shard died
             shutil.rmtree(old)
         shutil.rmtree(staging, ignore_errors=True)
+        self._graph_changed()
 
     def search_filtered(self, spark: SparkSession, base: DataFrame,
                         id_col: str, where, qvec: Sequence[float],

@@ -22,9 +22,11 @@ Spark-first design for 100 TB:
     search is *partition pruning*: Spark reads only `probes`/`lists` of
     the data from disk. That is the distributed analogue of the
     reference's inverted lists.
-  * search = rank centroids driver-side (≤32768 rows — tiny) → pruned
-    scan of the probed partitions → TakeOrderedAndProject(k). A query
-    batch shares one pruned scan via an equi-join on list_id.
+  * search = rank centroids driver-side (≤32768 rows — tiny, held by
+    the index object) → pruned scan of the probed partitions →
+    TakeOrderedAndProject(2k) → spill dedup → top k on that one
+    partition: one Spark job, no Exchange. A query batch shares one
+    pruned scan via an equi-join on list_id.
 
 HNSW lives in `vector/hnsw.py` as SHARDED independent graphs (one
 giant pointer-chasing graph does not distribute; S per-shard graphs
@@ -216,6 +218,87 @@ def _pack_bits(B: np.ndarray) -> np.ndarray:
     return out
 
 
+def _popcount(x: np.ndarray) -> np.ndarray:
+    """Set bits per int64 (two's complement, as Long.bitCount)."""
+    x = np.ascontiguousarray(x, dtype=np.int64)
+    bits = np.unpackbits(x.view(np.uint8).reshape(*x.shape, 8), axis=-1)
+    return bits.sum(axis=-1).astype(np.float64)
+
+
+def centroid_distances(
+    C: np.ndarray, qvec: Sequence[float], metric: str
+) -> np.ndarray:
+    """Distance from the query to every centroid row, equal bit for bit
+    to the JVM kernels of ``distance.py`` with the centroid as the left
+    operand: each one is a left-to-right fold in double over the
+    dimension, seeded with 0.0, here run for all centroids at once.
+    Returns an object array of floats (ints for hamming) and ``None``
+    for SQL NULL: ``zip_with`` pads the shorter array with NULL, so a
+    query of another dimension is NULL, except where the cosine
+    kernel's zero-norm branch answers NaN first."""
+    n, dim = C.shape
+    same = len(qvec) == dim
+    if metric == "hamming":
+        if not same:
+            return np.array([None] * n, dtype=object)
+        q = np.array([int(x) for x in qvec], dtype=np.int64)
+        W = C.astype(np.int64)
+        acc = np.zeros(n)
+        for j in range(dim):
+            acc = acc + _popcount(W[:, j] ^ q[j])
+        return np.array([int(v) for v in acc], dtype=object)
+    q = np.array([float(x) for x in qvec], dtype=np.float64)
+
+    def fold(term):
+        acc = np.zeros(n)
+        for j in range(dim):
+            acc = acc + term(C[:, j], q[j])
+        return acc
+
+    with np.errstate(all="ignore"):
+        if metric == "cosine":
+            cn = np.zeros(n)
+            for j in range(dim):
+                cn = cn + C[:, j] * C[:, j]
+            qn = 0.0
+            for x in q:
+                qn = qn + x * x
+            denom = np.sqrt(cn) * np.sqrt(qn)
+            if not same:
+                return np.array(
+                    [float("nan") if d == 0.0 else None for d in denom],
+                    dtype=object,
+                )
+            d = np.where(
+                denom == 0.0, np.nan, 1.0 - fold(lambda x, y: x * y) / denom
+            )
+        elif not same:
+            return np.array([None] * n, dtype=object)
+        elif metric == "l2":
+            d = np.sqrt(fold(lambda x, y: (x - y) * (x - y)))
+        elif metric == "ip":
+            d = -fold(lambda x, y: x * y)
+        elif metric == "l1":
+            d = fold(lambda x, y: np.abs(x - y))
+        else:
+            raise ValueError(f"unknown metric {metric!r}")
+    return d.astype(object)
+
+
+def rank_lists(dists: np.ndarray, probes: int) -> list[int]:
+    """List ids (row positions) of the ``probes`` smallest distances in
+    Spark's ascending order: numbers (-0.0 equal to 0.0), then NaN,
+    then NULL last; ties broken by list id."""
+    cat = np.array(
+        [2 if d is None else 1 if d != d else 0 for d in dists]
+    )
+    vals = np.array(
+        [float(d) + 0.0 if c == 0 else 0.0 for d, c in zip(dists, cat)]
+    )
+    order = np.lexsort((np.arange(len(dists)), vals, cat))
+    return [int(i) for i in order[:max(0, probes)]]
+
+
 class IvfIndex:
     """An IVF index = centroid table + data table partitioned by list_id."""
 
@@ -229,6 +312,9 @@ class IvfIndex:
         self.path = path
         self.metric = metric
         self.lists = lists
+        # centroid matrix, row i = list i: set by build(), else loaded
+        # once by centroids()
+        self._centroids: np.ndarray | None = None
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -312,6 +398,9 @@ class IvfIndex:
         from ..catalog import invalidate_table_cache
 
         invalidate_table_cache(path)  # rebuilds rewrite in place
+        idx._centroids = np.array(
+            [[float(x) for x in c] for c in centroids], dtype=np.float64
+        )
         return idx
 
     # ---------------------------------------------------------------- load
@@ -321,38 +410,39 @@ class IvfIndex:
         return parquet_handle(spark, os.path.join(self.path, "data"))
 
     # --------------------------------------------------------------- search
+    def centroids(self, spark: SparkSession) -> np.ndarray:
+        """The centroid matrix (row i = list i): the one build() fitted,
+        or the stored table read once per index object."""
+        if self._centroids is None:
+            from ..catalog import parquet_handle
+
+            rows = parquet_handle(
+                spark, os.path.join(self.path, "centroids")
+            ).collect()
+            self._centroids = np.array(
+                [list(c) for _, c in sorted(
+                    (r.list_id, r.centroid) for r in rows
+                )],
+                dtype=np.float64,
+            )
+        return self._centroids
+
     def _probe_lists(
         self, spark: SparkSession, qvec: Sequence[float], probes: int
     ) -> list[int]:
-        """Rank centroids by distance to the query (ivfscan.cpp:31-100's
-        pairing heap) with the same JVM distance kernels as knn_join —
-        only the `probes` winning list ids come back to the driver (they
-        must: they parameterize the partition-pruning filter). No
-        per-element Python loop even at the 32768-list maximum."""
-        from ..catalog import parquet_handle
-
-        cents = parquet_handle(
-            spark, os.path.join(self.path, "centroids")
+        """Rank centroids by distance to the query (ivfscan.cpp:31-100
+        ranks its lists in process too) and return the ``probes``
+        winning list ids, which parameterize the partition-pruning
+        filter.  The ranking runs on the driver over the held centroid
+        matrix with the JVM kernels' fold order and Spark's
+        (distance, list_id) sort order, so it picks the lists an
+        ``orderBy(_d, list_id)`` over the centroid table would, without
+        a Spark job; the fold is vectorized across centroids, so the
+        32768-list maximum is no per-element Python loop."""
+        return rank_lists(
+            centroid_distances(self.centroids(spark), qvec, self.metric),
+            probes,
         )
-        if self.metric == "hamming":
-            from .distance import hamming_distance
-
-            q = F.expr(
-                "array(" + ",".join(f"{int(x)}L" for x in qvec) + ")"
-            )
-            d = hamming_distance(F.col("centroid").cast("array<bigint>"), q)
-        else:
-            from .distance import dlit_array
-
-            dist_fn = DISTANCES[self.metric]
-            q = dlit_array(qvec)
-            d = dist_fn(F.col("centroid"), q)
-        ranked = (
-            cents.select("list_id", d.alias("_d"))
-            .orderBy(F.col("_d").asc_nulls_last(), F.col("list_id").asc())
-            .limit(probes)
-        )
-        return [r.list_id for r in ranked.collect()]
 
     def search(
         self,
@@ -376,21 +466,31 @@ class IvfIndex:
         pruned = self.data(spark).filter(F.col("list_id").isin(lists)).drop("list_id")
         if where is not None:
             pruned = pruned.filter(where)
-        # spill assignment can place one row in two probed lists → dedup
-        pruned = pruned.dropDuplicates([id_col] if id_col else None)
+        order = [F.col("distance").asc_nulls_last()]
+        if id_col:
+            order.append(F.col(id_col).asc())
         if self.metric == "hamming":
             from .distance import hamming_distance
 
             q = F.array(*[F.lit(int(x)).cast("long") for x in qvec])
             d = hamming_distance(F.col(vec_col).cast("array<bigint>"), q)
-            out = pruned.filter(F.col(vec_col).isNotNull()).withColumn(
-                "distance", d
+            nearest = (
+                pruned.filter(F.col(vec_col).isNotNull())
+                .withColumn("distance", d)
+                .orderBy(*order).limit(2 * k)
             )
-            order = [F.col("distance").asc_nulls_last()]
-            if id_col:
-                order.append(F.col(id_col).asc())
-            return out.orderBy(*order).limit(k)
-        return exact_knn(pruned, vec_col, qvec, k=k, metric=self.metric, id_col=id_col)
+        else:
+            nearest = exact_knn(pruned, vec_col, qvec, k=2 * k,
+                                metric=self.metric, id_col=id_col)
+        # spill assignment puts a row in at most two lists, and both
+        # copies sort together, so the 2k nearest rows of the probed
+        # lists hold the k nearest distinct rows: the dedup and the
+        # final cut run on the single partition the first top-k left
+        # (no shuffle, one job)
+        return (
+            nearest.dropDuplicates([id_col] if id_col else None)
+            .orderBy(*order).limit(k)
+        )
 
     def knn_join(
         self,

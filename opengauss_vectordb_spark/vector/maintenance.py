@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,14 +40,11 @@ def append_to_index(
     """Insert-path parity: label new vectors with the index's existing
     centroids and append them to the partitioned data layout. No existing
     partitions are rewritten — each probe list gains one new file per
-    append batch (compact() folds them)."""
-    cents = np.array(
-        [c for _, c in sorted(
-            (r.list_id, list(r.centroid))
-            for r in spark.read.parquet(os.path.join(index.path, "centroids")).collect()
-        )],
-        dtype=np.float64,
-    )
+    append batch (compact() folds them).  Only the data handle goes
+    stale: the centroids the rows were labeled with stay as they are."""
+    from ..catalog import invalidate_table_cache
+
+    cents = index.centroids(spark)
     labeled = new_rows.filter(F.col(vec_col).isNotNull()).withColumn(
         "list_id",
         F.explode(
@@ -63,7 +59,7 @@ def append_to_index(
         .partitionBy("list_id")
         .parquet(os.path.join(index.path, "data"))
     )
-    _invalidate(index)
+    invalidate_table_cache(os.path.join(index.path, "data"))
 
 
 def compact(spark: SparkSession, index: IvfIndex, target_partitions: int = 1) -> None:

@@ -1,0 +1,311 @@
+"""Spark job budgets of the statement and ANN paths, and the exactness
+contracts that let them skip their metadata jobs:
+
+* managed-table DML runs one job per statement: the table's scan schema
+  is kept per generation instead of re-inferred (one job per read), and
+  UPDATE/DELETE count their rows on the rewrite's own write;
+* a routed IVF search runs one job: the probe lists are ranked on the
+  driver over the held centroid matrix, bit for bit as the JVM kernels
+  rank them, and the spill dedup runs on the top-k's single partition;
+* ``append_to_index`` labels with the held centroids.
+"""
+
+from __future__ import annotations
+
+import os
+import time
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from opengauss_vectordb_spark.engine import Engine
+from tests.conftest import SF_SMOKE
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran) under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"budget-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def eng(spark, tmp_path):
+    e = Engine(spark, SF_SMOKE)
+    e.managed_tables.root = str(tmp_path / "wh")
+    return e
+
+
+def _check_scan(spark, mt, name):
+    """The live generation has a kept scan schema, reading with it runs
+    no job, and it equals what an inferring read of the same directory
+    reports: column order, types and nullability."""
+    meta = mt.tables[name]
+    assert meta["scan_schema"][0] == meta.get("gen", 0)
+    got, n = _jobs(spark, lambda: mt.scan(name).schema)
+    assert n == 0
+    want = spark.read.parquet(mt._path(name)).schema
+    assert [(f.name, f.dataType, f.nullable) for f in got] == \
+        [(f.name, f.dataType, f.nullable) for f in want]
+
+
+def _status(eng, sql):
+    return eng.sql(sql).collect()[0]
+
+
+# ------------------------------------------------------------ job budgets
+
+def test_dml_statements_run_one_job(spark, eng):
+    eng.sql("CREATE TABLE jb AS SELECT o_orderkey AS k, o_totalprice AS p"
+            " FROM orders WHERE o_orderkey < 100")
+    for stmt in (
+        "INSERT INTO jb VALUES (100000, 1.5)",
+        "INSERT INTO jb SELECT o_orderkey + 200000, o_totalprice"
+        " FROM orders WHERE o_orderkey < 40",
+        "UPDATE jb SET p = p + 1 WHERE k < 50",
+        "DELETE FROM jb WHERE k > 90",
+    ):
+        _, n = _jobs(spark, lambda s=stmt: eng.sql(s).collect())
+        assert n == 1, (stmt, n)
+
+
+def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng,
+                                                         tmp_path):
+    eng.create_ivf_index("embeddings", "embedding", str(tmp_path / "ivf"),
+                         lists=4)
+    eng.sql("SET ivfflat.probes = 2")
+    q = "[" + ",".join(["0.1"] * 64) + "]"
+    stmt = (f"SELECT vec_id FROM embeddings ORDER BY embedding <-> '{q}'"
+            " LIMIT 10")
+    # the first search infers the layout's schema once (a memoized
+    # handle); every later one is a single job
+    eng.sql(stmt).collect()
+    df, n_build = _jobs(spark, lambda: eng.sql(stmt))
+    rows, n_run = _jobs(spark, df.collect)
+    assert (n_build, n_run) == (0, 1)
+    assert len(rows) == 10
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+
+
+def _vectors(spark, n, dim, seed, offset=0):
+    rng = np.random.default_rng(seed)
+    X = rng.random((n, dim))
+    return spark.createDataFrame(
+        [(offset + i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "id BIGINT, v ARRAY<DOUBLE>",
+    )
+
+
+def test_spill_dedup_search_is_exact_at_full_probes(spark, tmp_path):
+    """With every row spilled into two lists, the top-2k → dedup →
+    top-k search at probes=lists equals the exact scan."""
+    from opengauss_vectordb_spark.vector.exact import knn
+    from opengauss_vectordb_spark.vector.ivf import IvfIndex
+
+    df = _vectors(spark, 300, 4, 5)
+    idx = IvfIndex.build(df, "v", str(tmp_path / "i"), lists=4,
+                         max_iter=10, spill_epsilon=1e9)
+    assert idx.data(spark).count() > 300  # rows really sit in two lists
+    q = [0.3, 0.6, 0.2, 0.9]
+    got = idx.search(spark, q, "v", k=10, probes=4, id_col="id")
+    want = knn(df, "v", q, k=10, id_col="id")
+    assert [tuple(r) for r in got.collect()] == \
+        [tuple(r) for r in want.collect()]
+
+
+def test_append_to_index_does_not_read_centroids(spark, tmp_path):
+    from opengauss_vectordb_spark.vector.ivf import IvfIndex
+    from opengauss_vectordb_spark.vector.maintenance import append_to_index
+
+    idx = IvfIndex.build(_vectors(spark, 200, 3, 7), "v",
+                         str(tmp_path / "i"), lists=4, max_iter=10)
+    cents = os.path.join(idx.path, "centroids")
+    os.rename(cents, cents + ".away")
+    append_to_index(spark, idx, _vectors(spark, 20, 3, 8, offset=1000), "v")
+    os.rename(cents + ".away", cents)
+    got = idx.search(spark, [0.5, 0.5, 0.5], "v", k=500, probes=4,
+                     id_col="id")
+    assert {r.id for r in got.collect()} == set(range(200)) | set(
+        range(1000, 1020))
+
+
+# ------------------------------------------------- driver probe ranking
+
+def _jvm_ranking(spark, C, q, metric):
+    """The pre-driver-side ranking: distances by the JVM kernels over a
+    centroid table, ``orderBy(_d, list_id)``."""
+    from opengauss_vectordb_spark.vector.distance import (
+        DISTANCES,
+        dlit_array,
+        hamming_distance,
+    )
+
+    cents = spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+        "list_id INT, centroid ARRAY<DOUBLE>",
+    )
+    if metric == "hamming":
+        lit = F.expr("array(" + ",".join(f"{int(x)}L" for x in q) + ")")
+        d = hamming_distance(F.col("centroid").cast("array<bigint>"), lit)
+    else:
+        d = DISTANCES[metric](F.col("centroid"), dlit_array(q))
+    rows = (
+        cents.select("list_id", d.alias("_d"))
+        .orderBy(F.col("_d").asc_nulls_last(), F.col("list_id").asc())
+        .collect()
+    )
+    return [r.list_id for r in rows], {r.list_id: r._d for r in rows}
+
+
+def _same(a, b) -> bool:
+    if a is None or b is None:
+        return a is None and b is None
+    if a != a or b != b:
+        return a != a and b != b
+    return a == b
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine", "l1", "hamming"])
+def test_driver_probe_ranking_matches_jvm(spark, metric):
+    from opengauss_vectordb_spark.vector.ivf import (
+        centroid_distances,
+        rank_lists,
+    )
+
+    rng = np.random.default_rng(3)
+    dim = 6
+    if metric == "hamming":
+        C = rng.integers(0, 2**32, (10, dim)).astype(np.float64)
+        queries = [C[2].astype(np.int64).tolist(),
+                   rng.integers(0, 2**32, dim).tolist(),
+                   [0] * dim, [1] * (dim - 1), [1] * (dim + 1)]
+    else:
+        C = rng.normal(size=(10, dim))
+        queries = [C[2].tolist(), rng.normal(size=dim).tolist(),
+                   [0.0] * dim, [0.5] * (dim - 1), [0.5] * (dim + 1)]
+    # exact ties: duplicated centroids, and a zero row (cosine NaN)
+    C = np.vstack([C, C[4], C[2], np.zeros((1, dim))])
+    for q in queries:
+        order, jvm_d = _jvm_ranking(spark, C, q, metric)
+        d = centroid_distances(C, q, metric)
+        assert all(_same(d[i], jvm_d[i]) for i in range(len(C))), (q, d)
+        assert rank_lists(d, len(C)) == order, q
+        assert rank_lists(d, 3) == order[:3], q
+
+
+# ----------------------------------------------------- kept scan schema
+
+def test_scan_schema_tracks_every_statement_kind(spark, eng):
+    mt = eng.managed_tables
+    eng.sql("CREATE TABLE ks AS SELECT o_orderkey AS k, o_totalprice AS p,"
+            " o_orderstatus AS s FROM orders WHERE o_orderkey < 60")
+    _check_scan(spark, mt, "ks")
+    for stmt in (
+        "INSERT INTO ks VALUES (900001, 2.5, 'N')",
+        "INSERT INTO ks SELECT o_orderkey + 500000, o_totalprice,"
+        " o_orderstatus FROM orders WHERE o_orderkey < 30",
+        "UPDATE ks SET p = p * 2 WHERE s = 'F'",
+        "DELETE FROM ks WHERE k < 10",
+        "ALTER TABLE ks ADD COLUMN note varchar(10)",
+        "INSERT INTO ks VALUES (900002, 1.0, 'O', 'x')",
+        "ALTER TABLE ks DROP COLUMN s",
+        "UPDATE ks SET note = 'y'",
+        """MERGE INTO ks t USING (SELECT * FROM (VALUES
+               (CAST(900001 AS BIGINT), 7.0),
+               (CAST(900003 AS BIGINT), 8.0)) AS v(id, amt)) src
+           ON t.k = src.id
+           WHEN MATCHED THEN UPDATE SET p = src.amt
+           WHEN NOT MATCHED THEN INSERT (k, p, note)
+               VALUES (src.id, src.amt, 'm')""",
+        "TRUNCATE TABLE ks",
+        "INSERT INTO ks VALUES (1, 1.0, 'z')",
+    ):
+        eng.sql(stmt).collect()
+        _check_scan(spark, mt, "ks")
+    assert [f.name for f in mt.scan("ks").schema] == ["k", "p", "note"]
+
+
+def test_scan_schema_list_partitioned(spark, eng):
+    mt = eng.managed_tables
+    eng.sql("CREATE TABLE lp PARTITION BY (g) AS SELECT o_orderkey AS k,"
+            " o_totalprice AS p, CAST(o_orderkey % 3 AS INT) AS g"
+            " FROM orders WHERE o_orderkey < 60")
+    _check_scan(spark, mt, "lp")
+    for stmt in (
+        "INSERT INTO lp VALUES (700000, 1.0, 7)",
+        "UPDATE lp SET p = 0 WHERE g = 1",
+        "DELETE FROM lp WHERE g = 2",
+        "VACUUM FULL lp",
+    ):
+        eng.sql(stmt).collect()
+        _check_scan(spark, mt, "lp")
+    assert mt.scan("lp").columns[-1] == "g"
+
+
+def test_scan_schema_spec_partitioned(spark, eng):
+    mt = eng.managed_tables
+    eng.sql("CREATE TABLE sp (k bigint, v double) PARTITION BY RANGE (k) ("
+            "PARTITION p0 VALUES LESS THAN (10), "
+            "PARTITION pmax VALUES LESS THAN (MAXVALUE))")
+    for stmt in (
+        "INSERT INTO sp VALUES (1, 1.0), (15, 15.0), (NULL, 3.0)",
+        "UPDATE sp SET k = k + 10 WHERE k < 10",
+        "DELETE FROM sp WHERE v > 10",
+        "ALTER TABLE sp ADD COLUMN w int",
+        "INSERT INTO sp VALUES (2, 2.0, 5)",
+    ):
+        eng.sql(stmt).collect()
+        _check_scan(spark, mt, "sp")
+    eng.sql("TRUNCATE TABLE sp")
+    assert eng.sql("SELECT * FROM sp").columns == ["k", "v", "w"]
+    eng.sql("INSERT INTO sp VALUES (3, 3.0, 1)")
+    _check_scan(spark, mt, "sp")
+
+
+def test_scan_schema_after_timecapsule_restores(spark, eng):
+    mt = eng.managed_tables
+    eng.sql("CREATE TABLE tc (a int, b string)")
+    eng.sql("INSERT INTO tc VALUES (1, 'x'), (2, 'y')")
+    csn = mt.tables["tc"]["history"][-1]["csn"]
+    eng.sql("UPDATE tc SET b = 'z' WHERE a = 1")
+    eng.sql(f"TIMECAPSULE TABLE tc TO CSN {csn}")
+    _check_scan(spark, mt, "tc")
+    assert sorted(tuple(r) for r in eng.sql("SELECT * FROM tc").collect()) \
+        == [(1, "x"), (2, "y")]
+    eng.sql("DROP TABLE tc")
+    eng.sql("TIMECAPSULE TABLE tc TO BEFORE DROP")
+    _check_scan(spark, mt, "tc")
+
+
+# ------------------------------------------------- observed DML counts
+
+def test_dml_counts_with_null_predicates(spark, eng):
+    eng.sql("CREATE TABLE nc (k bigint, p double)")
+    eng.sql("INSERT INTO nc VALUES (1, 10.0), (2, NULL), (3, 30.0),"
+            " (4, NULL), (5, 50.0)")
+    assert _status(eng, "UPDATE nc SET p = p + 1 WHERE p > 20").rows == 2
+    # NULL never satisfies a predicate: neither updated nor deleted
+    assert _status(eng, "UPDATE nc SET p = 0 WHERE p = NULL").rows == 0
+    assert _status(eng, "DELETE FROM nc WHERE k = NULL").rows == 0
+    assert _status(eng, "DELETE FROM nc WHERE p < 40").rows == 2
+    left = sorted(tuple(r) for r in eng.sql("SELECT * FROM nc").collect())
+    assert left == [(2, None), (4, None), (5, 51.0)]
+    assert _status(eng, "DELETE FROM nc").rows == 3
+    assert eng.sql("SELECT * FROM nc").count() == 0
+
+
+def test_dml_counts_on_empty_tables(spark, eng):
+    eng.sql("CREATE TABLE ne (a int, b string)")
+    assert _status(eng, "UPDATE ne SET b = 'x'").rows == 0
+    assert _status(eng, "UPDATE ne SET b = 'x' WHERE a > 1").rows == 0
+    assert _status(eng, "DELETE FROM ne WHERE a > 1").rows == 0
+    assert _status(eng, "DELETE FROM ne").rows == 0
+    _check_scan(spark, eng.managed_tables, "ne")

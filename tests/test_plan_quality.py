@@ -303,8 +303,13 @@ def test_bpe_vocab_plan_depth_bounded(spark):
 
 
 def test_ivf_probe_selection_is_jvm_side(spark, tmp_path):
-    """Centroid ranking for single-query search must use the JVM distance
-    kernels (no per-element Python loop over up to 32768 centroids)."""
+    """Centroid ranking for single-query search runs on the driver over
+    the index's held centroid matrix, with the JVM distance kernels'
+    fold order, vectorized across centroids (no per-element Python loop
+    over up to 32768 centroids, no Spark job); it must pick the lists a
+    distance ranking over the stored centroid table picks.  The
+    bit-for-bit match with the JVM kernels for every metric, ties and
+    dimension mismatches is pinned in test_job_budget.py."""
     import numpy as np
 
     from opengauss_vectordb_spark.vector.ivf import IvfIndex
