@@ -35,6 +35,7 @@ from .catalog import table as _table
 from .functions import register_pg_functions
 from .ml import ModelWarehouse
 from .plans.ann_rewrite import AnnCatalog
+from .operators import index_lifecycle
 from .operators._util import status_frame
 
 
@@ -57,6 +58,10 @@ class Engine:
         # INDEX runs the CLUSTER sorted rewrite so rowgroup min/max
         # stats prune (the CStoreIndex/roughcheck analogue)
         self._btree_indexes: dict[str, tuple[str, str]] = {}
+        # delta-maintained GIN and GiST indexes: name -> index dict
+        # (operators/index_lifecycle.py)
+        self.gin_indexes: dict[str, dict] = {}
+        self.gist_indexes: dict[str, dict] = {}
         # session GUC defaults (reference: ivfflat.cpp:35 probes=1,
         # hnsw.h:39 ef_search=40), settable via Engine.sql("SET ...")
         self._gucs: dict[str, int] = {}
@@ -390,17 +395,7 @@ class Engine:
             ] + [
                 (name, tbl, col, "btree")
                 for name, (tbl, col) in sorted(self._btree_indexes.items())
-            ] + [
-                (name, idx["table"], idx["col"],
-                 "gin" + ("_trgm" if idx.get("kind") == "trgm" else ""))
-                for name, idx in sorted(
-                    getattr(self, "gin_indexes", {}).items())
-            ] + [
-                (name, idx["table"], ",".join(idx["cols"]),
-                 f"gist_{idx['kind']}")
-                for name, idx in sorted(
-                    getattr(self, "gist_indexes", {}).items())
-            ]
+            ] + index_lifecycle.catalog_rows(self)
             return self.spark.createDataFrame(
                 rows or [("", "", "", "")][:0],
                 "indexname STRING, tablename STRING, colname STRING,"
@@ -865,9 +860,7 @@ class Engine:
             if m.group("ix"):
                 nbytes = sum(
                     _dir_bytes(idx["path"])
-                    for reg in ("gin_indexes", "gist_indexes")
-                    for idx in getattr(self, reg, {}).values()
-                    if idx.get("table") == name
+                    for _am, _n, idx in index_lifecycle.on_table(self, name)
                 )
             else:
                 nbytes = _dir_bytes(os.path.join(
@@ -919,8 +912,7 @@ class Engine:
         )
         if m and (
             m.group("name").lower() in self._btree_indexes
-            or m.group("name").lower() in getattr(self, "gin_indexes", {})
-            or m.group("name").lower() in getattr(self, "gist_indexes", {})
+            or index_lifecycle.find(self, m.group("name").lower())
         ):
             # GIN/GiST/btree REINDEX is the explicit from-scratch
             # rebuild (indexcmds.cpp) — the user-facing spelling of
@@ -1018,11 +1010,9 @@ class Engine:
                 if tbl == t:
                     self._alter_index(name, rebuild=True)
                     rebuilt.append(name)
-            for reg in ("gin_indexes", "gist_indexes"):
-                for name, idx in list(getattr(self, reg, {}).items()):
-                    if idx["table"] == t:
-                        self._alter_index(name, rebuild=True)
-                        rebuilt.append(name)
+            for _am, name, _idx in index_lifecycle.on_table(self, t):
+                self._alter_index(name, rebuild=True)
+                rebuilt.append(name)
             return status_frame(self.spark, ("REINDEX TABLE", t, len(rebuilt)), "tag STRING, tbl STRING, indexes INT",)
         m = self._DROP_INDEX.match(query)
         if m:
@@ -1031,15 +1021,11 @@ class Engine:
             if key is not None:
                 self.ann.drop(*key)
             bkey = self._btree_indexes.pop(name, None)
-            from .operators.gin_index import drop_gin_index
-            from .operators.gist_index import drop_gist_index
-
-            gkey = drop_gin_index(self, name)
-            skey = drop_gist_index(self, name)
+            gkey = index_lifecycle.drop(self, name)
             # dropping a btree index keeps the clustered layout (it is
             # just data order) — only the catalog entry goes away
             return status_frame(self.spark, ("DROP INDEX", name,
-                  key is not None or bkey is not None or gkey or skey), "tag STRING, index STRING, existed BOOLEAN",)
+                  key is not None or bkey is not None or gkey), "tag STRING, index STRING, existed BOOLEAN",)
         from .operators.matview import try_handle_ddl as _matview_ddl
         from .operators.portal import try_handle_stmt as _portal_stmt
         from .operators.prepared import try_handle_stmt as _prepared_stmt
@@ -1226,16 +1212,14 @@ class Engine:
         """ALTER INDEX name RENAME TO / REBUILD / UNUSABLE
         (indexcmds.cpp ATExecRenameIndex / reindex; UNUSABLE is the
         A-format marker): RENAME moves the catalog entry across every
-        index registry (GIN additionally re-registers its posting
-        view under the new name); REBUILD routes to REINDEX; UNUSABLE
-        records nothing — scans here never require an index, so the
-        honest analogue of "stop using it" is a catalog no-op row."""
-        known = (
-            name in self._index_names or name in self._btree_indexes
-            or name in getattr(self, "gin_indexes", {})
-            or name in getattr(self, "gist_indexes", {})
-        )
-        if not known:
+        index registry; REBUILD routes to REINDEX; UNUSABLE records
+        nothing — scans here never require an index, so the honest
+        analogue of "stop using it" is a catalog no-op row."""
+        def known(n: str) -> bool:
+            return (n in self._index_names or n in self._btree_indexes
+                    or index_lifecycle.find(self, n) is not None)
+
+        if not known(name):
             raise KeyError(f"ALTER INDEX: index {name!r} not found")
         if rebuild:
             if name in self._index_names:
@@ -1243,40 +1227,21 @@ class Engine:
             if name in self._btree_indexes:
                 tbl, col = self._btree_indexes[name]
                 self.sql(f"CLUSTER {tbl} ON ({col})")
-            elif name in getattr(self, "gin_indexes", {}):
-                from .operators.gin_index import build_posting_table
-
-                build_posting_table(self, name)
             else:
-                from .operators.gist_index import build_gist_index
-
-                build_gist_index(self, name)
+                am, _idx = index_lifecycle.find(self, name)
+                index_lifecycle.rebuild(self, am, name)
             return status_frame(self.spark, ("REINDEX", name), "tag STRING, index STRING")
         if unusable:
             return status_frame(self.spark, ("ALTER INDEX", name, "UNUSABLE"), "tag STRING, index STRING, action STRING",)
         # RENAME TO
-        for reg in (self._index_names, self._btree_indexes,
-                    getattr(self, "gin_indexes", {}),
-                    getattr(self, "gist_indexes", {})):
-            if new in reg:
-                raise ValueError(
-                    f"ALTER INDEX RENAME: {new!r} already exists"
-                )
+        if known(new):
+            raise ValueError(f"ALTER INDEX RENAME: {new!r} already exists")
         if name in self._index_names:
             self._index_names[new] = self._index_names.pop(name)
         elif name in self._btree_indexes:
             self._btree_indexes[new] = self._btree_indexes.pop(name)
-        elif name in getattr(self, "gin_indexes", {}):
-            from .operators.gin_index import (
-                _register_union_view,
-                _view_name,
-            )
-
-            self.gin_indexes[new] = self.gin_indexes.pop(name)
-            _register_union_view(self, new)
-            self.spark.catalog.dropTempView(_view_name(name))
         else:
-            self.gist_indexes[new] = self.gist_indexes.pop(name)
+            index_lifecycle.rename(self, name, new)
         return status_frame(self.spark, ("ALTER INDEX", name, f"RENAME TO {new}"), "tag STRING, index STRING, action STRING",)
 
     def _warehouse_dir(self) -> str:

@@ -9,6 +9,8 @@ hash-match trick), and the final sum is cast back to DOUBLE.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -270,3 +272,63 @@ def _sql_scalar(v, typ: str) -> str:
         lit = f"'{s}'"
         return lit if t == "STRING" else f"CAST({lit} AS {typ})"
     raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+# --- SQL-text scanning shared by the statement rewrites -------------------
+
+
+def literal_spans(query: str) -> list[tuple[int, int]]:
+    """(open, close) offsets of every single-quoted literal in
+    ``query`` (an escaped ``''`` closes one span and opens the next,
+    which covers the same characters)."""
+    spans, in_q, start = [], False, 0
+    for i, ch in enumerate(query):
+        if ch == "'":
+            if in_q:
+                spans.append((start, i))
+                in_q = False
+            else:
+                start, in_q = i, True
+    return spans
+
+
+def sub_outside_literals(pattern: re.Pattern, repl, query: str) -> str:
+    """``pattern.sub(repl, query)``, leaving every match that starts
+    inside a string literal as it is."""
+    spans = literal_spans(query)
+
+    def _sub(m: re.Match) -> str:
+        if any(a <= m.start() <= b for a, b in spans):
+            return m.group(0)
+        return repl(m)
+
+    return pattern.sub(_sub, query)
+
+
+# keywords that can directly follow a FROM/JOIN table name and must
+# not be mistaken for its alias
+_NOT_ALIAS = {
+    "where", "on", "join", "inner", "left", "right", "full",
+    "cross", "natural", "group", "order", "limit", "having",
+    "union", "intersect", "except", "using", "set", "as",
+    "partition", "tablesample", "lateral", "window", "values",
+}
+
+
+def scan_refs(query: str) -> list[tuple[str, str]]:
+    """Every relation the statement scans, as (table, qualifier)
+    pairs — the qualifier is the alias if given, else the table name.
+    An index-routing rewrite picks the table of an operator's column
+    through these refs, never "whatever index has a same-named
+    column" (a different scanned table sharing the column name would
+    otherwise be answered from the WRONG index: silent wrong
+    results)."""
+    refs: list[tuple[str, str]] = []
+    for mm in re.finditer(
+        r"\b(?:FROM|JOIN)\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<a>\w+))?",
+        query, re.IGNORECASE,
+    ):
+        t = mm.group("t").lower()
+        a = (mm.group("a") or "").lower()
+        refs.append((t, a if a and a not in _NOT_ALIAS else t))
+    return refs

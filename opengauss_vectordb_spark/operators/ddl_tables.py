@@ -111,6 +111,13 @@ class TableManager:
         if pend.get("barrier"):
             meta["barrier_csn"] = csn
 
+    def latest_commit(self, name: str) -> dict | None:
+        """The table's last manifest (csn, gen, files, ts, tag); None
+        for a table with no commit or no managed table at all."""
+        meta = self.tables.get(name)
+        hist = meta.get("history") if meta else None
+        return hist[-1] if hist else None
+
     def _register_view(self, name: str) -> None:
         """The post-mutation hook for code that changes a table's files
         outside this class (partition DDL, recyclebin restore, rename):
@@ -450,22 +457,9 @@ class TableManager:
             eng.rls_enabled.discard(name)
             eng.rls_policies.pop(name, None)
             eng.acl.pop(name, None)
-            # dependent GIN indexes drop with the relation (PG drops
-            # indexes with their table); a recreated same-name table
-            # must not route @@ / % through stale postings
-            from .gin_index import drop_gin_index
-            from .gist_index import drop_gist_index
+            from .index_lifecycle import drop_table
 
-            for gname, gidx in list(
-                getattr(eng, "gin_indexes", {}).items()
-            ):
-                if gidx["table"] == name:
-                    drop_gin_index(eng, gname)
-            for gname, gidx in list(
-                getattr(eng, "gist_indexes", {}).items()
-            ):
-                if gidx["table"] == name:
-                    drop_gist_index(eng, gname)
+            drop_table(eng, name)
             for label, cols in list(eng.resource_labels.items()):
                 kept = [(t, c) for t, c in cols if t != name]
                 if kept:
@@ -1928,24 +1922,13 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         return handled
     m = _VACUUM.match(query)
     if m and m.group("name").lower() in engine.managed_tables.tables:
-        from . import gin_index, gist_index
+        from .index_lifecycle import vacuum
 
         name = m.group("name").lower()
-        # explicit index maintenance FIRST (the autovacuum
-        # ginInsertCleanup analogue): fold accumulated GIN/GiST
-        # deltas into their bases at the posting/key level — queries
-        # after a VACUUM read one compacted base, and the threshold
-        # fold never has to fire inside someone's SELECT
-        gin_index.vacuum_indexes(engine, name)
-        gist_index.vacuum_indexes(engine, name)
-        pre_csn = gin_index._table_csn(engine, name)
-        before, after = engine.managed_tables.vacuum(m.group("name"))
-        # the file compaction is row-preserving: carry current
-        # indexes across the generation swap instead of letting the
-        # next routed query mistake it for a content rewrite and
-        # re-tokenize the corpus
-        gin_index.refresh_watermarks(engine, name, pre_csn)
-        gist_index.refresh_watermarks(engine, name, pre_csn)
+        # the GIN/GiST delta fold runs here, so the threshold fold
+        # never has to fire inside someone's SELECT
+        with vacuum(engine, name):
+            before, after = engine.managed_tables.vacuum(name)
         return status_frame(engine.spark, ("VACUUM", name, before, after), "tag STRING, tbl STRING, files_before INT, files_after INT",)
     m = _TRUNCATE.match(query)
     if m and m.group("name").lower() in engine.managed_tables.tables:

@@ -23,19 +23,11 @@ index-backed ts_rank needs no base-table access at all, and
 ``positions`` (the tsvector word positions) persist for phrase
 verification.
 
-Staleness: the build records the indexed table's latest commit CSN
-plus the covered generation/file set (TableManager manifests — the
-Delta/Iceberg commit-log model).  When a routed query finds the CSN
-moved, maintenance is INCREMENTAL for pure appends: only the newly
-appended files (manifest diff) are tokenized into a small
-``delta_<csn>`` posting parquet, and the view becomes one multi-path
-read over base ∪ deltas — the reference's `fastupdate` pending list
-(gininsert.cpp), with the pending entries themselves lexeme-sorted.
-Copy-on-write rewrites (UPDATE/DELETE bump the generation) and
-over-threshold delta accumulation (MAX_DELTAS / the delta-row
-fraction) compact via a full rebuild — the autovacuum
-pending-list flush.  Catalog parquet tables are immutable, so no
-check applies.
+Staleness and compaction follow the shared delta lifecycle
+(index_lifecycle.py): appends add a lexeme-sorted ``delta_<csn>``
+posting over only the new files — the reference's `fastupdate` pending
+list (gininsert.cpp) — and the view is one multi-path read over base ∪
+deltas; copy-on-write rewrites rebuild.
 
 At 100 TB: the posting table is ~(total tokens) rows of short fixed
 columns, written once, sorted by lexeme — each query reads only the
@@ -45,12 +37,12 @@ key, and semi-joins; the corpus itself is never re-scanned.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ._util import status_frame
+from . import index_lifecycle as lifecycle
+from ._util import scan_refs, status_frame, sub_outside_literals
 
 # CREATE INDEX [name] ON tbl USING gin (to_tsvector(['cfg',] col))
 # — also accepts a bare column (the tsvector expression is implied,
@@ -127,25 +119,6 @@ def _view_name(index_name: str) -> str:
 _EMPTY_SENTINEL = "\x00empty"
 
 
-def _table_csn(engine, table: str) -> int | None:
-    """Latest commit CSN of a managed table; None for immutable
-    catalog parquet tables."""
-    meta = engine.managed_tables.tables.get(table)
-    if meta is None:
-        return None
-    hist = meta.get("history") or []
-    return hist[-1]["csn"] if hist else 0
-
-
-def _source_df(engine, table: str) -> DataFrame:
-    if table in engine.managed_tables.tables:
-        return engine.spark.table(table)
-    if table in engine.tables:
-        return engine.table(table)
-    raise KeyError(f"CREATE INDEX ... USING gin: table {table!r} "
-                   "not found")
-
-
 def _posting_frame(idx: dict, df: DataFrame) -> DataFrame:
     """The posting rows for ``df`` under the index's opclass.  Two
     opclasses: tsvector lexeme postings (kind 'fts') and pg_trgm
@@ -218,273 +191,42 @@ def _posting_frame(idx: dict, df: DataFrame) -> DataFrame:
     return posting
 
 
-def _latest_manifest(engine, table: str) -> dict | None:
-    meta = engine.managed_tables.tables.get(table)
-    if meta is None:
-        return None
-    hist = meta.get("history") or []
-    return hist[-1] if hist else None
+class _Gin(lifecycle.AccessMethod):
+    subdir = "_gin"
+    key_frame = staticmethod(_posting_frame)
 
+    def indexes(self, engine) -> dict:
+        return engine.gin_indexes
 
-def _register_union_view(engine, index_name: str) -> None:
-    """The index view is ONE multi-path parquet read over the base
-    posting plus every live delta — Catalyst lists both, and the
-    lexeme predicates prune rowgroups in each independently (the
-    reference's GIN likewise consults the main tree AND the pending
-    list per scan, gininsert.cpp fastupdate)."""
-    idx = engine.gin_indexes[index_name]
-    paths = [idx["base_path"], *idx["delta_paths"]]
-    engine.spark.read.parquet(*paths).createOrReplaceTempView(
-        _view_name(index_name)
-    )
-
-
-def build_posting_table(engine, index_name: str) -> None:
-    """FULL (re)build of the posting parquet — index creation and
-    compaction: tokenizes the whole relation into ``<path>/base``,
-    clears any deltas, and refreshes the view + CSN/file watermarks
-    (gininsert.cpp ginbuild)."""
-    import shutil
-
-    idx = engine.gin_indexes[index_name]
-    table = idx["table"]
-    df = _source_df(engine, table)
-    base = os.path.join(idx["path"], "base")
-    (
-        _posting_frame(idx, df)
-        .repartitionByRange(8, "lexeme")
-        .sortWithinPartitions("lexeme")
-        .write.mode("overwrite")
-        .parquet(base)
-    )
-    for d in idx.get("delta_paths", []):
-        shutil.rmtree(d, ignore_errors=True)
-    idx["base_path"] = base
-    idx["delta_paths"] = []
-    idx["delta_rows"] = 0
-    idx["base_rows"] = engine.spark.read.parquet(base).count()
-    idx["built_csn"] = _table_csn(engine, table)
-    h = _latest_manifest(engine, table)
-    idx["covered_gen"] = h["gen"] if h else None
-    idx["covered_files"] = set(h["files"]) if h else set()
-    idx["last_maintenance"] = {"mode": "rebuild", "input_files": None}
-    _register_union_view(engine, index_name)
-
-
-# fastupdate compaction policy (gininsert.cpp's pending list is
-# flushed into the main tree by autovacuum once it outgrows
-# gin_pending_list_limit).  Two levels, like an LSM: at MAX_DELTAS
-# the deltas MERGE into one sorted delta (O(delta bytes), the corpus
-# and base untouched) so per-query footer overhead stays O(1); once
-# delta rows exceed a FRACTION of the base (absolute floor so small
-# tables don't churn — gin_pending_list_limit is likewise an absolute
-# size) the next maintenance is a FULL rebuild, restoring one
-# compacted lexeme-sorted base.
-MAX_DELTAS = 8
-MAX_DELTA_ROW_FRACTION = 0.2
-MIN_DELTA_ROWS = 65536
-
-
-def _maintain_delta(engine, index_name: str) -> bool:
-    """Incremental maintenance for a pure APPEND (same generation,
-    old files all still present): tokenize ONLY the newly appended
-    files into ``<path>/delta_<csn>`` and re-register the union view.
-    Returns False when the change is not append-only (generation
-    bump = copy-on-write UPDATE/DELETE/partition surgery, or files
-    vanished) — the caller falls back to a full rebuild, the
-    correctness-safe compaction path."""
-    idx = engine.gin_indexes[index_name]
-    table = idx["table"]
-    h = _latest_manifest(engine, table)
-    if h is None or idx.get("covered_gen") is None:
-        return False
-    if h["gen"] != idx["covered_gen"]:
-        return False
-    live = set(h["files"])
-    covered = idx["covered_files"]
-    if not covered <= live:
-        return False  # files disappeared inside the generation
-    new_files = sorted(live - covered)
-    if new_files:
-        gen_dir = engine.managed_tables._gen_path(table, h["gen"])
-        src = engine.spark.read.option("basePath", gen_dir).parquet(
-            *[os.path.join(gen_dir, f) for f in new_files]
-        )
-        from .partition_ddl import PART_COL, SUBPART_COL
-
-        for hidden in (PART_COL, SUBPART_COL):
-            if hidden in src.columns:
-                src = src.drop(hidden)
-        delta = os.path.join(idx["path"], f"delta_{h['csn']}")
-        # partition count scales with the append size (posting volume
-        # tracks input files): a 1-row INSERT stays one small file, a
-        # bulk load spreads — the delta is lexeme-sorted either way so
-        # rowgroup pruning works inside it
-        npart = max(1, min(8, (len(new_files) + 7) // 8))
+    def write_layer(self, engine, idx, keys, path, npart) -> int:
+        # lexeme-sorted ranges: a lexeme predicate prunes to the
+        # rowgroups holding the query's terms, in every layer
         (
-            _posting_frame(idx, src)
-            .repartitionByRange(npart, "lexeme")
+            keys.repartitionByRange(npart, "lexeme")
             .sortWithinPartitions("lexeme")
             .write.mode("overwrite")
-            .parquet(delta)
+            .parquet(path)
         )
-        idx["delta_paths"].append(delta)
-        idx["delta_rows"] += engine.spark.read.parquet(delta).count()
-        idx["last_maintenance"] = {
-            "mode": "delta",
-            "input_files": sorted(src.inputFiles()),
-        }
-    else:
-        # CSN moved with no new files (e.g. a tagged empty commit)
-        idx["last_maintenance"] = {"mode": "noop", "input_files": []}
-    if len(idx["delta_paths"]) >= MAX_DELTAS:
-        _merge_deltas(engine, index_name)
-    idx["built_csn"] = _table_csn(engine, table)
-    idx["covered_files"] = live
-    _register_union_view(engine, index_name)
-    return True
+        return engine.spark.read.parquet(path).count()
+
+    def layers_changed(self, engine, name, idx) -> None:
+        """The index view is ONE multi-path parquet read over the base
+        posting plus every live delta — Catalyst lists both, and the
+        lexeme predicates prune rowgroups in each independently (the
+        reference's GIN likewise consults the main tree AND the pending
+        list per scan, gininsert.cpp fastupdate)."""
+        engine.spark.read.parquet(
+            idx["base_path"], *idx["delta_paths"]
+        ).createOrReplaceTempView(_view_name(name))
+
+    def dropped(self, engine, name) -> None:
+        engine.spark.catalog.dropTempView(_view_name(name))
+
+    def describe(self, idx) -> tuple[str, str]:
+        return idx["col"], "gin_trgm" if idx["kind"] == "trgm" else "gin"
 
 
-def _merge_deltas(engine, index_name: str) -> None:
-    """Fold every delta into ONE lexeme-sorted delta — O(delta
-    bytes), never touching the base or the corpus (the LSM level-0
-    merge; gininsert.cpp's pending-list cleanup into the tree is the
-    same move one level up).  Keeps per-query footer overhead O(1)
-    while base compaction (_compact_base, also posting-level) handles
-    the row-fraction bound; the FULL rebuild stays reserved for
-    copy-on-write rewrites, where document content actually
-    changed."""
-    import shutil
-
-    idx = engine.gin_indexes[index_name]
-    olds = idx["delta_paths"]
-    merged = os.path.join(
-        idx["path"], f"delta_merged_{idx['built_csn'] or 0}_{len(olds)}"
-    )
-    # size the merged layout by accumulated delta rows (~2M posting
-    # rows per partition keeps rowgroups prunable without tiny files)
-    npart = max(1, min(8, int(idx.get("delta_rows", 0)) // 2_000_000 + 1))
-    (
-        engine.spark.read.parquet(*olds)
-        .repartitionByRange(npart, "lexeme")
-        .sortWithinPartitions("lexeme")
-        .write.mode("overwrite")
-        .parquet(merged)
-    )
-    for d in olds:
-        if d != merged:
-            shutil.rmtree(d, ignore_errors=True)
-    idx["delta_paths"] = [merged]
-
-
-def _compact_base(engine, index_name: str) -> None:
-    """Fold base ∪ deltas into ONE compacted lexeme-sorted base at
-    the POSTING level — O(index bytes), tokenizer-free: the
-    ginInsertCleanup analogue (ginfast.cpp moves pending entries into
-    the main tree without re-scanning the heap).  Sound because
-    deltas exist only under append-only maintenance: a document's
-    postings live in exactly one layer, so the plain union IS the
-    folded index — no counts or positions need re-aggregation.  The
-    fold writes to a NEW versioned directory and swaps the catalog
-    pointer (never overwrites the base it is reading), then reclaims
-    the superseded layers."""
-    import shutil
-
-    idx = engine.gin_indexes[index_name]
-    if not idx["delta_paths"]:
-        return
-    olds = [idx["base_path"], *idx["delta_paths"]]
-    src = engine.spark.read.parquet(*olds)
-    rows = int(idx.get("base_rows", 0)) + int(idx.get("delta_rows", 0))
-    # ~2M posting rows per partition keeps rowgroups prunable
-    # without shattering into tiny files
-    npart = max(1, min(32, rows // 2_000_000 + 1))
-    idx["compactions"] = idx.get("compactions", 0) + 1
-    new_base = os.path.join(idx["path"], f"base_c{idx['compactions']}")
-    (
-        src.repartitionByRange(npart, "lexeme")
-        .sortWithinPartitions("lexeme")
-        .write.mode("overwrite")
-        .parquet(new_base)
-    )
-    idx["base_path"] = new_base
-    idx["delta_paths"] = []
-    idx["delta_rows"] = 0
-    idx["base_rows"] = rows  # layers are doc-disjoint: exact
-    idx["last_maintenance"] = {
-        "mode": "compact",
-        # posting parquet only — the proof obligation: no relation
-        # (corpus) file is ever an input to compaction
-        "input_files": sorted(src.inputFiles()),
-    }
-    for p in olds:
-        if p != new_base:
-            shutil.rmtree(p, ignore_errors=True)
-    _register_union_view(engine, index_name)
-
-
-def _over_threshold(idx: dict) -> bool:
-    return idx.get("delta_rows", 0) > max(
-        MAX_DELTA_ROW_FRACTION * idx.get("base_rows", 0),
-        MIN_DELTA_ROWS,
-    )
-
-
-def _ensure_fresh(engine, index_name: str) -> None:
-    """Serve every routed query from a fresh index: appends build a
-    DELTA over only the new files (base ∪ delta reads, never a corpus
-    re-tokenize); once accumulated deltas outgrow the row-fraction
-    bound the base folds at the POSTING level (_compact_base —
-    O(index bytes), tokenizer-free, and also reachable explicitly
-    through VACUUM).  The corpus-scale FULL rebuild happens only for
-    copy-on-write rewrites (UPDATE/DELETE/partition surgery), where
-    document content actually changed and re-tokenization is the
-    semantics, not an accident of compaction policy."""
-    idx = engine.gin_indexes[index_name]
-    if _table_csn(engine, idx["table"]) == idx["built_csn"]:
-        return
-    if not _maintain_delta(engine, index_name):
-        build_posting_table(engine, index_name)
-        return
-    if _over_threshold(idx):
-        _compact_base(engine, index_name)
-
-
-def vacuum_indexes(engine, table: str) -> list[str]:
-    """Explicit maintenance hook (VACUUM <table>): bring every GIN
-    index on the relation current and fold any accumulated deltas
-    into the base — the ginInsertCleanup that autovacuum runs in the
-    reference (ginfast.cpp), so routed queries after a VACUUM read
-    ONE compacted base with zero delta footers.  Returns the
-    compacted index names."""
-    out = []
-    for name, idx in getattr(engine, "gin_indexes", {}).items():
-        if idx["table"] != table:
-            continue
-        _ensure_fresh(engine, name)
-        if idx["delta_paths"]:
-            _compact_base(engine, name)
-            out.append(name)
-    return out
-
-
-def refresh_watermarks(engine, table: str, if_current_csn: int) -> None:
-    """Content-preserving relation rewrite (VACUUM's file compaction
-    swaps generations without changing any row): move every covering
-    index's watermarks to the new manifest so the NEXT routed query
-    does not mistake the swap for a content rewrite and rebuild from
-    the corpus.  Only indexes fully current BEFORE the swap
-    (built_csn == if_current_csn) qualify — a stale index cannot
-    prove its postings cover the new manifest."""
-    h = _latest_manifest(engine, table)
-    if h is None:
-        return
-    for _name, idx in getattr(engine, "gin_indexes", {}).items():
-        if idx["table"] != table or idx["built_csn"] != if_current_csn:
-            continue
-        idx["built_csn"] = h["csn"]
-        idx["covered_gen"] = h["gen"]
-        idx["covered_files"] = set(h["files"])
+AM = _Gin()
 
 
 def try_handle_ddl(engine, query: str):
@@ -492,14 +234,12 @@ def try_handle_ddl(engine, query: str):
     m = _CREATE_GIN.match(query)
     if m is None:
         return None
-    if not hasattr(engine, "gin_indexes"):
-        engine.gin_indexes = {}
     table = m.group("table").lower()
     col = (m.group("tscol") or m.group("trgmcol")
            or m.group("col")).lower()
     kind = "trgm" if m.group("trgmcol") else "fts"
     name = (m.group("name") or f"{table}_{col}_gin").lower()
-    df = _source_df(engine, table)
+    df = lifecycle.source_df(engine, table)
     # a BARE column picks its opclass by type, as PG does: an array
     # column gets the array element opclass (ginarrayproc.cpp), a
     # string column the implied-to_tsvector text opclass
@@ -534,32 +274,12 @@ def try_handle_ddl(engine, query: str):
             "gin index: the relation's first column is its row "
             "identifier and cannot also be the indexed text column"
         )
-    path = os.path.join(
-        engine._warehouse_dir(), "_gin", name
-    )
-    engine.gin_indexes[name] = {
-        "table": table, "col": col, "id_col": id_col,
-        "path": path, "built_csn": None, "kind": kind,
+    idx = lifecycle.create(engine, AM, name, {
+        "table": table, "col": col, "id_col": id_col, "kind": kind,
         "elem_cat": elem_cat,
-        "base_path": os.path.join(path, "base"),
-        "delta_paths": [], "delta_rows": 0, "base_rows": 0,
-    }
-    build_posting_table(engine, name)
-    n_lex = engine.gin_indexes[name]["base_rows"]
-    return status_frame(engine.spark, ("CREATE INDEX", name, table, col, n_lex), "tag STRING, index STRING, table STRING, col STRING,"
+    })
+    return status_frame(engine.spark, ("CREATE INDEX", name, table, col, idx["base_rows"]), "tag STRING, index STRING, table STRING, col STRING,"
         " postings BIGINT",)
-
-
-def drop_gin_index(engine, name: str) -> bool:
-    """DROP INDEX support (shared with Engine._DROP_INDEX)."""
-    idx = getattr(engine, "gin_indexes", {}).pop(name, None)
-    if idx is None:
-        return False
-    import shutil
-
-    engine.spark.catalog.dropTempView(_view_name(name))
-    shutil.rmtree(idx["path"], ignore_errors=True)
-    return True
 
 
 def _terms_and_kind(querytext: str) -> tuple[list[str], str] | None:
@@ -649,9 +369,9 @@ def _match_select(node, view: str) -> str | None:
 
 def _index_for(engine, table: str, col: str,
                kind: str = "fts") -> str | None:
-    for name, idx in getattr(engine, "gin_indexes", {}).items():
+    for name, idx in engine.gin_indexes.items():
         if idx["table"] == table and idx["col"] == col \
-                and idx.get("kind", "fts") == kind:
+                and idx["kind"] == kind:
             return name
     return None
 
@@ -736,46 +456,6 @@ _TRGM_SET_SQL = (
 )
 
 
-def _literal_spans(query: str) -> list[tuple[int, int]]:
-    spans, in_q, start = [], False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                spans.append((start, i))
-                in_q = False
-            else:
-                start, in_q = i, True
-    return spans
-
-
-# keywords that can directly follow a FROM/JOIN table name and must
-# not be mistaken for its alias
-_NOT_ALIAS = {
-    "where", "on", "join", "inner", "left", "right", "full",
-    "cross", "natural", "group", "order", "limit", "having",
-    "union", "intersect", "except", "using", "set", "as",
-    "partition", "tablesample", "lateral", "window", "values",
-}
-
-
-def _scan_refs(query: str) -> list[tuple[str, str]]:
-    """Every relation the statement scans, as (table, qualifier)
-    pairs — the qualifier is the alias if given, else the table name.
-    An operator's column picks its table through these refs, never
-    "whatever index has a same-named column" (a different scanned
-    table sharing the column name would otherwise be answered from
-    the WRONG posting table: silent wrong results)."""
-    refs: list[tuple[str, str]] = []
-    for mm in re.finditer(
-        r"\b(?:FROM|JOIN)\s+(?P<t>\w+)(?:\s+(?:AS\s+)?(?P<a>\w+))?",
-        query, re.IGNORECASE,
-    ):
-        t = mm.group("t").lower()
-        a = (mm.group("a") or "").lower()
-        refs.append((t, a if a and a not in _NOT_ALIAS else t))
-    return refs
-
-
 def _routed_index_for(engine, refs: list[tuple[str, str]],
                       col: str, kind: str) -> tuple[str, str] | None:
     """(index name, SQL qualifier) for the unique scanned relation
@@ -815,7 +495,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
     Identity when neither operator appears."""
     if "@@" not in query and not _PCT_MATCH.search(query):
         return query
-    refs = _scan_refs(query)
+    refs = scan_refs(query)
 
     def _routed_index(col: str, kind: str) -> tuple[str, str] | None:
         return _routed_index_for(engine, refs, col, kind)
@@ -838,7 +518,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
                     # pure AND/OR: ONE pruned posting scan (IN-list +
                     # HAVING), cheaper than per-term set algebra
                     terms, kind = tk
-                    _ensure_fresh(engine, name)
+                    lifecycle.ensure_fresh(engine, AM, name)
                     idx = engine.gin_indexes[name]
                     from ..plans.explain import note_routing
 
@@ -870,7 +550,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
                 if ast is not None:
                     sel = _match_select(ast, "__v")
                     if sel is not None:
-                        _ensure_fresh(engine, name)
+                        lifecycle.ensure_fresh(engine, AM, name)
                         idx = engine.gin_indexes[name]
                         from ..plans.explain import note_routing
 
@@ -888,14 +568,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
     if "@@" in query:
         query = _TSMATCH.sub(_sub, query)
 
-    spans = _literal_spans(query)
-
-    def _in_literal(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in spans)
-
     def _sub_pct(m: re.Match) -> str:
-        if _in_literal(m.start()):
-            return m.group(0)
         col = m.group("col").lower()
         probe = m.group("probe")
         limit = float(getattr(engine, "_gucs", {}).get(
@@ -905,7 +578,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
             routed = _routed_index(col, "trgm")
             if routed:
                 name, qual = routed
-                _ensure_fresh(engine, name)
+                lifecycle.ensure_fresh(engine, AM, name)
                 idx = engine.gin_indexes[name]
                 q = _py_trigrams(probe)
                 from ..plans.explain import note_routing
@@ -938,7 +611,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
             f"(size({ta}) + size({tb}) - {inter}) >= {limit})"
         )
 
-    return _PCT_MATCH.sub(_sub_pct, query)
+    return sub_outside_literals(_PCT_MATCH, _sub_pct, query)
 
 
 def gin_rank_search(engine, index_name: str, terms: list[str],
@@ -949,7 +622,7 @@ def gin_rank_search(engine, index_name: str, terms: list[str],
     frequency score the scan-side fts_match_rank uses.  The plan is
     one pruned posting scan + one short-key aggregate + TakeOrdered —
     the corpus is never touched."""
-    _ensure_fresh(engine, index_name)
+    lifecycle.ensure_fresh(engine, AM, index_name)
     posting = engine.spark.table(_view_name(index_name))
     terms_l = [t.lower() for t in terms]
     return (
@@ -1000,7 +673,7 @@ def trgm_gin_search(engine, index_name: str, probe: str,
     short-key aggregate, TakeOrdered — corpus never re-scanned.  Docs
     sharing zero trigrams have similarity 0 and are correctly absent
     from both the match and any top-k that ranks above 0."""
-    _ensure_fresh(engine, index_name)
+    lifecycle.ensure_fresh(engine, AM, index_name)
     q = _py_trigrams(probe)
     posting = engine.spark.table(_view_name(index_name))
     sim = F.col("__inter") / (
@@ -1042,15 +715,9 @@ def rewrite_array_ops(engine, query: str) -> str:
     Identity when no operator appears."""
     if "@>" not in query and "<@" not in query and "&&" not in query:
         return query
-    spans = _literal_spans(query)
-    refs = _scan_refs(query)
-
-    def _in_literal(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in spans)
+    refs = scan_refs(query)
 
     def _sub(m: re.Match) -> str:
-        if _in_literal(m.start()):
-            return m.group(0)
         col = m.group("col").lower()
         op = _ARRAY_OP_NAMES[m.group("op")]
         vals_sql = m.group("vals").strip()
@@ -1078,7 +745,7 @@ def rewrite_array_ops(engine, query: str) -> str:
             # predicate (identical semantics, no index).
             raw = [v.strip() for v in vals_sql.split(",")
                    if v.strip()]
-            elem_cat = idx.get("elem_cat", "other")
+            elem_cat = idx["elem_cat"]
             ok = (
                 all(re.fullmatch(r"'[^']*'", v) for v in raw)
                 and elem_cat == "string"
@@ -1088,7 +755,7 @@ def rewrite_array_ops(engine, query: str) -> str:
             ) or not raw  # empty ARRAY[] is type-free
             if ok:
                 vals = [v.strip("'") for v in raw]
-                _ensure_fresh(engine, name)
+                lifecycle.ensure_fresh(engine, AM, name)
                 from ..plans.explain import note_routing
 
                 note_routing(
@@ -1111,7 +778,7 @@ def rewrite_array_ops(engine, query: str) -> str:
             return f"forall({col}, x -> array_contains({arr}, x))"
         return f"arrays_overlap({col}, {arr})"
 
-    return _ARRAY_OP.sub(_sub, query)
+    return sub_outside_literals(_ARRAY_OP, _sub, query)
 
 
 def gin_array_search(engine, index_name: str, op: str,
@@ -1134,9 +801,9 @@ def gin_array_search(engine, index_name: str, op: str,
     n_elem persists — the reference rechecks on heap there).
     Returns (doc_id).  Scale: one rowgroup-pruned posting scan + a
     short-key aggregate, corpus never touched."""
-    _ensure_fresh(engine, index_name)
+    lifecycle.ensure_fresh(engine, AM, index_name)
     idx = engine.gin_indexes[index_name]
-    if idx.get("kind") != "array":
+    if idx["kind"] != "array":
         raise ValueError(
             f"gin_array_search: index {index_name!r} is not an "
             "array-opclass gin index"
@@ -1242,6 +909,7 @@ def gin_array_ops_gate(spark, sf_dir):
         rows = out.orderBy("op", "doc_id").collect()
         return spark.createDataFrame(rows, "op STRING, doc_id BIGINT")
     finally:
+        eng.sql("DROP INDEX gate_arr_gin")
         shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -42,14 +42,14 @@ coordinates are excluded at build (a NULL box satisfies no rtree
 strategy; the reference's IS NULL index support has no consumer
 here).
 
-Staleness follows the GIN model (`gin_index.py`, gininsert.cpp's
-fastupdate pending list): the build records the indexed table's CSN +
-covered file set; pure appends Z-bucket ONLY the new files with the
-FROZEN build-time quantizer into a delta layout (out-of-bounds centers
-clamp to edge cells — still correct, because pruning consults each
-layout's ACTUAL bucket MBRs, recomputed per delta, never the
-quantizer); copy-on-write rewrites and over-threshold deltas compact
-via full rebuild.
+Staleness and compaction follow the shared delta lifecycle
+(index_lifecycle.py, gininsert.cpp's fastupdate pending list): pure
+appends Z-bucket ONLY the new files with the FROZEN build-time
+quantizer into a delta layout (out-of-bounds centers clamp to edge
+cells — still correct, because pruning consults each layout's ACTUAL
+bucket MBRs, recomputed per layout, never the quantizer), so merging
+and compacting layers is a pure re-bucketing of extracted keys;
+copy-on-write rewrites rebuild.
 
 At 100 TB: the one-time build is a single repartition-by-zbucket
 shuffle; every search reads only the buckets whose MBR passes the
@@ -62,15 +62,14 @@ driver-side manifest stays 2^bucket_bits entries — raise
 
 from __future__ import annotations
 
-import os
-
 import re
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gin_index import _latest_manifest, _source_df, _table_csn
-from ._util import status_frame
+from . import index_lifecycle as lifecycle
+from ._util import scan_refs, status_frame, sub_outside_literals
 
 # CREATE INDEX [name] ON tbl USING gist ( box(x1,y1,x2,y2) |
 #   point(x,y) | range(lo,hi) ) [WITH (bucket_bits = k)]
@@ -96,12 +95,6 @@ STRATEGIES = [
 
 BITS = 8  # per-axis quantization cells = 256 (sources/zorder.py)
 DEFAULT_BUCKET_BITS = 4  # 16 buckets — raise WITH (bucket_bits=k)
-
-# fastupdate-style compaction policy — same two-level LSM as the GIN
-# index (gin_index.py MAX_DELTAS et al.)
-MAX_DELTAS = 8
-MAX_DELTA_ROW_FRACTION = 0.2
-MIN_DELTA_ROWS = 65536
 
 
 # ------------------------------------------------------- box predicates
@@ -228,252 +221,74 @@ def _zbucket_col(idx: dict) -> "F.Column":
     return F.shiftright(z, 2 * BITS - idx["bucket_bits"])
 
 
-def _write_layout(engine, idx: dict, keys: DataFrame, path: str) -> int:
-    """Write one Z-bucketed layout + record its bucket-MBR manifest
-    (gist_box_union per partition).  Returns the row count (one extra
-    driver-bounded aggregate — 2^bucket_bits rows)."""
-    (
-        keys.withColumn("zb", _zbucket_col(idx))
-        .repartition("zb")
-        .write.mode("overwrite")
-        .partitionBy("zb")
-        .parquet(path)
-    )
-    stats = (
-        engine.spark.read.parquet(path)
-        .groupBy("zb")
-        .agg(
-            F.min("x1").alias("x1"), F.min("y1").alias("y1"),
-            F.max("x2").alias("x2"), F.max("y2").alias("y2"),
-            F.count("*").alias("n"),
+class _Gist(lifecycle.AccessMethod):
+    subdir = "_gist"
+    key_frame = staticmethod(_key_frame)
+
+    def indexes(self, engine) -> dict:
+        return engine.gist_indexes
+
+    def write_layer(self, engine, idx, keys, path, npart) -> int:
+        """Write one Z-bucketed layout + record its bucket-MBR manifest
+        (gist_box_union per partition); the buckets size the layout, so
+        ``npart`` is unused.  The row count comes off the manifest
+        aggregate (driver-bounded — 2^bucket_bits rows)."""
+        (
+            keys.withColumn("zb", _zbucket_col(idx))
+            .repartition("zb")
+            .write.mode("overwrite")
+            .partitionBy("zb")
+            .parquet(path)
         )
-        .collect()
-    )
-    # manifest entry: the bucket's union MBR + its row count (the
-    # count sizes KNN's phase-1 prefix; consistent tests use the MBR)
-    idx["bucket_mbrs"][path] = {
-        int(r.zb): (float(r.x1), float(r.y1), float(r.x2), float(r.y2),
-                    int(r.n))
-        for r in stats
-    }
-    return int(sum(r.n for r in stats))
+        stats = (
+            engine.spark.read.parquet(path)
+            .groupBy("zb")
+            .agg(
+                F.min("x1").alias("x1"), F.min("y1").alias("y1"),
+                F.max("x2").alias("x2"), F.max("y2").alias("y2"),
+                F.count("*").alias("n"),
+            )
+            .collect()
+        )
+        # manifest entry: the bucket's union MBR + its row count (the
+        # count sizes KNN's phase-1 prefix; consistent tests use the MBR)
+        idx["bucket_mbrs"][path] = {
+            int(r.zb): (float(r.x1), float(r.y1), float(r.x2),
+                        float(r.y2), int(r.n))
+            for r in stats
+        }
+        return int(sum(r.n for r in stats))
 
-
-def build_gist_index(engine, index_name: str) -> None:
-    """FULL (re)build — creation and compaction (gistbuild.cpp): one
-    bounds aggregate fixes the quantizer, one repartition-by-zbucket
-    shuffle clusters, the manifest aggregate records bucket MBRs."""
-    import shutil
-
-    idx = engine.gist_indexes[index_name]
-    df = _source_df(engine, idx["table"])
-    keys = _key_frame(idx, df)
-    bounds = keys.agg(
-        F.min("x1").alias("a_lo"), F.max("x2").alias("a_hi"),
-        F.min("y1").alias("b_lo"), F.max("y2").alias("b_hi"),
-    ).collect()[0]
-    if bounds.a_lo is None:
-        # empty relation: degenerate quantizer, empty manifest
-        idx.update(a_lo=0.0, a_hi=1.0, b_lo=0.0, b_hi=1.0)
-    else:
+    def build_base(self, engine, idx, keys, path) -> int:
+        """gistbuild.cpp: one bounds aggregate fixes the quantizer that
+        every later delta reuses, then the base layout is written."""
+        bounds = keys.agg(
+            F.min("x1").alias("a_lo"), F.max("x2").alias("a_hi"),
+            F.min("y1").alias("b_lo"), F.max("y2").alias("b_hi"),
+        ).collect()[0]
+        if bounds.a_lo is None:
+            # empty relation: degenerate quantizer, empty manifest
+            idx.update(a_lo=0.0, a_hi=1.0, b_lo=0.0, b_hi=1.0)
+            shutil.rmtree(path, ignore_errors=True)
+            idx["bucket_mbrs"][path] = {}
+            return 0
         idx.update(
             a_lo=float(bounds.a_lo), a_hi=float(bounds.a_hi),
             b_lo=float(bounds.b_lo), b_hi=float(bounds.b_hi),
         )
-    base = os.path.join(idx["path"], "base")
-    idx["bucket_mbrs"] = {}
-    if bounds.a_lo is None:
-        shutil.rmtree(base, ignore_errors=True)
-        idx["base_rows"] = 0
-        idx["bucket_mbrs"][base] = {}
-    else:
-        idx["base_rows"] = _write_layout(engine, idx, keys, base)
-    for d in idx.get("delta_paths", []):
-        if d != base:
-            shutil.rmtree(d, ignore_errors=True)
-    idx["base_path"] = base
-    idx["delta_paths"] = []
-    idx["delta_rows"] = 0
-    idx["built_csn"] = _table_csn(engine, idx["table"])
-    h = _latest_manifest(engine, idx["table"])
-    idx["covered_gen"] = h["gen"] if h else None
-    idx["covered_files"] = set(h["files"]) if h else set()
-    idx["last_maintenance"] = {"mode": "rebuild", "input_files": None}
+        return self.write_layer(engine, idx, keys, path, 0)
 
-
-def _maintain_delta(engine, index_name: str) -> bool:
-    """Incremental maintenance for a pure APPEND: Z-bucket ONLY the
-    newly appended files (manifest diff) into ``delta_<csn>`` with the
-    frozen quantizer.  False when not append-only — the caller
-    rebuilds (the GIN/_maintain_delta contract, fastupdate's pending
-    list)."""
-    idx = engine.gist_indexes[index_name]
-    table = idx["table"]
-    h = _latest_manifest(engine, table)
-    if h is None or idx.get("covered_gen") is None:
-        return False
-    if h["gen"] != idx["covered_gen"]:
-        return False
-    live = set(h["files"])
-    if not idx["covered_files"] <= live:
-        return False
-    new_files = sorted(live - idx["covered_files"])
-    if new_files:
-        gen_dir = engine.managed_tables._gen_path(table, h["gen"])
-        src = engine.spark.read.option("basePath", gen_dir).parquet(
-            *[os.path.join(gen_dir, f) for f in new_files]
-        )
-        from .partition_ddl import PART_COL, SUBPART_COL
-
-        for hidden in (PART_COL, SUBPART_COL):
-            if hidden in src.columns:
-                src = src.drop(hidden)
-        delta = os.path.join(idx["path"], f"delta_{h['csn']}")
-        n = _write_layout(engine, idx, _key_frame(idx, src), delta)
-        idx["delta_paths"].append(delta)
-        idx["delta_rows"] += n
-        idx["last_maintenance"] = {
-            "mode": "delta",
-            "input_files": sorted(src.inputFiles()),
+    def layers_changed(self, engine, name, idx) -> None:
+        live = {idx["base_path"], *idx["delta_paths"]}
+        idx["bucket_mbrs"] = {
+            p: m for p, m in idx["bucket_mbrs"].items() if p in live
         }
-    else:
-        idx["last_maintenance"] = {"mode": "noop", "input_files": []}
-    if len(idx["delta_paths"]) >= MAX_DELTAS:
-        _merge_deltas(engine, index_name)
-    idx["built_csn"] = _table_csn(engine, table)
-    idx["covered_files"] = live
-    return True
+
+    def describe(self, idx) -> tuple[str, str]:
+        return ",".join(idx["cols"]), f"gist_{idx['kind']}"
 
 
-def _merge_deltas(engine, index_name: str) -> None:
-    """Fold every delta into ONE Z-bucketed delta — O(delta bytes),
-    base and corpus untouched (the LSM level-0 merge, exactly
-    gin_index._merge_deltas one module over)."""
-    import shutil
-
-    idx = engine.gist_indexes[index_name]
-    olds = idx["delta_paths"]
-    merged = os.path.join(
-        idx["path"], f"delta_merged_{idx['built_csn'] or 0}_{len(olds)}"
-    )
-    # per-root reads + union: each delta is its own zb-partitioned
-    # root and a single multi-root read trips partition discovery
-    parts = [
-        engine.spark.read.parquet(p).select(
-            "doc_id", "x1", "y1", "x2", "y2"
-        )
-        for p in olds
-    ]
-    src = parts[0]
-    for p in parts[1:]:
-        src = src.unionByName(p)
-    n = _write_layout(engine, idx, src, merged)
-    for d in olds:
-        if d != merged:
-            idx["bucket_mbrs"].pop(d, None)
-            shutil.rmtree(d, ignore_errors=True)
-    idx["delta_paths"] = [merged]
-    idx["delta_rows"] = n
-
-
-def _compact_base(engine, index_name: str) -> None:
-    """Fold base ∪ deltas into ONE Z-bucketed base at the KEY level —
-    O(index bytes), the relation never re-scanned (gin_index.
-    _compact_base's sibling; ginfast.cpp ginInsertCleanup one AM
-    over).  Sound because deltas exist only under append-only
-    maintenance (layers are doc-disjoint) and the quantizer is FROZEN
-    at build time, so re-bucketing the union is a pure shuffle of
-    already-extracted keys.  Writes a NEW versioned dir, swaps, then
-    reclaims the superseded layers and their manifest entries."""
-    import shutil
-
-    idx = engine.gist_indexes[index_name]
-    if not idx["delta_paths"]:
-        return
-    olds = [idx["base_path"], *idx["delta_paths"]]
-    live = [p for p in olds if os.path.isdir(p)]
-    idx["compactions"] = idx.get("compactions", 0) + 1
-    new_base = os.path.join(idx["path"], f"base_c{idx['compactions']}")
-    # each layout is its own zb-partitioned root: read separately and
-    # union (a single multi-root read trips partition discovery)
-    parts = [
-        engine.spark.read.parquet(p).select(
-            "doc_id", "x1", "y1", "x2", "y2"
-        )
-        for p in live
-    ]
-    src = parts[0]
-    for p in parts[1:]:
-        src = src.unionByName(p)
-    n = _write_layout(engine, idx, src, new_base)
-    idx["last_maintenance"] = {
-        "mode": "compact",
-        # layout parquet only — no relation file is ever an input
-        "input_files": sorted(
-            f for d in parts for f in d.inputFiles()
-        ),
-    }
-    for p in olds:
-        if p != new_base:
-            idx["bucket_mbrs"].pop(p, None)
-            shutil.rmtree(p, ignore_errors=True)
-    idx["base_path"] = new_base
-    idx["delta_paths"] = []
-    idx["delta_rows"] = 0
-    idx["base_rows"] = n
-
-
-def _over_threshold(idx: dict) -> bool:
-    return idx.get("delta_rows", 0) > max(
-        MAX_DELTA_ROW_FRACTION * idx.get("base_rows", 0),
-        MIN_DELTA_ROWS,
-    )
-
-
-def _ensure_fresh(engine, index_name: str) -> None:
-    """Appends → delta layouts; over-threshold deltas → key-level
-    base fold (_compact_base — relation never re-scanned); rewrites →
-    full rebuild, the only case where key content actually changed
-    (the gin_index._ensure_fresh policy)."""
-    idx = engine.gist_indexes[index_name]
-    if _table_csn(engine, idx["table"]) == idx["built_csn"]:
-        return
-    if not _maintain_delta(engine, index_name):
-        build_gist_index(engine, index_name)
-        return
-    if _over_threshold(idx):
-        _compact_base(engine, index_name)
-
-
-def vacuum_indexes(engine, table: str) -> list[str]:
-    """Explicit maintenance hook (VACUUM <table>): bring every GiST
-    index on the relation current and fold accumulated deltas into
-    the base (gin_index.vacuum_indexes' sibling)."""
-    out = []
-    for name, idx in getattr(engine, "gist_indexes", {}).items():
-        if idx["table"] != table:
-            continue
-        _ensure_fresh(engine, name)
-        if idx["delta_paths"]:
-            _compact_base(engine, name)
-            out.append(name)
-    return out
-
-
-def refresh_watermarks(engine, table: str, if_current_csn: int) -> None:
-    """Content-preserving generation swap (VACUUM file compaction):
-    move covering GiST watermarks to the new manifest — index keys
-    are row-derived, so a row-preserving file reorganization cannot
-    invalidate them (gin_index.refresh_watermarks' sibling)."""
-    h = _latest_manifest(engine, table)
-    if h is None:
-        return
-    for _name, idx in getattr(engine, "gist_indexes", {}).items():
-        if idx["table"] != table or idx["built_csn"] != if_current_csn:
-            continue
-        idx["built_csn"] = h["csn"]
-        idx["covered_gen"] = h["gen"]
-        idx["covered_files"] = set(h["files"])
+AM = _Gist()
 
 
 # ------------------------------------------------------------ search
@@ -489,7 +304,7 @@ def gist_search(engine, index_name: str, op: str,
     Returns (doc_id, x1, y1, x2, y2) — index-only, the relation is
     never scanned.  Records the read footprint on the idx dict
     (``last_search``) so tests pin pruning."""
-    _ensure_fresh(engine, index_name)
+    lifecycle.ensure_fresh(engine, AM, index_name)
     idx = engine.gist_indexes[index_name]
     q = tuple(float(v) for v in query_box)
     if len(q) != 4 or q[0] > q[2] or q[1] > q[3]:
@@ -562,7 +377,7 @@ def gist_knn(engine, index_name: str, point: tuple, k: int) -> DataFrame:
     the top-k lives in one of those — and re-takes.  ≤2 pruned scans,
     each a bounded TakeOrdered heap; ties break on doc_id so results
     are deterministic.  Returns (doc_id, x1, y1, x2, y2, dist)."""
-    _ensure_fresh(engine, index_name)
+    lifecycle.ensure_fresh(engine, AM, index_name)
     idx = engine.gist_indexes[index_name]
     px, py = float(point[0]), float(point[1])
     # (mindist, path, zb, n) over base ∪ deltas
@@ -676,7 +491,7 @@ def gist_poly_search(engine, index_name: str,
     cand = gist_search(engine, index_name, "contains",
                        (px, py, px, py)).select("doc_id")
     idx["last_search"]["recheck"] = True
-    rel = _source_df(engine, idx["table"])
+    rel = lifecycle.source_df(engine, idx["table"])
     id_col, col = idx["id_col"], idx["cols"][0]
     out = (
         rel.join(cand, rel[id_col] == cand["doc_id"], "left_semi")
@@ -723,35 +538,36 @@ def rewrite_gist_ops(engine, query: str) -> str:
     the inline predicate (normalized box algebra / the exact ray
     cast — always correct, whole-stage codegen).  Identity when no
     operator appears."""
-    from .gin_index import _literal_spans, _scan_refs
-
     if not _GIST_BOX_OP.search(query) \
             and not _GIST_POLY_OP.search(query):
         return query
-    spans = _literal_spans(query)
-    refs = _scan_refs(query)
+    refs = scan_refs(query)
 
-    def _sub_poly(m: re.Match) -> str:
-        if any(a <= m.start() <= b for a, b in spans):
-            return m.group(0)
-        col = m.group("col").lower()
-        px, py = float(m.group("px")), float(m.group("py"))
+    def _routed(kind: str, cols: list[str]) -> tuple[str, str] | None:
+        """(index name, SQL qualifier) of the unique scanned relation
+        owning every column and carrying a ``kind`` gist index on
+        exactly this column tuple; None (inline fallback)."""
         cands = []
         for t, qual in refs:
-            for name, idx in getattr(engine, "gist_indexes",
-                                     {}).items():
-                if idx["table"] != t or idx["kind"] != "poly" \
-                        or idx["cols"] != [col]:
+            for name, idx in engine.gist_indexes.items():
+                if idx["table"] != t or idx["kind"] != kind \
+                        or idx["cols"] != cols:
                     continue
                 try:
                     owned = [c.lower()
                              for c in engine.spark.table(t).columns]
                 except Exception:
                     continue
-                if col in owned:
+                if all(c in owned for c in cols):
                     cands.append((name, qual if len(refs) > 1 else ""))
-        if len(cands) == 1:
-            name, qual = cands[0]
+        return cands[0] if len(cands) == 1 else None
+
+    def _sub_poly(m: re.Match) -> str:
+        col = m.group("col").lower()
+        px, py = float(m.group("px")), float(m.group("py"))
+        routed = _routed("poly", [col])
+        if routed:
+            name, qual = routed
             idx = engine.gist_indexes[name]
             df = gist_poly_search(engine, name, (px, py))
             ls = idx["last_search"]
@@ -779,37 +595,17 @@ def rewrite_gist_ops(engine, query: str) -> str:
         # inline: the exact ray cast (identical semantics, no index)
         return f"({_point_in_poly_sql(col, px, py)})"
 
-    query = _GIST_POLY_OP.sub(_sub_poly, query)
-    if not _GIST_BOX_OP.search(query):
-        return query
-    spans = _literal_spans(query)  # offsets moved with the poly subs
+    query = sub_outside_literals(_GIST_POLY_OP, _sub_poly, query)
 
     def _sub(m: re.Match) -> str:
-        if any(a <= m.start() <= b for a, b in spans):
-            return m.group(0)
         cols = [c.strip().lower() for c in m.group("cols").split(",")]
         lits = [float(v) for v in m.group("lits").split(",")]
         q = (min(lits[0], lits[2]), min(lits[1], lits[3]),
              max(lits[0], lits[2]), max(lits[1], lits[3]))
         op = _GIST_OP_NAMES[m.group("op")]
-        # routed: the unique scanned relation owning every coordinate
-        # column, carrying a box gist index on exactly this tuple
-        cands = []
-        for t, qual in refs:
-            for name, idx in getattr(engine, "gist_indexes",
-                                     {}).items():
-                if idx["table"] != t or idx["kind"] != "box" \
-                        or idx["cols"] != cols:
-                    continue
-                try:
-                    owned = [c.lower()
-                             for c in engine.spark.table(t).columns]
-                except Exception:
-                    continue
-                if all(c in owned for c in cols):
-                    cands.append((name, qual if len(refs) > 1 else ""))
-        if len(cands) == 1:
-            name, qual = cands[0]
+        routed = _routed("box", cols)
+        if routed:
+            name, qual = routed
             idx = engine.gist_indexes[name]
             df = gist_search(engine, name, op, q).select("doc_id")
             ls = idx["last_search"]
@@ -841,7 +637,7 @@ def rewrite_gist_ops(engine, query: str) -> str:
         return (f"({x1} >= {qx1} AND {x2} <= {qx2}"
                 f" AND {y1} >= {qy1} AND {y2} <= {qy2})")
 
-    return _GIST_BOX_OP.sub(_sub, query)
+    return sub_outside_literals(_GIST_BOX_OP, _sub, query)
 
 
 # ------------------------------------------------------------ DDL
@@ -852,8 +648,6 @@ def try_handle_ddl(engine, query: str):
     m = _CREATE_GIST.match(query)
     if m is None:
         return None
-    if not hasattr(engine, "gist_indexes"):
-        engine.gist_indexes = {}
     table = m.group("table").lower()
     fn = m.group("fn").lower()
     cols = [c.strip().lower() for c in m.group("args").split(",")]
@@ -863,7 +657,7 @@ def try_handle_ddl(engine, query: str):
             f"columns, got {len(cols)}"
         )
     name = (m.group("name") or f"{table}_{cols[0]}_gist").lower()
-    df = _source_df(engine, table)
+    df = lifecycle.source_df(engine, table)
     missing = [c for c in cols if c not in [x.lower() for x in df.columns]]
     if missing:
         raise KeyError(
@@ -878,30 +672,13 @@ def try_handle_ddl(engine, query: str):
     bb = int(m.group("bb") or DEFAULT_BUCKET_BITS)
     if not 1 <= bb <= 2 * BITS:
         raise ValueError(f"gist index: bucket_bits must be in [1, {2*BITS}]")
-    path = os.path.join(engine._warehouse_dir(), "_gist", name)
-    engine.gist_indexes[name] = {
+    idx = lifecycle.create(engine, AM, name, {
         "table": table, "kind": fn, "cols": cols, "id_col": id_col,
-        "path": path, "bucket_bits": bb, "built_csn": None,
-        "base_path": os.path.join(path, "base"),
-        "delta_paths": [], "delta_rows": 0, "base_rows": 0,
-        "bucket_mbrs": {},
-    }
-    build_gist_index(engine, name)
-    idx = engine.gist_indexes[name]
+        "bucket_bits": bb, "bucket_mbrs": {},
+    })
     return status_frame(engine.spark, ("CREATE INDEX", name, table, fn, idx["base_rows"],
           len(idx["bucket_mbrs"].get(idx["base_path"], {}))), "tag STRING, index STRING, table STRING, opclass STRING,"
         " rows BIGINT, buckets INT",)
-
-
-def drop_gist_index(engine, name: str) -> bool:
-    """DROP INDEX support (shared with Engine._DROP_INDEX)."""
-    idx = getattr(engine, "gist_indexes", {}).pop(name, None)
-    if idx is None:
-        return False
-    import shutil
-
-    shutil.rmtree(idx["path"], ignore_errors=True)
-    return True
 
 
 # ---------------------------------------------------------------- queries
@@ -986,6 +763,7 @@ def gist_box_overlap(spark, sf_dir):
         )
         return spark.createDataFrame(rows, "doc_id BIGINT, area DOUBLE")
     finally:
+        eng.sql("DROP INDEX gate_box_gist")
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -1059,6 +837,7 @@ def gist_knn_point(spark, sf_dir):
         )
         return spark.createDataFrame(rows, "doc_id BIGINT, dist DOUBLE")
     finally:
+        eng.sql("DROP INDEX gate_kbox_gist")
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -1120,6 +899,7 @@ def gist_range_overlap(spark, sf_dir):
             rows, "doc_id BIGINT, lo DOUBLE, hi DOUBLE"
         )
     finally:
+        eng.sql("DROP INDEX gate_range_gist")
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -1193,4 +973,5 @@ def gist_poly_contains(spark, sf_dir):
         )
         return spark.createDataFrame(rows, "doc_id BIGINT")
     finally:
+        eng.sql("DROP INDEX gate_poly_gist")
         shutil.rmtree(tmp, ignore_errors=True)

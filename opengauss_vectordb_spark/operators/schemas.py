@@ -31,7 +31,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from ._util import status_frame
+from ._util import status_frame, sub_outside_literals
 
 _CREATE_SCHEMA = re.compile(
     r"^\s*CREATE\s+SCHEMA\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)"
@@ -84,19 +84,6 @@ def rewrite_qualified_names(engine, query: str) -> str:
     lowered = query.lower()
     if not any(s + "." in lowered for s in schemas):
         return query
-    quoted = []
-    in_q, start = False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                quoted.append((start, i))
-                in_q = False
-            else:
-                start, in_q = i, True
-
-    def _in_literal(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in quoted)
-
     pat = re.compile(
         r"\b(" + "|".join(re.escape(s) for s in sorted(schemas))
         + r")\.(\w+)",
@@ -104,11 +91,9 @@ def rewrite_qualified_names(engine, query: str) -> str:
     )
 
     def _sub(m: re.Match) -> str:
-        if _in_literal(m.start()):
-            return m.group(0)
         return flat_name(m.group(1).lower(), m.group(2))
 
-    return pat.sub(_sub, query)
+    return sub_outside_literals(pat, _sub, query)
 
 
 # a table-reference position: the keyword that announces a relation
@@ -152,19 +137,6 @@ def resolve_search_path(engine, query: str) -> str:
                 return flat_name(p, name)
         return None
 
-    quoted = []
-    in_q, start = False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                quoted.append((start, i))
-                in_q = False
-            else:
-                start, in_q = i, True
-
-    def _in_literal(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in quoted)
-
     pat = re.compile(
         r"\b(?P<kw>FROM|JOIN|INTO|UPDATE|TABLE|USING)\s+"
         r"(?P<name>\w+)(?!\s*\.)",
@@ -172,8 +144,6 @@ def resolve_search_path(engine, query: str) -> str:
     )
 
     def _sub(m: re.Match) -> str:
-        if _in_literal(m.start()):
-            return m.group(0)
         name = m.group("name")
         if "__" in name:  # already schema-mangled
             return m.group(0)
@@ -208,7 +178,7 @@ def resolve_search_path(engine, query: str) -> str:
             return m.group(0)
         return m.group(0)[: -len(name)] + target
 
-    return pat.sub(_sub, query)
+    return sub_outside_literals(pat, _sub, query)
 
 
 def try_handle_stmt(engine, query: str) -> DataFrame | None:
@@ -352,16 +322,6 @@ def resolve_synonyms(engine, query: str) -> str:
                 "existing synonym (DROP SYNONYM first)"
             )
         return query
-    quoted = []
-    in_q, start = False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                quoted.append((start, i))
-                in_q = False
-            else:
-                start, in_q = i, True
-
     pat = re.compile(
         r"\b(?P<kw>FROM|JOIN|INTO|UPDATE|TABLE|USING)\s+"
         r"(?P<name>\w+)(?!\s*\.)",
@@ -369,14 +329,12 @@ def resolve_synonyms(engine, query: str) -> str:
     )
 
     def _sub(m: re.Match) -> str:
-        if any(a <= m.start() <= b for a, b in quoted):
-            return m.group(0)
         target = syns.get(m.group("name").lower())
         if target is None:
             return m.group(0)
         return m.group("kw") + " " + target
 
-    return pat.sub(_sub, query)
+    return sub_outside_literals(pat, _sub, query)
 
 
 # ---------------------------------------------------------------- queries

@@ -41,7 +41,7 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame
-from ._util import status_frame
+from ._util import status_frame, sub_outside_literals
 
 _TC_CLAUSE = re.compile(
     r"\b(?P<tbl>\w+)\s+TIMECAPSULE\s+"
@@ -95,24 +95,8 @@ def rewrite_flashback(engine, query: str) -> str:
     if re.match(r"^\s*(TIMECAPSULE|PURGE)\b", query, re.IGNORECASE):
         return query  # statement forms, handled below
     mt = engine.managed_tables
-    # quoted spans are literals, not clauses — never rewrite inside
-    quoted = []
-    in_q, start = False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                quoted.append((start, i))
-                in_q = False
-            else:
-                start = i
-                in_q = True
-
-    def _in_literal(pos: int) -> bool:
-        return any(a <= pos <= b for a, b in quoted)
 
     def _sub(m: re.Match) -> str:
-        if _in_literal(m.start()):
-            return m.group(0)
         tbl = m.group("tbl").lower()
         if tbl not in mt.tables:
             raise ValueError(
@@ -130,7 +114,8 @@ def rewrite_flashback(engine, query: str) -> str:
         mt.read_snapshot(tbl, csn).createOrReplaceTempView(view)
         return view
 
-    return _TC_CLAUSE.sub(_sub, query)
+    # quoted spans are literals, not clauses — never rewrite inside
+    return sub_outside_literals(_TC_CLAUSE, _sub, query)
 
 
 def try_handle_stmt(engine, query: str) -> DataFrame | None:
@@ -248,10 +233,8 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
 
 def snapshot_csns(engine) -> dict:
     """{table: latest CSN} for every live managed table."""
-    return {
-        t: (meta.get("history") or [{"csn": 0}])[-1]["csn"]
-        for t, meta in engine.managed_tables.tables.items()
-    }
+    mt = engine.managed_tables
+    return {t: (mt.latest_commit(t) or {"csn": 0})["csn"] for t in mt.tables}
 
 
 def restore_csns(engine, entry: dict,
@@ -267,12 +250,10 @@ def restore_csns(engine, entry: dict,
         mt.drop(t, purge=True)
         touched += 1
     for t, csn in entry.items():
-        meta = mt.tables.get(t)
-        if meta is None:
-            continue  # dropped since the frame: refused upfront by
-            # callers that guard DDL; nothing to restore onto
-        hist = meta.get("history") or []
-        if not hist or hist[-1]["csn"] == csn:
+        # a table dropped since the frame is refused upfront by
+        # callers that guard DDL: nothing to restore onto
+        h = mt.latest_commit(t)
+        if h is None or h["csn"] == csn:
             continue  # untouched
         try:
             snap = mt.read_snapshot(t, csn)

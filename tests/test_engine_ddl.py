@@ -2450,6 +2450,7 @@ def test_gin_incremental_delta_maintenance(spark, tmp_path):
     (copy-on-write generation bump) compacts via full rebuild; delta
     accumulation past MAX_DELTAS compacts too."""
     from opengauss_vectordb_spark.operators import gin_index as G
+    from opengauss_vectordb_spark.operators import index_lifecycle as L
 
     eng = Engine(spark, SF_CORRECT)
     eng.managed_tables.root = str(tmp_path)
@@ -2501,8 +2502,8 @@ def test_gin_incremental_delta_maintenance(spark, tmp_path):
     assert idx["delta_paths"] == []
     # delta-count bound: at MAX_DELTAS the deltas MERGE into one
     # (O(delta bytes), base and corpus untouched — LSM level-0)
-    old_max = G.MAX_DELTAS
-    G.MAX_DELTAS = 2
+    old_max = L.MAX_DELTAS
+    L.MAX_DELTAS = 2
     try:
         eng.sql("INSERT INTO inc SELECT 5, 'beta zeta'")
         eng.sql(q)  # delta 1
@@ -2516,16 +2517,16 @@ def test_gin_incremental_delta_maintenance(spark, tmp_path):
         rows = [r.doc_id for r in eng.sql(q).collect()]
         assert rows == [2, 3, 4, 5, 6, 7]
     finally:
-        G.MAX_DELTAS = old_max
+        L.MAX_DELTAS = old_max
     # row-fraction bound: force it to zero → the threshold-crossing
     # append's next query folds base ∪ deltas at the POSTING level
     # (ginfast.cpp ginInsertCleanup) — inputFiles evidence pins that
     # NO relation file is read: compaction is tokenizer-free, the
     # corpus-scale rebuild fires only for content rewrites
-    old_min = G.MIN_DELTA_ROWS
-    G.MIN_DELTA_ROWS = 0
-    old_frac = G.MAX_DELTA_ROW_FRACTION
-    G.MAX_DELTA_ROW_FRACTION = 0.0
+    old_min = L.MIN_DELTA_ROWS
+    L.MIN_DELTA_ROWS = 0
+    old_frac = L.MAX_DELTA_ROW_FRACTION
+    L.MAX_DELTA_ROW_FRACTION = 0.0
     try:
         eng.sql("INSERT INTO inc SELECT 8, 'beta iota'")
         rows = [r.doc_id for r in eng.sql(q).collect()]
@@ -2542,8 +2543,8 @@ def test_gin_incremental_delta_maintenance(spark, tmp_path):
         )
         assert all(idx["path"] in f for f in lm["input_files"])
     finally:
-        G.MIN_DELTA_ROWS = old_min
-        G.MAX_DELTA_ROW_FRACTION = old_frac
+        L.MIN_DELTA_ROWS = old_min
+        L.MAX_DELTA_ROW_FRACTION = old_frac
     eng.sql("DROP INDEX inc_gin")
     eng.sql("DROP TABLE inc PURGE")
 
@@ -2574,9 +2575,7 @@ def test_gin_vacuum_compacts_and_survives_generation_swap(spark, tmp_path):
                for f in idx["last_maintenance"]["input_files"])
     # generation swapped, but watermarks carried: the next query is
     # maintenance-free
-    from opengauss_vectordb_spark.operators.gin_index import _table_csn
-
-    assert idx["built_csn"] == _table_csn(eng, "gvc")
+    assert idx["built_csn"] == eng.managed_tables.latest_commit("gvc")["csn"]
     marker = dict(idx["last_maintenance"])
     assert [r.doc_id for r in eng.sql(q).collect()] == [1, 2, 3]
     assert idx["last_maintenance"] == marker

@@ -6,7 +6,7 @@ Pins the three claims the design makes (gistproc.cpp parity):
   * a selective query READS a strict subset of buckets (the
     internal-page descent actually prunes);
   * maintenance is incremental for appends (delta layouts over only
-    the new files, gin_index's fastupdate model) and compacts on
+    the new files, index_lifecycle's fastupdate model) and compacts on
     copy-on-write rewrites.
 """
 
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from opengauss_vectordb_spark.engine import Engine
 from opengauss_vectordb_spark.operators import gist_index as G
+from opengauss_vectordb_spark.operators import index_lifecycle as L
 
 from .conftest import SF_CORRECT
 
@@ -219,8 +220,8 @@ def test_key_level_compaction_and_vacuum(eng, tmp_path):
         for r in G.gist_search(eng, "gv_gist", "overlap", q).collect()
     )
     assert ids() == [1, 2]
-    old_min, old_frac = G.MIN_DELTA_ROWS, G.MAX_DELTA_ROW_FRACTION
-    G.MIN_DELTA_ROWS, G.MAX_DELTA_ROW_FRACTION = 0, 0.0
+    old_min, old_frac = L.MIN_DELTA_ROWS, L.MAX_DELTA_ROW_FRACTION
+    L.MIN_DELTA_ROWS, L.MAX_DELTA_ROW_FRACTION = 0, 0.0
     try:
         eng.sql("INSERT INTO gvac SELECT 3, 2.0, 2.0, 3.0, 3.0")
         assert ids() == [1, 2, 3]
@@ -232,10 +233,10 @@ def test_key_level_compaction_and_vacuum(eng, tmp_path):
             rel_dir not in f for f in lm["input_files"]
         ), "key-level compaction re-read relation files"
     finally:
-        G.MIN_DELTA_ROWS, G.MAX_DELTA_ROW_FRACTION = old_min, old_frac
+        L.MIN_DELTA_ROWS, L.MAX_DELTA_ROW_FRACTION = old_min, old_frac
     # delta-count bound: at MAX_DELTAS deltas merge into one layout
-    old_max = G.MAX_DELTAS
-    G.MAX_DELTAS = 2
+    old_max = L.MAX_DELTAS
+    L.MAX_DELTAS = 2
     try:
         eng.sql("INSERT INTO gvac SELECT 5, 4.0, 4.0, 4.5, 4.5")
         assert ids() == [1, 2, 3, 5]
@@ -244,7 +245,7 @@ def test_key_level_compaction_and_vacuum(eng, tmp_path):
         assert len(idx["delta_paths"]) == 1
         assert "merged" in idx["delta_paths"][0]
     finally:
-        G.MAX_DELTAS = old_max
+        L.MAX_DELTAS = old_max
     # VACUUM: folds the pending delta explicitly, and the generation
     # swap does NOT invalidate the index (watermarks carried)
     eng.sql("INSERT INTO gvac SELECT 4, 7.0, 7.0, 8.0, 8.0")
@@ -253,9 +254,7 @@ def test_key_level_compaction_and_vacuum(eng, tmp_path):
     eng.sql("VACUUM gvac")
     assert idx["delta_paths"] == []
     assert idx["last_maintenance"]["mode"] == "compact"
-    from opengauss_vectordb_spark.operators.gin_index import _table_csn
-
-    assert idx["built_csn"] == _table_csn(eng, "gvac")
+    assert idx["built_csn"] == eng.managed_tables.latest_commit("gvac")["csn"]
     marker = dict(idx["last_maintenance"])
     assert ids() == [1, 2, 3, 4, 5, 6]
     assert idx["last_maintenance"] == marker, (
