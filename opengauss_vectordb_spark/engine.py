@@ -34,6 +34,7 @@ from .catalog import DEFAULT_SF_DIR, register_views
 from .catalog import table as _table
 from .functions import register_pg_functions
 from .ml import ModelWarehouse
+from .plans.ann_rewrite import AM as ANN_AM
 from .plans.ann_rewrite import AnnCatalog
 from .operators import index_lifecycle
 from .operators._util import status_frame
@@ -50,9 +51,10 @@ class Engine:
         self.sf_dir = sf_dir
         self.tables = register_views(spark, sf_dir)
         register_pg_functions(spark)
+        # IVF/HNSW indexes (ann.indexes: name -> index entry), run by
+        # the same lifecycle as GIN and GiST below
         self.ann = AnnCatalog()
         self.models = ModelWarehouse()
-        self._index_names: dict[str, tuple[str, str]] = {}
         # btree indexes over managed tables: name -> (table, col).
         # A btree index on parquet IS a data-skipping layout — CREATE
         # INDEX runs the CLUSTER sorted rewrite so rowgroup min/max
@@ -390,9 +392,6 @@ class Engine:
                     " roles STRING, qual STRING",
                 )
             rows = [
-                (name, tbl, col, type(self.ann.lookup(tbl, col)).__name__)
-                for name, (tbl, col) in sorted(self._index_names.items())
-            ] + [
                 (name, tbl, col, "btree")
                 for name, (tbl, col) in sorted(self._btree_indexes.items())
             ] + index_lifecycle.catalog_rows(self)
@@ -914,43 +913,12 @@ class Engine:
             m.group("name").lower() in self._btree_indexes
             or index_lifecycle.find(self, m.group("name").lower())
         ):
-            # GIN/GiST/btree REINDEX is the explicit from-scratch
-            # rebuild (indexcmds.cpp) — the user-facing spelling of
-            # the corpus-scale path, which never fires inside a read
+            # REINDEX is the explicit from-scratch rebuild of any AM
+            # from its table (indexcmds.cpp; hnswbuild.cpp and
+            # ivfbuild.cpp build from scratch too) — the answer to
+            # centroid drift after heavy appends
             return self._alter_index(m.group("name").lower(),
                                      rebuild=True)
-        if m and m.group("name").lower() in self._index_names:
-            # commands/vacuum.cpp's sibling REINDEX (indexcmds.cpp):
-            # full rebuild against the index's current data — the
-            # answer to centroid drift after heavy appends
-            name = m.group("name").lower()
-            tkey = self._index_names[name]
-            idx = self.ann.lookup(*tkey)
-            from .vector.hnsw import HnswIndex
-            from .vector.ivf import IvfIndex
-            from .vector.maintenance import rebuild as _rebuild
-
-            if isinstance(idx, IvfIndex):
-                self.ann.register(*tkey, _rebuild(self.spark, idx,
-                                                  tkey[1]))
-            elif isinstance(idx, HnswIndex):
-                # hnswbuild.cpp is a from-scratch build in the
-                # reference too: re-shard the table's CURRENT rows
-                # into fresh graphs with the index's own parameters
-                df = self.table(tkey[0])
-                id_col = getattr(idx, "id_col", None) or df.columns[0]
-                self.ann.register(*tkey, HnswIndex.build(
-                    df, tkey[1], idx.path, id_col=id_col,
-                    metric=idx.metric, m=idx.m,
-                    ef_construction=idx.ef_construction,
-                    shards=idx.shards,
-                ))
-            else:
-                raise NotImplementedError(
-                    "REINDEX: unknown ANN index kind "
-                    f"{type(idx).__name__}"
-                )
-            return status_frame(self.spark, ("REINDEX", name), "tag STRING, index STRING")
         m = re.match(
             r"^\s*ALTER\s+INDEX\s+(?:IF\s+EXISTS\s+)?(?P<name>\w+)\s+"
             r"(?:RENAME\s+TO\s+(?P<new>\w+)|(?P<rebuild>REBUILD)"
@@ -1002,10 +970,6 @@ class Engine:
             # analogue on immutable parquet — accepted, ignored)
             t = m.group("t").lower()
             rebuilt = []
-            for name, key in list(self._index_names.items()):
-                if key[0] == t:
-                    self._alter_index(name, rebuild=True)
-                    rebuilt.append(name)
             for name, (tbl, _c) in list(self._btree_indexes.items()):
                 if tbl == t:
                     self._alter_index(name, rebuild=True)
@@ -1017,15 +981,12 @@ class Engine:
         m = self._DROP_INDEX.match(query)
         if m:
             name = m.group("name").lower()
-            key = self._index_names.pop(name, None)
-            if key is not None:
-                self.ann.drop(*key)
             bkey = self._btree_indexes.pop(name, None)
             gkey = index_lifecycle.drop(self, name)
             # dropping a btree index keeps the clustered layout (it is
             # just data order) — only the catalog entry goes away
             return status_frame(self.spark, ("DROP INDEX", name,
-                  key is not None or bkey is not None or gkey), "tag STRING, index STRING, existed BOOLEAN",)
+                  bkey is not None or gkey), "tag STRING, index STRING, existed BOOLEAN",)
         from .operators.matview import try_handle_ddl as _matview_ddl
         from .operators.portal import try_handle_stmt as _portal_stmt
         from .operators.prepared import try_handle_stmt as _prepared_stmt
@@ -1216,14 +1177,12 @@ class Engine:
         nothing — scans here never require an index, so the honest
         analogue of "stop using it" is a catalog no-op row."""
         def known(n: str) -> bool:
-            return (n in self._index_names or n in self._btree_indexes
+            return (n in self._btree_indexes
                     or index_lifecycle.find(self, n) is not None)
 
         if not known(name):
             raise KeyError(f"ALTER INDEX: index {name!r} not found")
         if rebuild:
-            if name in self._index_names:
-                return self.sql(f"REINDEX INDEX {name}")
             if name in self._btree_indexes:
                 tbl, col = self._btree_indexes[name]
                 self.sql(f"CLUSTER {tbl} ON ({col})")
@@ -1236,9 +1195,7 @@ class Engine:
         # RENAME TO
         if known(new):
             raise ValueError(f"ALTER INDEX RENAME: {new!r} already exists")
-        if name in self._index_names:
-            self._index_names[new] = self._index_names.pop(name)
-        elif name in self._btree_indexes:
+        if name in self._btree_indexes:
             self._btree_indexes[new] = self._btree_indexes.pop(name)
         else:
             index_lifecycle.rename(self, name, new)
@@ -1273,6 +1230,8 @@ class Engine:
         translate + spark.sql."""
         from pyspark.sql import functions as F
 
+        from .plans.explain import note_routing
+
         m = self._ANN_SELECT.match(query)
         if m is None:
             return None
@@ -1284,66 +1243,40 @@ class Engine:
             return None
         table_name = m.group("table").lower()
         col = m.group("col")
-        idx = self.ann.lookup(table_name, col)
         metric = self._OP_METRIC[m.group("op")]
         k = int(m.group("k"))
-        df = self.table(table_name)
-        id_col = df.columns[0]
+        # session GUCs, else the reference's defaults (ivfflat.cpp:35
+        # probes=1, hnsw.h:39 ef_search=40)
+        probes = self._gucs.get("ivfflat.probes", 1)
+        ef = self._gucs.get("hnsw.ef_search", 40)
+        df, hit = self._ann_source(table_name, col, metric)
+        if hit is not None:
+            name, e = hit
+            detail = (f"ef_search={ef}, beamed shard graphs"
+                      if e["kind"] == "hnsw"
+                      else f"probes={probes} of {e['index'].lists} lists")
+            note_routing(self, f"Index Scan using {name} on {table_name} "
+                               f"({e['kind']} {metric}): {detail}, k={k}")
         where = m.group("where")
-        cols = m.group("cols").strip()
-        if idx is None or idx.metric != metric:
-            from .vector.exact import knn as exact_knn
-
-            base = df.filter(F.expr(where)) if where is not None else df
-            out = exact_knn(base, col, qvec, k=k, metric=metric,
-                            id_col=id_col)
-            if cols != "*":
-                out = out.select(*[c.strip() for c in cols.split(",")])
-            return out
-        from .plans.explain import note_routing
-        from .vector.hnsw import HnswIndex
-
-        idx_name = next(
-            (n for n, key in self._index_names.items()
-             if key == (table_name, col)), "?",
+        out = self.ann.topk(
+            self.spark, table_name, df, col, qvec, k, metric=metric,
+            probes=probes, id_col=df.columns[0], ef_search=ef,
+            where=F.expr(where) if where is not None else None,
         )
-        if isinstance(idx, HnswIndex):
-            note_routing(
-                self,
-                f"Index Scan using {idx_name} on {table_name} "
-                f"(hnsw {metric}): ef_search="
-                f"{self._gucs.get('hnsw.ef_search', 40)}, beamed "
-                f"shard graphs, k={k}",
-            )
-        else:
-            note_routing(
-                self,
-                f"Index Scan using {idx_name} on {table_name} "
-                f"(ivfflat {metric}): probes="
-                f"{self._gucs.get('ivfflat.probes', 1)} of "
-                f"{getattr(idx, 'lists', '?')} lists, k={k}",
-            )
-        if isinstance(idx, HnswIndex):
-            ef = self._gucs.get("hnsw.ef_search")
-            if where is not None:
-                out = idx.search_filtered(
-                    self.spark, df, id_col, F.expr(where), qvec, k=k,
-                    ef_search=ef if ef is not None else 40,
-                )
-            else:
-                out = self.ann.topk(
-                    self.spark, table_name, df, col, qvec, k=k,
-                    metric=metric, id_col=id_col, ef_search=ef,
-                )
-        else:
-            probes = self._gucs.get("ivfflat.probes", 1)  # ivfflat.cpp:35
-            out = idx.search(
-                self.spark, qvec, col, k=k, probes=probes, id_col=id_col,
-                where=F.expr(where) if where is not None else None,
-            )
+        cols = m.group("cols").strip()
         if cols != "*":
             out = out.select(*[c.strip() for c in cols.split(",")])
         return out
+
+    def _ann_source(self, table_name: str, col: str, metric: str
+                    ) -> tuple[DataFrame, tuple[str, dict] | None]:
+        """The table's frame and the (name, entry) of the index topk
+        routes through, brought current with the table first."""
+        df = index_lifecycle.source_df(self, table_name)
+        hit = self.ann.entry(table_name, col, metric)
+        if hit is not None:
+            index_lifecycle.ensure_fresh(self, ANN_AM, hit[0])
+        return df, hit
 
     def _create_index_ddl(self, m: re.Match) -> DataFrame:
         table_name = m.group("table").lower()
@@ -1359,20 +1292,19 @@ class Engine:
                 k, v = part.split("=", 1)
                 opts[k.strip().lower()] = v.strip()
         name = (m.group("name") or f"{table_name}_{col}_{am}").lower()
-        path = os.path.join(self._warehouse_dir(), "_ann_indexes", name)
         if am == "ivfflat":
-            self.create_ivf_index(
-                table_name, col, path, metric=metric,
-                lists=int(opts.get("lists", 100)),
-            )
+            params = {"lists": int(opts.get("lists", 100))}
         else:
-            id_col = opts.get("id_col") or self.table(table_name).columns[0]
-            self.create_hnsw_index(
-                table_name, col, path, id_col=id_col, metric=metric,
-                m=int(opts.get("m", 16)),
-                ef_construction=int(opts.get("ef_construction", 64)),
-            )
-        self._index_names[name] = (table_name, col)
+            params = {
+                "id_col": opts.get("id_col") or index_lifecycle.source_df(
+                    self, table_name).columns[0],
+                "m": int(opts.get("m", 16)),
+                "ef_construction": int(opts.get("ef_construction", 64)),
+            }
+        index_lifecycle.create(self, ANN_AM, name, {
+            "table": table_name, "col": col, "kind": am,
+            "params": {"metric": metric, **params},
+        })
         return status_frame(self.spark, ("CREATE INDEX", name, am, table_name, col, metric), "tag STRING, index STRING, am STRING, tbl STRING, col STRING,"
             " metric STRING",)
 
@@ -1400,42 +1332,11 @@ class Engine:
             probes = self._gucs.get("ivfflat.probes")
         if ef_search is None:
             ef_search = self._gucs.get("hnsw.ef_search")
+        df, _hit = self._ann_source(table_name, vec_col, metric)
         return self.ann.topk(
-            self.spark, table_name, self.table(table_name), vec_col, qvec, k,
+            self.spark, table_name, df, vec_col, qvec, k,
             metric=metric, probes=probes, id_col=id_col, ef_search=ef_search,
         )
-
-    def create_ivf_index(
-        self, table_name: str, vec_col: str, path: str,
-        metric: str = "l2", lists: int = 100, **kwargs,
-    ):
-        """CREATE INDEX ... USING ivfflat (datavec DDL analogue)."""
-        from .vector.ivf import IvfIndex
-
-        idx = IvfIndex.build(
-            self.table(table_name), vec_col, path, metric=metric, lists=lists,
-            **kwargs,
-        )
-        self.ann.register(table_name, vec_col, idx)
-        return idx
-
-    def create_hnsw_index(
-        self, table_name: str, vec_col: str, path: str, id_col: str,
-        metric: str = "l2", m: int = 16, ef_construction: int = 64,
-        shards: int = 8, **kwargs,
-    ):
-        """CREATE INDEX ... USING hnsw (datavec's second access method;
-        hnsw.h:33-36 defaults). The index is sharded graphs — see
-        vector/hnsw.py; knn() routes through it once registered."""
-        from .vector.hnsw import HnswIndex
-
-        idx = HnswIndex.build(
-            self.table(table_name), vec_col, path, id_col=id_col,
-            metric=metric, m=m, ef_construction=ef_construction,
-            shards=shards, **kwargs,
-        )
-        self.ann.register(table_name, vec_col, idx)
-        return idx
 
     def suggest_broadcast(
         self, table_name: str, max_rows: int = 1_000_000

@@ -35,6 +35,25 @@ from pyspark.sql import functions as F
 from ._util import status_frame
 
 
+def cast_to(df: DataFrame, fields) -> DataFrame:
+    """Position-based cast of ``df``'s columns to the declared
+    ``fields`` (the PG INSERT rule); a string into an array column
+    parses as pgvector text, ``'[1,2,3]'``.  Source names are
+    normalized first — a literal projection like SELECT 5.0 yields a
+    dotted column name that name-based resolution would misparse as a
+    nested field."""
+    from pyspark.sql.types import ArrayType, StringType
+
+    src = df.toDF(*[f"__src{i}" for i in range(len(df.columns))])
+    return src.select(*[
+        (F.from_json(s.name, f.dataType, {"mode": "FAILFAST"})
+         if isinstance(f.dataType, ArrayType)
+         and isinstance(s.dataType, StringType)
+         else F.col(s.name).cast(f.dataType)).alias(f.name)
+        for s, f in zip(src.schema.fields, fields)
+    ])
+
+
 class TableManager:
     """Managed-table catalog: name → (storage root, version)."""
 
@@ -295,17 +314,7 @@ class TableManager:
                 + (f" (or {len(noauto_fields)} omitting"
                    f" {auto_col!r})" if auto_col else "")
             )
-        # position-based cast to the declared schema (PG INSERT rule);
-        # normalize source names first — a literal projection like
-        # SELECT 5.0 yields a dotted column name that name-based
-        # resolution would misparse as a nested field
-        renamed = df.toDF(*[f"__src{i}" for i in range(len(df.columns))])
-        aligned = renamed.select(
-            *[
-                F.col(f"__src{i}").cast(field.dataType).alias(field.name)
-                for i, field in enumerate(fields)
-            ]
-        )
+        aligned = cast_to(df, fields)
         if auto_col is not None:
             auto_type = next(
                 f.dataType for f in tfields if f.name == auto_col
@@ -1704,13 +1713,7 @@ def _handle_replace_into(engine, m: re.Match) -> DataFrame:
             f"REPLACE has {len(src.columns)} columns,"
             f" table {name!r} takes {len(target.columns)}"
         )
-    renamed = src.toDF(*[f"__src{i}" for i in range(len(src.columns))])
-    aligned = renamed.select(
-        *[
-            F.col(f"__src{i}").cast(f.dataType).alias(f.name)
-            for i, f in enumerate(target.schema.fields)
-        ]
-    )
+    aligned = cast_to(src, target.schema.fields)
     dup = (
         aligned.groupBy(*pk).count().filter(F.col("count") > 1).limit(1)
         .count()
@@ -1762,13 +1765,7 @@ def _handle_insert_dup_key(engine, m: re.Match) -> DataFrame:
             f"INSERT has {len(src.columns)} columns,"
             f" table {name!r} takes {len(target.columns)}"
         )
-    renamed = src.toDF(*[f"__src{i}" for i in range(len(src.columns))])
-    aligned = renamed.select(
-        *[
-            F.col(f"__src{i}").cast(f.dataType).alias(f.name)
-            for i, f in enumerate(target.schema.fields)
-        ]
-    )
+    aligned = cast_to(src, target.schema.fields)
     sets_text = m.group("sets").strip()
     by_name = {f.name: f for f in target.schema.fields}
     if sets_text.upper() == "NOTHING":
@@ -2093,13 +2090,10 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
             f for f in mt.read(name).schema.fields
             if f.name not in generated and f.name != auto_col
         ]
-        one = engine.spark.range(1).select(
-            *[
-                (F.expr(defaults[f.name]) if f.name in defaults
-                 else F.lit(None)).cast(f.dataType).alias(f.name)
-                for f in fields
-            ]
-        )
+        one = cast_to(engine.spark.range(1).select(
+            *[F.expr(defaults[f.name]) if f.name in defaults
+              else F.lit(None) for f in fields]
+        ), fields)
         mt.insert_into(name, one)
         return status_frame(engine.spark, ("INSERT", name), "tag STRING, tbl STRING")
     m = _INSERT_COLS.match(query)
@@ -2145,14 +2139,11 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
             if f.name not in generated
             and (f.name != auto_col or auto_col in listed)
         ]
-        expanded = renamed.select(
-            *[
-                (F.col(f"__c_{f.name}") if f.name in listed
-                 else F.expr(defaults[f.name]) if f.name in defaults
-                 else F.lit(None)).cast(f.dataType).alias(f.name)
-                for f in fields
-            ]
-        )
+        expanded = cast_to(renamed.select(
+            *[F.col(f"__c_{f.name}") if f.name in listed
+              else F.expr(defaults[f.name]) if f.name in defaults
+              else F.lit(None) for f in fields]
+        ), fields)
         captured = mt.insert_into(
             name, expanded,
             transform=lambda d: fire_insert_triggers(engine, name, d),

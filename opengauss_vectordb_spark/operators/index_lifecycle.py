@@ -1,19 +1,23 @@
-"""The lifecycle shared by the append-maintained GIN and GiST indexes.
+"""The catalog and lifecycle of every non-btree index: GIN, GiST and
+the ANN access method (IVF and HNSW, plans/ann_rewrite.py).
 
 Reference: the index access-method interface (``ambuild`` /
 ``aminsert`` / ``amvacuumcleanup``), behind which every AM supplies only
 its own layout, and gininsert.cpp's ``fastupdate`` pending list, the
-delta model both AMs here follow.  An index is one base layer plus
-delta layers of extracted keys, each a parquet root under the index's
-own directory.  That directory is unique and fixed at creation, so a
-renamed index never shares storage with a later index of its old name.
+delta model GIN and GiST follow.  An index lives under its own
+directory, unique and fixed at creation, so a renamed index never
+shares storage with a later index of its old name.  A GIN or GiST index
+is one base layer plus delta layers of extracted keys, each a parquet
+root under that directory; the ANN AM keeps one index layout there and
+appends to it in place (its ``append`` hook).
 
 Staleness: a build records the indexed table's latest commit CSN plus
 the covered generation and file set (TableManager manifests, the
 Delta/Iceberg commit-log model).  When a routed query finds the CSN
 moved, a pure append (same generation, every covered file still live)
-extracts keys from ONLY the newly appended files into ``delta_<csn>``;
-a copy-on-write rewrite (UPDATE/DELETE/partition surgery bump the
+hands ONLY the newly appended files to the AM's append hook (a GIN or
+GiST ``delta_<csn>`` layer, an in-place IVF or HNSW insert); a
+copy-on-write rewrite (UPDATE/DELETE/partition surgery bump the
 generation) rebuilds from the relation, the one case where row content
 actually changed.  Catalog parquet tables are immutable, so no check
 applies to them.
@@ -70,6 +74,20 @@ class AccessMethod:
                    path: str) -> int:
         return self.write_layer(engine, idx, keys, path, 8)
 
+    def append(self, engine, idx: dict, rows: DataFrame, csn: int,
+               n_files: int) -> None:
+        """aminsert for a pure append: ``rows`` are the ``n_files``
+        newly appended relation files.  The default writes their keys
+        as one more delta layer."""
+        delta = os.path.join(idx["path"], f"delta_{csn}")
+        # the layout scales with the append: a 1-row INSERT stays one
+        # small file, a bulk load spreads
+        npart = max(1, min(8, (n_files + 7) // 8))
+        idx["delta_rows"] += self.write_layer(
+            engine, idx, self.key_frame(idx, rows), delta, npart
+        )
+        idx["delta_paths"].append(delta)
+
     def layers_changed(self, engine, name: str, idx: dict) -> None:
         """Refresh AM state after base_path/delta_paths changed."""
 
@@ -82,17 +100,20 @@ class AccessMethod:
 
 
 def _methods() -> tuple[AccessMethod, ...]:
+    from ..plans import ann_rewrite
     from . import gin_index, gist_index
 
-    return gin_index.AM, gist_index.AM
+    return ann_rewrite.AM, gin_index.AM, gist_index.AM
 
 
 def source_df(engine, table: str) -> DataFrame:
+    """A managed table, or a parquet table of the catalog directory."""
     if table in engine.managed_tables.tables:
         return engine.spark.table(table)
-    if table in engine.tables:
+    if table in engine.tables or os.path.exists(
+            os.path.join(engine.sf_dir, f"{table}.parquet")):
         return engine.table(table)
-    raise KeyError(f"CREATE INDEX: table {table!r} not found")
+    raise KeyError(f"table {table!r} not found")
 
 
 def _csn(engine, table: str) -> int | None:
@@ -150,7 +171,8 @@ def catalog_rows(engine) -> list[tuple[str, str, str, str]]:
 
 def create(engine, am: AccessMethod, name: str, idx: dict) -> dict:
     """CREATE INDEX (ambuild) into a fresh directory; an index of the
-    same name and AM is replaced."""
+    same name and AM is replaced.  A build that raises leaves neither
+    a catalog entry nor a directory behind."""
     if name in am.indexes(engine):
         _drop(engine, am, name)
     path = os.path.join(
@@ -159,7 +181,11 @@ def create(engine, am: AccessMethod, name: str, idx: dict) -> dict:
     idx.update(path=path, base_path=os.path.join(path, "base"),
                delta_paths=[])
     am.indexes(engine)[name] = idx
-    rebuild(engine, am, name)
+    try:
+        rebuild(engine, am, name)
+    except Exception:
+        _drop(engine, am, name)
+        raise
     return idx
 
 
@@ -180,10 +206,10 @@ def rebuild(engine, am: AccessMethod, name: str) -> None:
 
 
 def _maintain_delta(engine, am: AccessMethod, name: str) -> bool:
-    """Incremental maintenance for a pure APPEND: extract keys from
-    ONLY the newly appended files into ``<path>/delta_<csn>``.  False
-    when the change is not append-only (a generation bump, or files
-    vanished inside the generation) — the caller rebuilds."""
+    """Incremental maintenance for a pure APPEND: the AM's append hook
+    reads ONLY the newly appended files.  False when the change is not
+    append-only (a generation bump, or files vanished inside the
+    generation) — the caller rebuilds."""
     idx = am.indexes(engine)[name]
     table = idx["table"]
     h = engine.managed_tables.latest_commit(table)
@@ -200,14 +226,7 @@ def _maintain_delta(engine, am: AccessMethod, name: str) -> bool:
         src = engine.spark.read.option("basePath", gen_dir).parquet(
             *[os.path.join(gen_dir, f) for f in new_files]
         ).drop(PART_COL, SUBPART_COL)
-        delta = os.path.join(idx["path"], f"delta_{h['csn']}")
-        # the layout scales with the append: a 1-row INSERT stays one
-        # small file, a bulk load spreads
-        npart = max(1, min(8, (len(new_files) + 7) // 8))
-        idx["delta_rows"] += am.write_layer(
-            engine, idx, am.key_frame(idx, src), delta, npart
-        )
-        idx["delta_paths"].append(delta)
+        am.append(engine, idx, src, h["csn"], len(new_files))
         idx["last_maintenance"] = {
             "mode": "delta", "input_files": sorted(src.inputFiles()),
         }
@@ -264,9 +283,10 @@ def _compact_base(engine, am: AccessMethod, name: str) -> None:
 
 
 def ensure_fresh(engine, am: AccessMethod, name: str) -> None:
-    """Serve every routed query from a fresh index: appends build a
-    delta, over-threshold deltas fold into the base at the key level,
-    and only a copy-on-write rewrite pays the full rebuild."""
+    """Serve every routed query from a fresh index: appends go through
+    the AM's append hook, over-threshold deltas fold into the base at
+    the key level, and only a copy-on-write rewrite pays the full
+    rebuild."""
     idx = am.indexes(engine)[name]
     if _csn(engine, idx["table"]) == idx["built_csn"]:
         return
@@ -314,9 +334,13 @@ def drop(engine, name: str) -> bool:
 
 def rename(engine, name: str, new: str) -> None:
     """ALTER INDEX RENAME: only the catalog entry moves — the storage
-    directory was fixed at creation."""
+    directory was fixed at creation.  The entry keeps its place in the
+    registry, whose order is creation order."""
     am, idx = find(engine, name)
-    am.indexes(engine)[new] = am.indexes(engine).pop(name)
+    reg = am.indexes(engine)
+    entries = list(reg.items())
+    reg.clear()
+    reg.update((new if n == name else n, e) for n, e in entries)
     am.layers_changed(engine, new, idx)
     am.dropped(engine, name)
 

@@ -415,8 +415,8 @@ class HnswIndex:
               shards: int = 8) -> "HnswIndex":
         idx = HnswIndex(path, metric=metric, m=m,
                         ef_construction=ef_construction, shards=shards)
-        # remembered so REINDEX can rebuild from the table's current
-        # data with the same row-identity column
+        # remembered so appends to the index shard new rows by the
+        # same row-identity column
         idx.id_col = id_col
         clean = df.filter(F.col(vec_col).isNotNull())
         first = clean.select(F.size(F.col(vec_col)).alias("d")).first()

@@ -170,6 +170,15 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     return dists
 
 
+def label_vector(vec_col: str, metric: str) -> Column:
+    """The column list assignment labels: hamming operates on the
+    packed bigint words directly (a double cast would break the XOR
+    kernel); float metrics accumulate in double."""
+    if metric == "hamming":
+        return F.col(vec_col).cast("array<bigint>")
+    return as_double(F.col(vec_col))
+
+
 def assign_lists_expr(
     vec: Column, centroids: np.ndarray, metric: str, spill_epsilon: float
 ) -> Column:
@@ -369,19 +378,10 @@ class IvfIndex:
         else:
             centroids = _kmeans_fit(sample, lists, seed=seed, max_iter=max_iter)
 
-        # hamming operates on the packed bigint words directly (a double
-        # cast would break the XOR kernel); float metrics accumulate in
-        # double
-        label_vec = (
-            F.col(vec_col).cast("array<bigint>")
-            if metric == "hamming"
-            else as_double(F.col(vec_col))
-        )
         labeled = clean.withColumn(
             "list_id",
-            F.explode(
-                assign_lists_expr(label_vec, centroids, metric, spill_epsilon)
-            ),
+            F.explode(assign_lists_expr(label_vector(vec_col, metric),
+                                        centroids, metric, spill_epsilon)),
         )
         (
             labeled.repartition("list_id")

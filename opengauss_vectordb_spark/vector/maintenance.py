@@ -16,8 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .distance import as_double
-from .ivf import IvfIndex, assign_lists_expr
+from .ivf import IvfIndex, assign_lists_expr, label_vector
 
 
 def _invalidate(index: IvfIndex) -> None:
@@ -49,7 +48,8 @@ def append_to_index(
         "list_id",
         F.explode(
             assign_lists_expr(
-                as_double(F.col(vec_col)), cents, index.metric, spill_epsilon
+                label_vector(vec_col, index.metric), cents, index.metric,
+                spill_epsilon,
             )
         ),
     )
@@ -143,10 +143,20 @@ def rebuild(
     vec_col: str,
     **build_kwargs,
 ) -> IvfIndex:
-    """Full rebuild (REINDEX): refit centroids on the current data and
-    rewrite the layout — the answer to centroid drift after heavy
-    appends (the reference's insert-time graph repair equivalent)."""
-    current = spark.read.parquet(os.path.join(index.path, "data")).drop("list_id")
+    """Full rebuild: refit centroids on the current data and rewrite
+    the layout — the answer to centroid drift after heavy appends (the
+    reference's insert-time graph repair equivalent).  A spilled row
+    sits in two lists; the refit reads each row once, from the list of
+    its nearest current centroid."""
+    nearest = assign_lists_expr(
+        label_vector(vec_col, index.metric), index.centroids(spark),
+        index.metric, 1.0,
+    )[0]
+    current = (
+        spark.read.parquet(os.path.join(index.path, "data"))
+        .filter(F.col("list_id") == nearest)
+        .drop("list_id")
+    )
     return IvfIndex.build(
         current,
         vec_col,

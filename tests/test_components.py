@@ -720,6 +720,10 @@ def test_ivf_append_and_rebuild(spark):
         got2 = [r.id for r in idx2.search(spark, q, "v", k=10, probes=16,
                                           id_col="id").collect()]
         assert got2 == truth
+        # each row is refit once, not once per list it spilled into
+        fresh = IvfIndex.build(all_rows, "v", os.path.join(tmp, "f"),
+                               lists=16, max_iter=15)
+        assert idx2.data(spark).count() == fresh.data(spark).count()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

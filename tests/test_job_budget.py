@@ -75,10 +75,25 @@ def test_dml_statements_run_one_job(spark, eng):
         assert n == 1, (stmt, n)
 
 
-def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng,
-                                                         tmp_path):
-    eng.create_ivf_index("embeddings", "embedding", str(tmp_path / "ivf"),
-                         lists=4)
+def test_insert_into_ann_indexed_table_runs_one_job(spark, eng):
+    """The index catches up at the next routed search, not in the
+    INSERT."""
+    eng.sql("CREATE TABLE jv AS SELECT vec_id, embedding FROM embeddings"
+            " WHERE vec_id < 40")
+    eng.sql("CREATE INDEX jv_ivf ON jv USING ivfflat"
+            " (embedding vector_l2_ops) WITH (lists = 2)")
+    far = "[" + ",".join(["7"] * 64) + "]"
+    _, n = _jobs(spark, lambda: eng.sql(
+        f"INSERT INTO jv VALUES (100000, '{far}')").collect())
+    assert n == 1
+    got = eng.sql(f"SELECT vec_id FROM jv ORDER BY embedding <-> '{far}'"
+                  " LIMIT 1").collect()
+    assert [r.vec_id for r in got] == [100000]
+
+
+def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng):
+    eng.sql("CREATE INDEX jb_ivf ON embeddings USING ivfflat"
+            " (embedding vector_l2_ops) WITH (lists = 4)")
     eng.sql("SET ivfflat.probes = 2")
     q = "[" + ",".join(["0.1"] * 64) + "]"
     stmt = (f"SELECT vec_id FROM embeddings ORDER BY embedding <-> '{q}'"
