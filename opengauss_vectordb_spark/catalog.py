@@ -95,17 +95,21 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
         del _PARQUET_CACHE[k]
 
 
-def parquet_handle(spark: SparkSession, path: str) -> DataFrame:
+def parquet_handle(spark: SparkSession, path: str,
+                   schema=None) -> DataFrame:
     """Memoized LAZY ``spark.read.parquet(path)`` handle for index/layout
     paths outside the star schema (IVF data/centroids, IVF×PQ codes) —
     the same ~90 ms footer/py4j cost per call the table() cache removes
     (guide §5; r12's 37 s construction finding).  Plan reuse only: every
-    action re-scans the parquet files."""
+    action re-scans the parquet files.  A caller that knows the files'
+    ``schema`` (directory partition columns left out, as they are still
+    discovered from the paths) saves the inferring read its job."""
     key = (id(spark), path)
     hit = _PARQUET_CACHE.get(key)
     if hit is not None and hit[0] is spark:
         return hit[1]
-    df = spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     _PARQUET_CACHE[key] = (spark, df)
     return df
 

@@ -104,10 +104,9 @@ class AnnCatalog:
                                        ef_search=ef)
         ids = [r.id for r in idx.search(spark, qvec, k=k,
                                         ef_search=ef).collect()]
-        from ..vector.distance import DISTANCES, as_double
+        from ..vector.distance import DISTANCES, as_double, dlit_array
 
-        qlit = F.array(*[F.lit(float(v)) for v in qvec])
-        dist = DISTANCES[metric](as_double(F.col(vec_col)), qlit)
+        dist = DISTANCES[metric](as_double(F.col(vec_col)), dlit_array(qvec))
         # the limit makes the sort a TakeOrderedAndProject (one
         # job); a bare orderBy plans a range-partitioned full sort
         return (

@@ -5,6 +5,16 @@ The reference engine converges row/vectorized execution on one planner
 physical strategy. Config is chosen for the local[N] test harness but with
 settings that transfer to a multi-executor cluster (AQE, adaptive skew
 join, partition coalescing).
+
+Python workers start from the engine's own daemon module
+(``spark.python.daemon.module`` = ``opengauss_vectordb_spark._pydaemon``):
+pyspark's daemon, minus the per-task re-read of every zip archive on the
+worker path, which made each Python task cost about 250 ms more than a
+JVM task. So the package must be importable by the workers, as its UDFs
+already require; ``get_spark`` puts the package's parent directory on
+their PYTHONPATH (``spark.executorEnv.PYTHONPATH``), which covers local
+runs from any directory. On a cluster, ship the package to the
+executors (``--py-files``) as for any UDF code.
 """
 
 from __future__ import annotations
@@ -31,6 +41,9 @@ _DEFAULT_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
     "spark.driver.extraJavaOptions": "-Dderby.system.home=/tmp/derby",
+    # pyspark's worker daemon without the per-task re-read of every zip
+    # archive on the worker path (see _pydaemon.py)
+    "spark.python.daemon.module": "opengauss_vectordb_spark._pydaemon",
 }
 
 
@@ -55,6 +68,11 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # the worker daemon and the engine's UDFs import this package: put it
+    # on the workers' path whatever directory the session starts in
+    conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
     if os.environ.get("SPARK_DRIVER_MEMORY"):
         conf["spark.driver.memory"] = os.environ["SPARK_DRIVER_MEMORY"]
     if extra_conf:

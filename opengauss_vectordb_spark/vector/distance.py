@@ -36,8 +36,19 @@ def dlit_array(values) -> Column:
     double Literals (repr() is shortest round-trip, the same value the
     lit() path boxes), which ConstantFolding collapses to a single array
     Literal either way."""
-    body = ",".join(repr(float(x)) + "D" for x in values)
-    return F.expr(f"array({body})")
+    return F.expr(dlit_sql(values))
+
+
+def dlit_sql(values) -> str:
+    """SQL text of the array<double> literal ``dlit_array`` parses."""
+    return "array(" + ",".join(repr(float(x)) + "D" for x in values) + ")"
+
+
+def llit_sql(values) -> str:
+    """SQL text of an array<bigint> literal, the integer counterpart
+    of ``dlit_sql`` (the cast keeps -2^63 exact)."""
+    return "array(" + ",".join(
+        f"CAST({int(x)} AS BIGINT)" for x in values) + ")"
 
 
 def _fold_sum(arr: Column) -> Column:

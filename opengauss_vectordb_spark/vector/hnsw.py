@@ -28,10 +28,13 @@ graph does not distribute (SURVEY.md §2.8):
     one row per node with its per-layer adjacency lists. No custom
     storage format, no mutable index pages — rebuild/append follow the
     same batch maintenance story as IVF (`vector/maintenance.py`).
-  * search fans one beam search out per shard (Arrow-batched
-    ``applyInPandas``, graph never leaves the executors) and merges the
-    per-shard top-k with a global TakeOrdered — searching S graphs of
-    n/S nodes each returns the union of S beams, which empirically
+  * search drives one beam search per shard from a frame of the S
+    shard ids (``mapInArrow``, no Exchange): each task reads its
+    shards' parquet with pyarrow and keeps the deserialized graph in a
+    cache of the Python worker, keyed on the shard's file listing, so
+    the graph table never moves and a warm search reads nothing.  The
+    per-shard top-k's merge in a global TakeOrdered — searching S graphs
+    of n/S nodes each returns the union of S beams, which empirically
     dominates the recall of a single graph at equal ef_search.
   * determinism: node levels are derived from md5(id) (append-stable,
     insertion-order independent), inserts happen in ascending-id order,
@@ -89,6 +92,7 @@ GRAPH_SCHEMA = (
     "shard INT, id BIGINT, vec ARRAY<DOUBLE>, level INT, "
     "neighbors ARRAY<ARRAY<BIGINT>>"
 )
+_ARROW_TYPES = {"INT": "int32", "BIGINT": "int64", "DOUBLE": "float64"}
 
 
 def _level_for_id(node_id: int, m: int) -> int:
@@ -391,6 +395,55 @@ def _graph_from_rows(pdf: pd.DataFrame, metric: str) -> _ShardGraph:
     return g
 
 
+# Worker-process cache of deserialized shard graphs (Python workers are
+# reused across tasks): shard directory -> (metric, file listing, graph).
+# Build, append and vacuum_delete always write new part files, so a
+# listing of (name, size, mtime_ns) names one graph; no index object or
+# Engine has to announce a change.
+_SHARD_GRAPHS: dict[str, tuple[str, tuple, _ShardGraph]] = {}
+
+
+def _shard_files(shard_dir: str) -> tuple:
+    """(name, size, mtime_ns) of the shard's data files; () when the
+    directory is missing or holds none."""
+    try:
+        names = sorted(os.listdir(shard_dir))
+    except FileNotFoundError:
+        return ()
+    out = []
+    for name in names:
+        if name.startswith((".", "_")):  # checksums, _SUCCESS
+            continue
+        st = os.stat(os.path.join(shard_dir, name))
+        out.append((name, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def _load_shard(shard_dir: str, metric: str) -> _ShardGraph | None:
+    """The shard's graph, from the cache while its files are unchanged,
+    else read with pyarrow and cached; None for a missing or empty
+    shard.  Keeps one entry per directory and drops the entries of
+    directories that no longer exist."""
+    import pyarrow.parquet as pq
+
+    for gone in [d for d in _SHARD_GRAPHS if not os.path.isdir(d)]:
+        del _SHARD_GRAPHS[gone]
+    files = _shard_files(shard_dir)
+    hit = _SHARD_GRAPHS.get(shard_dir)
+    if hit is not None and hit[:2] == (metric, files):
+        return hit[2]
+    _SHARD_GRAPHS.pop(shard_dir, None)
+    if not files:
+        return None
+    table = pq.read_table(
+        [os.path.join(shard_dir, name) for name, _, _ in files],
+        columns=["id", "vec", "level", "neighbors"],
+    )
+    g = _graph_from_rows(table.to_pandas(), metric)
+    _SHARD_GRAPHS[shard_dir] = (metric, files, g)
+    return g
+
+
 class HnswIndex:
     """A sharded HNSW index = parquet graph table partitioned by shard."""
 
@@ -463,9 +516,10 @@ class HnswIndex:
 
     # ---------------------------------------------------------------- load
     def graph(self, spark: SparkSession) -> DataFrame:
-        """The graph table, as a memoized lazy handle (no schema
-        inference job per search); build, append and vacuum_delete
-        drop it after they rewrite the layout."""
+        """The graph table, as a memoized lazy handle, for append and
+        vacuum_delete (search reads the shard files in its tasks);
+        build, append and vacuum_delete drop it after they rewrite the
+        layout."""
         from ..catalog import parquet_handle
 
         return parquet_handle(spark, os.path.join(self.path, "graph"))
@@ -569,6 +623,33 @@ class HnswIndex:
         self._graph_changed()
 
     # --------------------------------------------------------------- search
+    def _per_shard(self, spark: SparkSession, search_graph, schema: str
+                   ) -> DataFrame:
+        """One row per hit of ``search_graph(graph)`` over every shard,
+        from a frame of the S shard ids (``mapInArrow``, no Exchange):
+        each task beam-searches its shards' graphs out of the worker's
+        cache (``_load_shard``), so the graph table never moves."""
+        import pyarrow as pa
+
+        graph_dir = os.path.abspath(os.path.join(self.path, "graph"))
+        met = self.metric
+        out_schema = pa.schema([
+            (name, _ARROW_TYPES[t])
+            for name, t in (f.split() for f in schema.split(","))
+        ])
+
+        def run(batches):
+            for batch in batches:
+                for s in batch.column(0).to_pylist():
+                    g = _load_shard(os.path.join(graph_dir, f"shard={s}"), met)
+                    if g is not None:
+                        yield pa.RecordBatch.from_pylist(
+                            search_graph(g), schema=out_schema
+                        )
+
+        n_tasks = min(self.shards, spark.sparkContext.defaultParallelism)
+        return spark.range(0, self.shards, 1, n_tasks).mapInArrow(run, schema)
+
     def search(self, spark: SparkSession, qvec: Sequence[float], k: int = 10,
                ef_search: int | None = DEFAULT_EF_SEARCH) -> DataFrame:
         """Fan a beam search out to every shard graph, merge the shard
@@ -577,20 +658,13 @@ class HnswIndex:
         then visits every node, so the result is EXACT — the gateable
         operating point (cf. IVF probes=lists)."""
         q = np.asarray(list(qvec), dtype=np.float64)
-        met, kk, ef = self.metric, k, ef_search
 
-        def search_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            g = _graph_from_rows(pdf, met)
-            beam = g.n if ef is None else ef
-            hits = g.search(q, kk, beam)
-            return pd.DataFrame({
-                "id": [i for i, _ in hits],
-                "distance": [d for _, d in hits],
-            })
+        def search_graph(g: _ShardGraph) -> list[dict]:
+            beam = g.n if ef_search is None else ef_search
+            return [{"id": i, "distance": d} for i, d in g.search(q, k, beam)]
 
-        per_shard = self.graph(spark).groupBy("shard").applyInPandas(
-            search_shard, "id BIGINT, distance DOUBLE"
-        )
+        per_shard = self._per_shard(spark, search_graph,
+                                    "id BIGINT, distance DOUBLE")
         return (
             per_shard.orderBy(F.col("distance").asc(), F.col("id").asc())
             .limit(k)
@@ -703,22 +777,17 @@ class HnswIndex:
         from pyspark.sql import Window as W
 
         Q = np.asarray([list(q) for q in qvecs], dtype=np.float64)
-        met, kk, ef = self.metric, k, ef_search
 
-        def search_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            g = _graph_from_rows(pdf, met)
-            beam = g.n if ef is None else ef
-            qids, ids, dists = [], [], []
-            for qi in range(len(Q)):
-                for i, d in g.search(Q[qi], kk, beam):
-                    qids.append(qi)
-                    ids.append(i)
-                    dists.append(d)
-            return pd.DataFrame({"qid": qids, "id": ids, "distance": dists})
+        def search_graph(g: _ShardGraph) -> list[dict]:
+            beam = g.n if ef_search is None else ef_search
+            return [
+                {"qid": qi, "id": i, "distance": d}
+                for qi in range(len(Q))
+                for i, d in g.search(Q[qi], k, beam)
+            ]
 
-        per_shard = self.graph(spark).groupBy("shard").applyInPandas(
-            search_shard, "qid INT, id BIGINT, distance DOUBLE"
-        )
+        per_shard = self._per_shard(spark, search_graph,
+                                    "qid INT, id BIGINT, distance DOUBLE")
         w = W.partitionBy("qid").orderBy(F.col("distance").asc(),
                                          F.col("id").asc())
         return (

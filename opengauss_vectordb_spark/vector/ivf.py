@@ -42,8 +42,9 @@ from collections.abc import Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
-from .distance import DISTANCES, as_double
+from .distance import DISTANCES, as_double, dlit_sql, llit_sql
 from .exact import knn as exact_knn
 
 DEFAULT_LISTS = 100  # ivfflat.h:43
@@ -113,8 +114,9 @@ def _kmeans_once(
 
 def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     """array<double> of distance(vec, centroid_j) for every centroid, as a
-    pure Catalyst expression: the centroid matrix is a nested array
-    literal (broadcast in the plan), distances come from transform().
+    pure Catalyst expression: the centroid matrix is one nested array
+    literal (a single ``F.expr``, broadcast in the plan), distances come
+    from transform().
     Whole-stage codegen, no shuffle, no UDF — this is the full-table
     labeling path, so it must scale to every row of a 100 TB table.
 
@@ -123,13 +125,13 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     layout) and integer-valued centroid rows: distance = popcount(XOR)
     per word, a pure JVM integer kernel (bit_hamming_ops,
     bitutils.cpp)."""
+    row_sql = llit_sql if metric == "hamming" else dlit_sql
+    cents_lit = F.expr(
+        "array(" + ",".join(row_sql(c) for c in centroids) + ")"
+    )
     if metric == "hamming":
-        cents_words = F.array(
-            *[F.array(*[F.lit(int(x)).cast("long") for x in c])
-              for c in centroids]
-        )
         return F.transform(
-            cents_words,
+            cents_lit,
             lambda c: F.aggregate(
                 F.zip_with(
                     vec, c,
@@ -139,9 +141,6 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
                 lambda a, x: a + x,
             ),
         )
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
     if metric == "cosine":
         norm = F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0),
                                   lambda a, x: a + x))
@@ -187,18 +186,23 @@ def assign_lists_expr(
     ("spill" / multi-assignment — boundary vectors live in both inverted
     lists, a standard IVF recall hardener; +10-20% storage at ε≈1.4 on
     squared-L2, recall@probes=1 +5-7 pts). spill_epsilon=1.0 disables."""
-    dists = _centroid_dists(vec, centroids, metric)
-    m1 = F.array_min(dists)
-    primary = (F.array_position(dists, m1) - 1).cast("int")
-    if spill_epsilon <= 1.0:
-        return F.array(primary)
-    rest = F.filter(dists, lambda x: x > m1)
-    m2 = F.array_min(rest)
-    secondary = (F.array_position(dists, m2) - 1).cast("int")
-    return F.when(
-        m2.isNotNull() & (m2 <= F.lit(float(spill_epsilon)) * m1),
-        F.array(primary, secondary),
-    ).otherwise(F.array(primary))
+    def labels(dists: Column) -> Column:
+        m1 = F.array_min(dists)
+        primary = (F.array_position(dists, m1) - 1).cast("int")
+        if spill_epsilon <= 1.0:
+            return F.array(primary)
+        m2 = F.array_min(F.filter(dists, lambda x: x > m1))
+        secondary = (F.array_position(dists, m2) - 1).cast("int")
+        return F.when(
+            m2.isNotNull() & (m2 <= F.lit(float(spill_epsilon)) * m1),
+            F.array(primary, secondary),
+        ).otherwise(F.array(primary))
+
+    # the distance array is computed once and bound to a lambda variable:
+    # spelled inline, each of its uses would copy the whole subtree
+    return F.transform(
+        F.array(_centroid_dists(vec, centroids, metric)), labels
+    )[0]
 
 
 _BITS_PER_WORD = 32  # binary_quantize_words payload bits per bigint word
@@ -308,6 +312,19 @@ def rank_lists(dists: np.ndarray, probes: int) -> list[int]:
     return [int(i) for i in order[:max(0, probes)]]
 
 
+def _as_read(t):
+    """Type ``t`` as a parquet read of data written with it reports
+    it: every field, array element and map value nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_read(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_read(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_read(t.keyType), _as_read(t.valueType), True)
+    return t
+
+
 class IvfIndex:
     """An IVF index = centroid table + data table partitioned by list_id."""
 
@@ -324,6 +341,10 @@ class IvfIndex:
         # centroid matrix, row i = list i: set by build(), else loaded
         # once by centroids()
         self._centroids: np.ndarray | None = None
+        # the data layout's file schema (list_id, a directory column,
+        # left out): set by build(), kept across appends, so reading the
+        # layout after an append infers nothing
+        self._data_schema = None
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -398,6 +419,7 @@ class IvfIndex:
         from ..catalog import invalidate_table_cache
 
         invalidate_table_cache(path)  # rebuilds rewrite in place
+        idx._data_schema = _as_read(clean.schema)
         idx._centroids = np.array(
             [[float(x) for x in c] for c in centroids], dtype=np.float64
         )
@@ -407,7 +429,8 @@ class IvfIndex:
     def data(self, spark: SparkSession) -> DataFrame:
         from ..catalog import parquet_handle
 
-        return parquet_handle(spark, os.path.join(self.path, "data"))
+        return parquet_handle(spark, os.path.join(self.path, "data"),
+                              self._data_schema)
 
     # --------------------------------------------------------------- search
     def centroids(self, spark: SparkSession) -> np.ndarray:
@@ -472,7 +495,7 @@ class IvfIndex:
         if self.metric == "hamming":
             from .distance import hamming_distance
 
-            q = F.array(*[F.lit(int(x)).cast("long") for x in qvec])
+            q = F.expr(llit_sql(qvec))
             d = hamming_distance(F.col(vec_col).cast("array<bigint>"), q)
             nearest = (
                 pruned.filter(F.col(vec_col).isNotNull())

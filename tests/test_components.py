@@ -1189,3 +1189,127 @@ def test_index_root_remote_warehouse_keeps_uri():
         import os
         assert got == os.path.join(td, "_indexes")
         assert os.path.isdir(got)
+
+
+# ------------------------------------------------ IVF labeling expression
+
+def _inline_assign(vec, C, metric, eps):
+    """The labeling expression as first written: one ``F.lit`` per
+    centroid element, and the distance subtree spelled at each use."""
+    def fold(arr):
+        return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)
+
+    if metric == "hamming":
+        cents = F.array(*[F.array(*[F.lit(int(x)).cast("long") for x in c])
+                          for c in C])
+        dists = F.transform(cents, lambda c: fold(F.zip_with(
+            vec, c, lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("double"))))
+    else:
+        cents = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in C])
+        if metric == "cosine":
+            norm = F.sqrt(fold(F.transform(vec, lambda x: x * x)))
+            dists = F.transform(cents, lambda c: F.lit(1.0) - fold(
+                F.zip_with(vec, c, lambda x, y: x * y)) / (
+                norm * F.sqrt(fold(F.transform(c, lambda y: y * y)))))
+        else:
+            dists = F.transform(cents, lambda c: fold(
+                F.zip_with(vec, c, lambda x, y: (x - y) * (x - y))))
+    m1 = F.array_min(dists)
+    primary = (F.array_position(dists, m1) - 1).cast("int")
+    if eps <= 1.0:
+        return F.array(primary)
+    rest = F.filter(dists, lambda x: x > m1)
+    m2 = F.array_min(rest)
+    secondary = (F.array_position(dists, m2) - 1).cast("int")
+    return F.when(m2.isNotNull() & (m2 <= F.lit(float(eps)) * m1),
+                  F.array(primary, secondary)).otherwise(F.array(primary))
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine", "l1", "hamming"])
+def test_ivf_labels_match_inline_formulation(spark, metric):
+    """The one-literal, bound-once labeling expression assigns every
+    row the lists the per-element formulation did: spill ties
+    (duplicate centroids, midpoints), zero vectors, NULL and a
+    dimension mismatch included."""
+    from opengauss_vectordb_spark.vector.ivf import assign_lists_expr
+
+    rng = np.random.default_rng(17)
+    dim = 4
+    if metric == "hamming":
+        C = rng.integers(0, 2**32, (5, dim))
+        C = np.vstack([C, C[1], np.zeros((1, dim), dtype=np.int64)])
+        vecs = [[int(x) for x in v] for v in rng.integers(0, 2**32, (20, dim))]
+        vecs += [[int(x) for x in C[1]], [int(x) for x in C[0] | C[2]],
+                 [0] * dim, [1] * (dim - 1), [1] * (dim + 1), None]
+        schema = "i INT, v ARRAY<BIGINT>"
+        C = C.astype(np.float64)
+    else:
+        C = rng.normal(size=(5, dim))
+        C = np.vstack([C, C[1], np.zeros((1, dim))])
+        vecs = [[float(x) for x in v] for v in rng.normal(size=(20, dim))]
+        vecs += [[float(x) for x in C[1]],
+                 [float(x) for x in (C[0] + C[2]) / 2],
+                 [0.0] * dim, [0.5] * (dim - 1), [0.5] * (dim + 1), None]
+        schema = "i INT, v ARRAY<DOUBLE>"
+    df = spark.createDataFrame(list(enumerate(vecs)), schema)
+    for eps in (1.0, 1.44, 1e9):
+        got = df.select(
+            "i",
+            assign_lists_expr(F.col("v"), C, metric, eps).alias("new"),
+            _inline_assign(F.col("v"), C, metric, eps).alias("old"),
+        ).orderBy("i").collect()
+        assert [r.new for r in got] == [r.old for r in got], eps
+
+
+# ------------------------------------------------- Python worker daemon
+
+def test_python_workers_run_patched_zip_invalidation(spark):
+    import zipimport
+
+    def owner(_):
+        yield zipimport.zipimporter.invalidate_caches.__module__
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(owner).collect()
+    assert got == ["opengauss_vectordb_spark._pydaemon"]
+
+
+def test_zip_invalidation_rereads_only_changed_archive(tmp_path, monkeypatch):
+    import zipfile
+    import zipimport
+
+    from opengauss_vectordb_spark import _pydaemon
+
+    reads = []
+
+    def counting_reread(self):
+        reads.append(self.archive)
+        return real_reread(self)
+
+    real_reread = _pydaemon._reread
+    monkeypatch.setattr(_pydaemon, "_reread", counting_reread)
+    monkeypatch.setattr(_pydaemon, "_READ_STAMPS", {})
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        _pydaemon.invalidate_caches)
+    path = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("m_one.py", "X = 1\n")
+    imp = zipimport.zipimporter(path)
+    imp.invalidate_caches()  # never read through the patch: reads
+    assert len(reads) == 1
+    imp.invalidate_caches()  # unchanged: no read
+    assert len(reads) == 1
+    assert imp.find_spec("m_one") is not None
+    # rewritten in place with new content (and a new mtime): read again
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("m_one.py", "X = 1\n")
+        z.writestr("m_two.py", "X = 2\n")
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    imp.invalidate_caches()
+    assert len(reads) == 2
+    assert imp.find_spec("m_two") is not None
+    # a second importer of the same unchanged archive takes that read
+    other = zipimport.zipimporter(path)
+    other.invalidate_caches()
+    assert len(reads) == 2
+    assert other.find_spec("m_two") is not None

@@ -7,7 +7,9 @@ then creating a new index under its old name must leave the renamed
 index's layers untouched; dropping the new index must not reclaim
 them either.  DROP TABLE drops every dependent index, btree included.
 Two ANN indexes on one column are two catalog entries, and a CREATE
-INDEX whose build fails leaves nothing behind.
+INDEX whose build fails leaves nothing behind.  HNSW search serves
+shard graphs from a cache in the Python workers, which must never
+answer with a graph that an append, a vacuum or a REINDEX replaced.
 """
 
 from __future__ import annotations
@@ -190,3 +192,38 @@ def test_datavec_readme_sequence(eng):
     eng.sql("DROP TABLE items")
     assert _indexes(eng) == {}
     assert not any(os.path.exists(d) for d in dirs)
+
+
+def test_hnsw_worker_cache_never_serves_a_replaced_graph(eng, tmp_path):
+    from pyspark.sql import functions as F
+
+    from opengauss_vectordb_spark.vector.hnsw import HnswIndex
+
+    spark = eng.spark
+    eng.sql("CREATE TABLE hc AS SELECT vec_id, embedding FROM embeddings"
+            " WHERE vec_id < 80")
+    eng.sql("CREATE INDEX hc_hnsw ON hc USING hnsw"
+            " (embedding vector_l2_ops) WITH (m = 8)")
+    idx = eng.ann.lookup("hc", "embedding")
+    far = [7.0] * 64
+
+    def ids(index, ef=None, k=5):
+        return [(r.id, r.distance)
+                for r in index.search(spark, far, k=k, ef_search=ef).collect()]
+
+    warm = ids(idx)
+    assert ids(idx) == warm  # served warm
+    idx.append(spark, spark.createDataFrame(
+        [(100000, far)], "vec_id BIGINT, embedding ARRAY<FLOAT>"),
+        "embedding", "vec_id")
+    assert ids(idx)[0] == (100000, 0.0)
+    idx.vacuum_delete(spark, F.col("id") == 100000)
+    for _ in range(2):
+        assert 100000 not in [i for i, _ in ids(idx, k=100)]
+    assert ids(idx) == warm
+    eng.sql("REINDEX INDEX hc_hnsw")
+    rebuilt = eng.ann.lookup("hc", "embedding")
+    fresh = HnswIndex.build(eng.sql("SELECT * FROM hc"), "embedding",
+                            str(tmp_path / "fresh"), id_col="vec_id", m=8)
+    for ef in (None, 10):
+        assert ids(rebuilt, ef, k=20) == ids(fresh, ef, k=20)

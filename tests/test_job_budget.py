@@ -7,7 +7,13 @@ contracts that let them skip their metadata jobs:
 * a routed IVF search runs one job: the probe lists are ranked on the
   driver over the held centroid matrix, bit for bit as the JVM kernels
   rank them, and the spill dedup runs on the top-k's single partition;
-* ``append_to_index`` labels with the held centroids.
+* ``append_to_index`` labels with the held centroids, and the index
+  keeps its layout's schema, so the first search after an append is
+  one job too;
+* a routed HNSW search runs at most two jobs (the shard search and the
+  join-back) and the shard search has no Exchange: each task searches
+  its shards' graphs from the worker's cache instead of shuffling the
+  graph table.
 """
 
 from __future__ import annotations
@@ -108,6 +114,49 @@ def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_first_ivf_search_after_append_runs_one_job(spark, eng):
+    from opengauss_vectordb_spark.vector.maintenance import append_to_index
+
+    eng.sql("CREATE INDEX ja_ivf ON embeddings USING ivfflat"
+            " (embedding vector_l2_ops) WITH (lists = 4)")
+    idx = eng.ann.lookup("embeddings", "embedding")
+    far = [7.0] * 64
+    append_to_index(spark, idx, spark.createDataFrame(
+        [(100000, far, 0)], "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+    ), "embedding")
+    lit = "[" + ",".join(["7"] * 64) + "]"
+    stmt = (f"SELECT vec_id FROM embeddings ORDER BY embedding <-> '{lit}'"
+            " LIMIT 3")
+    df, n_build = _jobs(spark, lambda: eng.sql(stmt))
+    rows, n_run = _jobs(spark, df.collect)
+    assert (n_build, n_run) == (0, 1)
+    assert rows[0].vec_id == 100000
+    # the kept schema is what an inferring read of the layout reports
+    got = idx.data(spark).schema
+    want = spark.read.parquet(os.path.join(idx.path, "data")).schema
+    assert [(f.name, f.dataType, f.nullable) for f in got] == \
+        [(f.name, f.dataType, f.nullable) for f in want]
+    eng.sql("DROP INDEX ja_ivf")
+
+
+def test_routed_hnsw_search_runs_two_jobs_without_exchange(spark, eng):
+    eng.sql("CREATE INDEX jb_hnsw ON embeddings USING hnsw"
+            " (embedding vector_l2_ops) WITH (m = 8)")
+    q = "[" + ",".join(["0.1"] * 64) + "]"
+    stmt = (f"SELECT vec_id FROM embeddings ORDER BY embedding <-> '{q}'"
+            " LIMIT 10")
+    for _ in range(2):  # the first search and a warm one
+        rows, n = _jobs(spark, lambda: eng.sql(stmt).collect())
+        assert n <= 2, n
+        assert len(rows) == 10
+    idx = eng.ann.lookup("embeddings", "embedding")
+    plan = idx.search(spark, [0.1] * 64, k=10)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    eng.sql("DROP INDEX jb_hnsw")
 
 
 def _vectors(spark, n, dim, seed, offset=0):

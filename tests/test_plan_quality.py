@@ -483,9 +483,10 @@ def test_lateral_decorrelates_to_window(spark):
 
 def test_round4_second_wave_stays_jvm_side(spark):
     """No row-at-a-time Python in any of the second-wave relational /
-    text / function gates (HNSW's FlatMapGroupsInPandas stages are the
-    deliberate, Arrow-batched exception — graph traversal is the one
-    operator Catalyst cannot express — and are not BatchEvalPython)."""
+    text / function gates (HNSW's Arrow-batched build and search stages,
+    FlatMapGroupsInPandas and MapInArrow, are the deliberate exception —
+    graph traversal is the one operator Catalyst cannot express — and
+    are not BatchEvalPython)."""
     for name in ["setop_all_multiplicity", "agg_ordered_concat",
                  "fts_plainto_websearch", "fts_headline",
                  "string_format_pg", "unpivot_metrics"]:
