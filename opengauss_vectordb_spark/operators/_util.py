@@ -294,10 +294,14 @@ def literal_spans(query: str) -> list[tuple[int, int]]:
 
 def sub_outside_literals(pattern: re.Pattern, repl, query: str) -> str:
     """``pattern.sub(repl, query)``, leaving every match that starts
-    inside a string literal as it is."""
-    spans = literal_spans(query)
+    inside a string literal as it is.  The literals are scanned at the
+    first match, so a statement with none pays only the regex search."""
+    spans = None
 
     def _sub(m: re.Match) -> str:
+        nonlocal spans
+        if spans is None:
+            spans = literal_spans(query)
         if any(a <= m.start() <= b for a, b in spans):
             return m.group(0)
         return repl(m)

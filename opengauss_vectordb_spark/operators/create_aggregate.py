@@ -140,8 +140,7 @@ def _resolve_fn(engine, fname: str, n_args: int, role: str) -> dict:
     registered SQL-language function's spec, or a pass-through call to
     a built-in (quoted verbatim into the lambda).  C-language
     transitions have nothing to inline and refuse by name."""
-    specs = getattr(engine, "sql_fn_specs", {})
-    spec = specs.get(fname.lower())
+    spec = engine.sql_fn_specs.get(fname.lower())
     if spec is not None:
         if spec.get("subquery"):
             raise NotImplementedError(
@@ -156,8 +155,8 @@ def _resolve_fn(engine, fname: str, n_args: int, role: str) -> dict:
                 f"parameter(s), aggregate supplies {n_args}"
             )
         return spec
-    if fname.lower() in getattr(engine, "sql_functions", {}) or \
-            fname.lower() in getattr(engine, "plfn_interpreted", {}):
+    if fname.lower() in engine.sql_functions or \
+            fname.lower() in engine.plfn_interpreted:
         raise NotImplementedError(
             f"CREATE AGGREGATE: {role} {fname} is not an inlinable "
             "scalar SQL function — declare the transition with CREATE "
@@ -274,8 +273,6 @@ def _create_aggregate(engine, parsed):
             {cspec["params"][0]: "__agg_acc",
              cspec["params"][1]: "__agg_x"},
         )
-    if not hasattr(engine, "aggregates"):
-        engine.aggregates = {}
     engine.aggregates[name] = {
         "n_args": k,
         "init": init if init is not None else f"CAST(NULL AS {stype})",
@@ -334,7 +331,7 @@ def rewrite_agg_calls(engine, query: str) -> str:
     """Call-site rewrite: ``myagg(args)`` → the fold expression.
     Identity when no aggregate is registered or none is named in the
     text (substring pre-filter — this runs on every statement)."""
-    aggs = getattr(engine, "aggregates", None)
+    aggs = engine.aggregates
     if not aggs:
         return query
     low = query.lower()
@@ -581,7 +578,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
     falls back to the single-level rewrite.  Correctness contract
     (PG's): CFUNC must be the associative merge of the state type and
     INITCOND its identity."""
-    aggs = getattr(engine, "aggregates", None)
+    aggs = engine.aggregates
     if not aggs:
         return None
     low = query.lower()
@@ -721,7 +718,7 @@ def try_handle_stmt(engine, query: str):
     m = _DROP_AGG.match(query)
     if m:
         name = m.group("name").lower()
-        existed = getattr(engine, "aggregates", {}).pop(name, None)
+        existed = engine.aggregates.pop(name, None)
         if existed is not None or re.search(r"IF\s+EXISTS", query,
                                             re.IGNORECASE):
             return status_frame(engine.spark, ("DROP AGGREGATE", name, existed is not None), "tag STRING, aggregate STRING, existed BOOLEAN",)

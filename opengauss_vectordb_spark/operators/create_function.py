@@ -408,8 +408,6 @@ def try_handle_stmt(engine, query: str):
         # stash the inlinable spec for CREATE AGGREGATE composition
         spec = sql_function_spec(query)
         if spec is not None:
-            if not hasattr(engine, "sql_fn_specs"):
-                engine.sql_fn_specs = {}
             engine.sql_fn_specs[name] = spec
         return status_frame(spark, ("CREATE FUNCTION", name), "tag STRING, function STRING")
     m = _ALTER_FN.match(query)
@@ -417,7 +415,7 @@ def try_handle_stmt(engine, query: str):
         name = m.group("name").lower()
         action = m.group("action").strip()
         known = (name in engine.sql_functions
-                 or name in getattr(engine, "plfn_interpreted", {}))
+                 or name in engine.plfn_interpreted)
         if not known:
             raise KeyError(f"ALTER FUNCTION: {name!r} does not exist")
         rn = re.match(r"RENAME\s+TO\s+(?P<new>\w+)\s*;?\s*$", action,
@@ -440,10 +438,10 @@ def try_handle_stmt(engine, query: str):
                 # resurrecting the original name
                 engine.sql_functions[new] = new_ddl
                 engine.sql_functions.pop(name)
-                specs = getattr(engine, "sql_fn_specs", {})
+                specs = engine.sql_fn_specs
                 if name in specs:
                     specs[new] = specs.pop(name)
-            elif name in getattr(engine, "plfn_interpreted", {}):
+            elif name in engine.plfn_interpreted:
                 engine.plfn_interpreted[new] = \
                     engine.plfn_interpreted.pop(name)
                 old_txt = engine.sql_functions.pop(name)
@@ -469,16 +467,16 @@ def try_handle_stmt(engine, query: str):
             "tag STRING, function STRING, action STRING",
         )
     m = _DROP_FN.match(query)
-    interp = getattr(engine, "plfn_interpreted", {})
+    interp = engine.plfn_interpreted
     if m and (m.group("name").lower() in engine.sql_functions
               or m.group("name").lower() in interp
               or re.search(r"IF\s+EXISTS", query, re.IGNORECASE)):
         name = m.group("name").lower()
         existed = engine.sql_functions.pop(name, None) is not None
         existed = interp.pop(name, None) is not None or existed
-        getattr(engine, "sql_fn_specs", {}).pop(name, None)
-        getattr(engine, "plpython_setof", set()).discard(name)
-        getattr(engine, "plpython_setof_composite", set()).discard(name)
+        engine.sql_fn_specs.pop(name, None)
+        engine.plpython_setof.discard(name)
+        engine.plpython_setof_composite.discard(name)
         engine.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
         return status_frame(engine.spark, ("DROP FUNCTION", name, existed), "tag STRING, function STRING, existed BOOLEAN",)
     return None

@@ -2338,23 +2338,10 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         # a user aggregate or a SETOF plpython function (CTAS gets
         # these by recursing through engine.sql; the view path
         # compiles directly)
-        if getattr(engine, "aggregates", None):
-            from .create_aggregate import (
-                rewrite_agg_calls,
-                rewrite_agg_two_level,
-            )
+        from ..engine import rewrite_call_sites
+        from .start_with import rewrite_start_with
 
-            two = rewrite_agg_two_level(engine, body)
-            body = two if two is not None \
-                else rewrite_agg_calls(engine, body)
-        if getattr(engine, "plpython_setof", None):
-            from .plpython import rewrite_setof_calls
-
-            body = rewrite_setof_calls(engine, body)
-        if _re.search(r"\bCONNECT\s+BY\b", body, _re.IGNORECASE):
-            from .start_with import rewrite_start_with
-
-            body = rewrite_start_with(engine, body)
+        body = rewrite_start_with(engine, rewrite_call_sites(engine, body))
         if _re.search(
             r"\b(?:time_window|time_fill|fill_last|fill_first)\s*\(",
             body, _re.IGNORECASE,
@@ -2368,8 +2355,6 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         )
         # the ORIGINAL text, for pg_get_viewdef (ruleutils.cpp
         # deparses the rule; the stored text IS the definition here)
-        if not hasattr(engine, "view_defs"):
-            engine.view_defs = {}
         engine.view_defs[name] = m.group("stmt").strip()
         return status_frame(engine.spark, ("CREATE VIEW", name), "tag STRING, view STRING")
     m = _DROP_VIEW.match(query)

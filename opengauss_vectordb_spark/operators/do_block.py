@@ -1467,8 +1467,6 @@ def _split_call_args(args: str) -> list[str]:
 
 def try_handle_procedure(engine, query: str):
     """Engine.sql hook: CREATE PROCEDURE / CALL / DROP PROCEDURE."""
-    if not hasattr(engine, "procedures"):
-        engine.procedures = {}
     m = _CREATE_PROC_RE.match(query)
     if m:
         from .create_function import _split_params, _unquote_body
@@ -1666,11 +1664,9 @@ def register_interpreted_plfn(engine, name: str, params, ret_type: str,
         flags=re.IGNORECASE,
     )
     _scan_unsupported(scan, "plpgsql function")
-    if not hasattr(engine, "plfn_interpreted"):
-        engine.plfn_interpreted = {}
     # CREATE OR REPLACE over a previously COMPILED function: drop the
     # stale Spark macro so no call site resolves the old body
-    if name in getattr(engine, "sql_functions", {}):
+    if name in engine.sql_functions:
         engine.sql_functions.pop(name, None)
         engine.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
     engine.plfn_interpreted[name] = (params, ret_type, body, kind)
@@ -1773,7 +1769,7 @@ def try_handle_fncall(engine, query: str):
     and re-enter the statement pipeline.  Returns None for anything
     else — including calls to ordinary (compiled/Spark) functions,
     which keep their plan-time path."""
-    fns = getattr(engine, "plfn_interpreted", None)
+    fns = engine.plfn_interpreted
     if not fns:
         return None
     masked = _mask_strings(query)

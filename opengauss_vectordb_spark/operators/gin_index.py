@@ -41,6 +41,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..plans.explain import note_routing
 from . import index_lifecycle as lifecycle
 from ._util import scan_refs, status_frame, sub_outside_literals
 
@@ -520,8 +521,6 @@ def rewrite_tsmatch(engine, query: str) -> str:
                     terms, kind = tk
                     lifecycle.ensure_fresh(engine, AM, name)
                     idx = engine.gin_indexes[name]
-                    from ..plans.explain import note_routing
-
                     note_routing(
                         engine,
                         f"Index Scan using {name} on {idx['table']} "
@@ -552,8 +551,6 @@ def rewrite_tsmatch(engine, query: str) -> str:
                     if sel is not None:
                         lifecycle.ensure_fresh(engine, AM, name)
                         idx = engine.gin_indexes[name]
-                        from ..plans.explain import note_routing
-
                         note_routing(
                             engine,
                             f"Index Scan using {name} on "
@@ -571,7 +568,7 @@ def rewrite_tsmatch(engine, query: str) -> str:
     def _sub_pct(m: re.Match) -> str:
         col = m.group("col").lower()
         probe = m.group("probe")
-        limit = float(getattr(engine, "_gucs", {}).get(
+        limit = float(engine._gucs.get(
             "pg_trgm.similarity_threshold", 0.3
         ))
         if "." not in col:
@@ -581,8 +578,6 @@ def rewrite_tsmatch(engine, query: str) -> str:
                 lifecycle.ensure_fresh(engine, AM, name)
                 idx = engine.gin_indexes[name]
                 q = _py_trigrams(probe)
-                from ..plans.explain import note_routing
-
                 note_routing(
                     engine,
                     f"Index Scan using {name} on {idx['table']} "
@@ -756,8 +751,6 @@ def rewrite_array_ops(engine, query: str) -> str:
             if ok:
                 vals = [v.strip("'") for v in raw]
                 lifecycle.ensure_fresh(engine, AM, name)
-                from ..plans.explain import note_routing
-
                 note_routing(
                     engine,
                     f"Index Scan using {name} on {idx['table']} "

@@ -68,6 +68,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.explain import note_routing
 from . import index_lifecycle as lifecycle
 from ._util import scan_refs, status_frame, sub_outside_literals
 
@@ -498,7 +499,7 @@ def gist_poly_search(engine, index_name: str,
         .filter(F.expr(_point_in_poly_sql(col, px, py)))
         .select(F.col(id_col).cast("long").alias("doc_id"))
     )
-    if getattr(engine, "last_index_routing", None) is not None:
+    if engine.last_index_routing is not None:
         # EXPLAIN armed: the lossy-index evidence the reference
         # prints as 'Rows Removed by Index Recheck' — candidate
         # count (MBR phase, a superset) vs exact ray-cast survivors
@@ -571,8 +572,6 @@ def rewrite_gist_ops(engine, query: str) -> str:
             idx = engine.gist_indexes[name]
             df = gist_poly_search(engine, name, (px, py))
             ls = idx["last_search"]
-            from ..plans.explain import note_routing
-
             recheck = ""
             if "candidates" in ls:
                 removed = ls["candidates"] - ls["recheck_survivors"]
@@ -609,8 +608,6 @@ def rewrite_gist_ops(engine, query: str) -> str:
             idx = engine.gist_indexes[name]
             df = gist_search(engine, name, op, q).select("doc_id")
             ls = idx["last_search"]
-            from ..plans.explain import note_routing
-
             note_routing(
                 engine,
                 f"Index Scan using {name} on {idx['table']} "

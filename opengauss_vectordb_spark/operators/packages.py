@@ -293,7 +293,7 @@ def substitute_var_reads(engine, query: str) -> str:
     (``pkg.var :=`` keeps its name), member calls (``pkg.member(``
     belongs to rewrite_member_calls), and occurrences inside string
     literals (string-masked matching)."""
-    pkgs = getattr(engine, "packages", None)
+    pkgs = engine.packages
     if not pkgs or not any(p.get("variables") for p in pkgs.values()):
         return query
     if _PKG_DDL_RE.match(query):
@@ -325,7 +325,7 @@ def _try_assignment(engine, query: str):
     if m is None:
         return None
     pkg = m.group("pkg").lower()
-    meta = getattr(engine, "packages", {}).get(pkg)
+    meta = engine.packages.get(pkg)
     if meta is None:
         return None  # not a package — let downstream handlers judge
     vname = m.group("var").lower()
@@ -356,8 +356,6 @@ def _try_assignment(engine, query: str):
 
 def try_handle_stmt(engine, query: str):
     """Engine.sql hook for CREATE PACKAGE [BODY] / DROP PACKAGE."""
-    if not hasattr(engine, "packages"):
-        engine.packages = {}
     handled = _try_assignment(engine, query)
     if handled is not None:
         return handled
@@ -452,7 +450,7 @@ def rewrite_member_calls(engine, query: str) -> str:
     """``pkg.member(`` → ``pkg__member(`` for every compiled member —
     the engine-side resolution pl_package.cpp does at call lookup.
     Identity when no packages exist (zero overhead on the hot path)."""
-    pkgs = getattr(engine, "packages", None)
+    pkgs = engine.packages
     if not pkgs:
         return query
     for pkg, meta in pkgs.items():

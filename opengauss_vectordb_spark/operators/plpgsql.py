@@ -2206,7 +2206,7 @@ def try_handle_stmt(engine, query: str):
     engine.sql_functions[name] = spark_ddl
     # CREATE OR REPLACE over a previously INTERPRETED function: the
     # compiled macro wins — drop the stale interpreter entry
-    getattr(engine, "plfn_interpreted", {}).pop(name, None)
+    engine.plfn_interpreted.pop(name, None)
     return status_frame(engine.spark, ("CREATE FUNCTION", name), "tag STRING, function STRING")
 
 

@@ -116,7 +116,7 @@ def compile_plpython(query: str, engine=None):
         # ARRAY<STRUCT<...>> and the call site star-expands with
         # inline() — plpy_exec.cpp's dict/tuple row protocol.
         elem_src = setof.group("elem")
-        if engine is not None and getattr(engine, "user_types", None):
+        if engine is not None and engine.user_types:
             from .user_types import resolve_type
 
             rt_ddl = resolve_type(engine, elem_src)
@@ -268,18 +268,13 @@ def try_handle_stmt(engine, query: str):
     engine.spark.udf.register(name, udf)
     engine.sql_functions[name] = f"<plpython pandas_udf RETURNS {spark_ret}>"
     if setof_kind:
-        if not hasattr(engine, "plpython_setof"):
-            engine.plpython_setof = set()
         engine.plpython_setof.add(name)
-        if not hasattr(engine, "plpython_setof_composite"):
-            engine.plpython_setof_composite = set()
-        if setof_kind == "composite":
-            engine.plpython_setof_composite.add(name)
-        else:
-            engine.plpython_setof_composite.discard(name)
     else:
-        getattr(engine, "plpython_setof", set()).discard(name)
-        getattr(engine, "plpython_setof_composite", set()).discard(name)
+        engine.plpython_setof.discard(name)
+    if setof_kind == "composite":
+        engine.plpython_setof_composite.add(name)
+    else:
+        engine.plpython_setof_composite.discard(name)
     return status_frame(engine.spark, ("CREATE FUNCTION", name), "tag STRING, function STRING")
 
 
@@ -291,7 +286,7 @@ def rewrite_setof_calls(engine, query: str) -> str:
     dropping the input row), and a FROM-position call ``FROM
     setof_fn(lits) [AS alias]`` becomes a one-row generator subquery.
     Identity when no SETOF function is registered or named."""
-    names = getattr(engine, "plpython_setof", None)
+    names = engine.plpython_setof
     if not names:
         return query
     low = query.lower()
@@ -299,7 +294,7 @@ def rewrite_setof_calls(engine, query: str) -> str:
         return query
     from .plpgsql import _mask_strings
 
-    comp = getattr(engine, "plpython_setof_composite", set())
+    comp = engine.plpython_setof_composite
     out = query
     for name in sorted(names):
         gen = "inline" if name in comp else "explode"

@@ -219,16 +219,12 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         # router note "Index Scan using <name> ..." lines with their
         # pruned-unit counts (explain.cpp's index-scan nodes — the
         # user-visible proof the statement is index-served)
-        prev = getattr(engine, "last_index_routing", None)
-        engine.last_index_routing = []
+        prev, engine.last_index_routing = engine.last_index_routing, []
         try:
             df = engine.sql(m.group("stmt"))
             routing = list(engine.last_index_routing)
         finally:
-            if prev is None:
-                del engine.last_index_routing
-            else:
-                engine.last_index_routing = prev
+            engine.last_index_routing = prev
         if analyze:
             # instrumented run (explain.cpp's ANALYZE executes the plan)
             df.write.format("noop").mode("overwrite").save()

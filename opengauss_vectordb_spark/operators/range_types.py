@@ -371,10 +371,7 @@ def _range_columns(engine) -> dict[str, str]:
     """column name → range kind, unioned over managed tables (the
     engine's name-based dispatch rule, as rewrite_array_ops)."""
     out: dict[str, str] = {}
-    mt = getattr(engine, "managed_tables", None)
-    if mt is None:
-        return out
-    for meta in mt.tables.values():
+    for meta in engine.managed_tables.tables.values():
         out.update(meta.get("range_cols") or {})
     return out
 
@@ -683,11 +680,8 @@ def rewrite_range_ops(engine, query: str) -> str:
     # tables owning range columns: an INSERT/UPDATE against one may
     # carry only bare literals (no constructor/column NAME in the
     # text), so the table name itself must trigger the pass
-    mt = getattr(engine, "managed_tables", None)
-    rtables = (
-        {t for t, meta in mt.tables.items()
-         if meta.get("range_cols")} if mt is not None else set()
-    )
+    rtables = {t for t, meta in engine.managed_tables.tables.items()
+               if meta.get("range_cols")}
     if not (
         any(k in low for k in RANGE_KINDS)
         or any(f in low for f in _RANGE_FNS)
@@ -705,9 +699,7 @@ def rewrite_range_ops(engine, query: str) -> str:
         query, re.IGNORECASE | re.DOTALL,
     )
     if um:
-        mt = getattr(engine, "managed_tables", None)
-        meta = (mt.tables.get(um.group("t").lower())
-                if mt is not None else None)
+        meta = engine.managed_tables.tables.get(um.group("t").lower())
         rcols = (meta or {}).get("range_cols") or {}
         if rcols:
             parts = []
@@ -737,9 +729,7 @@ def rewrite_range_ops(engine, query: str) -> str:
         query, re.IGNORECASE | re.DOTALL,
     )
     if m:
-        mt = getattr(engine, "managed_tables", None)
-        meta = (mt.tables.get(m.group("t").lower())
-                if mt is not None else None)
+        meta = engine.managed_tables.tables.get(m.group("t").lower())
         rcols = (meta or {}).get("range_cols") or {}
         if rcols:
             cols = ([c.strip().lower() for c in

@@ -126,7 +126,7 @@ def _role_closure(engine, role: str) -> set[str]:
     (GrantRoleStmt membership — gram.y:14286; is_member_of_role)."""
     seen = {role}
     frontier = [role]
-    members = getattr(engine, "role_members", {})
+    members = engine.role_members
     while frontier:
         r = frontier.pop()
         for parent in members.get(r, ()):  # groups r belongs to

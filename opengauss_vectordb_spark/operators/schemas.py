@@ -78,7 +78,7 @@ def rewrite_qualified_names(engine, query: str) -> str:
     alias grammar are textually identical, so registration is the
     disambiguator (namespace.cpp resolves against pg_namespace the
     same way)."""
-    schemas = getattr(engine, "schemas", None)
+    schemas = engine.schemas
     if not schemas:
         return query
     lowered = query.lower()
@@ -109,11 +109,11 @@ def resolve_search_path(engine, query: str) -> str:
     table position rewrites to the schema's member; ``public`` stops
     the walk when a flat relation of that name exists.  Identity when
     no search_path is set or no schemas are registered."""
-    schemas = getattr(engine, "schemas", None)
+    schemas = engine.schemas
     # SET CURRENT_SCHEMA = x is openGauss's spelling for the path
     # head (namespace.cpp assign_search_path's sibling; regress sets
     # it 137×) — it participates exactly like search_path
-    gucs = getattr(engine, "_gucs", {})
+    gucs = engine._gucs
     path_raw = gucs.get("search_path") or gucs.get("current_schema")
     if not schemas or not path_raw:
         return query
@@ -256,12 +256,10 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         # synonyms refuse toward CREATE FUNCTION.
         name = m.group("name").lower()
         target = m.group("target").lower().replace(".", "__")
-        if not hasattr(engine, "synonyms"):
-            engine.synonyms = {}
         if name in engine.synonyms and not m.group("orr"):
             raise ValueError(f"synonym {name!r} already exists")
         if not (target in engine.managed_tables.tables
-                or target in getattr(engine, "tables", ())
+                or target in engine.tables
                 or engine.spark.catalog.tableExists(target)):
             raise KeyError(
                 f"CREATE SYNONYM: relation {m.group('target')!r} not "
@@ -274,7 +272,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
     m = _DROP_SYNONYM.match(query)
     if m:
         name = m.group("name").lower()
-        syns = getattr(engine, "synonyms", {})
+        syns = engine.synonyms
         existed = name in syns
         if not existed and not m.group("ie"):
             raise KeyError(f"synonym {name!r} does not exist")
@@ -308,7 +306,7 @@ def resolve_synonyms(engine, query: str) -> str:
     TABLE <synonym> must NOT silently redirect to the target (a DROP
     would destroy the target's data).  CREATE TABLE with a name
     colliding with a synonym is rejected (tablecmds.cpp:6995)."""
-    syns = getattr(engine, "synonyms", None)
+    syns = engine.synonyms
     if not syns:
         return query
     low = query.lower()

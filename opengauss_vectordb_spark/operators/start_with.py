@@ -258,11 +258,16 @@ def _parse(query: str, masked: str) -> _Swcb | None:
     return sw
 
 
+_CONNECT_BY = re.compile(r"\bCONNECT\s+BY\b", re.IGNORECASE)
+
+
 def rewrite_start_with(engine, query: str) -> str:
     """Engine.sql hook: compile a top-level START WITH / CONNECT BY
     SELECT into WITH RECURSIVE; identity for every other statement."""
+    if not _CONNECT_BY.search(query):
+        return query
     masked = _mask_strings(query)
-    if not re.search(r"\bCONNECT\s+BY\b", masked, re.IGNORECASE):
+    if not _CONNECT_BY.search(masked):
         return query
     sw = _parse(query, masked)
     if sw is None:

@@ -94,19 +94,19 @@ def try_handle_stmt(engine, stmt: str):
 
 def fire_insert_triggers(engine, tbl: str, df):
     """Apply BEFORE INSERT triggers to the batch, in trigger-name order."""
-    trigs = getattr(engine, "triggers", {}).get(tbl.lower(), {})
+    trigs = engine.triggers.get(tbl.lower(), {})
     for name in sorted(trigs):
         t = trigs[name]
         if "insert" not in t["events"]:
             continue
         proc, args = t["proc"], t["args"]
         if proc == "moddatetime":
-            clock = getattr(engine, "trigger_clock", None)
+            clock = engine.trigger_clock
             stamp = (F.lit(clock).cast("timestamp") if clock is not None
                      else F.current_timestamp())
             df = df.withColumn(args[0], stamp)
         elif proc == "insert_username":
-            user = (getattr(engine, "session_user", None)
+            user = (engine.session_user
                     or engine.spark.sparkContext.sparkUser())
             df = df.withColumn(args[0], F.lit(user))
         elif proc == "check_primary_key":
@@ -130,21 +130,21 @@ def fire_update_triggers(engine, tbl: str, df, cond, set_cols, schema):
     """BEFORE UPDATE triggers: stamp columns on the rows the UPDATE's
     WHERE condition hit (moddatetime's canonical use), validate fk
     columns the SET clauses touched (refint)."""
-    trigs = getattr(engine, "triggers", {}).get(tbl.lower(), {})
+    trigs = engine.triggers.get(tbl.lower(), {})
     for name in sorted(trigs):
         t = trigs[name]
         if "update" not in t["events"]:
             continue
         proc, args = t["proc"], t["args"]
         if proc == "moddatetime":
-            clock = getattr(engine, "trigger_clock", None)
+            clock = engine.trigger_clock
             stamp = (F.lit(clock).cast("timestamp") if clock is not None
                      else F.current_timestamp())
             df = df.withColumn(
                 args[0], F.when(cond, stamp).otherwise(F.col(args[0]))
             )
         elif proc == "insert_username":
-            user = (getattr(engine, "session_user", None)
+            user = (engine.session_user
                     or engine.spark.sparkContext.sparkUser())
             df = df.withColumn(
                 args[0], F.when(cond, F.lit(user)).otherwise(F.col(args[0]))

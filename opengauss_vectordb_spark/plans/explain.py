@@ -23,9 +23,8 @@ def note_routing(engine, line: str) -> None:
     "Index Scan using <name>" line, the user-visible proof a query is
     index-served).  No-op unless EXPLAIN armed the collector — routed
     execution itself never pays for the bookkeeping."""
-    lst = getattr(engine, "last_index_routing", None)
-    if lst is not None:
-        lst.append(line)
+    if engine.last_index_routing is not None:
+        engine.last_index_routing.append(line)
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -337,6 +337,66 @@ def test_show_guc(spark):
     assert eng.sql("SHOW ivfflat.probes").collect()[0].value == 7
 
 
+def test_datavec_guc_spellings(spark, tmp_path):
+    """Every spelling that sets ivfflat.probes or hnsw.ef_search stores
+    an int: the routed IVF and HNSW searches answer as after
+    ``SET name = n`` and SHOW reads the int back.  Values outside
+    pgvector's ranges and non-integers raise naming the parameter."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    eng.sql("CREATE TABLE gv (id bigserial PRIMARY KEY, embedding vector(3))")
+    vecs = np.random.default_rng(7).normal(size=(40, 3)).round(3)
+    eng.sql("INSERT INTO gv (embedding) VALUES " + ", ".join(
+        "('[" + ",".join(map(str, v)) + "]')" for v in vecs))
+    eng.sql("CREATE INDEX gv_ivf ON gv USING ivfflat"
+            " (embedding vector_l2_ops) WITH (lists = 4)")
+    eng.sql("CREATE INDEX gv_hnsw ON gv USING hnsw"
+            " (embedding vector_cosine_ops)")
+    for name, n, hi, op in (("ivfflat.probes", 2, 32768, "<->"),
+                            ("hnsw.ef_search", 16, 1000, "<=>")):
+        search = f"SELECT id FROM gv ORDER BY embedding {op} '[0.3,-0.2,0.1]' LIMIT 5"
+        eng.sql(f"SET {name} = {n}")
+        want = [r.id for r in eng.sql(search).collect()]
+        assert len(want) == 5
+        for stmt in (f"SET {name} TO {n}", f"SET {name} = '{n}'",
+                     f"SET SESSION {name} TO {n}", f"SET LOCAL {name} = {n}",
+                     f"ALTER SYSTEM SET {name} TO '{n}'",
+                     f"SELECT set_config('{name}', '{n}', false)"):
+            eng.sql(f"RESET {name}")
+            eng.sql(stmt)
+            assert eng._gucs[name] == n, stmt
+            assert eng.sql(f"SHOW {name}").collect()[0].value == n
+            assert [r.id for r in eng.sql(search).collect()] == want, stmt
+        for bad in ("0", str(hi + 1), "'abc'"):
+            with pytest.raises(ValueError, match=name):
+                eng.sql(f"SET {name} = {bad}")
+        assert eng._gucs[name] == n
+    eng.sql("DROP TABLE gv")
+
+
+def test_pg_stat_statements_names_the_handler(spark, tmp_path):
+    """pg_stat_statements' handler column names the statement-table row
+    that served each statement, including the ANN router and the
+    spark.sql fall-through."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    eng.sql("CREATE TABLE hv (id bigserial PRIMARY KEY, embedding vector(3))")
+    eng.sql("INSERT INTO hv (embedding) VALUES ('[1,2,3]'), ('[4,5,6]')")
+    eng.sql("SET hnsw.ef_search TO 20")
+    eng.sql("SELECT id FROM hv ORDER BY embedding <-> '[1,2,3]' LIMIT 1"
+            ).collect()
+    eng.sql("SELECT count(*) AS n FROM orders").collect()
+    handler = {r.query: r.handler for r in
+               eng.sql("SELECT * FROM pg_stat_statements").collect()}
+    assert handler["CREATE TABLE hv (id bigserial PRIMARY KEY,"
+                   " embedding vector(?))"] == "tables"
+    assert handler["SET hnsw.ef_search TO ?"] == "guc_set"
+    assert handler["SELECT id FROM hv ORDER BY embedding <-> ? LIMIT ?"
+                   ] == "ann_route"
+    assert handler["SELECT count(*) AS n FROM orders"] == "spark_sql"
+    eng.sql("DROP TABLE hv")
+
+
 def test_catalog_views(spark, tmp_path):
     """pg_tables / pg_indexes introspection (pg_catalog views psql's
     \\d family reads): catalog + managed tables, registered ANN
