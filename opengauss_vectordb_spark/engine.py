@@ -1314,11 +1314,12 @@ class Engine:
         Session GUCs set via ``sql("SET ivfflat.probes = n")`` /
         ``sql("SET hnsw.ef_search = n")`` supply the defaults when the
         caller passes no override, mirroring the reference's
-        GUC-then-query workflow."""
+        GUC-then-query workflow; unset, they are the GUC defaults the
+        canonical SQL text routes at (probes 1, ef_search 40)."""
         if probes is None:
-            probes = self._gucs.get("ivfflat.probes")
+            probes = guc(self, "ivfflat.probes")
         if ef_search is None:
-            ef_search = self._gucs.get("hnsw.ef_search")
+            ef_search = guc(self, "hnsw.ef_search")
         df, _hit = self._ann_source(table_name, vec_col, metric)
         return self.ann.topk(
             self.spark, table_name, df, vec_col, qvec, k,

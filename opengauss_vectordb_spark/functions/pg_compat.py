@@ -17,6 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..vector import distance as _dist
+
+_VEC2 = "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>"
+
 _SQL_MACROS = {
     # array_length(arr, dim) (adt/arrayfuncs.cpp array_length; 86
     # regress uses): the engine's arrays are 1-D (SURVEY §1.3), so
@@ -100,27 +104,24 @@ _SQL_MACROS = {
     # strpos/position (adt/varlena.cpp textpos)
     "strpos": "CREATE OR REPLACE TEMPORARY FUNCTION strpos(s STRING, sub STRING) "
     "RETURNS INT RETURN instr(s, sub)",
-    # l2/cosine/ip/l1 distances under datavec names over array<double>
-    "l2_distance": "CREATE OR REPLACE TEMPORARY FUNCTION l2_distance"
-    "(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE RETURN "
-    "sqrt(aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))",
-    "inner_product": "CREATE OR REPLACE TEMPORARY FUNCTION inner_product"
-    "(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE RETURN "
-    "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), "
-    "(acc, v) -> acc + v)",
-    "cosine_distance": "CREATE OR REPLACE TEMPORARY FUNCTION cosine_distance"
-    "(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE RETURN "
-    "1.0 - inner_product(a, b) / "
-    "(sqrt(inner_product(a, a)) * sqrt(inner_product(b, b)))",
-    "l1_distance": "CREATE OR REPLACE TEMPORARY FUNCTION l1_distance"
-    "(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE RETURN "
-    "aggregate(zip_with(a, b, (x, y) -> abs(x - y)), CAST(0.0 AS DOUBLE), "
-    "(acc, v) -> acc + v)",
+    # l2/cosine/ip/l1 distances and the norm under datavec names over
+    # array<double>: the bodies are the kernels' own SQL text
+    # (vector/distance.py), so the SQL functions and the Column kernels
+    # are one definition and agree bit for bit (a zero vector's cosine
+    # distance is NaN in both)
+    **{
+        name: "CREATE OR REPLACE TEMPORARY FUNCTION "
+        f"{name}({params}) RETURNS DOUBLE RETURN {body}"
+        for name, params, body in (
+            ("l2_distance", _VEC2, _dist.l2_distance_sql("a", "b")),
+            ("inner_product", _VEC2, _dist.dot_product_sql("a", "b")),
+            ("cosine_distance", _VEC2, _dist.cosine_distance_sql("a", "b")),
+            ("l1_distance", _VEC2, _dist.l1_distance_sql("a", "b")),
+            ("vector_norm", "a ARRAY<DOUBLE>", _dist.l2_norm_sql("a")),
+        )
+    },
     "vector_dims": "CREATE OR REPLACE TEMPORARY FUNCTION vector_dims"
     "(a ARRAY<DOUBLE>) RETURNS INT RETURN size(a)",
-    "vector_norm": "CREATE OR REPLACE TEMPORARY FUNCTION vector_norm"
-    "(a ARRAY<DOUBLE>) RETURNS DOUBLE RETURN sqrt(inner_product(a, a))",
     "l2_normalize": "CREATE OR REPLACE TEMPORARY FUNCTION l2_normalize"
     "(a ARRAY<DOUBLE>) RETURNS ARRAY<DOUBLE> RETURN "
     "transform(a, x -> x / vector_norm(a))",

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from ..vector.distance import as_double, dot_product
+from ..vector.distance import as_double, dlit_sql, dot_product
 
 DIM = 64
 
@@ -201,17 +201,14 @@ def db4ai_predict_scoring(spark, sf_dir):
     literals — sigmoid probability + decision margin as codegen'd
     column expressions (no Python per row; at 100 TB this is a pure
     map stage)."""
-    e = as_double(F.col("embedding"))
-    e4 = F.slice(e, 1, 4)
-    w = F.array(*[F.lit(v) for v in _LOGIT_W])
-    v = F.array(*[F.lit(x) for x in _SVM_W])
+    e4 = f"slice({as_double('embedding')}, 1, 4)"
     t = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull() & (F.col("vec_id") < 80))
         .select(
             "vec_id",
-            (dot_product(e4, w) + F.lit(_LOGIT_B)).alias("z"),
-            (dot_product(e4, v) + F.lit(_SVM_B)).alias("margin"),
+            (dot_product(e4, dlit_sql(_LOGIT_W)) + F.lit(_LOGIT_B)).alias("z"),
+            (dot_product(e4, dlit_sql(_SVM_W)) + F.lit(_SVM_B)).alias("margin"),
         )
     )
     z, margin = F.col("z"), F.col("margin")
@@ -275,7 +272,7 @@ def db4ai_kmeans_predict(spark, sf_dir):
     tie-break by centroid index (CASE chain on <=), then per-cluster
     size + inertia (exact decimal sum). One scan, map-side combinable —
     the assignment step of a distributed Lloyd iteration."""
-    e8 = F.slice(as_double(F.col("embedding")), 1, 8)
+    e8 = F.expr(f"slice({as_double('embedding')}, 1, 8)")
     t = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull())
@@ -344,17 +341,15 @@ def db4ai_pca_project(spark, sf_dir):
     row, entirely inside whole-stage codegen. The fitted components in
     ml.py come from MLlib PCA; here they are literals so the oracle can
     replay the exact arithmetic."""
-    e = as_double(F.col("embedding"))
-    v1 = F.array(*[F.lit(x) for x in _PCA_V1])
-    v2 = F.array(*[F.lit(x) for x in _PCA_V2])
+    e = as_double("embedding")
     return (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull() & (F.col("vec_id") < 60))
         .select(
             "vec_id",
             "label",
-            F.round(dot_product(e, v1), 4).alias("pc1"),
-            F.round(dot_product(e, v2), 4).alias("pc2"),
+            F.round(dot_product(e, dlit_sql(_PCA_V1)), 4).alias("pc1"),
+            F.round(dot_product(e, dlit_sql(_PCA_V2)), 4).alias("pc2"),
         )
         .orderBy("vec_id")
     )

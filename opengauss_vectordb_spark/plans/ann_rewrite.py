@@ -104,13 +104,14 @@ class AnnCatalog:
                                        ef_search=ef)
         ids = [r.id for r in idx.search(spark, qvec, k=k,
                                         ef_search=ef).collect()]
-        from ..vector.distance import DISTANCES, as_double, dlit_array
+        from ..vector.distance import DISTANCES, as_double, dlit_sql
 
-        dist = DISTANCES[metric](as_double(F.col(vec_col)), dlit_array(qvec))
+        dist = DISTANCES[metric](as_double(vec_col), dlit_sql(qvec))
         # the limit makes the sort a TakeOrderedAndProject (one
         # job); a bare orderBy plans a range-partitioned full sort
         return (
-            df.filter(F.col(id_col).isin(ids))
+            df.filter(f"`{id_col}` IN ({','.join(map(str, ids))})"
+                      if ids else "FALSE")
             .withColumn("distance", dist)
             .orderBy(F.col("distance").asc(), F.col(id_col).asc())
             .limit(k)

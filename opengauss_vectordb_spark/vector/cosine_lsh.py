@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators._util import scoped_persist
-from .distance import as_double, cosine_distance
+from .distance import as_double, cosine_distance, dlit_sql, dot_product_sql
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -34,18 +34,13 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[float(x) for x in p] for p in planes]
 
 
-def signature_bits(vec_col, planes: list[list[float]]):
-    """array<int> of sign bits, one per hyperplane — pure Column expr."""
-    cols = []
-    for p in planes:
-        plane_lit = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(vec_col, plane_lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        cols.append(F.when(dot >= 0, 1).otherwise(0))
-    return F.array(*cols)
+def signature_bits(vec: str, planes: list[list[float]]):
+    """array<int> of sign bits, one per hyperplane, over the SQL-text
+    array<double> operand ``vec`` — one parsed Column expr."""
+    return F.expr("array(" + ", ".join(
+        f"CASE WHEN {dot_product_sql(vec, dlit_sql(p))} >= 0 THEN 1 ELSE 0 END"
+        for p in planes
+    ) + ")")
 
 
 def cosine_lsh_candidates(
@@ -67,7 +62,7 @@ def cosine_lsh_candidates(
     planes = _hyperplanes(dim, n_bands * rows_per_band, seed)
     sig = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
-        signature_bits(as_double(F.col(vec_col)), planes).alias("_bits"),
+        signature_bits(as_double(vec_col), planes).alias("_bits"),
     )
     band_cols = [
         F.concat_ws(
@@ -116,9 +111,9 @@ def cosine_near_dup_pairs(
     """LSH candidates → exact cosine verification (candidate join back to
     the vectors is two broadcast-able lookups at candidate cardinality)."""
     cands = cosine_lsh_candidates(df, vec_col, id_col, dim, **lsh_kwargs)
-    va = df.select(F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("_vb"))
-    d = cosine_distance(F.col("_va"), F.col("_vb"))
+    va = df.selectExpr(f"`{id_col}` AS id_a", f"{as_double(vec_col)} AS _va")
+    vb = df.selectExpr(f"`{id_col}` AS id_b", f"{as_double(vec_col)} AS _vb")
+    d = cosine_distance("_va", "_vb")
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")

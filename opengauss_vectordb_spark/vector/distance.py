@@ -1,4 +1,4 @@
-"""Vector distance functions as native Column expressions.
+"""Vector distance kernels, each defined once as one SQL expression.
 
 Capability parity with `contrib/datavec/src/vector.cpp` (reference:
 `l2_distance` sql:172 / `<->`, `inner_product` sql:177 / `<#>` (returns the
@@ -12,6 +12,19 @@ accumulation, so results are deterministic and reproducible across
 engines and cluster runs. Everything stays inside Catalyst/Tungsten
 codegen — there is no Python in the per-row path, which is what lets a
 brute-force scan saturate 1000 executors at 100 TB.
+
+SQL text is the one definition of every kernel. Each ``*_sql`` function
+takes its operands as SQL text (a column name, ``CAST(embedding AS
+ARRAY<DOUBLE>)``, ``dlit_sql(q)``, ``slice(...)``) and returns the
+kernel's SQL text; the function of the same name without ``_sql``
+parses that text into a Column with one ``F.expr``, one py4j round
+trip. The same text is the body of the SQL functions ``l2_distance``,
+``inner_product``, ``cosine_distance``, ``l1_distance`` and
+``vector_norm`` (functions/pg_compat.py). Spelled through pyspark's
+Python-lambda API (``F.aggregate(F.zip_with(...))``), one kernel cost
+about 50 ms of round trips to build; the parsed text is the same
+Catalyst tree. Operands appear only outside the kernels' lambda
+bodies, whose variables are ``_x``, ``_y``, ``_acc`` and ``_v``.
 """
 
 from __future__ import annotations
@@ -20,9 +33,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double(v: Column) -> Column:
-    """Cast array<float> → array<double> so accumulation is double IEEE."""
-    return v.cast("array<double>")
+def as_double(col: str) -> str:
+    """SQL text of column ``col`` cast to array<double>, so accumulation
+    is double IEEE."""
+    return f"CAST(`{col}` AS ARRAY<DOUBLE>)"
 
 
 def dlit_array(values) -> Column:
@@ -51,9 +65,10 @@ def llit_sql(values) -> str:
         f"CAST({int(x)} AS BIGINT)" for x in values) + ")"
 
 
-def _fold_sum(arr: Column) -> Column:
-    """Sequential left-fold sum of an array<double> (deterministic order)."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+def _fold(arr: str) -> str:
+    """Sequential left-fold sum of an array<double> (deterministic
+    order), seeded with 0.0."""
+    return f"aggregate({arr}, 0.0D, (_acc, _v) -> _acc + _v)"
 
 
 # --- dim-guarded unrolled kernels ------------------------------------------
@@ -70,100 +85,113 @@ def _fold_sum(arr: Column) -> Column:
 # (OPTIMIZATION_r12.md §distance-kernels).
 
 
-def _unrolled_pair(a: Column, b: Column, n: int, term) -> Column:
-    e = F.lit(0.0)
-    for i in range(n):
-        e = e + term(a[i], b[i])
-    return e
-
-
-def _pair_sum(a: Column, b: Column, term, dim: int | None) -> Column:
-    fold = _fold_sum(F.zip_with(a, b, term))
+def _sum_sql(a: str, b: str, term: str, dim: int | None) -> str:
+    """sum over i of ``term`` (a template over ``{x}`` = a[i] and
+    ``{y}`` = b[i]): the left fold over ``zip_with``, unrolled under a
+    size guard when ``dim`` is given."""
+    fold = _fold(f"zip_with({a}, {b}, (_x, _y) -> {term.format(x='_x', y='_y')})")
     if dim is None:
         return fold
-    return F.when(
-        (F.size(a) == dim) & (F.size(b) == dim),
-        _unrolled_pair(a, b, dim, term),
-    ).otherwise(fold)
+    unrolled = " + ".join(["0.0D"] + [
+        "(" + term.format(x=f"({a})[{i}]", y=f"({b})[{i}]") + ")"
+        for i in range(dim)
+    ])
+    return (f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+            f"THEN {unrolled} ELSE {fold} END")
 
 
-def l2_squared(a: Column, b: Column, dim: int | None = None) -> Column:
-    return _pair_sum(a, b, lambda x, y: (x - y) * (x - y), dim)
+_L2SQ = "({x} - {y}) * ({x} - {y})"
+_PROD = "{x} * {y}"
+_ABS_DIFF = "abs({x} - {y})"
 
 
-def l2_distance(a: Column, b: Column, dim: int | None = None) -> Column:
+def l2_squared_sql(a: str, b: str, dim: int | None = None) -> str:
+    return _sum_sql(a, b, _L2SQ, dim)
+
+
+def l2_distance_sql(a: str, b: str, dim: int | None = None) -> str:
     """`<->` — Euclidean (vector.cpp, sql:172)."""
-    return F.sqrt(l2_squared(a, b, dim))
+    return f"sqrt({l2_squared_sql(a, b, dim)})"
 
 
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    return _pair_sum(a, b, lambda x, y: x * y, dim)
+def dot_product_sql(a: str, b: str, dim: int | None = None) -> str:
+    return _sum_sql(a, b, _PROD, dim)
 
 
-def inner_product(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot_product(a, b, dim)
-
-
-def neg_inner_product(
-    a: Column, b: Column, dim: int | None = None
-) -> Column:
+def neg_inner_product_sql(a: str, b: str, dim: int | None = None) -> str:
     """`<#>` — negative inner product, the reference's index-ordering
     convention (contrib/datavec/README.md:88)."""
-    return -dot_product(a, b, dim)
+    return f"-({dot_product_sql(a, b, dim)})"
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
+def l2_norm_sql(a: str, dim: int | None = None) -> str:
     """vector_norm (vector.h:26-64 externs; sql:210-246)."""
-    sq = _fold_sum(F.transform(a, lambda x: x * x))
+    sq = _fold(f"transform({a}, _x -> _x * _x)")
     if dim is not None:
-        sq = F.when(
-            F.size(a) == dim,
-            _unrolled_pair(a, a, dim, lambda x, y: x * y),
-        ).otherwise(sq)
-    return F.sqrt(sq)
+        unrolled = " + ".join(
+            ["0.0D"] + [f"(({a})[{i}] * ({a})[{i}])" for i in range(dim)])
+        sq = f"CASE WHEN size({a}) = {dim} THEN {unrolled} ELSE {sq} END"
+    return f"sqrt({sq})"
 
 
-def cosine_distance(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine_distance_sql(a: str, b: str, dim: int | None = None) -> str:
     """`<=>` — 1 - cos(a,b) (vector.cpp, sql:182).
 
     A zero vector yields NaN (as the reference's C division does), NOT
     NULL: Spark's non-ANSI 0/0 is NULL, which sorts FIRST under the
     default ascending order and would rank zero vectors at the top of
     every cosine kNN; NaN sorts last in both Spark and PG float order."""
-    denom = l2_norm(a, dim) * l2_norm(b, dim)
-    return F.when(denom == 0.0, F.lit(float("nan"))).otherwise(
-        F.lit(1.0) - dot_product(a, b, dim) / denom
-    )
+    denom = f"{l2_norm_sql(a, dim)} * {l2_norm_sql(b, dim)}"
+    return (f"CASE WHEN {denom} = 0.0D THEN CAST('NaN' AS DOUBLE) "
+            f"ELSE 1.0D - {dot_product_sql(a, b, dim)} / ({denom}) END")
 
 
-def l1_distance(a: Column, b: Column, dim: int | None = None) -> Column:
+def l1_distance_sql(a: str, b: str, dim: int | None = None) -> str:
     """`<+>` — Manhattan (vector.cpp, sql:187)."""
-    return _pair_sum(a, b, lambda x, y: F.abs(x - y), dim)
+    return _sum_sql(a, b, _ABS_DIFF, dim)
 
 
 # --- binary vectors: represented as array<bigint> of 64-bit words ---------
 
-def hamming_distance(a: Column, b: Column) -> Column:
+def _bit_count_sum(a: str, b: str, op: str) -> str:
+    return _sum_sql(a, b, f"CAST(bit_count({{x}} {op} {{y}}) AS DOUBLE)", None)
+
+
+def hamming_distance_sql(a: str, b: str) -> str:
     """`<~>` over bit(n) (bitutils.cpp; sql:720,728): popcount(a XOR b).
 
     Binary vectors are packed little-endian into 64-bit words; XOR +
     bit_count per word keeps this a pure JVM integer kernel.
     """
-    return _fold_sum(
-        F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("double"))
-    ).cast("long")
+    return f"CAST({_bit_count_sum(a, b, '^')} AS BIGINT)"
 
 
-def jaccard_distance(a: Column, b: Column) -> Column:
+def jaccard_distance_sql(a: str, b: str) -> str:
     """`<%>` over bit(n) (bitutils.cpp; sql:723,733): 1 - |a∧b| / |a∨b|."""
-    inter = _fold_sum(
-        F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("double"))
-    )
-    union = _fold_sum(
-        F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseOR(y)).cast("double"))
-    )
-    return F.when(union == 0, F.lit(0.0)).otherwise(F.lit(1.0) - inter / union)
+    union = _bit_count_sum(a, b, "|")
+    return (f"CASE WHEN {union} = 0 THEN 0.0D "
+            f"ELSE 1.0D - {_bit_count_sum(a, b, '&')} / {union} END")
 
+
+def _column(kernel_sql):
+    """The Column form of a kernel: its SQL text in one ``F.expr``."""
+    def kernel(*operands, **kw) -> Column:
+        return F.expr(kernel_sql(*operands, **kw))
+
+    kernel.__name__ = kernel_sql.__name__.removesuffix("_sql")
+    kernel.__doc__ = kernel_sql.__doc__
+    return kernel
+
+
+l2_squared = _column(l2_squared_sql)
+l2_distance = _column(l2_distance_sql)
+dot_product = _column(dot_product_sql)
+neg_inner_product = _column(neg_inner_product_sql)
+l2_norm = _column(l2_norm_sql)
+cosine_distance = _column(cosine_distance_sql)
+l1_distance = _column(l1_distance_sql)
+hamming_distance = _column(hamming_distance_sql)
+jaccard_distance = _column(jaccard_distance_sql)
 
 DISTANCES = {
     "l2": l2_distance,

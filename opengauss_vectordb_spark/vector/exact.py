@@ -14,18 +14,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .distance import DISTANCES, as_double
-
-
-def _query_literal(qvec: Sequence[float]) -> Column:
-    # one py4j call (identical CreateArray of double Literals) — r13,
-    # guide §5; the per-element F.lit spelling was ~65 round trips
-    from .distance import dlit_array
-
-    return dlit_array(qvec)
+from .distance import DISTANCES, as_double, dlit_sql
 
 
 def knn(
@@ -41,11 +33,12 @@ def knn(
 
     NULL vectors are excluded, matching the reference's index behavior
     (`test/sql/hnsw_vector.sql:10-17`: NULLs never surface in ANN results).
-    Ties are broken by ``id_col`` for determinism.
+    Ties are broken by ``id_col`` for determinism.  The filter and the
+    distance are each one parsed SQL text, so the frame builds in a
+    handful of py4j round trips.
     """
-    dist_fn = DISTANCES[metric]
-    dist = dist_fn(as_double(F.col(vec_col)), _query_literal(qvec))
-    out = df.filter(F.col(vec_col).isNotNull()).withColumn(dist_alias, dist)
+    dist = DISTANCES[metric](as_double(vec_col), dlit_sql(qvec))
+    out = df.filter(f"`{vec_col}` IS NOT NULL").withColumn(dist_alias, dist)
     # nulls_last guards the ordering even if a distance degenerates to
     # NULL (e.g. null array elements): default ASC is NULLS FIRST, which
     # would rank broken rows as nearest
@@ -76,15 +69,12 @@ def knn_join(
     """
     from pyspark.sql import Window as W
 
-    dist_fn = DISTANCES[metric]
-    q = queries.select(
-        F.col(query_id), as_double(F.col(query_vec)).alias("_qv")
-    )
-    c = candidates.filter(F.col(cand_vec).isNotNull()).select(
-        F.col(cand_id), as_double(F.col(cand_vec)).alias("_cv")
+    q = queries.selectExpr(f"`{query_id}`", f"{as_double(query_vec)} AS _qv")
+    c = candidates.filter(f"`{cand_vec}` IS NOT NULL").selectExpr(
+        f"`{cand_id}`", f"{as_double(cand_vec)} AS _cv"
     )
     scored = c.crossJoin(F.broadcast(q)).withColumn(
-        dist_alias, dist_fn(F.col("_qv"), F.col("_cv"))
+        dist_alias, DISTANCES[metric]("_qv", "_cv")
     )
     w = W.partitionBy(query_id).orderBy(
         F.col(dist_alias).asc_nulls_last(), F.col(cand_id).asc()

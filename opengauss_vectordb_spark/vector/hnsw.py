@@ -657,18 +657,23 @@ class HnswIndex:
         unbounded beam: with the layer-0 connectivity repair the beam
         then visits every node, so the result is EXACT — the gateable
         operating point (cf. IVF probes=lists)."""
+        return (
+            self._shard_hits(spark, qvec, k, ef_search)
+            .orderBy(F.col("distance").asc(), F.col("id").asc())
+            .limit(k)
+        )
+
+    def _shard_hits(self, spark: SparkSession, qvec: Sequence[float],
+                    k: int, ef_search: int | None) -> DataFrame:
+        """(id, distance) of every shard's own top k, unmerged."""
         q = np.asarray(list(qvec), dtype=np.float64)
 
         def search_graph(g: _ShardGraph) -> list[dict]:
             beam = g.n if ef_search is None else ef_search
             return [{"id": i, "distance": d} for i, d in g.search(q, k, beam)]
 
-        per_shard = self._per_shard(spark, search_graph,
-                                    "id BIGINT, distance DOUBLE")
-        return (
-            per_shard.orderBy(F.col("distance").asc(), F.col("id").asc())
-            .limit(k)
-        )
+        return self._per_shard(spark, search_graph,
+                               "id BIGINT, distance DOUBLE")
 
     def vacuum_delete(self, spark: SparkSession, predicate) -> None:
         """Vacuum / bulk-delete (hnswvacuum.cpp): physically remove
@@ -746,14 +751,16 @@ class HnswIndex:
         if ef_search is None:
             # exhaustive: every shard returns its FULL ranking, so the
             # post-filter can never run out of candidates — exact at any
-            # selectivity (gate configuration, not a scale pattern)
-            fetch_k = 2**31 - 1
+            # selectivity (gate configuration, not a scale pattern).
+            # The rankings are read as they come: the final cut below
+            # orders the survivors, so no global sort of every node's
+            # distance (range-partitioning Exchange plus Sort) runs first
+            hits = self._shard_hits(spark, qvec, 2**31 - 1, None)
         else:
             fetch_k = max(k * overfetch, k)
-        hits = self.search(
-            spark, qvec, k=fetch_k,
-            ef_search=None if ef_search is None else max(ef_search, fetch_k),
-        ).withColumnRenamed("id", "_hit_id")
+            hits = self.search(spark, qvec, k=fetch_k,
+                               ef_search=max(ef_search, fetch_k))
+        hits = hits.withColumnRenamed("id", "_hit_id")
         joined = base.join(
             hits, base[id_col] == F.col("_hit_id")
         ).filter(where)

@@ -44,8 +44,17 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
-from .distance import DISTANCES, as_double, dlit_sql, llit_sql
-from .exact import knn as exact_knn
+from .distance import (
+    DISTANCES,
+    as_double,
+    dlit_sql,
+    dot_product_sql,
+    hamming_distance,
+    hamming_distance_sql,
+    l2_norm_sql,
+    l2_squared_sql,
+    llit_sql,
+)
 
 DEFAULT_LISTS = 100  # ivfflat.h:43
 MAX_INDEX_DIM = 2000  # ivfflat.h:25 / hnsw.h:12 — indexable dimension cap
@@ -112,11 +121,11 @@ def _kmeans_once(
     return C
 
 
-def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
-    """array<double> of distance(vec, centroid_j) for every centroid, as a
-    pure Catalyst expression: the centroid matrix is one nested array
-    literal (a single ``F.expr``, broadcast in the plan), distances come
-    from transform().
+def _centroid_dists(vec: str, centroids: np.ndarray, metric: str) -> str:
+    """SQL text of the array of distance(vec, centroid_j) for every
+    centroid: the centroid matrix is one nested array literal
+    (broadcast in the plan), distances come from transform() over the
+    distance.py kernels' text.
     Whole-stage codegen, no shuffle, no UDF — this is the full-table
     labeling path, so it must scale to every row of a 100 TB table.
 
@@ -126,83 +135,55 @@ def _centroid_dists(vec: Column, centroids: np.ndarray, metric: str) -> Column:
     per word, a pure JVM integer kernel (bit_hamming_ops,
     bitutils.cpp)."""
     row_sql = llit_sql if metric == "hamming" else dlit_sql
-    cents_lit = F.expr(
-        "array(" + ",".join(row_sql(c) for c in centroids) + ")"
-    )
+    cents = "array(" + ",".join(row_sql(c) for c in centroids) + ")"
     if metric == "hamming":
-        return F.transform(
-            cents_lit,
-            lambda c: F.aggregate(
-                F.zip_with(
-                    vec, c,
-                    lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("double"),
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-        )
-    if metric == "cosine":
-        norm = F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0),
-                                  lambda a, x: a + x))
-        dists = F.transform(
-            cents_lit,
-            lambda c: F.lit(1.0)
-            - F.aggregate(F.zip_with(vec, c, lambda x, y: x * y), F.lit(0.0),
-                          lambda a, x: a + x)
-            / (
-                norm
-                * F.sqrt(F.aggregate(F.transform(c, lambda y: y * y), F.lit(0.0),
-                                     lambda a, x: a + x))
-            ),
-        )
+        dist = hamming_distance_sql(vec, "_c")
+    elif metric == "cosine":
+        # no zero-norm guard: a zero vector's distances stay NULL, as
+        # the unguarded division always gave them
+        dist = (f"1.0D - {dot_product_sql(vec, '_c')}"
+                f" / ({l2_norm_sql(vec)} * {l2_norm_sql('_c')})")
     else:
         # l2 clustering for l2/l1/ip (the reference also k-means'es in
         # euclidean space and ranks lists by the search metric)
-        dists = F.transform(
-            cents_lit,
-            lambda c: F.aggregate(
-                F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
-        )
-    return dists
+        dist = l2_squared_sql(vec, "_c")
+    return f"transform({cents}, _c -> {dist})"
 
 
-def label_vector(vec_col: str, metric: str) -> Column:
-    """The column list assignment labels: hamming operates on the
-    packed bigint words directly (a double cast would break the XOR
-    kernel); float metrics accumulate in double."""
+def label_vector(vec_col: str, metric: str) -> str:
+    """SQL text of the column list assignment labels: hamming operates
+    on the packed bigint words directly (a double cast would break the
+    XOR kernel); float metrics accumulate in double."""
     if metric == "hamming":
-        return F.col(vec_col).cast("array<bigint>")
-    return as_double(F.col(vec_col))
+        return f"CAST(`{vec_col}` AS ARRAY<BIGINT>)"
+    return as_double(vec_col)
 
 
 def assign_lists_expr(
-    vec: Column, centroids: np.ndarray, metric: str, spill_epsilon: float
+    vec: str, centroids: np.ndarray, metric: str, spill_epsilon: float
 ) -> Column:
-    """array<int> of list assignments: the nearest centroid, plus the
-    runner-up when it is within `spill_epsilon` × the best distance
-    ("spill" / multi-assignment — boundary vectors live in both inverted
-    lists, a standard IVF recall hardener; +10-20% storage at ε≈1.4 on
-    squared-L2, recall@probes=1 +5-7 pts). spill_epsilon=1.0 disables."""
-    def labels(dists: Column) -> Column:
-        m1 = F.array_min(dists)
-        primary = (F.array_position(dists, m1) - 1).cast("int")
-        if spill_epsilon <= 1.0:
-            return F.array(primary)
-        m2 = F.array_min(F.filter(dists, lambda x: x > m1))
-        secondary = (F.array_position(dists, m2) - 1).cast("int")
-        return F.when(
-            m2.isNotNull() & (m2 <= F.lit(float(spill_epsilon)) * m1),
-            F.array(primary, secondary),
-        ).otherwise(F.array(primary))
-
+    """array<int> of list assignments of the SQL-text vector ``vec``:
+    the nearest centroid, plus the runner-up when it is within
+    `spill_epsilon` × the best distance ("spill" / multi-assignment —
+    boundary vectors live in both inverted lists, a standard IVF recall
+    hardener; +10-20% storage at ε≈1.4 on squared-L2, recall@probes=1
+    +5-7 pts). spill_epsilon=1.0 disables.  One parsed expression."""
+    m1 = "array_min(_d)"
+    primary = f"CAST(array_position(_d, {m1}) - 1 AS INT)"
+    labels = f"array({primary})"
+    if spill_epsilon > 1.0:
+        m2 = f"array_min(filter(_d, _e -> _e > {m1}))"
+        labels = (
+            f"CASE WHEN {m2} IS NOT NULL AND {m2} <= {float(spill_epsilon)!r}D * {m1}"
+            f" THEN array({primary}, CAST(array_position(_d, {m2}) - 1 AS INT))"
+            f" ELSE {labels} END"
+        )
     # the distance array is computed once and bound to a lambda variable:
     # spelled inline, each of its uses would copy the whole subtree
-    return F.transform(
-        F.array(_centroid_dists(vec, centroids, metric)), labels
-    )[0]
+    return F.expr(
+        f"transform(array({_centroid_dists(vec, centroids, metric)}),"
+        f" _d -> {labels})[0]"
+    )
 
 
 _BITS_PER_WORD = 32  # binary_quantize_words payload bits per bigint word
@@ -378,7 +359,7 @@ class IvfIndex:
         fraction = min(1.0, (sample_rows * 1.2) / max(n, 1))
         sample_df = clean.sample(fraction=fraction, seed=seed) if fraction < 1.0 else clean
         sample = np.array(
-            [r[0] for r in sample_df.select(as_double(F.col(vec_col))).limit(sample_rows).collect()],
+            [r[0] for r in sample_df.selectExpr(as_double(vec_col)).limit(sample_rows).collect()],
             dtype=np.float64,
         )
         # collect order is partition-order nondeterministic → canonicalize
@@ -486,32 +467,28 @@ class IvfIndex:
         ranked set the way the reference's qual-during-indexscan does.
         With selective filters raise ``probes`` to protect recall."""
         lists = self._probe_lists(spark, qvec, probes)
-        pruned = self.data(spark).filter(F.col("list_id").isin(lists)).drop("list_id")
+        pruned = self.data(spark).filter(
+            f"list_id IN ({','.join(map(str, lists))})"
+            f" AND `{vec_col}` IS NOT NULL"
+        ).drop("list_id")
         if where is not None:
             pruned = pruned.filter(where)
+        vec = label_vector(vec_col, self.metric)
+        if self.metric == "hamming":
+            d = hamming_distance(vec, llit_sql(qvec))
+        else:
+            d = DISTANCES[self.metric](vec, dlit_sql(qvec))
         order = [F.col("distance").asc_nulls_last()]
         if id_col:
             order.append(F.col(id_col).asc())
-        if self.metric == "hamming":
-            from .distance import hamming_distance
-
-            q = F.expr(llit_sql(qvec))
-            d = hamming_distance(F.col(vec_col).cast("array<bigint>"), q)
-            nearest = (
-                pruned.filter(F.col(vec_col).isNotNull())
-                .withColumn("distance", d)
-                .orderBy(*order).limit(2 * k)
-            )
-        else:
-            nearest = exact_knn(pruned, vec_col, qvec, k=2 * k,
-                                metric=self.metric, id_col=id_col)
         # spill assignment puts a row in at most two lists, and both
         # copies sort together, so the 2k nearest rows of the probed
         # lists hold the k nearest distinct rows: the dedup and the
         # final cut run on the single partition the first top-k left
         # (no shuffle, one job)
         return (
-            nearest.dropDuplicates([id_col] if id_col else None)
+            pruned.withColumn("distance", d).orderBy(*order).limit(2 * k)
+            .dropDuplicates([id_col] if id_col else None)
             .orderBy(*order).limit(k)
         )
 
@@ -548,10 +525,11 @@ class IvfIndex:
             spark, os.path.join(self.path, "centroids")
         )
         dist_fn = DISTANCES[self.metric]
-        q = queries.select(query_id, as_double(F.col(query_vec)).alias("_qv"))
+        q = queries.selectExpr(f"`{query_id}`",
+                               f"{as_double(query_vec)} AS _qv")
         # centroids are bounded (≤ 32768 lists) — always broadcastable
         scored = q.crossJoin(F.broadcast(cents)).withColumn(
-            "_cd", dist_fn(F.col("_qv"), F.col("centroid"))
+            "_cd", dist_fn("_qv", "centroid")
         )
         w = W.partitionBy(query_id).orderBy(F.col("_cd").asc(), F.col("list_id"))
         probe_map = (
@@ -566,7 +544,7 @@ class IvfIndex:
             cand.join(probe_map, "list_id")
             # spill duplicates: one candidate can sit in two probed lists
             .dropDuplicates([query_id, cand_id])
-            .withColumn("_d", dist_fn(F.col("_qv"), as_double(F.col(vec_col))))
+            .withColumn("_d", dist_fn("_qv", as_double(vec_col)))
         )
         w2 = W.partitionBy(query_id).orderBy(F.col("_d").asc(), F.col(cand_id).asc())
         return (

@@ -191,7 +191,7 @@ def pq_search(
     upstream keeps the shuffle ~30× narrower than dragging the float
     vectors through it; the rerank side dedups its ≤``rerank``-row
     join result instead."""
-    from .distance import dlit_array, l2_distance
+    from .distance import dlit_sql, l2_distance
 
     coarse = (
         df_codes.filter(F.col(code_col).isNotNull())
@@ -201,7 +201,6 @@ def pq_search(
         .limit(rerank)
         .select(id_col)
     )
-    qlit = dlit_array(qvec)
     if vectors is None:
         vecs = df_codes.select(id_col, vec_col)
         joined = vecs.join(F.broadcast(coarse), id_col)
@@ -216,7 +215,7 @@ def pq_search(
         )
     return (
         joined.withColumn(
-            "distance", l2_distance(as_double(F.col(vec_col)), qlit)
+            "distance", l2_distance(as_double(vec_col), dlit_sql(qvec))
         )
         .orderBy(F.col("distance").asc_nulls_last(), F.col(id_col).asc())
         .limit(k)

@@ -20,8 +20,9 @@ from ..catalog import table
 from ..registry import query
 from .distance import (
     as_double,
-    dot_product,
     cosine_distance,
+    dlit_sql,
+    dot_product,
     l1_distance,
     l2_distance,
     neg_inner_product,
@@ -34,6 +35,9 @@ QUERY_VEC = [round(math.sin(i + 1.0), 4) for i in range(DIM)]
 
 _SQL_Q = "[" + ", ".join(repr(v) for v in QUERY_VEC) + "]"
 _E = "CAST(embedding AS DOUBLE[])"
+# the same operands as Spark SQL text, for the distance kernels
+_SPARK_E = as_double("embedding")
+_SPARK_Q = dlit_sql(QUERY_VEC)
 
 
 def _sql_sq_l2(a: str, b: str) -> str:
@@ -81,7 +85,7 @@ def _knn_query(name: str, dist_col_fn, sql_dist: str):
     )
     def _q(spark, sf_dir):
         emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-        d = dist_col_fn(as_double(F.col("embedding")), _spark_qlit())
+        d = dist_col_fn(_SPARK_E, _SPARK_Q)
         return (
             emb.withColumn("_d", d)
             .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
@@ -133,7 +137,7 @@ knn_l1 = _knn_query("knn_l1", l1_distance, _sql_l1("e", "q"))
 )
 def vector_ops(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     q = _spark_qlit()
     head = F.slice(e, 1, 8)
     qhead = F.slice(q, 1, 8)
@@ -259,9 +263,9 @@ def embedding_dup_pairs_cosine(spark, sf_dir):
     # cos_dist 0.487 at sf0.01): a 0-row result would hash-match any
     # 0-row oracle and prove nothing
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    a = emb.select(F.col("vec_id").alias("id_a"), as_double(F.col("embedding")).alias("_ea"))
-    b = emb.select(F.col("vec_id").alias("id_b"), as_double(F.col("embedding")).alias("_eb"))
-    d = cosine_distance(F.col("_ea"), F.col("_eb"), dim=DIM)
+    a = emb.selectExpr("vec_id AS id_a", f"{_SPARK_E} AS _ea")
+    b = emb.selectExpr("vec_id AS id_b", f"{_SPARK_E} AS _eb")
+    d = cosine_distance("_ea", "_eb", dim=DIM)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("_d", d)
@@ -282,12 +286,6 @@ _SQL_WORDS = (
 )
 
 
-def _spark_words(col):
-    from .types import binary_quantize_words
-
-    return binary_quantize_words(col)
-
-
 @query(
     "knn_hamming_binary",
     f"""
@@ -303,11 +301,11 @@ def _spark_words(col):
 )
 def knn_hamming_binary(spark, sf_dir):
     from .distance import hamming_distance
-    from .types import binary_quantize_words
+    from .types import binary_quantize_sql
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    qw = binary_quantize_words(_spark_qlit())
-    ew = binary_quantize_words(as_double(F.col("embedding")))
+    qw = binary_quantize_sql(_SPARK_Q)
+    ew = binary_quantize_sql(_SPARK_E)
     return (
         emb.withColumn("_h", hamming_distance(ew, qw))
         .orderBy(F.col("_h").asc(), F.col("vec_id").asc())
@@ -340,11 +338,11 @@ def knn_hamming_binary(spark, sf_dir):
 )
 def knn_jaccard_binary(spark, sf_dir):
     from .distance import jaccard_distance
-    from .types import binary_quantize_words
+    from .types import binary_quantize_sql
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    qw = binary_quantize_words(_spark_qlit())
-    ew = binary_quantize_words(as_double(F.col("embedding")))
+    qw = binary_quantize_sql(_SPARK_Q)
+    ew = binary_quantize_sql(_SPARK_E)
     return (
         emb.withColumn("_j", jaccard_distance(ew, qw))
         .orderBy(F.col("_j").asc(), F.col("vec_id").asc())
@@ -380,7 +378,7 @@ _SPARSE_T = 0.15
 )
 def sparsevec_dot_topk(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     # the query vector is a CONSTANT: sparsify it driver-side once and
     # unroll the dot product over its fixed nonzero positions — a flat
     # codegen'd sum of element_at terms. Building sparsevec structs +
@@ -468,10 +466,10 @@ def knn_l2_halfvec(spark, sf_dir):
     from .types import halfvec_quantize
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    half = halfvec_quantize(F.col("embedding"))
-    d = l2_distance(as_double(half), _spark_qlit())
+    d = l2_distance(as_double("_h"), _SPARK_Q)
     return (
-        emb.withColumn("_d", d)
+        emb.withColumn("_h", halfvec_quantize(F.col("embedding")))
+        .withColumn("_d", d)
         .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
         .limit(10)
         .select("vec_id", "label", F.round("_d", 4).alias("distance"))
@@ -631,7 +629,7 @@ def ivf_search_probed(spark, sf_dir):
     )
     truth = emb.select(
         "vec_id",
-        l2_distance(as_double(F.col("embedding")), _spark_qlit()).alias("_td"),
+        l2_distance(_SPARK_E, _SPARK_Q).alias("_td"),
     )
     exact10 = truth.orderBy(F.col("_td").asc(), F.col("vec_id").asc()).limit(10)
     checked = probed.join(truth, "vec_id").join(
@@ -678,7 +676,7 @@ def knn_pq_rerank(spark, sf_dir):
     )
     truth = emb.select(
         "vec_id",
-        l2_distance(as_double(F.col("embedding")), _spark_qlit()).alias("_td"),
+        l2_distance(_SPARK_E, _SPARK_Q).alias("_td"),
     )
     exact10 = truth.orderBy(F.col("_td").asc(), F.col("vec_id").asc()).limit(10)
     checked = got.join(truth, "vec_id").join(
@@ -723,7 +721,7 @@ def vector_btree_compare(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     q = _spark_qlit()
     return (
         emb.select(
@@ -774,7 +772,7 @@ def vector_cast_roundtrip(spark, sf_dir):
         F.col("embedding").isNotNull()
     )
     v = F.transform(
-        as_double(F.col("embedding")),
+        F.expr(_SPARK_E),
         lambda x: F.when(F.abs(x) < 0.5, F.lit(0.0)).otherwise(x),
     )
     sv = to_sparsevec(v, value_type="double")
@@ -814,7 +812,7 @@ def knn_l2_filtered(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.col("label") == 3)
     )
-    d = l2_distance(as_double(F.col("embedding")), _spark_qlit())
+    d = l2_distance(_SPARK_E, _SPARK_Q)
     return (
         emb.withColumn("_d", d)
         .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
@@ -910,7 +908,7 @@ def knn_binary_rerank(spark, sf_dir):
     top-50 coarse survivors with true L2. Both stages deterministic
     (vec_id tie-break); the oracle replays the identical pipeline."""
     emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     q = _spark_qlit()
     hamming = F.aggregate(
         F.zip_with(
@@ -931,7 +929,7 @@ def knn_binary_rerank(spark, sf_dir):
         .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())
         .limit(50)
     )
-    d = l2_distance(as_double(F.col("embedding")), _spark_qlit())
+    d = l2_distance(_SPARK_E, _SPARK_Q)
     return (
         coarse.withColumn("_d", d)
         .orderBy(F.col("_d").asc(), F.col("vec_id").asc())
@@ -1099,7 +1097,7 @@ def ivf_pq_search(spark, sf_dir):
     ).select("vec_id", "distance")
     truth = emb.select(
         "vec_id",
-        l2_distance(as_double(F.col("embedding")), _spark_qlit()).alias("_td"),
+        l2_distance(_SPARK_E, _SPARK_Q).alias("_td"),
     )
     exact10 = truth.orderBy(F.col("_td").asc(), F.col("vec_id").asc()).limit(10)
     checked = got.join(truth, "vec_id").join(
@@ -1148,7 +1146,7 @@ def embedding_norm_outliers(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     spike = F.array_max(F.transform(e, lambda x: F.abs(x)))
     n = emb.select("vec_id", "label", spike.alias("spike"))
     stats = n.agg(
@@ -1424,7 +1422,7 @@ def hnsw_search_exhaustive(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    l2_distance(as_double(F.col("embedding")), _spark_qlit()),
+                    l2_distance(_SPARK_E, _SPARK_Q),
                     4,
                 ).alias("distance"),
             )
@@ -1478,7 +1476,7 @@ def hnsw_search_l1_exhaustive(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    l1_distance(as_double(F.col("embedding")), _spark_qlit()),
+                    l1_distance(_SPARK_E, _SPARK_Q),
                     4,
                 ).alias("distance"),
             )
@@ -1604,21 +1602,18 @@ def hnsw_knn_join_exhaustive(spark, sf_dir):
         hits = spark.createDataFrame(
             pairs, "qid INT, id BIGINT, rn INT"
         )
-        qlits = F.map_from_arrays(
-            F.array(*[F.lit(j) for j in range(len(_QVECS_HNSW))]),
-            F.array(*[
-                F.array(*[F.lit(float(v)) for v in q]) for q in _QVECS_HNSW
-            ]),
+        qlits = (
+            "map_from_arrays(array("
+            + ",".join(str(j) for j in range(len(_QVECS_HNSW)))
+            + "), array(" + ",".join(dlit_sql(q) for q in _QVECS_HNSW)
+            + "))"
         )
         out = (
             hits.join(emb, hits.id == emb.vec_id)
             .withColumn(
                 "distance",
                 F.round(
-                    l2_distance(
-                        as_double(F.col("embedding")),
-                        F.element_at(qlits, F.col("qid")),
-                    ),
+                    l2_distance(_SPARK_E, f"element_at({qlits}, qid)"),
                     4,
                 ),
             )
@@ -1717,7 +1712,7 @@ def hnsw_search_bit_exhaustive(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .distance import hamming_distance
+    from .distance import hamming_distance, llit_sql
     from .hnsw import HnswIndex
     from .types import binary_quantize_words
 
@@ -1725,11 +1720,10 @@ def hnsw_search_bit_exhaustive(spark, sf_dir):
         F.col("embedding").isNotNull()
     )
     bits = emb.select(
-        "vec_id", "label",
-        binary_quantize_words(as_double(F.col("embedding"))).alias("bits"),
+        "vec_id", "label", binary_quantize_words(_SPARK_E).alias("bits"),
     )
     qwords_df = spark.range(1).select(
-        binary_quantize_words(_spark_qlit()).alias("qw")
+        binary_quantize_words(_SPARK_Q).alias("qw")
     )
     qwords = [int(w) for w in qwords_df.first().qw]
     tmp = tempfile.mkdtemp(prefix="hnsw_bit_gate_", dir=_local_scratch(spark))
@@ -1739,13 +1733,12 @@ def hnsw_search_bit_exhaustive(spark, sf_dir):
         )
         ids = [r.id for r in idx.search(spark, qwords, k=10,
                                         ef_search=None).collect()]
-        qw_col = F.array(*[F.lit(w).cast("bigint") for w in qwords])
         out = (
             bits.filter(F.col("vec_id").isin(ids))
             .select(
                 "vec_id",
                 "label",
-                hamming_distance(F.col("bits"), qw_col).alias("hamming"),
+                hamming_distance("bits", llit_sql(qwords)).alias("hamming"),
             )
             .orderBy("hamming", "vec_id")
         )
@@ -1803,7 +1796,7 @@ def hnsw_search_halfvec_exhaustive(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    l2_distance(as_double(F.col("emb_h")), _spark_qlit()), 4
+                    l2_distance(as_double("emb_h"), _SPARK_Q), 4
                 ).alias("distance"),
             )
             .orderBy("distance", "vec_id")
@@ -1849,7 +1842,7 @@ def hnsw_search_sparsevec_exhaustive(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    e = as_double(F.col("embedding"))
+    e = F.expr(_SPARK_E)
     sparse = F.transform(
         e, lambda x: F.when(F.abs(x) > _SPARSE_T, x).otherwise(F.lit(0.0))
     )
@@ -1867,7 +1860,7 @@ def hnsw_search_sparsevec_exhaustive(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    neg_inner_product(F.col("emb_s"), _spark_qlit()), 4
+                    neg_inner_product("emb_s", _SPARK_Q), 4
                 ).alias("distance"),
             )
             .orderBy("distance", "vec_id")
@@ -1910,13 +1903,12 @@ def ivf_search_bit_exhaustive(spark, sf_dir):
         F.col("embedding").isNotNull()
     )
     bits = emb.select(
-        "vec_id", "label",
-        binary_quantize_words(as_double(F.col("embedding"))).alias("bits"),
+        "vec_id", "label", binary_quantize_words(_SPARK_E).alias("bits"),
     )
     qwords = [
         int(w)
         for w in spark.range(1)
-        .select(binary_quantize_words(_spark_qlit()).alias("qw"))
+        .select(binary_quantize_words(_SPARK_Q).alias("qw"))
         .first()
         .qw
     ]
@@ -1987,7 +1979,7 @@ def hnsw_filtered_search(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    l2_distance(as_double(F.col("embedding")), _spark_qlit()),
+                    l2_distance(_SPARK_E, _SPARK_Q),
                     4,
                 ).alias("distance"),
             )
@@ -2043,7 +2035,7 @@ def hnsw_delete_then_search(spark, sf_dir):
                 "vec_id",
                 "label",
                 F.round(
-                    l2_distance(as_double(F.col("embedding")), _spark_qlit()),
+                    l2_distance(_SPARK_E, _SPARK_Q),
                     4,
                 ).alias("distance"),
             )
@@ -2111,13 +2103,10 @@ def knn_maxsim_multivector(spark, sf_dir):
         "qid INT, qv ARRAY<DOUBLE>",
     )
     scored = (
-        emb.select(
-            F.expr("vec_id div 8").alias("g"),
-            as_double(F.col("embedding")).alias("e"),
-        )
+        emb.selectExpr("vec_id div 8 AS g", f"{_SPARK_E} AS e")
         .crossJoin(F.broadcast(q))
         .groupBy("g", "qid")
-        .agg(F.max(dot_product(F.col("e"), F.col("qv"))).alias("best"))
+        .agg(F.max(dot_product("e", "qv")).alias("best"))
     )
     return (
         scored.groupBy("g")
@@ -2175,17 +2164,16 @@ def knn_subvector_rerank(spark, sf_dir):
     touches {_COARSE_K} rows. Ties broken by vec_id in both stages so
     the two engines pick identical frontiers."""
     emb = table(spark, sf_dir, "embeddings")
-    e = as_double(F.col("embedding"))
     coarse_d = l2_distance(
-        F.slice(e, 1, _SUB_D), F.slice(_spark_qlit(), 1, _SUB_D)
+        f"slice({_SPARK_E}, 1, {_SUB_D})", f"slice({_SPARK_Q}, 1, {_SUB_D})"
     )
     coarse = (
-        emb.select("vec_id", "label", e.alias("e"),
+        emb.select("vec_id", "label", F.expr(_SPARK_E).alias("e"),
                    coarse_d.alias("_cd"))
         .orderBy("_cd", "vec_id")
         .limit(_COARSE_K)
     )
-    full_d = F.round(l2_distance(F.col("e"), _spark_qlit()), 4)
+    full_d = F.round(l2_distance("e", _SPARK_Q), 4)
     return (
         coarse.select("vec_id", "label", full_d.alias("distance"))
         .orderBy("distance", "vec_id")
@@ -2259,11 +2247,10 @@ def hybrid_rrf_search(spark, sf_dir):
         .alias("rt"),
     )
     emb = table(spark, sf_dir, "embeddings")
-    e = as_double(F.col("embedding"))
     vpool = (
         emb.select(
             F.col("vec_id").alias("id"),
-            cosine_distance(e, _spark_qlit()).alias("dist"),
+            cosine_distance(_SPARK_E, _SPARK_Q).alias("dist"),
         )
         .orderBy("dist", "id")
         .limit(_RRF_POOL)
@@ -2341,15 +2328,15 @@ def semdedup_keep(spark, sf_dir):
     # stay bit-identical.
     from .distance import l2_norm
 
-    v = emb.select("vec_id", "label", as_double(F.col("embedding")).alias("e"))
-    v = v.withColumn("n", l2_norm(F.col("e"), dim=DIM))
+    v = emb.selectExpr("vec_id", "label", f"{_SPARK_E} AS e")
+    v = v.withColumn("n", l2_norm("e", dim=DIM))
     a = v.select(F.col("vec_id").alias("a_id"), F.col("label").alias("a_label"),
                  F.col("e").alias("a_e"), F.col("n").alias("a_n"))
     b = v.select(F.col("vec_id").alias("b_id"), F.col("label").alias("b_label"),
                  F.col("e").alias("b_e"), F.col("n").alias("b_n"))
     denom = F.col("a_n") * F.col("b_n")
     cos_dist = F.when(denom == 0.0, F.lit(float("nan"))).otherwise(
-        F.lit(1.0) - dot_product(F.col("a_e"), F.col("b_e"), dim=DIM) / denom
+        F.lit(1.0) - dot_product("a_e", "b_e", dim=DIM) / denom
     )
     pairs = a.join(
         b,

@@ -110,35 +110,25 @@ def sparse_l2_squared(a: Column, b: Column) -> Column:
 
 # ------------------------------------------------------------ bit vectors
 
-_POW2_32 = None
-
-
-def _pow2_32() -> Column:
-    global _POW2_32
-    if _POW2_32 is None:
-        _POW2_32 = F.array(*[F.lit(1 << j).cast("long") for j in range(32)])
-    return _POW2_32
-
-
-def binary_quantize_words(dense: Column) -> Column:
-    """binary_quantize (sql:720-735 family): sign bits packed
-    little-endian into 32-bit groups stored in BIGINT words — bit j of
-    word w is set when element 32w+j > 0. 32 bits/word keeps every value
-    positive, so the packing is portable to engines with checked signed
-    shifts. Output feeds hamming_distance/jaccard_distance."""
-    n_words = F.ceil(F.size(dense) / 32).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n_words - 1),
-        lambda w: F.aggregate(
-            F.sequence(F.lit(0), F.lit(31)),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.when(
-                F.coalesce(F.element_at(dense, w * 32 + j + 1), F.lit(0.0)) > 0,
-                F.element_at(_pow2_32(), j + 1),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
+def binary_quantize_sql(dense: str) -> str:
+    """binary_quantize (sql:720-735 family) over the SQL-text array
+    operand ``dense``: sign bits packed little-endian into 32-bit
+    groups stored in BIGINT words — bit j of word w is set when element
+    32w+j > 0. 32 bits/word keeps every value positive, so the packing
+    is portable to engines with checked signed shifts. Output feeds
+    hamming_distance/jaccard_distance as their SQL-text operand."""
+    return (
+        f"transform(sequence(0, CAST(ceil(size({dense}) / 32) AS INT) - 1),"
+        " _w -> aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
+        " (_acc, _j) -> _acc + CASE WHEN"
+        f" coalesce(element_at({dense}, _w * 32 + _j + 1), 0.0D) > 0"
+        " THEN shiftleft(CAST(1 AS BIGINT), _j) ELSE CAST(0 AS BIGINT) END))"
     )
+
+
+def binary_quantize_words(dense: str) -> Column:
+    """The Column of ``binary_quantize_sql(dense)``, one parsed expr."""
+    return F.expr(binary_quantize_sql(dense))
 
 
 # ------------------------------------------------------------- text I/O

@@ -295,7 +295,7 @@ def test_binary_quantize_words(spark):
     from opengauss_vectordb_spark.vector.types import binary_quantize_words
 
     df = spark.createDataFrame([([1.0, -1.0, 0.5, 0.0] * 16,)], "v ARRAY<DOUBLE>")
-    words = df.select(binary_quantize_words(F.col("v")).alias("w")).collect()[0].w
+    words = df.select(binary_quantize_words("v").alias("w")).collect()[0].w
     # pattern 1,0,1,0 per 4 elements → bits 0,2 of each nibble → 0x5 nibbles
     assert len(words) == 2
     assert words[0] == 0x55555555 and words[1] == 0x55555555
@@ -1255,7 +1255,7 @@ def test_ivf_labels_match_inline_formulation(spark, metric):
     for eps in (1.0, 1.44, 1e9):
         got = df.select(
             "i",
-            assign_lists_expr(F.col("v"), C, metric, eps).alias("new"),
+            assign_lists_expr("v", C, metric, eps).alias("new"),
             _inline_assign(F.col("v"), C, metric, eps).alias("old"),
         ).orderBy("i").collect()
         assert [r.new for r in got] == [r.old for r in got], eps

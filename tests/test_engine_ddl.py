@@ -374,6 +374,24 @@ def test_datavec_guc_spellings(spark, tmp_path):
     eng.sql("DROP TABLE gv")
 
 
+def test_knn_default_probes_match_the_sql_text(spark, tmp_path):
+    """With ivfflat.probes unset, knn() probes what the canonical SQL
+    text does (the GUC default, 1 list), so both return the same ids."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    eng.sql("CREATE INDEX kd_ivf ON embeddings USING ivfflat"
+            " (embedding vector_l2_ops) WITH (lists = 40)")
+    rows = eng.table("embeddings").orderBy("vec_id").limit(5).collect()
+    for r in rows:
+        q = [round(x + 0.05, 4) for x in r.embedding]
+        text = ("SELECT vec_id FROM embeddings ORDER BY embedding <-> '["
+                + ",".join(map(str, q)) + "]' LIMIT 10")
+        want = [x.vec_id for x in eng.sql(text).collect()]
+        got = eng.knn("embeddings", "embedding", q, k=10, id_col="vec_id")
+        assert [x.vec_id for x in got.collect()] == want, r.vec_id
+    eng.sql("DROP INDEX kd_ivf")
+
+
 def test_pg_stat_statements_names_the_handler(spark, tmp_path):
     """pg_stat_statements' handler column names the statement-table row
     that served each statement, including the ANN router and the

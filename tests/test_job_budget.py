@@ -13,7 +13,9 @@ contracts that let them skip their metadata jobs:
 * a routed HNSW search runs at most two jobs (the shard search and the
   join-back) and the shard search has no Exchange: each task searches
   its shards' graphs from the worker's cache instead of shuffling the
-  graph table.
+  graph table;
+* building a routed search's frame takes a few dozen py4j round trips,
+  not hundreds.
 """
 
 from __future__ import annotations
@@ -29,8 +31,9 @@ from opengauss_vectordb_spark.engine import Engine
 from tests.conftest import SF_SMOKE
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran) under a fresh job group."""
+def _job_infos(spark, fn):
+    """(fn(), the SparkJobInfo of every job it ran) under a fresh job
+    group."""
     sc = spark.sparkContext
     group = f"budget-{time.time_ns()}"
     sc.setJobGroup(group, group)
@@ -38,7 +41,38 @@ def _jobs(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    return out, [tracker.getJobInfo(j)
+                 for j in tracker.getJobIdsForGroup(group)]
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    out, infos = _job_infos(spark, fn)
+    return out, len(infos)
+
+
+def _py4j_commands(fn):
+    """(fn(), number of py4j commands it sent to the JVM).  py4j's
+    memory commands are not counted: they release the proxies of
+    earlier objects whenever Python's garbage collector runs."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    sent = []
+    send = GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        out = fn()
+    finally:
+        GatewayClient.send_command = send
+    return out, len(sent)
 
 
 @pytest.fixture()
@@ -98,6 +132,10 @@ def test_insert_into_ann_indexed_table_runs_one_job(spark, eng):
 
 
 def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng):
+    """One job of two stages: the plan has no Exchange, but the inner
+    TakeOrderedAndProject(2k) under the spill dedup moves its
+    per-partition heaps to one partition through a shuffle internal to
+    the operator, and that shuffle is the second stage."""
     eng.sql("CREATE INDEX jb_ivf ON embeddings USING ivfflat"
             " (embedding vector_l2_ops) WITH (lists = 4)")
     eng.sql("SET ivfflat.probes = 2")
@@ -108,8 +146,9 @@ def test_routed_ivf_search_runs_one_job_without_exchange(spark, eng):
     # handle); every later one is a single job
     eng.sql(stmt).collect()
     df, n_build = _jobs(spark, lambda: eng.sql(stmt))
-    rows, n_run = _jobs(spark, df.collect)
-    assert (n_build, n_run) == (0, 1)
+    rows, run = _job_infos(spark, df.collect)
+    assert (n_build, len(run)) == (0, 1)
+    assert len(run[0].stageIds) == 2
     assert len(rows) == 10
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
@@ -157,6 +196,54 @@ def test_routed_hnsw_search_runs_two_jobs_without_exchange(spark, eng):
     assert "Exchange" not in plan, plan
     assert "MapInArrow" in plan, plan
     eng.sql("DROP INDEX jb_hnsw")
+
+
+def test_routed_searches_build_in_few_py4j_round_trips(spark, eng):
+    """Engine.sql builds the canonical ANN text's frame in a few dozen
+    py4j commands per access method: pyspark's per-call origin capture
+    is off and each distance kernel is one parsed SQL expression.  The
+    pins are half of the counts before either change (218 exact, 323
+    IVF, 360 HNSW, whose count includes running the shard search)."""
+    conf = spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+    assert conf == "false"
+    q = "[" + ",".join(["0.1"] * 64) + "]"
+    stmt = (f"SELECT vec_id FROM embeddings ORDER BY embedding <-> '{q}'"
+            " LIMIT 10")
+    for index, using, budget in (
+        (None, None, 109),
+        ("rt_ivf", "ivfflat (embedding vector_l2_ops) WITH (lists = 4)", 161),
+        ("rt_hnsw", "hnsw (embedding vector_l2_ops) WITH (m = 8)", 180),
+    ):
+        if index:
+            eng.sql(f"CREATE INDEX {index} ON embeddings USING {using}")
+        # warm: memoized table and layout handles, worker graph cache
+        eng.sql(stmt).collect()
+        df, n = _py4j_commands(lambda: eng.sql(stmt))
+        assert n <= budget, (index, n)
+        assert len(df.collect()) == 10
+        if index:
+            eng.sql(f"DROP INDEX {index}")
+
+
+def test_exhaustive_filtered_hnsw_reads_shard_rankings(spark, tmp_path):
+    """With an unbounded beam, the filtered search joins every shard's
+    ranking back as it comes: no range-partitioned global sort of
+    every node's distance runs before the filter, and the result is
+    the exact scan of the filtered base."""
+    from opengauss_vectordb_spark.vector.exact import knn
+    from opengauss_vectordb_spark.vector.hnsw import HnswIndex
+
+    df = _vectors(spark, 300, 4, 11).withColumn("g", F.col("id") % 3)
+    idx = HnswIndex.build(df, "v", str(tmp_path / "h"), id_col="id",
+                          metric="l2", shards=2)
+    q = [0.3, 0.6, 0.2, 0.9]
+    where = F.col("g") == 1
+    got = idx.search_filtered(spark, df, "id", where, q, k=10,
+                              ef_search=None)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan, plan
+    want = knn(df.filter(where), "v", q, k=10, id_col="id")
+    assert [r.id for r in got.collect()] == [r.id for r in want.collect()]
 
 
 def _vectors(spark, n, dim, seed, offset=0):
@@ -208,7 +295,7 @@ def _jvm_ranking(spark, C, q, metric):
     centroid table, ``orderBy(_d, list_id)``."""
     from opengauss_vectordb_spark.vector.distance import (
         DISTANCES,
-        dlit_array,
+        dlit_sql,
         hamming_distance,
     )
 
@@ -217,10 +304,10 @@ def _jvm_ranking(spark, C, q, metric):
         "list_id INT, centroid ARRAY<DOUBLE>",
     )
     if metric == "hamming":
-        lit = F.expr("array(" + ",".join(f"{int(x)}L" for x in q) + ")")
-        d = hamming_distance(F.col("centroid").cast("array<bigint>"), lit)
+        lit = "array(" + ",".join(f"{int(x)}L" for x in q) + ")"
+        d = hamming_distance("CAST(centroid AS ARRAY<BIGINT>)", lit)
     else:
-        d = DISTANCES[metric](F.col("centroid"), dlit_array(q))
+        d = DISTANCES[metric]("centroid", dlit_sql(q))
     rows = (
         cents.select("list_id", d.alias("_d"))
         .orderBy(F.col("_d").asc_nulls_last(), F.col("list_id").asc())

@@ -290,3 +290,53 @@ def test_string_quote_hex_and_trunc_fields(spark):
     assert str(one(
         "SELECT CAST(date_trunc('year', DATE '1997-04-10') AS DATE)"
     )) == "1997-01-01"
+
+
+def test_sql_vector_functions_are_the_kernels(spark):
+    """The datavec SQL functions (l2_distance, inner_product,
+    cosine_distance, l1_distance, vector_norm) are the distance.py
+    kernels' own SQL text: equal bit for bit, a zero vector's cosine
+    distance included (NaN, not NULL — NULL would sort first and rank
+    the zero vector nearest), also through the ``<=>`` operator
+    outside the canonical ANN shape."""
+    import math
+
+    from opengauss_vectordb_spark.engine import Engine
+    from opengauss_vectordb_spark.vector import distance as D
+
+    eng = Engine(spark, SF_CORRECT)
+    rows = [
+        (0, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+        (1, [1.5, -2.0, 0.25], [0.5, 3.0, -1.0]),
+        (2, [-0.0, 0.0, -0.0], [0.0, -0.0, 0.0]),
+        (3, [1e-3, 7.0, -4.5], [2.0, -0.5, 1e3]),
+        (4, [0.1, 0.2], [0.3, 0.4, 0.5]),
+        (5, None, [1.0, 2.0, 3.0]),
+    ]
+    df = spark.createDataFrame(rows, "i INT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
+    pairs = (
+        ("l2_distance(a, b)", D.l2_distance("a", "b")),
+        ("inner_product(a, b)", D.dot_product("a", "b")),
+        ("cosine_distance(a, b)", D.cosine_distance("a", "b")),
+        ("l1_distance(a, b)", D.l1_distance("a", "b")),
+        ("vector_norm(a)", D.l2_norm("a")),
+    )
+    got = df.select(
+        "i", *[c for sql, kernel in pairs for c in (F.expr(sql), kernel)]
+    ).orderBy("i").collect()
+
+    def same(x, y):
+        if x is None or y is None:
+            return x is None and y is None
+        if math.isnan(x) or math.isnan(y):
+            return math.isnan(x) and math.isnan(y)
+        return x == y and math.copysign(1, x) == math.copysign(1, y)
+
+    for r in got:
+        for j in range(1, 2 * len(pairs), 2):
+            assert same(r[j], r[j + 1]), (r.i, pairs[j // 2][0], r)
+    cos = 1 + 2 * 2  # the SQL cosine_distance column
+    assert math.isnan(got[0][cos]) and math.isnan(got[2][cos])
+    op = eng.sql("SELECT v <=> '[1,2,3]' AS d FROM (SELECT array(0D, 0D, 0D)"
+                 " AS v) t").collect()
+    assert op[0].d is not None and math.isnan(op[0].d)

@@ -16,7 +16,6 @@ import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from opengauss_vectordb_spark.vector.distance import (
     cosine_distance,
@@ -57,10 +56,10 @@ def test_distances_match_numpy(spark, pairs):
     )
     rows = df.select(
         "i",
-        l2_distance(F.col("a"), F.col("b")).alias("l2"),
-        neg_inner_product(F.col("a"), F.col("b")).alias("nip"),
-        l1_distance(F.col("a"), F.col("b")).alias("l1"),
-        cosine_distance(F.col("a"), F.col("b")).alias("cos"),
+        l2_distance("a", "b").alias("l2"),
+        neg_inner_product("a", "b").alias("nip"),
+        l1_distance("a", "b").alias("l1"),
+        cosine_distance("a", "b").alias("cos"),
     ).collect()
     for r in rows:
         a = np.array(pairs[r.i][0])

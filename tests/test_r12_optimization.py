@@ -62,8 +62,6 @@ def test_dim_guarded_distance_kernels_match_fold(spark):
     import math
     import random
 
-    from pyspark.sql import functions as F
-
     from opengauss_vectordb_spark.vector.distance import (
         cosine_distance,
         dot_product,
@@ -88,7 +86,7 @@ def test_dim_guarded_distance_kernels_match_fold(spark):
     df = spark.createDataFrame(
         rows, "i INT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>"
     )
-    ca, cb = F.col("a"), F.col("b")
+    ca, cb = "a", "b"
     out = df.select(
         "i",
         dot_product(ca, cb).alias("d0"),
