@@ -204,167 +204,6 @@ GATE_PRIORITY: list[str] = [
     "range_type_funcs",
 ]
 
-# The ROUND 12 window, retired (kept for the rotation ledger):
-_GATE_PRIORITY_R12: list[str] = [
-    # (a) round-12 NEW registrations
-    "create_aggregate_combine",
-    "plpython_setof_composite",
-    "exchange_partition_subpart",
-    "range_type_funcs",
-    "start_with_sql_text",
-    "time_fill_sql_text",
-    "regexp_bytes_funcs",
-    "xml_publish_funcs",
-    "agg_orderby_sql_text",
-    "json_ctor_funcs",
-    # (b) the r11 gate-debt row
-    "split_subpartition",
-    # (c) churn re-gates
-    "create_aggregate_sql",
-    "plpython_setof",
-    "plpython_function",
-    "create_function_sql",
-    "exchange_subpartition",
-    # (d) the complete 20-row r4 stale tail
-    "ivf_search_cosine_exhaustive",
-    "ivf_search_halfvec_exhaustive",
-    "ivf_search_ip_exhaustive",
-    "json_modify_roundtrip",
-    "lateral_topn_per_group",
-    "multimodal_frame_sample",
-    "pii_scrub_redact",
-    "salted_skew_join",
-    "sample_weighted_priority",
-    "setop_all_multiplicity",
-    "string_format_pg",
-    "string_funcs2",
-    "text_heavy_hitters",
-    "tsstore_locf_gapfill",
-    "udtf_token_chunks",
-    "unpivot_metrics",
-    "window_exclude_frame",
-    "window_groups_frame",
-    "window_rank_dist",
-    "window_ratio_to_report",
-    # (e) r5-tail rotation (alphabetical prefix of the 32)
-    "agg_regression2",
-    "copy_sql_roundtrip",
-    "corpus_token_histogram",
-    "db4ai_auc_score",
-    "db4ai_calibration_bins",
-    "dblink_remote_agg",
-    "dedup_repeated_spans",
-    "epoch_shuffle_shards",
-    "eval_bootstrap_ci",
-    "events_anomaly_mad",
-    "events_counter_increase",
-    "events_winsorize",
-    "fts_query_rewrite",
-    "fts_ts_stat",
-    # (hnsw_delete_then_search, hnsw_filtered_search,
-    #  hnsw_search_halfvec_exhaustive,
-    #  hnsw_search_sparsevec_exhaustive, ivf_search_bit_exhaustive,
-    #  knn_maxsim_multivector and knn_subvector_rerank displaced by
-    #  range_type_funcs, start_with_sql_text, time_fill_sql_text,
-    #  regexp_bytes_funcs, xml_publish_funcs and agg_orderby_sql_text
-    #  — the r5 remainder rotates in r13)
-]
-
-# The ROUND 11 window, retired (kept for the rotation ledger):
-_GATE_PRIORITY_R11: list[str] = [
-    "create_aggregate_sql", "plpython_setof", "exchange_subpartition",
-    "plpgsql_cursor_fetch", "do_block_for_loop",
-    "plpgsql_dynexecute_function", "plpgsql_setof_dynexecute",
-    "gist_poly_contains", "plpython_function", "create_function_sql",
-    "bpe_learn_merges", "decontaminate_bloom_prefilter", "math_funcs",
-    "pivot_status_counts", "recursive_series", "sample_cluster_balanced",
-    "sample_deterministic", "sql_compat_oracle", "sql_entry_q6",
-    "string_funcs", "tpch_q12_adapted", "tpch_q13", "tpch_q14",
-    "tpch_q15", "tpch_q16_adapted", "tpch_q17_adapted",
-    "tpch_q18_adapted", "tpch_q19_adapted", "tpch_q20_adapted",
-    "tpch_q21_adapted", "tpch_q22_adapted", "values_scan",
-    "zorder_pruned_scan", "agg_filter_clause", "agg_ordered_concat",
-    "agg_regression", "distinct_on", "embedding_norm_outliers",
-    "events_anomaly_zscore", "events_asof_join",
-    "events_retention_cohorts", "fts_bm25_query", "fts_headline",
-    "fts_plainto_websearch", "hnsw_knn_join_exhaustive",
-    "hnsw_search_bit_exhaustive", "hnsw_search_l1_exhaustive",
-    "hstore_funcs", "inlist_join_rewrite", "ivf_delete_then_search",
-]
-
-# The ROUND 10 window, retired (kept for the rotation ledger):
-_GATE_PRIORITY_R10: list[str] = [
-    # (a) the 13 round-9 registrations that froze out of the r9
-    # window — first-ever driver gate rows (all 13 oracle-verified
-    # locally in r9 and re-verified this round)
-    "age_function",
-    "bformat_convert_series",
-    "bpe_learn_merges",
-    "bpe_segment_tokens",
-    "decontaminate_bloom_prefilter",
-    "do_block_for_loop",
-    "gin_array_ops",
-    "gist_box_overlap",
-    "gist_knn_point",
-    "gist_range_overlap",
-    "json_arrow_operators",
-    "plpgsql_case_stmt",
-    "plpgsql_return_query",
-    # (b) round-10 NEW registrations — dynamic EXECUTE in FUNCTION
-    # bodies (interpreted, operators/do_block.py), do-while loops
-    # (tail EXIT WHEN via one-iteration unroll), the lossy polygon
-    # GiST opclass with exact ray-cast recheck, OPEN/FETCH/CLOSE
-    # cursors (+ fetch-loop desugaring to the FOR aggregate), and
-    # RETURN QUERY EXECUTE in SETOF bodies
-    "plpgsql_dynexecute_function",
-    "plpgsql_do_while",
-    "gist_poly_contains",
-    "plpgsql_cursor_fetch",
-    "plpgsql_setof_dynexecute",
-    "format_trunc_compat",
-    "pg_datetime_format_models",
-    "insert_ignore_error",
-    # (c) churned-code re-gates this round: gin_index.py (array-op
-    # routing now resolves FROM/JOIN refs + elem-type literal guard;
-    # posting-level compaction), gist_index.py (posting-level
-    # compaction + polygon opclass), sql_compat.py (generate_series
-    # empty-range guard, json-arrow key escaping), plpgsql.py
-    # (dynamic EXECUTE in FUNCTION bodies, do-while loops),
-    # pipeline.py (BPE lineage checkpointing — bpe rows above)
-    "gin_index_fts",
-    "trgm_gin_search",
-    "plpgsql_exception_guard",
-    "plpgsql_while_loop",
-    # (d) rotation — the oldest rows of the 46-entry r3 stale tail
-    # (the remainder rotates in r11; after this round no row is
-    # older than r3 and the tail shrinks to ~16)
-    "agg_approx_percentiles",
-    "bucketed_join_colocated",
-    "conditional_funcs",
-    "connect_by_hierarchy",
-    "connect_by_path_funcs",
-    "copy_binary_roundtrip",
-    "date_funcs",
-    "db4ai_gbt_classify",
-    "dedup_incremental_minhash",
-    "dedup_simhash_pairs",
-    "events_funnel",
-    "events_interval_join",
-    "events_session_windows",
-    "events_sliding_window",
-    "events_tumbling_window",
-    "fts_bool_phrase",
-    "fts_rank_cd",
-    "hash_encode_funcs",
-    "join_full_outer",
-    "json_build_each",
-    "json_funcs",
-    "knn_binary_rerank",
-    "knn_pq_rerank",
-    "limit_offset",
-    "recursive_cte_native",
-]
-
 
 def _ordered(mapping: dict) -> dict:
     missing = [n for n in GATE_PRIORITY if n not in QUERIES]

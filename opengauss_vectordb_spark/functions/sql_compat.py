@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import re
 
+from ..sqltext import LITERAL, close_paren, split_top, top_level
+
 _FROM_DUAL = re.compile(r"\bfrom\s+dual\b", re.IGNORECASE)
 _SYSDATE = re.compile(r"\bsysdate\b", re.IGNORECASE)
 
@@ -48,7 +50,6 @@ _SYSDATE = re.compile(r"\bsysdate\b", re.IGNORECASE)
 _MASK = "\x00"
 _MASK_TOK = re.compile(r"\x00(\d+)\x00")
 # A single-quoted SQL literal, with '' as the escaped quote.
-_SQL_STR = re.compile(r"'(?:[^']|'')*'")
 _VEC_OPERAND = r"(?:\x00\d+\x00|[A-Za-z_][A-Za-z0-9_.]*)"
 _VEC_OP = re.compile(
     rf"(?P<a>{_VEC_OPERAND})\s*(?P<op><->|<#>|<=>|<\+>)\s*"
@@ -63,17 +64,17 @@ _VEC_FNS = {
 _VEC_LIT = re.compile(r"^'\[(?P<body>[^\]']*)\]'$")
 
 
-def _mask_strings(sql: str) -> tuple[str, list[str]]:
+def _stash_literals(sql: str) -> tuple[str, list[str]]:
     literals: list[str] = []
 
     def stash(m: re.Match) -> str:
         literals.append(m.group(0))
         return f"{_MASK}{len(literals) - 1}{_MASK}"
 
-    return _SQL_STR.sub(stash, sql), literals
+    return LITERAL.sub(stash, sql), literals
 
 
-def _unmask_strings(sql: str, literals: list[str]) -> str:
+def _unstash_literals(sql: str, literals: list[str]) -> str:
     return _MASK_TOK.sub(lambda m: literals[int(m.group(1))], sql)
 
 
@@ -135,20 +136,6 @@ _CONVERT_TYPES = {
 }
 
 
-def _find_close(s: str, open_pos: int) -> int:
-    """Index of the ')' matching the '(' at open_pos (s is masked —
-    no parens hide in literals); -1 when unbalanced."""
-    depth = 0
-    for i in range(open_pos, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
 def _rewrite_convert(masked: str) -> str:
     """B-format CONVERT (gram.y B-compat; MySQL public semantics):
     ``CONVERT(expr, type)`` → CAST; ``CONVERT(expr USING charset)`` →
@@ -161,7 +148,7 @@ def _rewrite_convert(masked: str) -> str:
         if m is None:
             return out
         op = pos + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
         inner = out[op + 1:cl]
@@ -172,19 +159,12 @@ def _rewrite_convert(masked: str) -> str:
             # split on the LAST top-level comma: expr may contain
             # commas inside nested calls, the type never does (except
             # DECIMAL(p,s), whose comma sits inside parens)
-            depth, split = 0, -1
-            for i, ch in enumerate(inner):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    split = i
-            if split < 0:
+            commas = list(top_level(inner, ","))
+            if not commas:
                 pos = cl + 1  # not the two-arg form: leave untouched
                 continue
-            expr = inner[:split].strip()
-            ty = " ".join(inner[split + 1:].strip().upper().split())
+            expr = inner[:commas[-1].start()].strip()
+            ty = " ".join(inner[commas[-1].end():].upper().split())
             md = re.fullmatch(
                 r"DECIMAL(\s*\(\s*\d+(\s*,\s*\d+)?\s*\))?", ty
             )
@@ -343,22 +323,6 @@ def _rewrite_json_arrows(masked: str, literals: list[str]) -> str:
     return _JSON_CHAIN.sub(sub, masked)
 
 
-def _split_top_commas(s: str) -> list[str]:
-    """Paren-aware top-level comma split (operates on MASKED text, so
-    quotes never appear)."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return parts
-
-
 # PG format() specs this rewrite compiles: %s / %I / %L with optional
 # n$ position, and %% (adt/varlena.cpp text_format).  Width/flag forms
 # (%5s, %-I) leave the call untranslated — the analyzer error names
@@ -423,10 +387,10 @@ def _rewrite_format(masked: str, literals: list[str]) -> str:
         if m is None:
             return out
         op = pos + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
-        args = _split_top_commas(out[op + 1:cl])
+        args = split_top(out[op + 1:cl])
         mt = _MASK_TOK.fullmatch(args[0].strip()) if args else None
         repl = None
         if mt is not None:
@@ -451,10 +415,10 @@ def _rewrite_trunc(masked: str) -> str:
         if m is None:
             return out
         op = pos + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
-        args = [a.strip() for a in _split_top_commas(out[op + 1:cl])]
+        args = split_top(out[op + 1:cl])
         repl = None
         if len(args) == 1 and args[0]:
             a = f"({args[0]})"
@@ -485,7 +449,7 @@ def _rewrite_extract_dow(masked: str) -> str:
         if m is None:
             return out
         op = out.index("(", pos + m.start())
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
         f = m.group("f").lower()
@@ -515,7 +479,7 @@ def _rewrite_date_part_dow(masked: str, literals: list[str]) -> str:
             pos = pos + m.end()
             continue
         op = out.index("(", pos + m.start())
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
         expr = out[op + 1:cl].split(",", 1)[1].strip()
@@ -613,10 +577,10 @@ def _rewrite_pg_datetime_fns(masked: str, literals: list[str]) -> str:
         if m is None:
             return out
         op = pos + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
-        args = _split_top_commas(out[op + 1:cl])
+        args = split_top(out[op + 1:cl])
         mt = (_MASK_TOK.fullmatch(args[1].strip())
               if len(args) == 2 else None)
         repl = None
@@ -701,7 +665,7 @@ def _rewrite_pg_typeof(masked: str) -> str:
         if m is None:
             return out
         op = pos + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
         inner = out[op + 1:cl]
@@ -729,10 +693,10 @@ def _rewrite_regexp_like3(masked: str, literals: list[str]) -> str:
             if m is None:
                 break
             op = start + m.end() - 1
-            cl = _find_close(out, op)
+            cl = close_paren(out, op)
             if cl < 0:
                 break
-            args = _split_top_commas(out[op + 1:cl])
+            args = split_top(out[op + 1:cl])
             if len(args) == 3 and _MASK_TOK.fullmatch(args[2].strip()):
                 hit = (start + m.start(), op, cl, args)
                 break
@@ -769,7 +733,7 @@ def _json_elem(arg: str) -> str:
         (r"^to_json\s*\(", ""),
     ):
         m = re.match(pat, a, re.IGNORECASE)
-        if m and _find_close(a, m.end() - 1) == len(a) - 1:
+        if m and close_paren(a, m.end() - 1) == len(a) - 1:
             inner = a[m.end():-1]
             return f"{head}{inner})" if head else inner
     m = re.fullmatch(
@@ -811,7 +775,7 @@ def _rewrite_json_ctors(masked: str) -> str:
             i = out.find(opener, start)
             if i < 0:
                 break
-            cl = _find_close(out, i + len(opener) - 1)
+            cl = close_paren(out, i + len(opener) - 1)
             if cl < 0:
                 break
             out = out[:cl + 1] + ")" + out[cl + 1:]
@@ -828,7 +792,7 @@ def _rewrite_json_ctors(masked: str) -> str:
         if m is None:
             break
         op = start + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             break
         inner = _json_elem(out[op + 1:cl])
@@ -842,10 +806,10 @@ def _rewrite_json_ctors(masked: str) -> str:
         if m is None:
             break
         op = start + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             break
-        args = _split_top_commas(out[op + 1:cl])
+        args = split_top(out[op + 1:cl])
         if len(args) != 2:
             raise ValueError("json_object_agg takes (key, value)")
         repl = (f"to_json(map_from_entries(collect_list("
@@ -858,10 +822,10 @@ def _rewrite_json_ctors(masked: str) -> str:
         if m is None:
             break
         op = start + m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             break
-        args = _split_top_commas(out[op + 1:cl])
+        args = split_top(out[op + 1:cl])
         if len(args) == 2:
             repl = (f"to_json(map_from_arrays({args[0]}, {args[1]}))")
         else:
@@ -911,17 +875,13 @@ def _rewrite_agg_orderby(masked: str) -> str:
             return out
         fn = m.group(1).lower()
         op = m.end() - 1
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             return out
         inner = out[op + 1:cl]
-        parts = re.split(r"\bORDER\s+BY\b", inner, maxsplit=1,
-                         flags=re.IGNORECASE)
-        # the split must be at paren depth 0 of THIS call
-        if len(parts) == 2 and parts[0].count("(") != parts[0].count(
-            ")"
-        ):
-            parts = [inner]
+        # split at the ORDER BY at paren depth 0 of THIS call
+        ob = next(top_level(inner, r"\bORDER\s+BY\b"), None)
+        parts = [inner[:ob.start()], inner[ob.end():]] if ob else [inner]
         if len(parts) == 1 and fn != "xmlagg":
             # plain json_agg/jsonb_agg lowers in _rewrite_json_ctors
             pos = cl + 1
@@ -931,11 +891,11 @@ def _rewrite_agg_orderby(masked: str) -> str:
         if fn in ("json_agg", "jsonb_agg"):
             args = _json_elem(args)
         if fn in ("json_object_agg", "jsonb_object_agg"):
-            kv = _split_top_commas(args)
+            kv = split_top(args)
             if len(kv) != 2:
                 raise ValueError("json_object_agg takes (key, value)")
             norm = lambda s: re.sub(r"\s+", " ", s).strip().lower()  # noqa: E731
-            kparts = [k.strip() for k in _split_top_commas(keys)]
+            kparts = split_top(keys)
             descs = [bool(re.search(r"\bDESC\b", k, re.IGNORECASE))
                      for k in kparts]
             bare = [re.sub(r"\b(ASC|DESC|NULLS\s+(FIRST|LAST))\b", "",
@@ -968,7 +928,7 @@ def _rewrite_agg_orderby(masked: str) -> str:
             if keys:
                 repl += f" WITHIN GROUP (ORDER BY {keys})"
         else:  # array_agg / json_agg / jsonb_agg (array-shaped aggs)
-            kparts = [k.strip() for k in _split_top_commas(keys)]
+            kparts = split_top(keys)
             norm = lambda s: re.sub(r"\s+", " ", s).strip().lower()  # noqa: E731
             descs = [bool(re.search(r"\bDESC\b", k, re.IGNORECASE))
                      for k in kparts]
@@ -1005,7 +965,7 @@ def _rewrite_agg_orderby(masked: str) -> str:
 
 def translate(sql: str) -> str:
     """Rewrite the supported Oracle-compat constructs into Spark SQL."""
-    masked, literals = _mask_strings(sql)
+    masked, literals = _stash_literals(sql)
     # B-format charset-prefixed literals (_utf8'x', _utf8mb4'x', ...):
     # the engine is UTF-8 end-to-end (COVERAGE's charset position), so
     # the introducer strips — the literal text is already UTF-8
@@ -1056,7 +1016,7 @@ def translate(sql: str) -> str:
             pos0 += mt.end()
             continue
         op = out.index("(", pos0 + mt.start())
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             break
         arg = out[op + 1:cl].split(",", 1)[1].strip()
@@ -1079,7 +1039,7 @@ def translate(sql: str) -> str:
         if me is None:
             break
         op = out.index("(", me.start())
-        cl = _find_close(out, op)
+        cl = close_paren(out, op)
         if cl < 0:
             break
         inner = out[op + 1:cl]
@@ -1147,4 +1107,4 @@ def translate(sql: str) -> str:
             out = f"SELECT * FROM ({body} LIMIT {n}) {order.strip()}"
         else:
             out = f"{body} LIMIT {n}"
-    return _unmask_strings(out, literals)
+    return _unstash_literals(out, literals)

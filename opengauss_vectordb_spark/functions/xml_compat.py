@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import re
 
+from ..sqltext import close_paren, split_top
+
 _MASK_TOK = re.compile("\x00(\\d+)\x00")
 
 _XMLFN = re.compile(
@@ -33,32 +35,6 @@ _XMLFN = re.compile(
     r"xmlserialize|xmlroot|xpath)\s*\(",
     re.IGNORECASE,
 )
-
-
-def _find_close(s: str, op: int) -> int:
-    depth = 0
-    for i in range(op, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
-def _split_commas(s: str) -> list[str]:
-    parts, depth, last = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-    parts.append(s[last:])
-    return [p for p in (x.strip() for x in parts) if p]
 
 
 def _esc(expr: str) -> str:
@@ -82,7 +58,7 @@ def _rw_content(arg: str, literals: list[str]) -> tuple[str, bool]:
     if m:
         return m.group(2), m.group(1).lower() == "xml"
     m = _XMLFN.match(a)
-    if m and _find_close(a, m.end() - 1) == len(a) - 1:
+    if m and close_paren(a, m.end() - 1) == len(a) - 1:
         return _rw_call(a, m, literals), True
     # nested xml* somewhere inside (e.g. round(...) over xml) still
     # rewrites, but the value is no longer statically xml-typed
@@ -92,9 +68,9 @@ def _rw_content(arg: str, literals: list[str]) -> tuple[str, bool]:
 def _rw_call(text: str, m: re.Match, literals: list[str]) -> str:
     fn = m.group(1).lower()
     op = m.end() - 1
-    cl = _find_close(text, op)
+    cl = close_paren(text, op)
     inner = text[op + 1:cl]
-    args = _split_commas(inner)
+    args = split_top(inner)
 
     if fn == "xmlcomment":
         return f"xmlcomment({rewrite_xml(inner, literals)})"
@@ -198,9 +174,9 @@ def _rw_call(text: str, m: re.Match, literals: list[str]) -> str:
     if rest and re.match(r"^xmlattributes\s*\(", rest[0],
                          re.IGNORECASE):
         aop = rest[0].index("(")
-        acl = _find_close(rest[0], aop)
+        acl = close_paren(rest[0], aop)
         seen, attr_parts = set(), []
-        for a in _split_commas(rest[0][aop + 1:acl]):
+        for a in split_top(rest[0][aop + 1:acl]):
             mm = re.match(r"^(.*)\s+AS\s+(\S+)\s*$", a,
                           re.IGNORECASE | re.DOTALL)
             if mm:
@@ -253,7 +229,7 @@ def rewrite_xml(masked: str, literals: list[str]) -> str:
         m = _XMLFN.search(out, pos)
         if m is None:
             return out
-        cl = _find_close(out, m.end() - 1)
+        cl = close_paren(out, m.end() - 1)
         if cl < 0:
             return out
         repl = _rw_call(out[m.start():cl + 1], _XMLFN.match(

@@ -14,6 +14,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..sqltext import LITERAL, split_top
+
 DEC = "decimal(18,6)"
 
 
@@ -226,21 +228,8 @@ def status_frame(spark, row: tuple, schema: str):
 def _split_schema(schema: str) -> list[tuple[str, str]]:
     """'a STRING, b DECIMAL(18,6)' → [('a','STRING'), ...] —
     paren-aware on the type arguments; backtick names pass through."""
-    out, cur, depth = [], [], 0
-    for ch in schema:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
     cols = []
-    for c in out:
-        c = c.strip()
+    for c in split_top(schema):
         if c.startswith("`"):
             name, typ = c[: c.index("`", 1) + 1], c[c.index("`", 1) + 1:]
         else:
@@ -277,21 +266,6 @@ def _sql_scalar(v, typ: str) -> str:
 # --- SQL-text scanning shared by the statement rewrites -------------------
 
 
-def literal_spans(query: str) -> list[tuple[int, int]]:
-    """(open, close) offsets of every single-quoted literal in
-    ``query`` (an escaped ``''`` closes one span and opens the next,
-    which covers the same characters)."""
-    spans, in_q, start = [], False, 0
-    for i, ch in enumerate(query):
-        if ch == "'":
-            if in_q:
-                spans.append((start, i))
-                in_q = False
-            else:
-                start, in_q = i, True
-    return spans
-
-
 def sub_outside_literals(pattern: re.Pattern, repl, query: str) -> str:
     """``pattern.sub(repl, query)``, leaving every match that starts
     inside a string literal as it is.  The literals are scanned at the
@@ -301,8 +275,8 @@ def sub_outside_literals(pattern: re.Pattern, repl, query: str) -> str:
     def _sub(m: re.Match) -> str:
         nonlocal spans
         if spans is None:
-            spans = literal_spans(query)
-        if any(a <= m.start() <= b for a, b in spans):
+            spans = [lit.span() for lit in LITERAL.finditer(query)]
+        if any(a <= m.start() < b for a, b in spans):
             return m.group(0)
         return repl(m)
 

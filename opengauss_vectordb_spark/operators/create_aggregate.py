@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import re
 
+from ..sqltext import close_paren, mask, split_top, top_level
 from .create_function import _map_type
 from ._util import pin_schema, status_frame
 
@@ -55,41 +56,6 @@ _DROP_AGG = re.compile(
     r"(?:\([^)]*\))?\s*;?\s*$",
     re.IGNORECASE,
 )
-
-
-def _split_commas(s: str) -> list[str]:
-    """Top-level comma split, quote- and paren-aware (INITCOND values
-    like '{0,0}' and types like numeric(10,2) carry inner commas)."""
-    parts, cur, depth, in_q, i = [], [], 0, False, 0
-    while i < len(s):
-        c = s[i]
-        if in_q:
-            cur.append(c)
-            if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_q = False
-        elif c == "'":
-            in_q = True
-            cur.append(c)
-        elif c in "([":
-            depth += 1
-            cur.append(c)
-        elif c in ")]":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
 
 
 def _stype_spark(pg_type: str) -> str:
@@ -119,15 +85,13 @@ def _subst_params(expr: str, mapping: dict[str, str]) -> str:
     """Whole-word parameter-name → replacement, outside literals (the
     stored spec expr carries no string literals of concern, but a
     body CAN quote a param name — mask first)."""
-    from .plpgsql import _mask_strings
-
     out = expr
     for pname, rep in mapping.items():
         pat = re.compile(rf"(?<![\w.])\b{re.escape(pname)}\b",
                          re.IGNORECASE)
         pos = 0
         while True:
-            m = pat.search(_mask_strings(out), pos)
+            m = pat.search(mask(out), pos)
             if m is None:
                 break
             out = out[:m.start()] + rep + out[m.end():]
@@ -187,7 +151,7 @@ def _parse_create_agg(query: str):
     if m is None:
         return None
     op1 = m.end() - 1
-    cl1 = _find_close_masked(query, op1)
+    cl1 = close_paren(query, op1)
     if cl1 < 0:
         return None
     rest = query[cl1 + 1:].strip().rstrip(";").strip()
@@ -196,7 +160,7 @@ def _parse_create_agg(query: str):
         return m.group("name").lower(), "", query[op1 + 1:cl1]
     if not rest.startswith("("):
         return None
-    cl2 = _find_close_masked(rest, 0)
+    cl2 = close_paren(rest, 0)
     if cl2 != len(rest) - 1:
         return None
     return (m.group("name").lower(), query[op1 + 1:cl1],
@@ -206,12 +170,12 @@ def _parse_create_agg(query: str):
 def _create_aggregate(engine, parsed):
     name, args_text, opts_text = parsed
     opts: dict[str, str] = {}
-    for part in _split_commas(opts_text):
+    for part in split_top(opts_text):
         if "=" not in part:
             raise ValueError(f"CREATE AGGREGATE: bad option {part!r}")
         k, v = part.split("=", 1)
         opts[k.strip().lower()] = v.strip()
-    in_types = [t for t in _split_commas(args_text) if t]
+    in_types = split_top(args_text)
     if not in_types and "basetype" in opts:
         # the pre-8.2 spelling: CREATE AGGREGATE name (BASETYPE=..., ...)
         in_types = [opts["basetype"]]
@@ -337,32 +301,30 @@ def rewrite_agg_calls(engine, query: str) -> str:
     low = query.lower()
     if not any(n in low for n in aggs):
         return query
-    from .plpgsql import _mask_strings
-
     out = query
     for name in aggs:
         pat = re.compile(rf"(?<![\w.])\b{re.escape(name)}\s*\(",
                          re.IGNORECASE)
         pos = 0
         while True:
-            masked = _mask_strings(out)
+            masked = mask(out)
             mm = pat.search(masked, pos)
             if mm is None:
                 break
             op = mm.end() - 1
-            cl = _find_close_masked(masked, op)
+            cl = close_paren(masked, op)
             if cl < 0:
                 break
             inner = out[op + 1:cl].strip()
             if re.match(r"^(DISTINCT|ALL)\b", inner, re.IGNORECASE) \
                     or re.search(r"\bORDER\s+BY\b",
-                                 _mask_strings(inner), re.IGNORECASE):
+                                 mask(inner), re.IGNORECASE):
                 raise NotImplementedError(
                     "user aggregates: DISTINCT/ORDER BY inside the "
                     "call are not supported — deduplicate or sort in "
                     "a subquery first"
                 )
-            rep = fold_expr(aggs[name], _split_commas(inner))
+            rep = fold_expr(aggs[name], split_top(inner))
             out = out[:mm.start()] + rep + out[cl + 1:]
             pos = mm.start() + len(rep)
     return out
@@ -372,6 +334,12 @@ _N_SLICES = 64
 
 _CLAUSE_KWS = ("FROM", "WHERE", "GROUP BY", "HAVING",
                "ORDER BY", "LIMIT")
+# the clause keywords plus the shapes the restructure does not model
+_CLAUSE_SCAN = re.compile(
+    r"\b(?:FROM|WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|UNION|"
+    r"INTERSECT|EXCEPT|MINUS|OVER|DISTINCT)\b",
+    re.IGNORECASE,
+)
 
 
 def _top_level_clauses(masked: str):
@@ -384,34 +352,13 @@ def _top_level_clauses(masked: str):
         return None
     if re.match(r"(?:DISTINCT|ALL)\b", masked[m.end():], re.IGNORECASE):
         return None
-    # single depth-0 scan for clause keyword starts
     spans: dict[str, int] = {}
-    depth = 0
-    i = m.end()
+    for mm in top_level(masked, _CLAUSE_SCAN):
+        kw = " ".join(mm.group(0).upper().split())
+        if kw not in _CLAUSE_KWS:
+            return None
+        spans.setdefault(kw, mm.start())
     n = len(masked)
-    while i < n:
-        ch = masked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha()) and \
-                (i == 0 or not (masked[i - 1].isalnum()
-                                or masked[i - 1] == "_")):
-            rest = masked[i:]
-            for kw in ("UNION", "INTERSECT", "EXCEPT", "MINUS",
-                       "OVER", "DISTINCT"):
-                if re.match(rf"{kw}\b", rest, re.IGNORECASE):
-                    return None
-            for kw in _CLAUSE_KWS:
-                if re.match(rf"{kw.replace(' ', chr(92) + 's+')}\b",
-                            rest, re.IGNORECASE) and kw not in spans:
-                    spans[kw] = i
-            mm = re.match(r"\w+", rest)
-            if mm:
-                i += mm.end()
-                continue
-        i += 1
     if "FROM" not in spans or "GROUP BY" not in spans:
         return None
     order = [("SELECT", m.end())] + sorted(
@@ -443,12 +390,8 @@ def _strip_alias(item: str) -> tuple[str, str | None]:
     """(expr, alias) — a trailing depth-0 ' AS name'; a bare trailing
     identifier without AS is NOT treated as an alias (too ambiguous
     without a full parser)."""
-    from .plpgsql import _mask_strings
-
-    masked = _mask_strings(item)
-    m = re.search(r"\bAS\s+(\w+)\s*$", masked, re.IGNORECASE)
-    if m and masked[:m.start()].count("(") == \
-            masked[:m.start()].count(")"):
+    m = next(top_level(item, r"\bAS\s+(\w+)\s*$"), None)
+    if m:
         return item[:m.start()].strip(), m.group(1)
     return item.strip(), None
 
@@ -488,14 +431,12 @@ def _compile_item_expr(st: _TwoLevelState, expr: str):
     Returns the outer SQL text, or None when the expression falls
     outside the modeled space (the caller then abandons the whole
     two-level attempt)."""
-    from .plpgsql import _mask_strings
-
-    masked = _mask_strings(expr)
+    masked = mask(expr)
     calls = []  # (start, end, fn, args_text)
     for m in re.finditer(r"\b(\w+)\s*\(", masked):
         fn = m.group(1).lower()
         if fn in st.aggs or fn.upper() in _BUILTIN_2LVL:
-            cl = _find_close_masked(masked, m.end() - 1)
+            cl = close_paren(masked, m.end() - 1)
             if cl < 0:
                 return None
             calls.append((m.start(), cl + 1, fn, expr[m.end():cl]))
@@ -529,9 +470,9 @@ def _compile_item_expr(st: _TwoLevelState, expr: str):
             inner = args_text.strip()
             if re.match(r"^(DISTINCT|ALL)\b", inner, re.IGNORECASE) \
                     or re.search(r"\bORDER\s+BY\b",
-                                 _mask_strings(inner), re.IGNORECASE):
+                                 mask(inner), re.IGNORECASE):
                 return None  # single-level path owns the refusal
-            args = _split_commas(inner)
+            args = split_top(inner)
             st.inner.append(
                 fold_expr(agg, args, with_final=False)
                 + f" AS __uas{st.n_user}"
@@ -585,9 +526,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
     named = [n for n in aggs if n in low]
     if not named or not any(aggs[n].get("combine") for n in named):
         return None
-    from .plpgsql import _mask_strings
-
-    masked = _mask_strings(query)
+    masked = mask(query)
     spans = _top_level_clauses(masked)
     if spans is None:
         return None
@@ -605,7 +544,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
     having = _clause_text(query, spans, "HAVING")
     orderby = _clause_text(query, spans, "ORDER BY")
     limit = _clause_text(query, spans, "LIMIT")
-    keys = [k.strip() for k in _split_commas(keys_text)]
+    keys = split_top(keys_text)
     if not keys or any(re.match(r"^\d+$", k) for k in keys):
         return None  # ordinal GROUP BY: resolve-by-position not modeled
     key_norms = [_norm(k) for k in keys]
@@ -624,7 +563,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
     )
     outer_items: list[str] = []
     out_aliases: set[str] = set()
-    for item in _split_commas(sel):
+    for item in split_top(sel):
         expr, alias = _strip_alias(item)
         if _norm(expr) in key_norms:
             i = key_norms.index(_norm(expr))
@@ -655,7 +594,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
             return None
     # ORDER BY terms must resolve against the OUTER projection
     if orderby is not None:
-        for term in _split_commas(orderby):
+        for term in split_top(orderby):
             t = re.sub(r"\s+(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?\s*$",
                        "", term.strip(), flags=re.IGNORECASE)
             if not (re.match(r"^\d+$", t)
@@ -676,7 +615,7 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
     ob = ""
     if orderby is not None:
         terms = []
-        for term in _split_commas(orderby):
+        for term in split_top(orderby):
             tm = re.match(
                 r"^(?P<e>.*?)(?P<sfx>\s+(ASC|DESC)"
                 r"(\s+NULLS\s+(FIRST|LAST))?)?\s*$",
@@ -696,18 +635,6 @@ def rewrite_agg_two_level(engine, query: str) -> str | None:
         + (f" LIMIT {limit}" if limit else "")
     )
     return outer_sql
-
-
-def _find_close_masked(masked: str, open_pos: int) -> int:
-    depth = 0
-    for i in range(open_pos, len(masked)):
-        if masked[i] == "(":
-            depth += 1
-        elif masked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
 
 
 def try_handle_stmt(engine, query: str):

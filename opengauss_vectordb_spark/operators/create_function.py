@@ -33,6 +33,8 @@ planner.  ``RETURNS TABLE(...)`` maps to Spark's table-function form.
 from __future__ import annotations
 
 import re
+
+from ..sqltext import mask, split_top, strip_comments
 from ._util import pin_schema, status_frame
 
 # PG type name → Spark SQL type.  Multi-word PG names are normalized
@@ -57,7 +59,7 @@ _CREATE_FN = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+(?P<name>\w+)\s*"
     # non-greedy up to the ')' directly before RETURNS so parameter
     # lists with parenthesized types — numeric(10,2) — parse
-    # (_split_params is paren-aware for the inner commas)
+    # (parse_params splits only the top-level commas)
     r"\((?P<params>.*?)\)\s*"
     r"RETURNS\s+(?P<ret>SETOF\s+\w+|TABLE\s*\((?P<tcols>[^)]*)\)|"
     r"\w+(?:\s+\w+)?(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?"
@@ -102,105 +104,17 @@ def _map_type(pg_type: str) -> str:
     return pg_type.strip().upper()  # already a Spark type name
 
 
-def _split_params(params: str) -> list[tuple[str, str]]:
-    """Paren-aware comma split of 'name type, ...' (decimal(10,2) safe)."""
-    out, depth, cur = [], 0, []
-    for ch in params:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        out.append("".join(cur))
+def parse_params(params: str) -> list[tuple[str, str]]:
+    """'name type, ...' → [(name, type)]; an unnamed parameter (PG
+    allows bare types) is named argN."""
     parsed = []
-    for i, p in enumerate(out):
-        toks = p.strip().split(None, 1)
-        if len(toks) == 1:  # unnamed parameter: PG allows bare types
+    for i, p in enumerate(split_top(params)):
+        toks = p.split(None, 1)
+        if len(toks) == 1:
             parsed.append((f"arg{i + 1}", toks[0]))
         else:
             parsed.append((toks[0], toks[1]))
     return parsed
-
-
-def _comment_spans(text: str) -> list[tuple[int, int]]:
-    """Single-pass lexer over the body: strings and comments are
-    mutually exclusive contexts (an apostrophe inside a comment is
-    comment text, '--' inside a string is string text), so one walk
-    tracking both is the only correct way to find comment spans."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-        elif text.startswith("--", i):
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            spans.append((i, j))
-            i = j
-        elif text.startswith("/*", i):
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _strip_comments(text: str) -> str:
-    """Remove -- and /* */ comments via the combined string/comment
-    lexer, so a '--' inside a literal survives AND an apostrophe
-    inside a comment cannot open a phantom string."""
-    for a, b in reversed(_comment_spans(text)):
-        text = text[:a] + text[b:]
-    return text
-
-
-def _split_stmts(body: str) -> list[str]:
-    """Quote- and paren-aware split of a SQL-function body on top-level
-    semicolons (PG SQL functions hold a statement list)."""
-    out, depth, cur, in_str = [], 0, [], False
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(body) and body[i + 1] == "'":
-                    cur.append("''")
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == ";" and depth == 0:
-            if "".join(cur).strip():
-                out.append("".join(cur).strip())
-            cur = []
-            i += 1
-            continue
-        cur.append(ch)
-        i += 1
-    if "".join(cur).strip():
-        out.append("".join(cur).strip())
-    return out
 
 
 def _unquote_body(body: str, tag: str | None) -> str:
@@ -225,7 +139,7 @@ def translate_create_function(query: str) -> str | None:
             "RETURNS TABLE(col type, ...) instead"
         )
     name = m.group("name").lower()
-    params = _split_params(m.group("params"))
+    params = parse_params(m.group("params"))
     body = _unquote_body(m.group("body"), m.group("tag")).rstrip(";").strip()
     # PG SQL functions execute a statement LIST and return the last
     # statement's result, discarding the earlier ones
@@ -236,7 +150,7 @@ def translate_create_function(query: str) -> str | None:
     # comments may contain ';' — strip them (string-aware) BEFORE the
     # statement split, or a '-- note; caveat' truncates the final
     # statement / misclassifies an earlier one
-    stmts = _split_stmts(_strip_comments(body))
+    stmts = split_top(strip_comments(body), ";")
     if len(stmts) > 1:
         for s in stmts[:-1]:
             if not re.match(r"^(SELECT|VALUES|WITH)\b", s, re.IGNORECASE):
@@ -264,7 +178,7 @@ def translate_create_function(query: str) -> str | None:
     tcols = m.group("tcols")
     if tcols is not None:
         spark_cols = ", ".join(
-            f"{cn} {_map_type(ct)}" for cn, ct in _split_params(tcols)
+            f"{cn} {_map_type(ct)}" for cn, ct in parse_params(tcols)
         )
         return (
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({spark_params}) "
@@ -295,9 +209,9 @@ def sql_function_spec(query: str) -> dict | None:
         return None
     if re.match(r"^SETOF\b", m.group("ret").strip(), re.IGNORECASE):
         return None
-    params = _split_params(m.group("params"))
+    params = parse_params(m.group("params"))
     body = _unquote_body(m.group("body"), m.group("tag")).rstrip(";").strip()
-    stmts = _split_stmts(_strip_comments(body))
+    stmts = split_top(strip_comments(body), ";")
     body = stmts[-1]
 
     def _sub_pos(mt: re.Match) -> str:
@@ -314,13 +228,11 @@ def sql_function_spec(query: str) -> dict | None:
     # a lambda cannot host a subquery, so the inlinable form strips
     # the bare-SELECT wrapper; a body that actually reads a relation
     # (FROM/WHERE) is marked — CREATE AGGREGATE refuses it by name
-    from .plpgsql import _mask_strings as _mask
-
     sel = re.match(r"^SELECT\s+(?P<e>.*)$", body,
                    re.IGNORECASE | re.DOTALL)
     subquery = bool(
         sel is None
-        or re.search(r"\bFROM\b", _mask(sel.group("e")), re.IGNORECASE)
+        or re.search(r"\bFROM\b", mask(sel.group("e")), re.IGNORECASE)
     )
     return {
         "name": m.group("name").lower(),

@@ -32,6 +32,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..sqltext import close_paren, split_top, top_level
 from ._util import status_frame
 
 
@@ -835,25 +836,10 @@ def _parse_column_defs(cols: str) -> tuple[list[dict], tuple[str, ...]]:
     generated_column_option); AUTO_INCREMENT: gram.y:7650-7664 (the
     B-format constraint) with heap.cpp:4197's one-per-table rule and
     heap.cpp:4352's no-generated-over-auto rule."""
-    out, depth, cur = [], 0, []
-    entries = []
-    for ch in cols:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            entries.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        entries.append("".join(cur))
     parsed = []
     n_auto = 0
     pk: list[str] = []
-    for e in entries:
-        e = e.strip()
+    for e in split_top(cols):
         mpk = re.match(
             r"^\s*PRIMARY\s+KEY\s*\(\s*([\w\s,]+?)\s*\)", e, re.IGNORECASE
         )
@@ -887,23 +873,12 @@ def _parse_column_defs(cols: str) -> tuple[list[dict], tuple[str, ...]]:
         mdef = re.search(r"\bDEFAULT\s+", e, re.IGNORECASE)
         if mdef:
             tail = e[mdef.end():]
-            # scan a string-masked copy so a keyword INSIDE a quoted
-            # literal (DEFAULT 'NOT STARTED') can never terminate the
-            # expression; offsets stay valid in the real tail
-            from .plpgsql import _mask_strings as _mask
-            cut, d2 = len(tail), 0
-            for mm in re.finditer(
-                r"[()]|\b(?:PRIMARY|NOT|UNIQUE|CHECK|REFERENCES)\b",
-                _mask(tail), re.IGNORECASE,
-            ):
-                t = mm.group(0)
-                if t == "(":
-                    d2 += 1
-                elif t == ")":
-                    d2 -= 1
-                elif d2 == 0:
-                    cut = mm.start()
-                    break
+            # a keyword INSIDE a quoted literal (DEFAULT 'NOT STARTED')
+            # or a call never terminates the expression
+            stop = next(top_level(
+                tail, r"\b(?:PRIMARY|NOT|UNIQUE|CHECK|REFERENCES)\b"
+            ), None)
+            cut = stop.start() if stop else len(tail)
             default = tail[:cut].strip()
             if not default:
                 raise ValueError(
@@ -1036,16 +1011,6 @@ _DELETE_USING = re.compile(
 )
 
 
-def _balanced(text: str) -> bool:
-    depth = 0
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return False
-    return depth == 0
 _DROP_TABLE = re.compile(
     r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>\w+)\s*"
     r"(?P<purge>PURGE)?\s*;?\s*$",
@@ -1065,52 +1030,20 @@ _DELETE = re.compile(
 )
 
 
-def _split_top_commas(text: str) -> list[str]:
-    """Paren-aware top-level comma split (RETURNING expression lists)."""
-    out, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
 def _returning_frame(engine, rows_df, ret: str):
     """RETURNING projection (nodeModifyTable.cpp's returningList),
     MATERIALIZED before the copy-on-write swap — the lazy frame reads
     the pre-rewrite path, which the swap replaces.  PG streams
     RETURNING rows to the client the same way; the affected set is
     WHERE-bounded, not table-sized."""
-    out = rows_df.selectExpr(*_split_top_commas(ret))
+    out = rows_df.selectExpr(*split_top(ret))
     return engine.spark.createDataFrame(out.collect(), out.schema)
 
 
 def _split_set_clauses(sets: str) -> list[tuple[str, str]]:
-    """Top-level comma split of ``col = expr, ...`` (paren-aware)."""
-    out, depth, cur = [], 0, []
-    for ch in sets:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        out.append("".join(cur))
+    """``col = expr, ...`` → [(col, expr)]."""
     parsed = []
-    for clause in out:
+    for clause in split_top(sets):
         col, expr = clause.split("=", 1)
         parsed.append((col.strip(), expr.strip()))
     return parsed
@@ -1417,29 +1350,9 @@ def _strip_storage_clauses(query: str) -> tuple[str, dict]:
     if not re.match(r"^\s*CREATE\b", query, re.IGNORECASE) \
             or "TABLE" not in query.upper():
         return query, {}
-    # find a top-level AS (outside parens/quotes): clauses live before
-    depth, in_q, as_at = 0, False, len(query)
-    i = 0
-    while i < len(query) - 1:
-        ch = query[i]
-        if in_q:
-            if ch == "'":
-                in_q = False
-        elif ch == "'":
-            in_q = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and query[i:i + 2].upper() == "AS" and (
-            i == 0 or not (query[i - 1].isalnum() or query[i - 1] == "_")
-        ) and (
-            i + 2 >= len(query)
-            or not (query[i + 2].isalnum() or query[i + 2] == "_")
-        ):
-            as_at = i
-            break
-        i += 1
+    # the clauses live before the top-level AS
+    m_as = next(top_level(query, r"\bAS\b"), None)
+    as_at = m_as.start() if m_as else len(query)
     head, tail = query[:as_at], query[as_at:]
     meta: dict = {}
 
@@ -1460,25 +1373,12 @@ def _strip_storage_clauses(query: str) -> tuple[str, dict]:
     # the first top-level paren group not owned by WITH(...) or
     # HASH(...) — that's the column list — and strip around it only.
     span = None
-    depth, in_q = 0, False
-    g_start = None
-    for j, ch in enumerate(head):
-        if in_q:
-            if ch == "'":
-                in_q = False
-        elif ch == "'":
-            in_q = True
-        elif ch == "(":
-            if depth == 0:
-                before = head[:j].rstrip()
-                owned = re.search(r"(?i)\b(?:WITH|HASH)$", before)
-                g_start = None if owned else j
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and g_start is not None:
-                span = (g_start, j + 1)
-                break
+    for mp in top_level(head, r"\("):
+        before = head[:mp.start()].rstrip()
+        if not re.search(r"(?i)\b(?:WITH|HASH)$", before):
+            close = close_paren(head, mp.start())
+            span = (mp.start(), close + 1) if close != -1 else None
+            break
     if span:
         s, e = span
         head2 = (
@@ -1491,55 +1391,32 @@ def _strip_storage_clauses(query: str) -> tuple[str, dict]:
     return head2 + tail, meta
 
 
+_SELECT_INTO = re.compile(
+    r"\bINTO\s+(?P<temp>(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+)?"
+    r"(?P<name>\w+)(?:\s+|\s*;?\s*$)",
+    re.IGNORECASE,
+)
+
+
 def _try_select_into(engine, query: str) -> DataFrame | None:
     """``SELECT ... INTO [TEMP] <table> FROM ...`` (gram.y:573
     into_clause; parse_clause.cpp transformSelectStmt turns it into
-    CREATE TABLE AS — so does this).  Only a TOP-LEVEL INTO counts:
-    quote- and paren-aware scan, so CTE bodies and subqueries keep
-    their text (PL do-blocks strip their variable-binding INTO before
-    reaching Engine.sql)."""
+    CREATE TABLE AS — so does this).  Only a TOP-LEVEL INTO counts, so
+    CTE bodies and subqueries keep their text (PL do-blocks strip
+    their variable-binding INTO before reaching Engine.sql)."""
     if not re.match(r"^\s*SELECT\b", query, re.IGNORECASE):
         return None
     if "into" not in query.lower():
         return None
-    depth, in_q, i, n = 0, False, 0, len(query)
-    while i < n:
-        ch = query[i]
-        if in_q:
-            if ch == "'":
-                in_q = False
-        elif ch == "'":
-            in_q = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and query[i:i + 4].upper() == "INTO"
-            and (i == 0 or not (query[i - 1].isalnum()
-                                or query[i - 1] == "_"))
-            and (i + 4 >= n or not (query[i + 4].isalnum()
-                                    or query[i + 4] == "_"))
-        ):
-            m = re.match(
-                r"INTO\s+(?P<temp>(?:GLOBAL\s+|LOCAL\s+)?"
-                r"TEMP(?:ORARY)?\s+)?(?P<name>\w+)(?:\s+|\s*;?\s*$)",
-                query[i:], re.IGNORECASE,
-            )
-            if m is None:
-                i += 1
-                continue
-            rest = query[:i] + query[i + m.end():]
-            name = m.group("name").lower()
-            rows = engine.managed_tables.create_as(
-                name, engine.sql(rest)
-            )
-            if m.group("temp"):
-                engine.managed_tables.tables[name]["temp"] = True
-            return status_frame(engine.spark, ("SELECT INTO", name, rows), "tag STRING, tbl STRING, rows BIGINT",)
-        i += 1
-    return None
+    m = next(top_level(query, _SELECT_INTO), None)
+    if m is None:
+        return None
+    rest = query[:m.start()] + query[m.end():]
+    name = m.group("name").lower()
+    rows = engine.managed_tables.create_as(name, engine.sql(rest))
+    if m.group("temp"):
+        engine.managed_tables.tables[name]["temp"] = True
+    return status_frame(engine.spark, ("SELECT INTO", name, rows), "tag STRING, tbl STRING, rows BIGINT",)
 
 
 def _handle_update_from(engine, m: re.Match) -> DataFrame:
@@ -2181,7 +2058,9 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
     if (
         m
         and m.group("name").lower() in engine.managed_tables.tables
-        and _balanced(m.group("sets"))
+        # the matched FROM is top-level only when SET's text balances
+        and close_paren(f"({m.group('sets')})", 0)
+        == len(m.group("sets")) + 1
     ):
         return _handle_update_from(engine, m)
     m = _DELETE_USING.match(query)

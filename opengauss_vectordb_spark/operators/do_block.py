@@ -56,17 +56,24 @@ from __future__ import annotations
 
 import re
 
+from ..sqltext import close_paren, mask, split_top, strip_comments, top_level
+from .create_function import _map_type, _unquote_body, parse_params
 from .plpgsql import (
     _BEGIN_RE,
     _DECLARE_RE,
+    _HANDLER_WHEN,
+    _LOOP_TOKEN,
+    _acc_agg_expr,
     _find_end_if,
-    _mask_strings,
+    _norm_cond,
+    _parse_for_block,
+    _parse_loop_accs,
     _rewrite_assert_stmts,
     _rewrite_case_stmts,
     _scan_stmt,
     _split_branches,
+    _split_exception,
 )
-from .create_function import _map_type, _split_params, _strip_comments
 from ._util import pin_schema, status_frame
 
 _DO_RE = re.compile(
@@ -169,7 +176,7 @@ def _subst_values(text: str, env: dict) -> str:
             re.IGNORECASE,
         )
         while True:
-            m = pat.search(_mask_strings(out))
+            m = pat.search(mask(out))
             if m is None:
                 break
             idx = _safe_index(_subst_values(m.group(1), env))
@@ -181,7 +188,7 @@ def _subst_values(text: str, env: dict) -> str:
             re.IGNORECASE,
         )
         while True:
-            m = mpat.search(_mask_strings(out))
+            m = mpat.search(mask(out))
             if m is None:
                 break
             meth = m.group(1).lower()
@@ -197,7 +204,7 @@ def _subst_values(text: str, env: dict) -> str:
         pat = re.compile(rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE)
         pos = 0
         while True:
-            m = pat.search(_mask_strings(out), pos)
+            m = pat.search(mask(out), pos)
             if m is None:
                 break
             val = env[name]
@@ -297,8 +304,6 @@ class _DoRunner:
                 pos = end_after
                 continue
             if re.match(r"FOR\b", rest, re.IGNORECASE):
-                from .plpgsql import _parse_for_block
-
                 pf = _parse_for_block(text, pos + off)
                 if pf is not None:
                     var, src, lbody, pos = pf
@@ -326,8 +331,6 @@ class _DoRunner:
         saw rows (post-CONTINUE-filter when the body leads with
         CONTINUE WHEN — the one documented deviation, PG counts
         pre-filter iterations)."""
-        from .plpgsql import _acc_agg_expr, _parse_loop_accs
-
         s = src.strip()
         mex = re.match(r"EXECUTE\s+(?P<e>.+)$", s,
                        re.IGNORECASE | re.DOTALL)
@@ -353,7 +356,7 @@ class _DoRunner:
         )
         if (mr and coll and re.search(
             rf"\b(?:{'|'.join(map(re.escape, coll))})\s*[(.]",
-            _mask_strings(body), re.IGNORECASE,
+            mask(body), re.IGNORECASE,
         )):
             lo = _safe_index(_subst_values(mr.group("lo"), self.env))
             hi = _safe_index(_subst_values(mr.group("hi"), self.env))
@@ -407,9 +410,7 @@ class _DoRunner:
         Post-loop, PG's own semantics hold: the failed FETCH left the
         targets NULL and FOUND false.  Returns the position after END
         LOOP; any other bare-LOOP shape refuses naming the rewrite."""
-        from .plpgsql import _LOOP_TOKEN
-
-        masked = _mask_strings(text)
+        masked = mask(text)
         body_start = pos + 4
         depth = 1
         end_start = end_after = None
@@ -424,12 +425,7 @@ class _DoRunner:
         if end_start is None:
             raise ValueError("LOOP without END LOOP")
         body = text[body_start:end_start]
-        stmts = []
-        bpos = 0
-        while bpos < len(body):
-            s, bpos = _scan_stmt(body, bpos)
-            if s:
-                stmts.append(s)
+        stmts = split_top(body, ";")
         mf = (re.match(
             r"FETCH\s+(?:NEXT\s+)?(?:FROM\s+)?(?P<c>\w+)\s+INTO\s+"
             r"(?P<vs>\w+(?:\s*,\s*\w+)*)$", stmts[0], re.IGNORECASE)
@@ -480,7 +476,7 @@ class _DoRunner:
                              re.IGNORECASE)
             spos = 0
             while True:
-                mv = pat.search(_mask_strings(rest_body), spos)
+                mv = pat.search(mask(rest_body), spos)
                 if mv is None:
                     break
                 rep = f"__crec.{cols[i]}"
@@ -530,7 +526,7 @@ class _DoRunner:
                     self._eval_scalar(
                         "SELECT " + _subst_values(a, self.env)
                     )
-                    for a in _split_call_args(m.group("args"))
+                    for a in split_top(m.group("args"))
                 ]
                 out, i, ai = [], 0, 0
                 while i < len(msg):
@@ -638,7 +634,7 @@ class _DoRunner:
         # result set), bind the first row's values positionally, set
         # FOUND/ROW_COUNT from the returned rows
         if re.match(r"(INSERT|UPDATE|DELETE)\b", stmt, re.IGNORECASE):
-            masked = _mask_strings(stmt)
+            masked = mask(stmt)
             mr = re.search(r"\bRETURNING\b", masked, re.IGNORECASE)
             mi = mr and re.search(
                 r"\s+INTO\s+(?:STRICT\s+)?(?P<vs>\w+(?:\s*,\s*\w+)*)\s*$",
@@ -809,21 +805,12 @@ class _DoRunner:
         """(composed sql with USING $n substituted, into_m, using_m,
         rest) — the shared front half of EXECUTE handling; RETURN
         QUERY EXECUTE reuses it without the INTO tail."""
-        masked = _mask_strings(rest)
         into_m = using_m = None
-        depth = 0
-        for mm in re.finditer(r"[()]|\bINTO\b|\bUSING\b", masked,
-                              re.IGNORECASE):
-            t = mm.group(0)
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                if t.upper() == "INTO" and into_m is None:
-                    into_m = mm
-                elif t.upper() == "USING" and using_m is None:
-                    using_m = mm
+        for mm in top_level(rest, r"\bINTO\b|\bUSING\b"):
+            if mm.group(0).upper() == "INTO" and into_m is None:
+                into_m = mm
+            elif mm.group(0).upper() == "USING" and using_m is None:
+                using_m = mm
         q_end = min(
             m.start() for m in (into_m, using_m) if m is not None
         ) if (into_m or using_m) else len(rest)
@@ -833,7 +820,7 @@ class _DoRunner:
                 self._eval_scalar(
                     "SELECT " + _subst_values(a, self.env)
                 )
-                for a in _split_call_args(
+                for a in split_top(
                     rest[using_m.end():
                          into_m.start() if into_m
                          and into_m.start() > using_m.end()
@@ -841,7 +828,7 @@ class _DoRunner:
                 )
             ]
             out, last = [], 0
-            for pm in re.finditer(r"\$(\d+)", _mask_strings(sql)):
+            for pm in re.finditer(r"\$(\d+)", mask(sql)):
                 k = int(pm.group(1))
                 if not 1 <= k <= len(vals):
                     raise ValueError(
@@ -892,7 +879,7 @@ class _DoRunner:
         )
         if mfmt:
             fmt = mfmt.group("fmt")[1:-1].replace("''", "'")
-            args = (_split_call_args(mfmt.group("args"))
+            args = (split_top(mfmt.group("args"))
                     if mfmt.group("args") else [])
             vals = [
                 self._eval_scalar(
@@ -902,7 +889,7 @@ class _DoRunner:
             ]
             return _pg_format(fmt, vals)
         # string literal / || concatenation of literals and variables
-        bare = re.sub(r"\|\|", " ", _mask_strings(qe))
+        bare = re.sub(r"\|\|", " ", mask(qe))
         alien = sorted({
             t.group(0).lower()
             for t in re.finditer(r"\b[A-Za-z_]\w*\b", bare)
@@ -976,11 +963,7 @@ def _pg_format(fmt: str, vals: list) -> str:
 
 
 def _parse_decls_values(decls: str, runner: _DoRunner) -> None:
-    pos = 0
-    while pos < len(decls):
-        stmt, pos = _scan_stmt(decls, pos)
-        if not stmt:
-            continue
+    for stmt in split_top(decls, ";"):
         # c [NO SCROLL|SCROLL] CURSOR FOR|IS <query> — a BOUND cursor
         # (gram.y decl_cursor_query; IS is the A-format spelling):
         # just the query text, consumed by cursor FOR loops — must
@@ -1069,7 +1052,7 @@ def _parse_decls_values(decls: str, runner: _DoRunner) -> None:
                         "collection initializers use the constructor "
                         "form t(e1, e2, ...)"
                     )
-                for a in _split_call_args(mi.group("a")):
+                for a in split_top(mi.group("a")):
                     arr.append(runner._eval_scalar(
                         "SELECT CAST(("
                         + _subst_values(a, runner.env)
@@ -1099,18 +1082,14 @@ def try_handle_stmt(engine, query: str):
     m = _DO_RE.match(query)
     if m is None:
         return None
-    from .create_function import _unquote_body
-
-    body = _strip_comments(_unquote_body(m.group("body"), m.group("tag")))
-    _scan_unsupported(_mask_strings(body), "DO block")
+    body = strip_comments(_unquote_body(m.group("body"), m.group("tag")))
+    _scan_unsupported(mask(body), "DO block")
     md = _DECLARE_RE.match(body) or _BEGIN_RE.match(body)
     if md is None:
         raise ValueError("DO block body must be [DECLARE ...] BEGIN ... END")
     runner = _DoRunner(engine)
     if "decls" in md.groupdict() and md.groupdict().get("decls"):
         _parse_decls_values(md.group("decls"), runner)
-    from .plpgsql import _split_exception
-
     exc = _split_exception(md.group("body"))
     if exc is not None:
         _run_with_exception_frame(engine, runner, exc[0], exc[1])
@@ -1168,14 +1147,10 @@ def _classify_error(ex: BaseException) -> set[str]:
 
 
 def _parse_handlers(handlers_text: str) -> list[tuple[list[str], str]]:
-    from .plpgsql import _HANDLER_WHEN
-
     m0 = _HANDLER_WHEN.match(handlers_text)
     if m0 is None:
         raise ValueError("DO block: EXCEPTION section without a "
                          "WHEN <condition> THEN handler")
-    from .plpgsql import _norm_cond
-
     def _conds(m):
         return [_norm_cond(c)
                 for c in re.split(r"\s+OR\s+", m.group("conds"),
@@ -1209,7 +1184,7 @@ def _run_with_exception_frame(
 ) -> None:
     handlers = _parse_handlers(handlers_text)
     if re.search(r"\b(DROP|ALTER)\s+TABLE\b|\bDROP\s+SCHEMA\b",
-                 _mask_strings(main), re.IGNORECASE):
+                 mask(main), re.IGNORECASE):
         raise NotImplementedError(
             "DO block EXCEPTION: DROP/ALTER inside a guarded block "
             "puts the undo outside the frame's reach (ALTER marks a "
@@ -1442,44 +1417,19 @@ _DROP_PROC_RE = re.compile(
 )
 
 
-def _split_call_args(args: str) -> list[str]:
-    """Paren- and quote-aware top-level comma split of a CALL arg list."""
-    out, depth, cur, in_str = [], 0, [], False
-    for ch in args:
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-            continue
-        cur.append(ch)
-    if "".join(cur).strip():
-        out.append("".join(cur))
-    return [a.strip() for a in out]
-
-
 def try_handle_procedure(engine, query: str):
     """Engine.sql hook: CREATE PROCEDURE / CALL / DROP PROCEDURE."""
     m = _CREATE_PROC_RE.match(query)
     if m:
-        from .create_function import _split_params, _unquote_body
-
         raw = m.group("body")
         body = (
             _unquote_body(raw, m.group("tag"))
             if raw.startswith("$") else raw
         )
-        body = _strip_comments(body)
-        _scan_unsupported(_mask_strings(body), "procedure")
+        body = strip_comments(body)
+        _scan_unsupported(mask(body), "procedure")
         params = []
-        for pname, ptype in _split_params(m.group("params")):
+        for pname, ptype in parse_params(m.group("params")):
             # both orders parse: PG's 'IN name type' (the mode lands
             # in the NAME slot) and A-format's 'name IN type' (the
             # mode leads the TYPE slot)
@@ -1508,7 +1458,7 @@ def try_handle_procedure(engine, query: str):
         if name not in engine.procedures:
             raise KeyError(f"CALL: procedure {name!r} does not exist")
         params, body = engine.procedures[name]
-        arg_texts = _split_call_args(m.group("args"))
+        arg_texts = split_top(m.group("args"))
         if len(arg_texts) != len(params):
             raise ValueError(
                 f"CALL {name}: expected {len(params)} argument(s), "
@@ -1532,8 +1482,6 @@ def try_handle_procedure(engine, query: str):
             )
         if "decls" in md.groupdict() and md.groupdict().get("decls"):
             _parse_decls_values(md.group("decls"), runner)
-        from .plpgsql import _split_exception
-
         exc = _split_exception(md.group("body"))
         if exc is not None:
             _run_with_exception_frame(engine, runner, exc[0], exc[1])
@@ -1660,7 +1608,7 @@ def register_interpreted_plfn(engine, name: str, params, ret_type: str,
     through _SetofRunner).  Validates the body against the DO-block
     statement subset up front, so CREATE fails fast."""
     scan = re.sub(
-        r"\bRETURN\s+(?:QUERY|NEXT)\b", " ", _mask_strings(body),
+        r"\bRETURN\s+(?:QUERY|NEXT)\b", " ", mask(body),
         flags=re.IGNORECASE,
     )
     _scan_unsupported(scan, "plpgsql function")
@@ -1698,8 +1646,6 @@ def _bind_and_run(engine, runner, params, arg_texts, body) -> None:
         )
     if "decls" in md.groupdict() and md.groupdict().get("decls"):
         _parse_decls_values(md.group("decls"), runner)
-    from .plpgsql import _split_exception
-
     exc = _split_exception(md.group("body"))
     if exc is not None:
         _run_with_exception_frame(engine, runner, exc[0], exc[1])
@@ -1714,7 +1660,7 @@ def _setof_target(engine, name: str, ret: str) -> list[tuple[str, str]]:
                   re.IGNORECASE | re.DOTALL)
     if mt:
         return [(n.lower(), _map_type(t))
-                for n, t in _split_params(mt.group("tc"))]
+                for n, t in parse_params(mt.group("tc"))]
     ms = re.match(r"^SETOF\s+(?P<t>\w+)\s*$", ret, re.IGNORECASE)
     base = ms.group("t").lower() if ms else None
     try:
@@ -1772,26 +1718,17 @@ def try_handle_fncall(engine, query: str):
     fns = engine.plfn_interpreted
     if not fns:
         return None
-    masked = _mask_strings(query)
+    masked = mask(query)
     for mm in _SETOF_CALL.finditer(masked):
         fname = mm.group("name").lower()
         entry = fns.get(fname)
         if entry is None or entry[3] != "setof":
             continue
         op = masked.index("(", mm.end() - 1)
-        depth, cl = 0, -1
-        for i in range(op, len(masked)):
-            if masked[i] == "(":
-                depth += 1
-            elif masked[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    cl = i
-                    break
+        cl = close_paren(masked, op)
         if cl < 0:
             raise ValueError(f"{fname}: unbalanced call parentheses")
-        args = [a for a in _split_call_args(query[op + 1:cl])
-                if a.strip()]
+        args = split_top(query[op + 1:cl])
         df = _run_setof(engine, fname, args)
         view = f"__setof_{fname}_{abs(hash(query)) % 10**8}"
         df.createOrReplaceTempView(view)
@@ -1817,7 +1754,7 @@ def try_handle_fncall(engine, query: str):
         return None
     name = m.group("name").lower()
     params, ret_type, body, _kind = fns[name]
-    arg_texts = [a for a in _split_call_args(m.group("args"))
+    arg_texts = [a for a in split_top(m.group("args"))
                  if a.strip()]
     runner = _FnRunner(engine)
     val = None

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..plans.explain import note_routing
 from . import index_lifecycle as lifecycle
+from ..sqltext import split_top
 from ._util import scan_refs, status_frame, sub_outside_literals
 
 # CREATE INDEX [name] ON tbl USING gin (to_tsvector(['cfg',] col))
@@ -738,8 +739,7 @@ def rewrite_array_ops(engine, query: str) -> str:
             # renders '2.0' and `@> ARRAY[2]` would silently match
             # nothing); everything else falls to the inline
             # predicate (identical semantics, no index).
-            raw = [v.strip() for v in vals_sql.split(",")
-                   if v.strip()]
+            raw = split_top(vals_sql)
             elem_cat = idx["elem_cat"]
             ok = (
                 all(re.fullmatch(r"'[^']*'", v) for v in raw)

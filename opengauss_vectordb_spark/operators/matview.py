@@ -47,6 +47,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..sqltext import split_top
 from ._util import status_frame
 
 
@@ -73,24 +74,6 @@ def _is_decomposable(expr: str) -> bool:
     if "COUNT(*)" in flat:
         return True
     return flat.startswith(("SUM(", "CAST(SUM(")) or "(SUM(" in flat
-
-
-def _split_items(items: str) -> list[str]:
-    """Split a select list on top-level commas (parens-aware)."""
-    out, depth, cur = [], 0, []
-    for ch in items:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
 
 
 @dataclass
@@ -150,9 +133,9 @@ class MatviewManager:
             )
         mv.base_table = m.group("table").lower()
         mv.where = m.group("where")
-        items = _split_items(m.group("items"))
+        items = split_top(m.group("items"))
         if m.group("keys"):
-            mv.group_keys = [k.strip() for k in m.group("keys").split(",")]
+            mv.group_keys = split_top(m.group("keys"))
             for item in items:
                 if item in mv.group_keys:
                     continue

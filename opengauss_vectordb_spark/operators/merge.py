@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from ..sqltext import split_top
 from ._util import status_frame
 
 
@@ -322,34 +323,6 @@ def _norm_aliases(text: str, talias: str, salias: str) -> str:
     return text.replace("\x00T\x00.", "t.").replace("\x00S\x00.", "s.")
 
 
-def _split_top(text: str, sep_pat: str) -> list[str]:
-    """Split on a regex at paren/quote depth 0."""
-    parts, depth, in_str, last = [], 0, False, 0
-    i = 0
-    pat = _re.compile(sep_pat, _re.IGNORECASE)
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(text, i)
-            if m:
-                parts.append(text[last:i])
-                i = m.end()
-                last = i
-                continue
-        i += 1
-    parts.append(text[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
 def try_handle_stmt(engine, query: str):
     """Engine.sql hook: MERGE INTO <managed target> USING <table |
     (subquery)> ON <equi-cond> WHEN ... — executed as the full-outer
@@ -398,7 +371,7 @@ def try_handle_stmt(engine, query: str):
 
     on_text = _norm_aliases(m.group("on"), talias, salias)
     keys: list[str] = []
-    for conj in _split_top(on_text, r"AND\b"):
+    for conj in split_top(on_text, r"\bAND\b"):
         em = _re.match(
             r"^\(?\s*(?P<l>[ts])\.(?P<lc>\w+)\s*=\s*(?P<r>[ts])\."
             r"(?P<rc>\w+)\s*\)?$",
@@ -428,7 +401,7 @@ def try_handle_stmt(engine, query: str):
     insert_values: dict[str, Column] | None = None
     update_pos: int | None = None
     delete_pos: int | None = None
-    for pos, clause in enumerate(_split_top(m.group("clauses"), r"WHEN\b")):
+    for pos, clause in enumerate(split_top(m.group("clauses"), r"\bWHEN\b")):
         cm = _M_UPDATE.match(clause)
         if cm:
             if update_sets is not None:
@@ -438,7 +411,7 @@ def try_handle_stmt(engine, query: str):
             update_sets = {}
             update_cond = cm.group("cond")
             update_pos = pos
-            for a in _split_top(cm.group("sets"), r","):
+            for a in split_top(cm.group("sets")):
                 col, _, expr = a.partition("=")
                 col = col.strip().lower().removeprefix("t.")
                 expr = _norm_aliases(expr.strip(), talias, salias)
@@ -464,7 +437,7 @@ def try_handle_stmt(engine, query: str):
         cm = _M_INSERT.match(clause)
         if cm:
             insert_clause = True
-            vals = _split_top(cm.group("vals"), r",")
+            vals = split_top(cm.group("vals"))
             cols = (
                 [c.strip().lower() for c in cm.group("cols").split(",")]
                 if cm.group("cols")

@@ -26,6 +26,8 @@ DataFrame API.
 from __future__ import annotations
 
 import re
+
+from ..sqltext import split_top, top_level
 from ._util import status_frame
 
 _CREATE_MODEL_RE = re.compile(
@@ -55,28 +57,7 @@ def _top_level_from(query: str) -> re.Match | None:
     … FROM t``) and silently score the wrong table.  Returns None when
     no depth-0 FROM exists; raises when the shape is not the canonical
     single-FROM SELECT (set operations, multiple top-level FROMs)."""
-    depth, in_str = 0, False
-    hits: list[re.Match] = []
-    i = 0
-    while i < len(query):
-        ch = query[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _FROM_RE.match(query, i)
-            if m and (i == 0 or not (query[i - 1].isalnum()
-                                     or query[i - 1] == "_")):
-                hits.append(m)
-                i = m.end()
-                continue
-        i += 1
+    hits = list(top_level(query, _FROM_RE))
     if len(hits) > 1:
         raise NotImplementedError(
             "PREDICT BY in SQL text supports the canonical single-FROM "
@@ -90,7 +71,7 @@ def _parse_hyper(params: str | None) -> dict:
     out: dict = {}
     if not params:
         return out
-    for kv in params.split(","):
+    for kv in split_top(params):
         k, _, v = kv.partition("=")
         k, v = k.strip(), v.strip().strip("'\"")
         if not k:

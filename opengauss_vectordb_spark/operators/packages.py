@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import re
 
-from .plpgsql import _mask_strings
+from ..sqltext import mask
 from ._util import pin_schema, status_frame
 
 _CREATE_PKG = re.compile(
@@ -110,7 +110,7 @@ def _split_members(body: str) -> tuple[list[dict], list[str]]:
     precede the first member, member sources).  Content BETWEEN
     members still refuses — PL/SQL puts private state only in the
     body's declaration section."""
-    masked = _mask_strings(body)
+    masked = mask(body)
     out: list[str] = []
     variables: list[dict] = []
     pos = 0
@@ -172,7 +172,7 @@ def _parse_spec_decls(
 ) -> tuple[list[str], list[dict]]:
     """Member names + variable declarations from the spec; refuses
     overloads and exceptions."""
-    masked = _mask_strings(decls)
+    masked = mask(decls)
     if re.search(r"\bEXCEPTION\b", masked, re.IGNORECASE):
         raise NotImplementedError(
             "package EXCEPTION declarations are error control flow "
@@ -307,7 +307,7 @@ def substitute_var_reads(engine, query: str) -> str:
             )
             pos = 0
             while True:
-                m = pat.search(_mask_strings(query), pos)
+                m = pat.search(mask(query), pos)
                 if m is None:
                     break
                 rep = f"({_render_literal(binding['value'], binding['type'])})"

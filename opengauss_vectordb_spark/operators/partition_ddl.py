@@ -37,6 +37,7 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from ..sqltext import split_top
 from ._util import status_frame
 
 PART_COL = "_part"
@@ -686,33 +687,6 @@ _PART_SELECTOR = re.compile(
 )
 
 
-def _split_entries(text: str) -> list[str]:
-    """Top-level comma split of the partition list (paren/quote
-    aware)."""
-    out, depth, in_str, cur = [], 0, False, []
-    for ch in text:
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
 def parse_partition_by(text: str) -> PartitionSpec | None:
     m = _PARTITION_BY.search(text)
     if m is None:
@@ -741,12 +715,12 @@ def parse_partition_by(text: str) -> PartitionSpec | None:
         if re.match(r"^\s*DEFAULT\s*$", vals_text, re.IGNORECASE):
             return MAXVALUE
         return tuple(
-            _parse_literal(v) for v in _split_entries(vals_text)
+            _parse_literal(v) for v in split_top(vals_text)
         )
 
     def _parse_subs(subs_text: str) -> list[tuple]:
         subs: list[tuple] = []
-        for si, se in enumerate(_split_entries(subs_text)):
+        for si, se in enumerate(split_top(subs_text)):
             if sub_kind == "range":
                 sm = _SUB_ENTRY_RANGE.match(se)
                 if sm is None:
@@ -799,7 +773,7 @@ def parse_partition_by(text: str) -> PartitionSpec | None:
             "partition list"
         )
 
-    entries = _split_entries(m.group("parts"))
+    entries = split_top(m.group("parts"))
     parts = []
     subparts = {}
     for pi, e in enumerate(entries):
@@ -913,7 +887,7 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
         elif spec.kind == "list":
             vals = tuple(
                 _parse_literal(v)
-                for v in _split_entries(m.group("bound"))
+                for v in split_top(m.group("bound"))
             )
             new_parts = spec.parts + [(pname, vals)]
         else:
@@ -1579,7 +1553,7 @@ def _split_subpartition(engine, m):
             )
         wvals = tuple(
             _parse_literal(v)
-            for v in _split_entries(m.group("vals"))
+            for v in split_top(m.group("vals"))
         )
         cur = entries[i][1]
         if cur is MAXVALUE:

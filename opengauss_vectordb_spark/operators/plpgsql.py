@@ -125,7 +125,8 @@ from __future__ import annotations
 
 import re
 
-from .create_function import _map_type, _split_params, _strip_comments
+from ..sqltext import close_paren, mask, split_top, strip_comments, top_level
+from .create_function import _map_type, parse_params
 from ._util import pin_schema, status_frame
 
 _CREATE_PLFN = re.compile(
@@ -172,32 +173,6 @@ _UNSUPPORTED = [
 ]
 
 
-def _mask_strings(text: str) -> str:
-    """Copy of ``text`` with every character INSIDE a string literal
-    replaced by a space (quotes kept, positions preserved), so keyword
-    and identifier scans never match inside literals while every match
-    offset remains valid in the original text."""
-    out = list(text)
-    in_str = False
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    out[i] = " "
-                    out[i + 1] = " "
-                    i += 2
-                    continue
-                in_str = False
-            else:
-                out[i] = " "
-        elif ch == "'":
-            in_str = True
-        i += 1
-    return "".join(out)
-
-
 def _subst(expr: str, bindings: dict[str, str]) -> str:
     """Replace variable references with their (parenthesized) bound
     expressions — identifier-boundary matched, longest names first so
@@ -212,7 +187,7 @@ def _subst(expr: str, bindings: dict[str, str]) -> str:
         pat = re.compile(rf"(?<!\.)\b{re.escape(name)}\b", re.IGNORECASE)
         pos = 0
         while True:
-            m = pat.search(_mask_strings(out), pos)
+            m = pat.search(mask(out), pos)
             if m is None:
                 break
             rep = f"({bindings[name]})"
@@ -222,27 +197,12 @@ def _subst(expr: str, bindings: dict[str, str]) -> str:
 
 
 def _scan_stmt(text: str, pos: int) -> tuple[str, int]:
-    """Read one simple statement up to its terminating top-level ';'
-    (quote- and paren-aware). Returns (stmt, next_pos)."""
-    depth, in_str, i = 0, False, pos
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    i += 2
-                    continue
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == ";" and depth == 0:
-            return text[pos:i].strip(), i + 1
-        i += 1
-    return text[pos:].strip(), len(text)
+    """Read one simple statement up to its terminating top-level ';'.
+    Returns (stmt, next_pos)."""
+    end = next(top_level(text[pos:], ";"), None)
+    if end is None:
+        return text[pos:].strip(), len(text)
+    return text[pos:pos + end.start()].strip(), pos + end.end()
 
 
 # one combined token scanner (END IF before END, ELSIF before IF);
@@ -258,7 +218,7 @@ def _find_end_if(text: str, pos: int) -> tuple[int, int]:
     (tracking nested IF and CASE ... END spans, on the string-masked
     text so keywords inside literals are invisible); returns
     (start_of_end_if, pos_after_terminator)."""
-    masked = _mask_strings(text)
+    masked = mask(text)
     if_depth, case_depth = 1, 0
     for m in _TOKEN.finditer(masked, pos):
         raw = m.group(0).upper()
@@ -288,7 +248,7 @@ def _split_branches(block: str) -> list[tuple[str | None, str]]:
     level — nested IF...END IF and CASE...END spans (including a
     CASE's own THEN/ELSE) are skipped via depth tracking on the
     string-masked text."""
-    masked = _mask_strings(block)
+    masked = mask(block)
     branches: list[tuple[str | None, str]] = []
     if_depth = case_depth = 0
     in_cond = True  # scanning a condition, waiting for its THEN
@@ -412,7 +372,7 @@ def _try_rewrite_foreach(
                 "shape) — rewrite as one set-oriented statement"
             )
         return None
-    masked = _mask_strings(text)
+    masked = mask(text)
     ml = re.search(r"\bLOOP\b", masked[pos + m.end():])
     if ml is None:
         raise ValueError("plpgsql: FOREACH without LOOP")
@@ -442,7 +402,7 @@ def _try_rewrite_foreach(
     pat = re.compile(rf"(?<!\.)\b{re.escape(var)}\b", re.IGNORECASE)
     bpos = 0
     while True:
-        mv = pat.search(_mask_strings(body), bpos)
+        mv = pat.search(mask(body), bpos)
         if mv is None:
             break
         body = body[:mv.start()] + fresh + body[mv.end():]
@@ -487,7 +447,7 @@ def _try_rewrite_bare_loop(
     at pos."""
     if not re.match(r"LOOP\b", text[pos:], re.IGNORECASE):
         return None
-    masked = _mask_strings(text)
+    masked = mask(text)
     body_start = pos + 4
     depth = 1
     end_start = end_after = None
@@ -514,12 +474,7 @@ def _try_rewrite_bare_loop(
         # condition.  The unrolled prefix updates the counter binding
         # first, so the WHILE's closed-form final value composes
         # correctly at the zero-extra-iteration boundary.
-        stmts = []
-        bpos = 0
-        while bpos < len(body):
-            s, bpos = _scan_stmt(body, bpos)
-            if s:
-                stmts.append(s)
+        stmts = split_top(body, ";")
         mt_tail = (
             re.match(r"\s*EXIT\s+WHEN\s+(?P<c>.+)$", stmts[-1],
                      re.IGNORECASE | re.DOTALL)
@@ -542,7 +497,7 @@ def _try_rewrite_bare_loop(
                 text[:pos] + prefix + " " + head + prefix
                 + " END LOOP; " + text[end_after:].lstrip(";")
             )
-        if re.search(r"\bEXIT\s+WHEN\b", _mask_strings(body),
+        if re.search(r"\bEXIT\s+WHEN\b", mask(body),
                      re.IGNORECASE):
             raise NotImplementedError(
                 "plpgsql: EXIT WHEN compiles in the LEADING position "
@@ -590,7 +545,7 @@ def _try_rewrite_while(
     — no declarative form exists)."""
     if not _WHILE_HEAD.match(text[pos:]):
         return None
-    masked = _mask_strings(text)
+    masked = mask(text)
     m_loop = re.search(r"\bLOOP\b", masked[pos:])
     if m_loop is None:
         raise ValueError("plpgsql: WHILE without LOOP")
@@ -624,12 +579,7 @@ def _try_rewrite_while(
     v = mc.group("v").lower()
     if v not in bindings:
         refuse(f"counter {v!r} is not a declared variable")
-    stmts = []
-    bpos = 0
-    while bpos < len(body):
-        stmt, bpos = _scan_stmt(body, bpos)
-        if stmt:
-            stmts.append(stmt)
+    stmts = split_top(body, ";")
     if not stmts:
         refuse("empty body")
     ms = _COUNTER_STEP.match(stmts[-1])
@@ -653,7 +603,7 @@ def _try_rewrite_while(
         toks = {
             t.lower()
             for t in re.findall(
-                r"(?<!\.)\b[A-Za-z_]\w*\b", _mask_strings(expr)
+                r"(?<!\.)\b[A-Za-z_]\w*\b", mask(expr)
             )
         }
         hot = sorted(toks & assigned)
@@ -707,7 +657,7 @@ def _try_rewrite_while(
     pat = re.compile(rf"(?<!\.)\b{re.escape(v)}\b", re.IGNORECASE)
     spos = 0
     while True:
-        mv = pat.search(_mask_strings(acc_body), spos)
+        mv = pat.search(mask(acc_body), spos)
         if mv is None:
             break
         acc_body = acc_body[:mv.start()] + fresh + acc_body[mv.end():]
@@ -731,7 +681,7 @@ def _parse_for_block(text: str, pos: int) -> tuple[str, str, str, int] | None:
     m = _FOR_HEAD.match(rest)
     if m is None:
         return None
-    masked = _mask_strings(rest)
+    masked = mask(rest)
     ml = re.search(r"\bLOOP\b", masked[m.end():])
     if ml is None:
         raise ValueError("plpgsql: FOR without LOOP")
@@ -761,12 +711,12 @@ def _parse_loop_accs(
     loop accumulator (a sequential dependence — running totals need a
     window function, not a scalar aggregate), refuses with the
     rewrite named."""
-    stripped = _strip_comments(query_sql).strip()
+    stripped = strip_comments(query_sql).strip()
     if re.fullmatch(r"\w+", stripped) and stripped.lower() in _CURSORS:
         # BOUND cursor source (exec_stmt_forc): pure name indirection
         # to the DECLAREd query — gram.y decl_cursor_query
         query_sql = _CURSORS[stripped.lower()]
-        stripped = _strip_comments(query_sql).strip()
+        stripped = strip_comments(query_sql).strip()
     if not re.match(r"^SELECT\b", stripped, re.IGNORECASE):
         m_range = _INT_RANGE.match(stripped)
         if m_range is None:
@@ -777,12 +727,7 @@ def _parse_loop_accs(
                 "compile; dynamic sources have no aggregate form"
             )
         query_sql = _int_range_select(var, m_range)
-    stmts = []
-    pos = 0
-    while pos < len(body):
-        stmt, pos = _scan_stmt(body, pos)
-        if stmt:
-            stmts.append(stmt)
+    stmts = split_top(body, ";")
     # LEADING `CONTINUE WHEN <cond>;` statements (pl_exec.cpp
     # exec_stmt_exit, is_exit=false): skipping the whole remaining
     # body for matching rows IS a row filter over the loop source —
@@ -858,7 +803,7 @@ def _parse_loop_accs(
     outer = {k: v for k, v in bindings.items()
              if k not in acc_names and k != var}
     for c in filters:
-        masked_c = _mask_strings(c)
+        masked_c = mask(c)
         for a in acc_names:
             if re.search(rf"(?<!\.)\b{re.escape(a)}\b", masked_c,
                          re.IGNORECASE):
@@ -875,7 +820,7 @@ def _parse_loop_accs(
     q_sub = _subst(query_sql, outer)
     out: list[tuple[str, str, str, str]] = []
     for acc, kind, e in accs:
-        masked_e = _mask_strings(e)
+        masked_e = mask(e)
         for other in acc_names - {acc}:
             if re.search(rf"(?<!\.)\b{re.escape(other)}\b", masked_e,
                          re.IGNORECASE):
@@ -967,7 +912,7 @@ def _projection_safe(*texts: str) -> bool:
     loop query itself is exempt (it lands in FROM/WHERE, where outer
     references are legal)."""
     for t in texts:
-        masked = _mask_strings(t)
+        masked = mask(t)
         if re.search(r"\(\s*SELECT\b", masked, re.IGNORECASE):
             return False
         for prm in _FOLD_PARAMS:
@@ -986,10 +931,7 @@ def _raise_message_expr(msg: str, args_text: str | None,
     quotes stay balanced in every segment."""
     if not args_text:
         return f"'{msg}'"
-    from .do_block import _split_call_args
-
-    args = [_subst(a, bindings).strip()
-            for a in _split_call_args(args_text)]
+    args = [_subst(a, bindings).strip() for a in split_top(args_text)]
     parts: list[str] = []
     cur: list[str] = []
     i = ai = 0
@@ -1101,7 +1043,7 @@ def _compile_stmts(text: str, bindings: dict[str, str]) -> str:
             end_start, end_after = _find_end_if(text, start)
             block = text[start:end_start]
             branches = _split_branches(block)
-            if not re.search(r"\b(RETURN|RAISE)\b", _mask_strings(block),
+            if not re.search(r"\b(RETURN|RAISE)\b", mask(block),
                              re.IGNORECASE):
                 # conditional ASSIGNMENT (no branch terminates): fold
                 # each assigned variable into CASE WHEN cond THEN new
@@ -1179,8 +1121,8 @@ def _compile_stmts(text: str, bindings: dict[str, str]) -> str:
             # variable is mentioned.  Non-aggregate INTO queries can
             # return zero rows — the wrap would NULL the whole result
             # — so they keep the per-mention scalar-subquery binding.
-            masked_e = _mask_strings(e_sub)
-            masked_t = _mask_strings(tail_sub)
+            masked_e = mask(e_sub)
+            masked_t = mask(tail_sub)
             is_agg = (
                 re.search(
                     r"\b(SUM|COUNT|AVG|MIN|MAX|STDDEV\w*|VAR\w*|"
@@ -1315,11 +1257,7 @@ _CURSORS: dict[str, str] = {}
 
 
 def _parse_decls(decls: str, bindings: dict[str, str]) -> None:
-    pos = 0
-    while pos < len(decls):
-        stmt, pos = _scan_stmt(decls, pos)
-        if not stmt:
-            continue
+    for stmt in split_top(decls, ";"):
         mc = re.match(
             r"(?P<v>\w+)\s+(?:NO\s+SCROLL\s+|SCROLL\s+)?CURSOR\s+"
             r"(?:FOR|IS)\s+(?P<q>.+)$",
@@ -1408,10 +1346,8 @@ def _split_exception(body: str) -> tuple[str, str] | None:
     """(main, handlers) at the top-level EXCEPTION keyword, or None
     when the block has no exception section.  RAISE EXCEPTION never
     splits (it is a statement, not the section header)."""
-    masked = _mask_strings(body)
-    for m in re.finditer(r"\bEXCEPTION\b", masked, re.IGNORECASE):
-        if masked[:m.start()].count("(") != masked[:m.start()].count(")"):
-            continue
+    masked = mask(body)
+    for m in top_level(masked, r"\bEXCEPTION\b"):
         if re.search(r"RAISE\s*$", masked[:m.start()], re.IGNORECASE):
             continue
         return body[:m.start()], body[m.end():]
@@ -1432,18 +1368,11 @@ def _operand_span(e: str, masked: str, i: int) -> tuple[int, int] | None:
     if e[i] in "+-":
         inner = _operand_span(e, masked, i + 1)
         return (start, inner[1]) if inner else None
-    if e[i] == "(" or masked[i] == "'":
+    if e[i] == "(":
+        j = close_paren(masked, i)
+        return (start, j + 1) if j != -1 else None
+    if masked[i] == "'":
         # masked keeps quotes: a literal scans as a ' ... ' span
-        if e[i] == "(":
-            depth = 0
-            for j in range(i, n):
-                if masked[j] == "(":
-                    depth += 1
-                elif masked[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return (start, j + 1)
-            return None
         j = masked.find("'", i + 1)
         return (start, j + 1) if j != -1 else None
     m = re.match(r"\d+(?:\.\d+)?(?:[eE][+-]?\d+)?", e[i:])
@@ -1456,15 +1385,8 @@ def _operand_span(e: str, masked: str, i: int) -> tuple[int, int] | None:
         while k < n and e[k].isspace():
             k += 1
         if k < n and e[k] == "(":  # call
-            depth = 0
-            for p in range(k, n):
-                if masked[p] == "(":
-                    depth += 1
-                elif masked[p] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return (start, p + 1)
-            return None
+            p = close_paren(masked, k)
+            return (start, p + 1) if p != -1 else None
         return (start, j)
     return None
 
@@ -1486,7 +1408,7 @@ def _collect_guards(e: str, guards: list[tuple[str, str]]) -> None:
     the cast-failure classes.  Refuses shapes whose guard cannot be
     both sound and non-raising (sites inside subqueries raise per-row;
     nested raisable operations would make the guard itself raise)."""
-    masked = _mask_strings(e)
+    masked = mask(e)
     if re.search(r"\bSELECT\b", masked, re.IGNORECASE) and (
         re.search(r"[/%]", masked) or
         re.search(r"\bCAST\s*\(", masked, re.IGNORECASE)
@@ -1511,7 +1433,7 @@ def _collect_guards(e: str, guards: list[tuple[str, str]]) -> None:
         if ch == "%" and rhs.startswith("'"):
             continue  # pg_trgm similarity operator, not modulo
         if re.search(r"[/%]|\bCAST\s*\(",
-                     _mask_strings(rhs), re.IGNORECASE):
+                     mask(rhs), re.IGNORECASE):
             _exc_refuse(
                 f"the denominator {rhs!r} itself contains a raisable "
                 "operation, so its guard could raise before the "
@@ -1519,24 +1441,11 @@ def _collect_guards(e: str, guards: list[tuple[str, str]]) -> None:
             )
         sites.append((i, "div", f"({rhs}) = 0"))
     for m in re.finditer(r"\bCAST\s*\(", masked, re.IGNORECASE):
-        depth, close = 0, None
-        for j in range(m.end() - 1, len(masked)):
-            if masked[j] == "(":
-                depth += 1
-            elif masked[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
+        close = close_paren(masked, m.end() - 1)
+        if close == -1:
             _exc_refuse("unbalanced CAST parentheses")
-        inner, inner_m = e[m.end():close], masked[m.end():close]
-        m_as = None
-        for cand in re.finditer(r"\bAS\b", inner_m, re.IGNORECASE):
-            pre = inner_m[:cand.start()]
-            if pre.count("(") == pre.count(")"):
-                m_as = cand
-                break
+        inner = e[m.end():close]
+        m_as = next(top_level(inner, r"\bAS\b"), None)
         if m_as is None:
             _exc_refuse("CAST without AS")
         src = inner[:m_as.start()].strip()
@@ -1548,7 +1457,7 @@ def _collect_guards(e: str, guards: list[tuple[str, str]]) -> None:
                     re.IGNORECASE):
             continue
         if re.search(r"[/%]|\bCAST\s*\(",
-                     _mask_strings(src), re.IGNORECASE):
+                     mask(src), re.IGNORECASE):
             _exc_refuse(
                 f"the CAST source {src!r} itself contains a raisable "
                 "operation — split it into its own guarded statement"
@@ -1614,7 +1523,7 @@ def _compile_exception_block(
                     )
                 cast_owner = ci
     # ------------------------------------------------ walk the body
-    masked_main = _mask_strings(main)
+    masked_main = mask(main)
     if re.search(r"\b(IF|CASE|LOOP|FOR|WHILE|FOREACH)\b",
                  masked_main, re.IGNORECASE):
         _exc_refuse(
@@ -1630,11 +1539,7 @@ def _compile_exception_block(
     guards: list[tuple[str, str]] = []
     assigned: set[str] = set()
     body_expr: str | None = None
-    pos = 0
-    while pos < len(main):
-        stmt, pos = _scan_stmt(main, pos)
-        if not stmt:
-            continue
+    for stmt in split_top(main, ";"):
         m_ret = re.match(r"RETURN\s+(?P<e>.+)$", stmt,
                          re.IGNORECASE | re.DOTALL)
         if m_ret:
@@ -1673,7 +1578,7 @@ def _compile_exception_block(
             tail_sub = _subst(tail, bindings) if tail else ""
             joined = e_sub + " " + tail_sub
             if re.search(r"[/%]|\bCAST\s*\(|::",
-                         _mask_strings(joined), re.IGNORECASE):
+                         mask(joined), re.IGNORECASE):
                 _exc_refuse(
                     "a division or CAST inside SELECT INTO raises "
                     "per-row — no static guard exists; bind the row "
@@ -1717,7 +1622,7 @@ def _compile_exception_block(
         key = (ci, errm)
         if key not in h_expr:
             cs, stmts = handlers[ci]
-            hm = _mask_strings(stmts)
+            hm = mask(stmts)
             hot = sorted(
                 v for v in assigned
                 if re.search(rf"(?<!\.)\b{re.escape(v)}\b", hm,
@@ -1769,7 +1674,7 @@ _BODY_CAST_RE = re.compile(
 
 
 def _map_body_cast_types(body: str) -> str:
-    masked = _mask_strings(body)
+    masked = mask(body)
     out, last = [], 0
     for m in _BODY_CAST_RE.finditer(masked):
         out.append(body[last:m.start("t")])
@@ -1830,7 +1735,7 @@ def _case_stmt_branches(
     """Split a CASE statement interior into (selector, [(when_vals,
     body)], else_body) at THIS nesting level (nested IF/CASE/LOOP spans
     skipped via stack tracking on the string-masked text)."""
-    masked = _mask_strings(interior)
+    masked = mask(interior)
     stack: list[str] = []
     marks: list[tuple[str, int, int]] = []
     pos = 0
@@ -1885,7 +1790,7 @@ def _rewrite_assert_stmts(body: str) -> str:
     rewrite to ``IF NOT COALESCE((cond), FALSE) THEN RAISE EXCEPTION
     ...; END IF;`` — PG raises ASSERT_FAILURE when the condition is
     false OR NULL, hence the COALESCE."""
-    masked = _mask_strings(body)
+    masked = mask(body)
     out, last = [], 0
     for m in _ASSERT_RE.finditer(masked):
         cond = body[m.start("c"):m.end("c")]
@@ -1904,7 +1809,7 @@ def _rewrite_case_stmts(body: str) -> str:
     """Rewrite every CASE ... END CASE statement into the equivalent
     IF/ELSIF chain (innermost-last via repeated leftmost rewriting)."""
     for _ in range(64):  # nesting/odd-shape backstop, never a silent loop
-        found = _find_case_stmt(_mask_strings(body))
+        found = _find_case_stmt(mask(body))
         if found is None:
             return body
         case_start, int_start, int_end, end_after = found
@@ -2021,11 +1926,11 @@ def _translate_setof(
     rules: TABLE(...) list, SETOF <scalar type> named after the
     function, SETOF <table> taking the table's row type)."""
     name = m.group("name").lower()
-    params = _split_params(m.group("params"))
+    params = parse_params(m.group("params"))
     scalar_col: str | None = None
     if m.group("tcols") is not None:
         cols = [(cn, _map_type(ct))
-                for cn, ct in _split_params(m.group("tcols"))]
+                for cn, ct in parse_params(m.group("tcols"))]
     else:
         target = re.match(r"^SETOF\s+(\w+)$", ret, re.IGNORECASE).group(1)
         key = target.lower()
@@ -2091,10 +1996,10 @@ def translate_plpgsql(query: str, resolve_cols=None) -> str | None:
     ret = m.group("ret").strip()
     from .create_function import _unquote_body
 
-    body = _strip_comments(_unquote_body(m.group("body"), m.group("tag")))
+    body = strip_comments(_unquote_body(m.group("body"), m.group("tag")))
     body = _map_body_cast_types(body)
     body = _rewrite_case_stmts(_rewrite_assert_stmts(body))
-    masked_body = _mask_strings(body)  # keywords in literals are inert
+    masked_body = mask(body)  # keywords in literals are inert
     # FOR <rec> IN SELECT ... LOOP and bounded integer-range FOR spans
     # are the supported loop shapes — blank them so the blanket
     # LOOP/FOR refusals see only genuinely unsupported constructs (a
@@ -2116,7 +2021,7 @@ def translate_plpgsql(query: str, resolve_cols=None) -> str | None:
     if m.group("tcols") is not None or re.match(r"^SETOF\b", ret,
                                                 re.IGNORECASE):
         return _translate_setof(m, ret, body, resolve_cols)
-    params = _split_params(m.group("params"))
+    params = parse_params(m.group("params"))
     md = _DECLARE_RE.match(body) or _BEGIN_RE.match(body)
     if md is None:
         raise ValueError("plpgsql body must be [DECLARE ...] BEGIN ... END")
@@ -2172,7 +2077,7 @@ def try_handle_stmt(engine, query: str):
         from .create_function import _unquote_body
 
         raw = m.group("body")
-        body = _strip_comments(
+        body = strip_comments(
             _unquote_body(raw, m.group("tag")) if raw.startswith("$")
             else raw
         )
@@ -2182,13 +2087,13 @@ def try_handle_stmt(engine, query: str):
         )
         if re.search(
             r"\bEXECUTE\s|\bOPEN\s+\w+|\bFETCH\s",
-            _mask_strings(body), re.IGNORECASE,
+            mask(body), re.IGNORECASE,
         ):
             from .do_block import register_interpreted_plfn
 
             name = m.group("name").lower()
             register_interpreted_plfn(
-                engine, name, _split_params(m.group("params")),
+                engine, name, parse_params(m.group("params")),
                 ret, body,
                 kind="scalar" if scalar else "setof",
             )

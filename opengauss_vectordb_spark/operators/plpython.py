@@ -31,7 +31,8 @@ from __future__ import annotations
 import re
 import textwrap
 
-from .create_function import _map_type, _split_params
+from ..sqltext import close_paren, mask, split_top
+from .create_function import _map_type, parse_params
 from ._util import status_frame
 
 _CREATE_PYFN = re.compile(
@@ -70,24 +71,16 @@ _COERCE = {
 }
 
 
+_ANGLES_AS_PARENS = str.maketrans("<>", "()")
+
+
 def _struct_fields(ddl: str) -> list[tuple[str, str]]:
-    """'struct<a: int, b: string>' → [('a','int'), ('b','string')] —
-    depth-aware on nested <> and ()."""
+    """'struct<a: int, b: string>' → [('a','int'), ('b','string')].
+    A nested type's angle brackets scan as parens, and come back as
+    them: callers read only the leading type name."""
     inner = ddl[ddl.index("<") + 1:ddl.rindex(">")]
-    parts, cur, depth = [], [], 0
-    for ch in inner:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
     out = []
-    for p in parts:
+    for p in split_top(inner.translate(_ANGLES_AS_PARENS)):
         nm, ty = p.split(":", 1)
         out.append((nm.strip(), ty.strip()))
     return out
@@ -140,7 +133,7 @@ def compile_plpython(query: str, engine=None):
     for pat, why in _UNSUPPORTED:
         if pat.search(body):
             raise NotImplementedError(f"plpython: {why}")
-    params = _split_params(m.group("params"))
+    params = parse_params(m.group("params"))
     if not params:
         raise NotImplementedError(
             "plpython: zero-argument functions have no column to batch "
@@ -292,8 +285,6 @@ def rewrite_setof_calls(engine, query: str) -> str:
     low = query.lower()
     if not any(n in low for n in names):
         return query
-    from .plpgsql import _mask_strings
-
     comp = engine.plpython_setof_composite
     out = query
     for name in sorted(names):
@@ -302,21 +293,11 @@ def rewrite_setof_calls(engine, query: str) -> str:
                          re.IGNORECASE)
         pos = 0
         while True:
-            masked = _mask_strings(out)
+            masked = mask(out)
             mm = pat.search(masked, pos)
             if mm is None:
                 break
-            op = mm.end() - 1
-            depth = 0
-            cl = -1
-            for i in range(op, len(masked)):
-                if masked[i] == "(":
-                    depth += 1
-                elif masked[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        cl = i
-                        break
+            cl = close_paren(masked, mm.end() - 1)
             if cl < 0:
                 break
             call = out[mm.start():cl + 1]

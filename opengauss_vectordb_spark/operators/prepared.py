@@ -27,8 +27,9 @@ import re
 
 from pyspark.sql import DataFrame
 
-from ..functions.sql_compat import _mask_strings, _unmask_strings, translate
-from ._util import status_frame
+from ..functions.sql_compat import translate
+from ..sqltext import mask, split_top
+from ._util import status_frame, sub_outside_literals
 
 _PARAM = re.compile(r"\$(\d+)")
 
@@ -47,12 +48,11 @@ class PreparedStatements:
         name = name.lower()
         if name in self.stmts:
             raise ValueError(f"prepared statement {name!r} already exists")
-        masked, literals = _mask_strings(sql)
-        nums = sorted({int(n) for n in _PARAM.findall(masked)})
+        nums = sorted({int(n) for n in _PARAM.findall(mask(sql))})
         if nums and nums != list(range(1, len(nums) + 1)):
             raise ValueError(f"parameter numbers must be $1..$n, got {nums}")
-        rewritten = _PARAM.sub(lambda m: f":p{m.group(1)}", masked)
-        text = translate(_unmask_strings(rewritten, literals))
+        text = translate(sub_outside_literals(
+            _PARAM, lambda m: f":p{m.group(1)}", sql))
         self.stmts[name] = (text, len(nums))
         return len(nums)
 
@@ -105,14 +105,10 @@ def _parse_args(argtext: str | None) -> list:
     drives Spark's literal typing)."""
     if not argtext:
         return []
-    masked, literals = _mask_strings(argtext)
     out = []
-    for raw in masked.split(","):
-        raw = raw.strip()
+    for raw in split_top(argtext):
         m = _ARG_CAST.match(raw)
-        if m:
-            raw = m.group("lit").strip()
-        tok = _unmask_strings(raw, literals)
+        tok = m.group("lit").strip() if m else raw
         low = tok.lower()
         if low == "null":
             out.append(None)

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import re
 
-from .create_aggregate import _split_commas
+from ..sqltext import close_paren, mask, split_top, top_level
 
 
 RANGE_KINDS = {
@@ -355,18 +355,6 @@ _OP_RE = ("(?P<op>@>|<@|&&|-\\|-|<<|>>|&<|&>|<>|<=|>=|"
           "[+*=<>-])")
 
 
-def _find_close(masked: str, open_pos: int) -> int:
-    depth = 0
-    for i in range(open_pos, len(masked)):
-        if masked[i] == "(":
-            depth += 1
-        elif masked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    return -1
-
-
 def _range_columns(engine) -> dict[str, str]:
     """column name → range kind, unioned over managed tables (the
     engine's name-based dispatch rule, as rewrite_array_ops)."""
@@ -377,7 +365,7 @@ def _range_columns(engine) -> dict[str, str]:
 
 
 def _ctor_to_sql(engine, kind: str, args_text: str) -> str:
-    args = _split_commas(args_text)
+    args = split_top(args_text)
     if len(args) not in (2, 3):
         raise ValueError(
             f"{kind}: takes (lower, upper[, bounds]) — got "
@@ -399,7 +387,7 @@ def _match_atom(engine, text: str, masked: str, pos: int):
     None."""
     m = _CTOR.match(text, pos)
     if m:
-        cl = _find_close(masked, m.end() - 1)
+        cl = close_paren(masked, m.end() - 1)
         if cl < 0:
             return None
         kind = m.group("kind").lower()
@@ -446,7 +434,7 @@ def _operand_after(engine, text: str, masked: str, pos: int,
     rest = text[m.end():]
     if rest.lstrip().startswith("("):
         op_paren = m.end() + (len(rest) - len(rest.lstrip()))
-        cl = _find_close(masked, op_paren)
+        cl = close_paren(masked, op_paren)
         if cl < 0:
             return None
         return (cl + 1, text[m.start():cl + 1].strip(), False)
@@ -495,11 +483,9 @@ def _rewrite_text(engine, text: str) -> str:
     fragment.  Each outer iteration applies ONE rewrite (leftmost
     actionable construct) and rescans — bounded, since every rewrite
     removes a constructor/function/operator occurrence."""
-    from .plpgsql import _mask_strings
-
     out = text
     for _guard in range(300):
-        masked = _mask_strings(out)
+        masked = mask(out)
         rep_span = None  # (start, end, replacement)
 
         # 1) named range_* functions and accessors (leftmost
@@ -510,10 +496,10 @@ def _rewrite_text(engine, text: str) -> str:
             masked, re.IGNORECASE,
         ):
             fn = fm.group("fn").lower()
-            cl = _find_close(masked, fm.end() - 1)
+            cl = close_paren(masked, fm.end() - 1)
             if cl < 0:
                 continue
-            args = _split_commas(out[fm.end():cl])
+            args = split_top(out[fm.end():cl])
             if fn in _RANGE_FNS:
                 shape, builder = _RANGE_FNS[fn]
                 if len(args) != 2:
@@ -644,10 +630,8 @@ _AMBIGUOUS_OPS = ("+", "-", "*", "=", "<>", "<", ">", "<=", ">=")
 
 def _atom_kind(engine, text: str) -> str | None:
     """kind when the WHOLE (stripped) fragment is a range atom."""
-    from .plpgsql import _mask_strings
-
     t = text.strip()
-    am = _match_atom(engine, t, _mask_strings(t), 0)
+    am = _match_atom(engine, t, mask(t), 0)
     if am is not None and am[0] == len(t):
         return am[2]
     return None
@@ -703,7 +687,7 @@ def rewrite_range_ops(engine, query: str) -> str:
         rcols = (meta or {}).get("range_cols") or {}
         if rcols:
             parts = []
-            for clause in _split_commas(um.group("sets")):
+            for clause in split_top(um.group("sets")):
                 cm = re.match(r"^(?P<c>\w+)\s*=\s*(?P<v>.+)$",
                               clause.strip(), re.DOTALL)
                 if cm and cm.group("c").lower() in rcols:
@@ -742,34 +726,26 @@ def rewrite_range_ops(engine, query: str) -> str:
                 cols = [c.lower() for c in df_cols]
             rest = m.group("rest")
             tuples = []
-            from .plpgsql import _mask_strings
-
-            masked = _mask_strings(rest)
-            i = 0
-            while i < len(masked):
-                if masked[i] == "(":
-                    cl = _find_close(masked, i)
-                    if cl < 0:
-                        break
-                    vals = _split_commas(rest[i + 1:cl])
-                    for j, v in enumerate(vals):
-                        if j < len(cols) and cols[j] in rcols and \
-                                re.match(r"^'(?:[^']|'')*'$", v.strip()):
-                            inner = v.strip()[1:-1].replace("''", "'")
-                            vals[j] = parse_range_text(
-                                rcols[cols[j]], inner)
-                        else:
-                            vals[j] = _rewrite_text(engine, v)
-                    # SELECT, not VALUES: Spark's inline-table form
-                    # rejects the non-foldable constructor CASE /
-                    # raise_error expressions
-                    tuples.append("SELECT " + ", ".join(
-                        f"{v} AS {cols[j]}" if j < len(cols) else v
-                        for j, v in enumerate(vals)
-                    ))
-                    i = cl + 1
-                else:
-                    i += 1
+            for mp in top_level(rest, r"\("):
+                cl = close_paren(rest, mp.start())
+                if cl < 0:
+                    break
+                vals = split_top(rest[mp.start() + 1:cl])
+                for j, v in enumerate(vals):
+                    if j < len(cols) and cols[j] in rcols and \
+                            re.match(r"^'(?:[^']|'')*'$", v.strip()):
+                        inner = v.strip()[1:-1].replace("''", "'")
+                        vals[j] = parse_range_text(
+                            rcols[cols[j]], inner)
+                    else:
+                        vals[j] = _rewrite_text(engine, v)
+                # SELECT, not VALUES: Spark's inline-table form
+                # rejects the non-foldable constructor CASE /
+                # raise_error expressions
+                tuples.append("SELECT " + ", ".join(
+                    f"{v} AS {cols[j]}" if j < len(cols) else v
+                    for j, v in enumerate(vals)
+                ))
             head = re.sub(r"VALUES\s*$", "", m.group("head"),
                           flags=re.IGNORECASE)
             return head + " UNION ALL ".join(tuples)

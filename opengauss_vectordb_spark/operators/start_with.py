@@ -52,8 +52,7 @@ from __future__ import annotations
 
 import re
 
-from .merge import _split_top
-from .plpgsql import _mask_strings
+from ..sqltext import close_paren, mask, split_top, top_level
 
 _KW = re.compile(
     r"\b(FROM|WHERE|START\s+WITH|CONNECT\s+BY|ORDER\s+SIBLINGS\s+BY|"
@@ -69,23 +68,8 @@ _NUM_OFFSET = "10000000000000000000"
 
 def _scan_clauses(masked: str):
     """Depth-0 keyword positions over the masked text, in order."""
-    hits, depth = [], 0
-    i = 0
-    while i < len(masked):
-        ch = masked[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _KW.match(masked, i)
-            if m:
-                hits.append((m.start(), m.end(),
-                             re.sub(r"\s+", " ", m.group(1).upper())))
-                i = m.end()
-                continue
-        i += 1
-    return hits
+    return [(m.start(), m.end(), " ".join(m.group(1).upper().split()))
+            for m in top_level(masked, _KW)]
 
 
 def _dequalify(expr: str, alias: str | None) -> str:
@@ -101,7 +85,7 @@ def _qualify(expr: str, alias: str, cols: list[str]) -> str:
     """Prefix every bare base-column token in ``expr`` with
     ``alias.`` (skips already-qualified tokens, function calls, and
     string literals)."""
-    masked = _mask_strings(expr)
+    masked = mask(expr)
     colset = {c.lower() for c in cols}
     out, last = [], 0
     for m in re.finditer(r"[A-Za-z_][A-Za-z0-9_]*", masked):
@@ -124,24 +108,12 @@ def _qualify(expr: str, alias: str, cols: list[str]) -> str:
 def _extract_calls(text: str, fname: str):
     """Balanced-paren call sites of ``fname`` in ``text`` (masked scan):
     list of (start, end, [arg texts from the ORIGINAL string])."""
-    masked = _mask_strings(text)
+    masked = mask(text)
     sites = []
     for m in re.finditer(rf"\b{fname}\s*\(", masked, re.IGNORECASE):
-        depth, i = 1, m.end()
-        args, seg = [], m.end()
-        while i < len(masked) and depth:
-            ch = masked[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(text[seg:i])
-                    sites.append((m.start(), i + 1, args))
-            elif ch == "," and depth == 1:
-                args.append(text[seg:i])
-                seg = i + 1
-            i += 1
+        cl = close_paren(masked, m.end() - 1)
+        if cl != -1:
+            sites.append((m.start(), cl + 1, split_top(text[m.end():cl])))
     return sites
 
 
@@ -217,19 +189,10 @@ def _parse(query: str, masked: str) -> _Swcb | None:
         # relation the recursion walks.  Each level re-executes it —
         # the reference's CTE transform materializes the base once, so
         # push heavy filtering into the subquery.
-        cl = 0
-        depth = 0
-        for i, ch in enumerate(rel):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    cl = i
-                    break
+        cl = close_paren(rel, 0)
         am = re.fullmatch(r"\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*",
                           rel[cl + 1:], re.IGNORECASE)
-        if cl == 0 or not am:
+        if cl == -1 or not am:
             raise NotImplementedError(
                 "START WITH/CONNECT BY over this FROM shape — write "
                 "the WITH RECURSIVE form directly (parse_startwith.cpp "
@@ -266,7 +229,7 @@ def rewrite_start_with(engine, query: str) -> str:
     SELECT into WITH RECURSIVE; identity for every other statement."""
     if not _CONNECT_BY.search(query):
         return query
-    masked = _mask_strings(query)
+    masked = mask(query)
     if not _CONNECT_BY.search(masked):
         return query
     sw = _parse(query, masked)
@@ -288,9 +251,9 @@ def rewrite_start_with(engine, query: str) -> str:
     # --- connect-by conjuncts: PRIOR joins vs child-side filters -----
     joins: list[tuple[str, str]] = []  # (parent_expr, child_expr)
     filters: list[str] = []
-    for conj in _split_top(sw.connect_by, r"\bAND\b"):
+    for conj in split_top(sw.connect_by, r"\bAND\b"):
         conj = _dequalify(conj, sw.alias)
-        sides = _split_top(conj, r"(?<![<>!=])=(?!=)")
+        sides = split_top(conj, r"(?<![<>!=])=(?!=)")
         prior = re.compile(r"^\s*PRIOR\b(.*)$", re.IGNORECASE | re.S)
         if len(sides) == 2:
             lm, rm_ = prior.match(sides[0]), prior.match(sides[1])
@@ -305,7 +268,7 @@ def rewrite_start_with(engine, query: str) -> str:
             if rm_:
                 joins.append((rm_.group(1).strip(), sides[0].strip()))
                 continue
-        if re.search(r"\bPRIOR\b", _mask_strings(conj), re.IGNORECASE):
+        if re.search(r"\bPRIOR\b", mask(conj), re.IGNORECASE):
             raise NotImplementedError(
                 "non-equality PRIOR conjuncts are not supported — "
                 "write the WITH RECURSIVE form directly"
@@ -337,7 +300,7 @@ def rewrite_start_with(engine, query: str) -> str:
         key = _norm(_dequalify(args[0], sw.alias))
         if key not in roots:
             roots.append(key)
-    m_out = _mask_strings(outer_src)
+    m_out = mask(outer_src)
     want_isleaf = bool(re.search(r"\bconnect_by_isleaf\b", m_out,
                                  re.IGNORECASE))
     want_iscycle = bool(re.search(r"\bconnect_by_iscycle\b", m_out,
@@ -371,7 +334,7 @@ def rewrite_start_with(engine, query: str) -> str:
                 lambda mm: f"{parent}.{mm.group(1)}", g,
                 flags=re.IGNORECASE,
             )
-            if re.search(r"\bPRIOR\b", _mask_strings(g), re.IGNORECASE):
+            if re.search(r"\bPRIOR\b", mask(g), re.IGNORECASE):
                 raise NotImplementedError(
                     "PRIOR over a non-column expression in a filter "
                     "conjunct — write the WITH RECURSIVE form directly"
@@ -388,7 +351,7 @@ def rewrite_start_with(engine, query: str) -> str:
     # --- sibling sort-key encode --------------------------------------
     def sib_encode(alias: str) -> str:
         e = _dequalify(sw.siblings.strip(), sw.alias)
-        if len(_split_top(e, r",")) > 1 or re.fullmatch(
+        if len(split_top(e)) > 1 or re.fullmatch(
             r"\d+", re.sub(r"\b(?:ASC|NULLS\s+(?:FIRST|LAST))\b", "",
                            e, flags=re.IGNORECASE).strip()
         ):
@@ -507,7 +470,7 @@ def rewrite_start_with(engine, query: str) -> str:
 
     star = ", ".join(cols)
     items = []
-    for raw in _split_top(sw.items, r","):
+    for raw in split_top(sw.items):
         item = raw.strip()
         if item == "*" or re.fullmatch(
             rf"{re.escape(sw.alias or '')}\s*\.\s*\*", item
@@ -555,7 +518,7 @@ def rewrite_start_with(engine, query: str) -> str:
     if sw.tail:
         out.append(subst(sw.tail))
     if sw.siblings and not re.search(r"\bORDER\s+BY\b",
-                                     _mask_strings(sw.tail or ""),
+                                     mask(sw.tail or ""),
                                      re.IGNORECASE):
         out.append("ORDER BY __sw_ord")
     return "\n".join(out)

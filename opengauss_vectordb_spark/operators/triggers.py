@@ -36,6 +36,7 @@ import re
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..sqltext import split_top
 from ._util import status_frame
 
 _CREATE_TRIGGER = re.compile(
@@ -55,10 +56,6 @@ _DROP_TRIGGER = re.compile(
 _PROCS = {"moddatetime", "insert_username", "check_primary_key"}
 
 
-def _split_args(args: str) -> list[str]:
-    return [a.strip().strip("'\"") for a in args.split(",") if a.strip()]
-
-
 def try_handle_stmt(engine, stmt: str):
     m = _CREATE_TRIGGER.match(stmt)
     if m:
@@ -76,7 +73,7 @@ def try_handle_stmt(engine, stmt: str):
         name = m.group("name").lower()
         engine.triggers.setdefault(tbl, {})[name] = {
             "proc": proc,
-            "args": _split_args(m.group("args")),
+            "args": [a.strip("'\"") for a in split_top(m.group("args"))],
             "events": {e.strip().lower()
                        for e in m.group("events").upper().split("OR")},
         }

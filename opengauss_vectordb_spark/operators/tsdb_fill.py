@@ -39,7 +39,7 @@ from __future__ import annotations
 import re
 from datetime import datetime
 
-from .plpgsql import _mask_strings
+from ..sqltext import mask, split_top
 from .start_with import _extract_calls, _scan_clauses
 
 _UNIT_US = {
@@ -134,7 +134,7 @@ def _sub_first_last(query: str) -> str:
             hit = None
             for st, en, args in _extract_calls(query, fname):
                 if len(args) == 2 and re.search(
-                    r"\barray_agg\s*\(", _mask_strings(args[1]),
+                    r"\barray_agg\s*\(", mask(args[1]),
                     re.IGNORECASE,
                 ):
                     hit = (st, en, args)
@@ -154,16 +154,16 @@ def _sub_first_last(query: str) -> str:
 def rewrite_tsdb_fill(engine, query: str) -> str:
     """Engine.sql hook: tsdb time-bucket spellings; identity when the
     statement uses none of them."""
-    masked = _mask_strings(query)
+    masked = mask(query)
     if not re.search(r"\btime_window\s*\(|\btime_fill\s*\(|"
                      r"\bfill_last\s*\(|\bfill_first\s*\(|"
                      r"\b(first|last)\s*\(", masked, re.IGNORECASE):
         return query
     query = _sub_first_last(query)
-    has_fill = re.search(r"\btime_fill\s*\(", _mask_strings(query),
+    has_fill = re.search(r"\btime_fill\s*\(", mask(query),
                          re.IGNORECASE)
     if not has_fill:
-        if re.search(r"\bfill_(last|first)\s*\(", _mask_strings(query),
+        if re.search(r"\bfill_(last|first)\s*\(", mask(query),
                      re.IGNORECASE):
             raise ValueError(
                 "fill_last/fill_first can only be used in a time_fill "
@@ -178,7 +178,7 @@ def rewrite_tsdb_fill(engine, query: str) -> str:
         # time_fill call for the handler that owns the inner body —
         # the view path re-enters this rewrite with the body alone
         return _sub_time_window(query)
-    hits = _scan_clauses(_mask_strings(query))
+    hits = _scan_clauses(mask(query))
     seg = {kw: (s, e) for s, e, kw in hits}
     if "GROUP BY" not in seg:
         raise ValueError(
@@ -198,9 +198,7 @@ def rewrite_tsdb_fill(engine, query: str) -> str:
             "LOCF shape (tsstore_locf_gapfill)"
         )
 
-    from .merge import _split_top
-
-    items = [i.strip() for i in _split_top(items_txt, r",")]
+    items = split_top(items_txt)
     fill_item = None
     fill_alias = "time_fill"
     inner_items, outer_items = [], []
@@ -226,7 +224,7 @@ def rewrite_tsdb_fill(engine, query: str) -> str:
             if am:
                 fill_alias = am.group(1)
             if re.search(r"\btime_fill\s*\(",
-                         _mask_strings(" ".join(args)), re.IGNORECASE):
+                         mask(" ".join(args)), re.IGNORECASE):
                 raise ValueError(
                     "nested time_fill calls are not supported"
                 )

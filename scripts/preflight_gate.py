@@ -2,8 +2,11 @@
 """Pre-flight the driver's correctness gate locally: run the first 50
 ``queries()`` entries (the GATE_PRIORITY window) at sf0.01 against
 their DuckDB oracles, exactly as the driver's verify does — row-count
-plus exact value comparison on sorted tuples.  Run this BEFORE a round
-ends whenever the window rotated or gate-row code churned.
+plus exact value comparison on column-name-sorted, row-sorted values
+(``tests/oracle_harness.compare``, the parity test's comparison, which
+sorts rows by each cell's text so NULLs sort beside strings).  Run
+this BEFORE a round ends whenever the window rotated or gate-row code
+churned.
 
     python scripts/preflight_gate.py [--all] [names...]
 
@@ -15,16 +18,13 @@ from __future__ import annotations
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, ".")
 
 from opengauss_vectordb_spark.session import get_spark  # noqa: E402
+from tests.oracle_harness import compare  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 SF_DIR = "/root/testdata/sf0.01"
 
 
@@ -32,12 +32,6 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     check_all = "--all" in sys.argv
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
     qs, oracles = entry.queries(), entry.oracle_sql()
     names = (args or
              (list(qs) if check_all else list(qs)[:50]))
@@ -45,23 +39,20 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            s = sorted(map(tuple, qs[name](spark, SF_DIR).collect()))
+            df = qs[name](spark, SF_DIR)
             if name not in oracles:
-                print(f"ROWS {name}: {len(s)} (no oracle — rows-only)",
-                      flush=True)
+                print(f"ROWS {name}: {len(df.collect())} (no oracle — "
+                      "rows-only)", flush=True)
                 continue
-            d = sorted(map(tuple, con.execute(oracles[name]).fetchall()))
-            if s == d:
+            problems = compare(df, oracles[name], SF_DIR)
+            if not problems:
                 print(f"OK   {name}  ({time.time() - t0:.1f}s)",
                       flush=True)
             else:
                 fails.append(name)
-                print(f"FAIL {name}  rows {len(s)}/{len(d)}", flush=True)
-                for a, b in list(zip(s, d))[:3]:
-                    if a != b:
-                        print("   spark:", a)
-                        print("   duck: ", b)
-                        break
+                print(f"FAIL {name}", flush=True)
+                for p in problems[:4]:
+                    print("   ", p)
         except Exception as ex:  # noqa: BLE001 — report and continue
             fails.append(name)
             print(f"ERR  {name}: {type(ex).__name__}: {str(ex)[:160]}",

@@ -2042,6 +2042,33 @@ def test_dml_returning(spark, tmp_path):
     eng.sql("DROP TABLE rt")
 
 
+def test_update_set_splits_at_top_level_commas(spark, tmp_path):
+    """A comma inside a string literal does not split UPDATE's SET
+    list."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    eng.sql("CREATE TABLE pt (k bigint, s text, n bigint)")
+    eng.sql("INSERT INTO pt VALUES (1, 'a', 0), (2, 'b', 0)")
+    eng.sql("UPDATE pt SET s = 'x,y', n = length('p,q') WHERE k = 1")
+    rows = eng.sql("SELECT k, s, n FROM pt ORDER BY k").collect()
+    assert [tuple(r) for r in rows] == [(1, "x,y", 3), (2, "b", 0)]
+    eng.sql("DROP TABLE pt")
+
+
+def test_returning_splits_at_top_level_commas(spark, tmp_path):
+    """A comma inside a string literal does not split a RETURNING
+    list."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    eng.sql("CREATE TABLE pt (k bigint, s text)")
+    eng.sql("INSERT INTO pt VALUES (1, 'a'), (2, 'b')")
+    rows = eng.sql(
+        "UPDATE pt SET s = 'z' WHERE k = 2 RETURNING k, 'c,d' AS tag"
+    ).collect()
+    assert [(r.k, r.tag) for r in rows] == [(2, "c,d")]
+    eng.sql("DROP TABLE pt")
+
+
 def test_gin_index_staleness_rebuild(spark, tmp_path):
     """A gin index over a MANAGED table auto-rebuilds when the table's
     commit CSN moves (gininsert.cpp maintains entries per INSERT; the
