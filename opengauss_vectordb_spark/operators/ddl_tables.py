@@ -5,9 +5,9 @@ Reference: `optimizer/commands/createas.cpp` (557 LoC) —
 `ExecCreateTableAs` (:124) materializes a query into a new relation;
 `optimizer/commands/view.cpp` (846 LoC) — `DefineView` (:611) stores
 the view as a rewrite rule (views re-execute their definition; matviews
-snapshot it — we keep the same split); INSERT is the `ModifyTable` sink
-(`executor/nodeModifyTable.cpp`, already covered for MERGE/UPSERT by
-operators/merge.py).
+snapshot it — we keep the same split); INSERT, UPDATE and DELETE are the
+`ModifyTable` node (`executor/nodeModifyTable.cpp`), one clause split
+and one handler per verb (MERGE is operators/merge.py).
 
 Spark-first shape:
 
@@ -33,7 +33,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..sqltext import close_paren, split_top, top_level
-from ._util import status_frame
+from ._util import status_frame, sub_outside_literals
 
 
 def cast_to(df: DataFrame, fields) -> DataFrame:
@@ -88,6 +88,8 @@ class TableManager:
         # not cross a table-definition change, tcap_version.cpp's
         # "Restore point too old" / definition-changed errors)
         self._pending: dict[str, dict] = {}
+        # rows the last /*+ ignore_error */ INSERT filtered out (_write)
+        self.last_insert_skipped = 0
 
     # ------------------------------------------------ flashback hooks
 
@@ -955,98 +957,13 @@ def _parse_column_list(cols: str) -> list[tuple[str, str]]:
     return [(c["name"], c["type"]) for c in defs]
 
 
-_INSERT = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<name>\w+)\s+"
-    r"(?P<stmt>(?:SELECT|WITH|VALUES|TABLE)\b.+?)"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# INSERT INTO t (col, col, ...) <source> — the column-list form:
-# listed columns take the source values in order, unlisted columns
-# take NULL (DEFAULT expressions refuse at CREATE, so NULL IS the
-# default), the identity column its sequence value, generated
-# columns their computed value
-_INSERT_COLS = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<name>\w+)\s*"
-    r"\(\s*(?P<cols>\w+(?:\s*,\s*\w+)*)\s*\)\s+"
-    r"(?P<stmt>(?:SELECT|WITH|VALUES|TABLE)\b.+?)"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# INSERT ... ON DUPLICATE KEY UPDATE (gram.y's B-format upsert;
-# nodeModifyTable.cpp ON DUPLICATE KEY path; the reference refuses
-# RETURNING/WITH inside it — gram.y:22972 — and so does this)
-_INSERT_DUP = re.compile(
-    r"^\s*INSERT\s+INTO\s+(?P<name>\w+)\s+"
-    r"(?P<stmt>(?:SELECT|VALUES|TABLE)\b.+?)\s+"
-    r"ON\s+DUPLICATE\s+KEY\s+UPDATE\s+(?P<sets>.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# REPLACE INTO (the B-format row replacement — gram.y:9552
-# DUPLICATE_REPLACE): matched keys take the ENTIRE incoming row,
-# unmatched keys insert
-_REPLACE_INTO = re.compile(
-    r"^\s*REPLACE\s+INTO\s+(?P<name>\w+)\s+"
-    r"(?P<stmt>(?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# UPDATE t [alias] SET ... FROM src [alias] [WHERE ...] — the joined
-# UPDATE (gram.y:23328 UpdateStmt's from_clause)
-_UPDATE_FROM = re.compile(
-    r"^\s*UPDATE\s+(?P<name>\w+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
-    r"\s+SET\s+(?P<sets>.+?)\s+FROM\s+(?P<src>\w+)"
-    r"(?:\s+(?:AS\s+)?(?P<salias>\w+))?"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# DELETE FROM t [alias] USING src [alias] WHERE ... (gram.y:23218
-# DeleteStmt's using_clause)
-_DELETE_USING = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<name>\w+)(?:\s+(?:AS\s+)?(?P<talias>\w+))?"
-    r"\s+USING\s+(?P<src>\w+)(?:\s+(?:AS\s+)?(?P<salias>\w+))?"
-    r"\s+WHERE\s+(?P<where>.+?)"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
 _DROP_TABLE = re.compile(
     r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>\w+)\s*"
     r"(?P<purge>PURGE)?\s*;?\s*$",
     re.IGNORECASE,
 )
-_UPDATE = re.compile(
-    r"^\s*UPDATE\s+(?P<name>\w+)\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE = re.compile(
-    r"^\s*DELETE\s+FROM\s+(?P<name>\w+)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"(?:\s+RETURNING\s+(?P<ret>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 
-def _returning_frame(engine, rows_df, ret: str):
-    """RETURNING projection (nodeModifyTable.cpp's returningList),
-    MATERIALIZED before the copy-on-write swap — the lazy frame reads
-    the pre-rewrite path, which the swap replaces.  PG streams
-    RETURNING rows to the client the same way; the affected set is
-    WHERE-bounded, not table-sized."""
-    out = rows_df.selectExpr(*split_top(ret))
-    return engine.spark.createDataFrame(out.collect(), out.schema)
-
-
-def _split_set_clauses(sets: str) -> list[tuple[str, str]]:
-    """``col = expr, ...`` → [(col, expr)]."""
-    parsed = []
-    for clause in split_top(sets):
-        col, expr = clause.split("=", 1)
-        parsed.append((col.strip(), expr.strip()))
-    return parsed
 _CREATE_VIEW = re.compile(
     r"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?VIEW\s+(?P<name>\w+)\s+"
     r"AS\s+(?P<stmt>.+?)\s*;?\s*$",
@@ -1419,254 +1336,260 @@ def _try_select_into(engine, query: str) -> DataFrame | None:
     return status_frame(engine.spark, ("SELECT INTO", name, rows), "tag STRING, tbl STRING, rows BIGINT",)
 
 
-def _handle_update_from(engine, m: re.Match) -> DataFrame:
-    """UPDATE t SET ... FROM s WHERE ... (gram.y:23328's from_clause):
-    the joined UPDATE.  One inner join finds the hit rows, a
-    row_number over the target row id picks ONE source row per target
-    (PG takes an arbitrary one; the pick here is deterministic — the
-    lexicographically first source row), SET expressions evaluate in
-    the joined scope (both aliases visible), and the new values join
-    back by row id into a copy-on-write rewrite.  Scale: one shuffle
-    on the join condition + one id-keyed join — never a cartesian,
-    and the wide target rows are carried once."""
-    from pyspark.sql.window import Window
+# ------------------------------------------------------------ ModifyTable
+#
+# INSERT, UPDATE and DELETE on managed tables (executor/
+# nodeModifyTable.cpp).  As in gram.y's InsertStmt, UpdateStmt and
+# DeleteStmt, each verb is one statement with optional clauses: one
+# clause split reads them and one handler per verb runs them, so the
+# column-list, DEFAULT VALUES, upsert, REPLACE, FROM and USING
+# spellings get the same triggers, RETURNING, ignore_error, RLS,
+# generated-column and alias behaviour.
 
-    from .rls import check_privilege, role_predicate
+_DML_HEAD = re.compile(
+    r"\s*(?P<verb>INSERT|REPLACE|UPDATE|DELETE)"
+    # /*+ ignore_error */ (the B-format sql_ignore hint; regress
+    # ignore/ suite): rows the write-side validators would abort on
+    # (no matching partition, invalid enum label) FILTER instead, and
+    # the result frame reports the skipped count
+    r"(?P<hint>\s*/\*\+\s*ignore_error\s*\*/)?"
+    r"\s+(?:(?P<kw>INTO|FROM)\s+)?(?P<name>\w+)"
+    r"(?:\s+(?:AS\s+)?(?!(?:SET|FROM|WHERE|USING|RETURNING|DEFAULT"
+    r"|VALUES|SELECT|WITH|TABLE)\b)(?P<alias>\w+))?",
+    re.IGNORECASE,
+)
+# verb -> (the keyword before the target, the clause keywords in
+# grammar order)
+_DML_GRAMMAR = {
+    "INSERT": ("INTO", ("ON DUPLICATE KEY UPDATE", "RETURNING")),
+    "REPLACE": ("INTO", ("RETURNING",)),
+    "UPDATE": ("", ("SET", "FROM", "WHERE", "RETURNING")),
+    "DELETE": ("FROM", ("USING", "WHERE", "RETURNING")),
+}
 
+
+def _split_clauses(text: str, keys: tuple[str, ...]) -> dict[str, str]:
+    """``text`` cut at the top-level clause keywords ``keys`` (grammar
+    order) into {keyword: body}, the text before the first keyword
+    under ``""``.  A keyword opens its clause at its first top-level
+    occurrence after the previous clause's keyword and is body text
+    anywhere else (``IS DISTINCT FROM`` inside a WHERE)."""
+    pat = r"\b(" + "|".join(k.replace(" ", r"\s+") for k in keys) + r")\b"
+    parts, key, start, rank = {}, "", 0, -1
+    for m in top_level(text, pat):
+        r = keys.index(" ".join(m.group(1).upper().split()))
+        if r > rank:
+            parts[key] = text[start:m.start()].strip()
+            key, start, rank = keys[r], m.end(), r
+    parts[key] = text[start:].strip()
+    return parts
+
+
+def _modify_table(engine, query: str, m: re.Match) -> DataFrame | None:
+    """The one entry of INSERT/REPLACE/UPDATE/DELETE on a managed
+    table; None for any other target or an unknown shape."""
+    verb = m.group("verb").upper()
+    kw, keys = _DML_GRAMMAR[verb]
     name = m.group("name").lower()
-    check_privilege(engine, name, "update")
+    if ((m.group("kw") or "").upper() != kw
+            or name not in engine.managed_tables.tables):
+        return None
+    c = _split_clauses(query[m.end():].rstrip().removesuffix(";"), keys)
+    head = c.pop("")
+    alias = (m.group("alias") or name).lower()
+    ignore = m.group("hint") is not None
+    if verb in ("INSERT", "REPLACE"):
+        return _insert(engine, name, verb, head, c, ignore)
+    if head or (verb == "UPDATE" and "SET" not in c):
+        return None
+    if verb == "UPDATE":
+        return _update(engine, name, alias, c, ignore)
+    return _delete(engine, name, alias, c)
+
+
+def _returning_frame(engine, rows_df, ret: str):
+    """RETURNING projection (nodeModifyTable.cpp's returningList),
+    MATERIALIZED before the copy-on-write swap — the lazy frame reads
+    the pre-rewrite path, which the swap replaces.  PG streams
+    RETURNING rows to the client the same way; the affected set is
+    WHERE-bounded, not table-sized."""
+    out = rows_df.selectExpr(*split_top(ret))
+    return engine.spark.createDataFrame(out.collect(), out.schema)
+
+
+def _split_set_clauses(sets: str) -> list[tuple[str, str]]:
+    """``col = expr, ...`` → [(col, expr)]."""
+    parsed = []
+    for clause in split_top(sets):
+        col, expr = clause.split("=", 1)
+        parsed.append((col.strip(), expr.strip()))
+    return parsed
+
+
+def _source_table(engine, text: str):
+    """The one relation of UPDATE's FROM or DELETE's USING clause,
+    ``name [[AS] alias]``, read through the session catalog (engine
+    views and managed tables alike) → (frame, alias)."""
+    m = re.fullmatch(r"(\w+)(?:\s+(?:AS\s+)?(\w+))?", text, re.IGNORECASE)
+    if m is None:
+        raise NotImplementedError(
+            f"FROM/USING takes one table name and an optional alias,"
+            f" not {text!r}"
+        )
+    src = m.group(1).lower()
+    return engine.spark.table(src), (m.group(2) or src).lower()
+
+
+def _insert(engine, name: str, verb: str, head: str, c: dict,
+            ignore: bool) -> DataFrame | None:
+    """INSERT (gram.y InsertStmt) and REPLACE INTO: ``[(cols)]
+    source`` or ``DEFAULT VALUES``, then ON DUPLICATE KEY UPDATE, then
+    RETURNING.  Without a column list the source goes straight to
+    insert_into, cast by position.  A column list expands to the
+    insertable column order: listed columns take the source values,
+    unlisted ones their declared DEFAULT expression (NULL when none —
+    parse_utilcmd.cpp attribute defaults), the identity column its
+    sequence value unless listed, generated columns their computed
+    value.  DEFAULT VALUES is the empty column list over one row."""
+    from .rls import check_privilege
+    from .triggers import fire_insert_triggers
+
+    cols = None
+    if head.startswith("("):
+        close = close_paren(head, 0)
+        if close < 0 or not re.fullmatch(
+            r"\s*\w+(?:\s*,\s*\w+)*\s*", head[1:close]
+        ):
+            return None
+        cols = [x.strip().lower() for x in head[1:close].split(",")]
+        head = head[close + 1:].strip()
+    if cols is None and re.fullmatch(r"DEFAULT\s+VALUES", head,
+                                     re.IGNORECASE):
+        cols, head = [], None
+    elif not re.match(r"(?:SELECT|WITH|VALUES|TABLE)\b", head,
+                      re.IGNORECASE):
+        return None
+    check_privilege(engine, name, "insert")
     mt = engine.managed_tables
-    gen_cols = mt.tables[name].get("generated") or {}
-    sets = dict(_split_set_clauses(m.group("sets")))
-    bad = [c for c in sets if c in gen_cols]
-    if bad:
-        raise ValueError(
-            f"cannot update generated column(s) {bad} of {name!r}"
-        )
-    ta = (m.group("talias") or name).lower()
-    sa = (m.group("salias") or m.group("src")).lower()
-    t = mt.scan(name)
-    s = engine.spark.table(m.group("src").lower())
-    tid = "__t_rowid"
-    t2 = t.withColumn(tid, F.monotonically_increasing_id())
-    cond = (
-        F.expr(m.group("where")) if m.group("where") is not None
-        else F.lit(True)
-    )
-    # rewriteRlsPolicy.cpp injects policy quals into EVERY scan of a
-    # protected relation, including the target scan of joined DML —
-    # a restricted role may only modify rows its policy lets it see.
-    # Filter the hit-detection copy (the full t2 still feeds the
-    # rewrite so invisible rows survive unmodified).
-    rls_pred = role_predicate(engine, name)
-    t_hit = t2 if rls_pred is None else t2.filter(rls_pred)
-    joined = t_hit.alias(ta).join(s.alias(sa), cond, "inner")
-    skey = F.concat_ws(
-        "\x1f", *[F.col(f"{sa}.{c}").cast("string") for c in s.columns]
-    )
-    one = (
-        joined.withColumn(
-            "__rn",
-            F.row_number().over(Window.partitionBy(tid).orderBy(skey)),
-        )
-        .filter(F.col("__rn") == 1)
-    )
-    by_name = {f.name: f for f in t.schema.fields}
-    upd = one.select(
-        F.col(tid),
-        F.lit(True).alias("__hit"),
-        *[
-            F.expr(e).cast(by_name[c].dataType).alias(f"__set_{c}")
-            for c, e in sets.items()
-        ],
-    )
-    merged = t2.join(upd, tid, "left")
-    cols = []
-    for f in t.schema.fields:
-        if f.name in sets:
-            cols.append(
-                F.when(F.col("__hit"), F.col(f"__set_{f.name}"))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
+    src = (engine.spark.range(1).select() if head is None
+           else engine.sql(head))
+    if cols is not None:
+        meta = mt.tables[name]
+        generated = meta.get("generated") or {}
+        auto_col = meta.get("auto_col")
+        tfields = mt.read(name).schema.fields
+        missing = [x for x in cols
+                   if x not in {f.name.lower() for f in tfields}]
+        if missing:
+            raise KeyError(f"INSERT: column(s) {missing} do not exist")
+        bad = [x for x in cols if x in generated]
+        if bad:
+            raise ValueError(
+                f"cannot insert a non-DEFAULT value into generated "
+                f"column(s) {bad} of {name!r}"
             )
-        else:
-            cols.append(F.col(f.name))
-    flag = "__upd_hit"
-    out = merged.select(
-        *cols, F.coalesce(F.col("__hit"), F.lit(False)).alias(flag)
+        if len(set(cols)) != len(cols):
+            raise ValueError("INSERT: column list has duplicates")
+        if len(src.columns) != len(cols):
+            raise ValueError(
+                f"INSERT has {len(src.columns)} expression(s) for "
+                f"{len(cols)} column(s)"
+            )
+        renamed = src.toDF(*[f"__c_{x}" for x in cols])
+        defaults = meta.get("column_defaults") or {}
+        fields = [
+            f for f in tfields
+            if f.name not in generated
+            and (f.name != auto_col or auto_col in cols)
+        ]
+        src = cast_to(renamed.select(
+            *[F.col(f"__c_{f.name}") if f.name in cols
+              else F.expr(defaults[f.name]) if f.name in defaults
+              else F.lit(None) for f in fields]
+        ), fields)
+    ret = c.get("RETURNING")
+    if verb == "REPLACE" or "ON DUPLICATE KEY UPDATE" in c:
+        if ret:
+            # gram.y:22972 refuses RETURNING on the upsert
+            raise NotImplementedError(
+                f"{verb} ... RETURNING is not supported with ON "
+                "DUPLICATE KEY UPDATE or REPLACE"
+            )
+        return _upsert(engine, name, verb, src,
+                       c.get("ON DUPLICATE KEY UPDATE"))
+    captured = mt.insert_into(
+        name, src,
+        transform=lambda d: fire_insert_triggers(engine, name, d),
+        capture=bool(ret),
+        ignore_errors=ignore,
     )
-    for gcol, gexpr in gen_cols.items():
-        out = out.withColumn(
-            gcol,
-            F.when(F.col(flag), F.expr(gexpr))
-            .otherwise(F.col(gcol))
-            .cast(by_name[gcol].dataType),
-        )
-    returning = None
-    if m.group("ret"):
-        returning = _returning_frame(
-            engine, out.filter(F.col(flag)).drop(flag), m.group("ret")
-        )
-    hits = FlagCount(out, flag)
-    mt.rewrite(name, hits.frame.drop(flag))
-    n_hit = hits.value()
-    if returning is not None:
-        return returning
-    return status_frame(engine.spark, ("UPDATE", name, n_hit), "tag STRING, tbl STRING, rows BIGINT")
+    if ret:
+        # the inserted rows post-cast and post-trigger, as PG's
+        # INSERT RETURNING
+        return _returning_frame(engine, captured, ret)
+    if ignore:
+        return status_frame(engine.spark, ("INSERT", name, mt.last_insert_skipped), "tag STRING, tbl STRING, skipped BIGINT",)
+    return status_frame(engine.spark, ("INSERT", name), "tag STRING, tbl STRING")
 
 
-def _handle_delete_using(engine, m: re.Match) -> DataFrame:
-    """DELETE FROM t USING s WHERE ... (gram.y:23218's using_clause):
-    a LEFT SEMI join finds the doomed rows (RLS quals still apply to
-    the target scan), a row-id anti join keeps the complement — one
-    rewrite, no cartesian."""
-    from .rls import check_privilege, role_predicate
-
-    name = m.group("name").lower()
-    check_privilege(engine, name, "delete")
-    mt = engine.managed_tables
-    ta = (m.group("talias") or name).lower()
-    sa = (m.group("salias") or m.group("src")).lower()
-    t = mt.scan(name)
-    s = engine.spark.table(m.group("src").lower())
-    tid = "__t_rowid"
-    t2 = t.withColumn(tid, F.monotonically_increasing_id())
-    doomed = t2.alias(ta).join(
-        s.alias(sa), F.expr(m.group("where")), "leftsemi"
-    )
-    rls_pred = role_predicate(engine, name)
-    if rls_pred is not None:
-        doomed = doomed.filter(rls_pred)
-    returning = None
-    if m.group("ret"):
-        returning = _returning_frame(
-            engine, doomed.drop(tid), m.group("ret")
-        )
-    # the semi join yields each target row at most once, so the left
-    # join flags the doomed rows without duplicating any
-    flag = "__del_hit"
-    marked = FlagCount(
-        t2.join(doomed.select(tid, F.lit(True).alias(flag)), tid, "left"),
-        flag,
-    )
-    mt.rewrite(
-        name, marked.frame.filter(F.col(flag).isNull()).drop(flag, tid)
-    )
-    n_del = marked.value()
-    if returning is not None:
-        return returning
-    return status_frame(engine.spark, ("DELETE", name, n_del), "tag STRING, tbl STRING, rows BIGINT")
-
-
-def _handle_replace_into(engine, m: re.Match) -> DataFrame:
-    """REPLACE INTO (gram.y:9552 DUPLICATE_REPLACE — the B-format
-    row replacement): a matched PRIMARY KEY takes the ENTIRE incoming
-    row, an unmatched one inserts — the dedicated spelling of
-    ON DUPLICATE KEY UPDATE <every non-key column> = VALUES(...),
-    executed as the same full-outer merge."""
-    from .merge import merge_into
-    from .rls import check_privilege
-
-    name = m.group("name").lower()
-    check_privilege(engine, name, "insert")
-    check_privilege(engine, name, "update")
-    mt = engine.managed_tables
-    meta = mt.tables[name]
-    pk = meta.get("primary_key")
-    if not pk:
-        raise ValueError(
-            f"REPLACE INTO {name!r}: the table has no PRIMARY KEY to "
-            "match on"
-        )
-    if meta.get("generated") or meta.get("auto_col"):
-        raise NotImplementedError(
-            "REPLACE INTO a table with GENERATED/AUTO_INCREMENT "
-            "columns — rewrite as INSERT + UPDATE"
-        )
-    target = mt.read(name)
-    src = engine.sql(m.group("stmt"))
-    if len(src.columns) != len(target.columns):
-        raise ValueError(
-            f"REPLACE has {len(src.columns)} columns,"
-            f" table {name!r} takes {len(target.columns)}"
-        )
-    aligned = cast_to(src, target.schema.fields)
-    dup = (
-        aligned.groupBy(*pk).count().filter(F.col("count") > 1).limit(1)
-        .count()
-    )
-    if dup:
-        raise NotImplementedError(
-            "REPLACE INTO with duplicate keys INSIDE the incoming "
-            "rows: the reference applies them row-by-row — "
-            "pre-aggregate the source to one row per key first"
-        )
-    # matched rows take every incoming column (merge_into's default
-    # when when_matched_update is None: source wins)
-    merged = merge_into(target, aligned, on=list(pk))
-    mt.rewrite(name, merged)
-    return status_frame(engine.spark, ("REPLACE", name), "tag STRING, tbl STRING")
-
-
-def _handle_insert_dup_key(engine, m: re.Match) -> DataFrame:
+def _upsert(engine, name: str, verb: str, src: DataFrame,
+            sets: str | None) -> DataFrame:
     """INSERT ... ON DUPLICATE KEY UPDATE (the B-format upsert;
-    nodeModifyTable.cpp's upsert path — requires a key, gram.y:22972
-    refuses RETURNING/WITH inside it).  The recorded PRIMARY KEY is
-    the match key; ``VALUES(col)`` references the incoming row
-    (rewritten to the source side), bare target column names qualify
-    to the target; ``UPDATE NOTHING`` keeps matched rows untouched
-    (insert-only-if-new).  Executed as the one full-outer merge +
-    copy-on-write rewrite MERGE uses."""
+    nodeModifyTable.cpp's upsert path — requires a key) and REPLACE
+    INTO (gram.y:9552 DUPLICATE_REPLACE), which is the same statement
+    with every non-key column set to ``VALUES(col)`` (``sets`` None).
+    The recorded PRIMARY KEY is the match key; ``VALUES(col)``
+    references the incoming row (rewritten to the source side), bare
+    target column names qualify to the target; ``UPDATE NOTHING``
+    keeps matched rows untouched (insert-only-if-new).  Executed as
+    the one full-outer merge + copy-on-write rewrite MERGE uses."""
     from .merge import merge_into
     from .rls import check_privilege
 
-    name = m.group("name").lower()
-    check_privilege(engine, name, "insert")
     mt = engine.managed_tables
     meta = mt.tables[name]
     pk = meta.get("primary_key")
     if not pk:
         raise ValueError(
-            f"INSERT ... ON DUPLICATE KEY UPDATE on {name!r}: the "
-            "table has no PRIMARY KEY to match on"
+            f"{verb} INTO {name!r} ... ON DUPLICATE KEY: the table has no "
+            "PRIMARY KEY to match on"
         )
     if meta.get("generated") or meta.get("auto_col"):
         raise NotImplementedError(
-            "ON DUPLICATE KEY UPDATE on a table with GENERATED/"
+            f"{verb} INTO ... ON DUPLICATE KEY on a table with GENERATED/"
             "AUTO_INCREMENT columns — rewrite as INSERT + UPDATE"
         )
     target = mt.read(name)
-    src = engine.sql(m.group("stmt"))
     if len(src.columns) != len(target.columns):
         raise ValueError(
-            f"INSERT has {len(src.columns)} columns,"
+            f"{verb} has {len(src.columns)} columns,"
             f" table {name!r} takes {len(target.columns)}"
         )
     aligned = cast_to(src, target.schema.fields)
-    sets_text = m.group("sets").strip()
+    if sets is None:
+        sets = ", ".join(
+            f"{x} = VALUES({x})" for x in target.columns if x not in pk
+        )
     by_name = {f.name: f for f in target.schema.fields}
-    if sets_text.upper() == "NOTHING":
-        upd: dict = {}
-    else:
+    upd: dict = {}
+    if sets.strip().upper() != "NOTHING":
         # matched rows get rewritten: the upsert needs UPDATE
-        # privilege too (REPLACE INTO already checks both)
+        # privilege too
         check_privilege(engine, name, "update")
-        upd = {}
-        tcols = sorted(target.columns, key=len, reverse=True)
-        for col, expr in _split_set_clauses(sets_text):
-            expr = re.sub(
-                r"VALUES\s*\(\s*(\w+)\s*\)", r"s.\1", expr,
-                flags=re.IGNORECASE,
+        # VALUES(col) is the incoming row, a bare column the target
+        ref = re.compile(
+            r"VALUES\s*\(\s*(\w+)\s*\)|(?<![\w.'\"])("
+            + "|".join(map(re.escape, target.columns)) + r")(?![\w(])",
+            re.IGNORECASE,
+        )
+        for col, expr in _split_set_clauses(sets):
+            expr = sub_outside_literals(
+                ref, lambda m: f"s.{m[1]}" if m[1] else f"t.{m[2]}", expr
             )
-            for c in tcols:
-                expr = re.sub(
-                    rf"(?<![\w.'\"]){re.escape(c)}(?![\w(])",
-                    f"t.{c}", expr, flags=re.IGNORECASE,
-                )
             upd[col.lower()] = F.expr(expr).cast(
                 by_name[col.lower()].dataType
             )
-        bad = [c for c in upd if c in pk]
+        bad = [x for x in upd if x in pk]
         if bad:
             raise ValueError(
                 f"ON DUPLICATE KEY UPDATE may not modify key "
@@ -1682,7 +1605,7 @@ def _handle_insert_dup_key(engine, m: re.Match) -> DataFrame:
     )
     if dup:
         raise NotImplementedError(
-            "ON DUPLICATE KEY UPDATE with duplicate keys INSIDE the "
+            f"{verb} INTO ... ON DUPLICATE KEY with duplicate keys INSIDE the "
             "incoming rows: the reference applies them row-by-row — "
             "pre-aggregate the source to one row per key first"
         )
@@ -1691,7 +1614,179 @@ def _handle_insert_dup_key(engine, m: re.Match) -> DataFrame:
         when_not_matched_insert=True,
     )
     mt.rewrite(name, merged)
-    return status_frame(engine.spark, ("INSERT", name, "ON DUPLICATE KEY UPDATE"), "tag STRING, tbl STRING, mode STRING",)
+    return status_frame(engine.spark, (verb, name, "ON DUPLICATE KEY UPDATE"), "tag STRING, tbl STRING, mode STRING",)
+
+
+def _update(engine, name: str, alias: str, c: dict,
+            ignore: bool) -> DataFrame:
+    """UPDATE (gram.y UpdateStmt) as copy-on-write: one relation
+    rewrite, the columnar UPDATE shape (the reference's CStore UPDATE
+    is likewise delete+append).  The hit condition and the new values
+    come one of two ways:
+
+    * no FROM: over the target scan, so the rewrite is one projection,
+      CASE WHEN <where> THEN <expr> ELSE <col> END per SET column;
+    * FROM (gram.y:23328's from_clause): one inner join finds the hit
+      rows, a row_number over the target row id picks ONE source row
+      per target (PG takes an arbitrary one; the pick here is
+      deterministic — the lexicographically first source row), SET
+      expressions evaluate in the joined scope (both aliases
+      visible), and the new values join back by row id — one shuffle
+      on the join condition + one id-keyed join, never a cartesian.
+
+    Both then run the same tail: ignore_error narrowing, stored
+    generated columns, BEFORE UPDATE triggers, RETURNING and the
+    counted rewrite."""
+    from pyspark.sql.window import Window
+
+    from .rls import check_privilege, role_predicate
+    from .triggers import fire_update_triggers
+
+    check_privilege(engine, name, "update")
+    mt = engine.managed_tables
+    t = mt.scan(name)
+    by_name = {f.name: f for f in t.schema.fields}
+    gen_cols = mt.tables[name].get("generated") or {}
+    sets = dict(_split_set_clauses(c["SET"]))
+    bad = [x for x in sets if x in gen_cols]
+    if bad:
+        # nodeModifyTable.cpp: stored generated columns are
+        # engine-computed; direct SET is refused
+        raise ValueError(
+            f"cannot update generated column(s) {bad} of {name!r}"
+        )
+    cond = F.expr(c["WHERE"]) if "WHERE" in c else F.lit(True)
+    # rewriteRlsPolicy.cpp applies policy quals to UPDATE scans too: a
+    # restricted role may only modify rows it can see
+    rls_pred = role_predicate(engine, name)
+    if "FROM" not in c:
+        base = t.alias(alias)
+        hit = cond if rls_pred is None else cond & rls_pred
+        new = {x: F.expr(e).cast(by_name[x].dataType)
+               for x, e in sets.items()}
+    else:
+        src, sa = _source_table(engine, c["FROM"])
+        tid = "__t_rowid"
+        t2 = t.withColumn(tid, F.monotonically_increasing_id())
+        # the policy quals filter the hit-detection copy; the full t2
+        # feeds the rewrite, so invisible rows survive unmodified
+        t_hit = t2 if rls_pred is None else t2.filter(rls_pred)
+        skey = F.concat_ws(
+            "\x1f", *[F.col(f"{sa}.{x}").cast("string")
+                      for x in src.columns]
+        )
+        one = (
+            t_hit.alias(alias).join(src.alias(sa), cond, "inner")
+            .withColumn(
+                "__rn",
+                F.row_number().over(Window.partitionBy(tid).orderBy(skey)),
+            )
+            .filter(F.col("__rn") == 1)
+        )
+        upd = one.select(
+            F.col(tid),
+            F.lit(True).alias("__hit"),
+            *[F.expr(e).cast(by_name[x].dataType).alias(f"__set_{x}")
+              for x, e in sets.items()],
+        )
+        base = t2.join(upd, tid, "left")
+        hit = F.coalesce(F.col("__hit"), F.lit(False))
+        new = {x: F.col(f"__set_{x}") for x in sets}
+    if ignore:
+        # UPDATE /*+ ignore_error */ (sql_ignore): rows whose NEW enum
+        # value would abort keep their OLD values — the hit condition
+        # narrows to valid rows, the skipped count is the difference
+        # (one more count, hint path only)
+        n_want = base.filter(hit).count()
+        enum_cols = mt.tables[name].get("enum_cols") or {}
+        for x, v in new.items():
+            if x in enum_cols:
+                labels = engine.user_types[enum_cols[x]]["labels"]
+                hit = hit & (v.isNull() | v.cast("string").isin(labels))
+    # the hit flag is computed in the SAME projection as the new
+    # values, over OLD values — re-evaluating the WHERE on the updated
+    # frame would see NEW values ("SET v = v + 1 WHERE v = 10" must
+    # still hit), for triggers and RETURNING alike
+    flag = "__upd_hit"
+    out = base.select(
+        *[F.when(hit, new[f.name]).otherwise(F.col(f.name)).alias(f.name)
+          if f.name in new else F.col(f.name) for f in t.schema.fields],
+        hit.alias(flag),
+    )
+    # ExecComputeStoredGenerated: recompute stored generated columns
+    # from the post-SET tuple on the hit rows
+    for gcol, gexpr in gen_cols.items():
+        out = out.withColumn(
+            gcol,
+            F.when(F.col(flag), F.expr(gexpr))
+            .otherwise(F.col(gcol))
+            .cast(by_name[gcol].dataType),
+        )
+    out = fire_update_triggers(
+        engine, name, out, F.col(flag), set_cols=set(sets), schema=by_name,
+    )
+    returning = None
+    if "RETURNING" in c:
+        # NEW row values of the hit rows, as PG's UPDATE RETURNING
+        returning = _returning_frame(
+            engine, out.filter(F.col(flag)).drop(flag), c["RETURNING"]
+        )
+    hits = FlagCount(out, flag)
+    mt.rewrite(name, hits.frame.drop(flag))
+    n_hit = hits.value()
+    if returning is not None:
+        return returning
+    if ignore:
+        return status_frame(engine.spark, ("UPDATE", name, n_hit, n_want - n_hit), "tag STRING, tbl STRING, rows BIGINT, skipped BIGINT",)
+    return status_frame(engine.spark, ("UPDATE", name, n_hit), "tag STRING, tbl STRING, rows BIGINT")
+
+
+def _delete(engine, name: str, alias: str, c: dict) -> DataFrame:
+    """DELETE (gram.y DeleteStmt): keep the complement, rewrite — at
+    scale this touches only files whose rowgroup stats can contain
+    matches (Spark prunes the scan on the predicate).  Without USING
+    the flag is one projection over the target scan; with USING
+    (gram.y:23218's using_clause) a LEFT SEMI join finds the doomed
+    rows and a row-id left join flags them — one rewrite, no
+    cartesian."""
+    from .rls import check_privilege, role_predicate
+
+    check_privilege(engine, name, "delete")
+    mt = engine.managed_tables
+    t = mt.scan(name)
+    cond = F.expr(c["WHERE"]) if "WHERE" in c else F.lit(True)
+    # policy quals apply to DELETE scans as well: a restricted role
+    # may only delete rows its policies expose
+    rls_pred = role_predicate(engine, name)
+    flag = "__del_hit"
+    if "USING" not in c:
+        hit = cond if rls_pred is None else cond & rls_pred
+        out = t.alias(alias).select("*", hit.alias(flag))
+    else:
+        src, sa = _source_table(engine, c["USING"])
+        tid = "__t_rowid"
+        t2 = t.withColumn(tid, F.monotonically_increasing_id())
+        doomed = t2.alias(alias).join(src.alias(sa), cond, "leftsemi")
+        if rls_pred is not None:
+            doomed = doomed.filter(rls_pred)
+        # the semi join yields each target row at most once, so the
+        # left join flags the doomed rows without duplicating any
+        out = t2.join(
+            doomed.select(tid, F.lit(True).alias(flag)), tid, "left"
+        ).drop(tid)
+    returning = None
+    if "RETURNING" in c:
+        # OLD row values, as PG's DELETE RETURNING
+        returning = _returning_frame(
+            engine, out.filter(F.col(flag)).drop(flag), c["RETURNING"]
+        )
+    marked = FlagCount(out, flag)
+    fc = F.col(flag)
+    mt.rewrite(name, marked.frame.filter(~fc | fc.isNull()).drop(flag))
+    n_del = marked.value()
+    if returning is not None:
+        return returning
+    return status_frame(engine.spark, ("DELETE", name, n_del), "tag STRING, tbl STRING, rows BIGINT")
 
 
 _CREATE_LIKE = re.compile(
@@ -1748,17 +1843,9 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
     handled = _handle_comment(engine, query)
     if handled is not None:
         return handled
-    # /*+ ignore_error */ (the B-format sql_ignore hint; regress
-    # ignore/ suite): rows the write-side validators would abort on
-    # (no matching partition, invalid enum label) FILTER instead,
-    # and the result frame reports the skipped count — the
-    # skip-bad-rows ingest mode every bulk load wants
-    ignore_hint = False
-    if re.match(r"^\s*(?:INSERT|UPDATE)\s+/\*\+\s*ignore_error\s*\*/",
-                query, re.IGNORECASE):
-        ignore_hint = True
-        query = re.sub(r"/\*\+\s*ignore_error\s*\*/\s*", "", query,
-                       count=1)
+    m = _DML_HEAD.match(query)
+    if m:
+        return _modify_table(engine, query, m)
     # ALTER TABLE IF EXISTS t ... (tablecmds.cpp AlterTableStmt
     # missing_ok): a missing relation is a no-op notice, an existing
     # one proceeds through the plain ALTER handlers
@@ -1942,255 +2029,6 @@ def try_handle_stmt(engine, query: str) -> DataFrame | None:
                 m.group("name").lower()
             ]["temp"] = True
         return status_frame(engine.spark, ("CREATE TABLE AS", m.group("name").lower(), n), "tag STRING, tbl STRING, rows BIGINT",)
-    m = _INSERT_DUP.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        return _handle_insert_dup_key(engine, m)
-    m = re.match(
-        r"^\s*INSERT\s+INTO\s+(?P<name>\w+)\s+DEFAULT\s+VALUES"
-        r"\s*;?\s*$",
-        query, re.IGNORECASE,
-    )
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        # INSERT ... DEFAULT VALUES: one row of defaults — declared
-        # DEFAULT expressions where present, NULL otherwise; identity
-        # assigned, generated computed (NULL-propagating)
-        from .rls import check_privilege
-
-        name = m.group("name").lower()
-        check_privilege(engine, name, "insert")
-        mt = engine.managed_tables
-        meta = mt.tables[name]
-        generated = meta.get("generated") or {}
-        auto_col = meta.get("auto_col")
-        defaults = meta.get("column_defaults") or {}
-        fields = [
-            f for f in mt.read(name).schema.fields
-            if f.name not in generated and f.name != auto_col
-        ]
-        one = cast_to(engine.spark.range(1).select(
-            *[F.expr(defaults[f.name]) if f.name in defaults
-              else F.lit(None) for f in fields]
-        ), fields)
-        mt.insert_into(name, one)
-        return status_frame(engine.spark, ("INSERT", name), "tag STRING, tbl STRING")
-    m = _INSERT_COLS.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        from .rls import check_privilege
-        from .triggers import fire_insert_triggers
-
-        name = m.group("name").lower()
-        check_privilege(engine, name, "insert")
-        mt = engine.managed_tables
-        meta = mt.tables[name]
-        generated = meta.get("generated") or {}
-        auto_col = meta.get("auto_col")
-        target = mt.read(name)
-        listed = [c.strip().lower() for c in m.group("cols").split(",")]
-        known = {f.name.lower() for f in target.schema.fields}
-        missing = [c for c in listed if c not in known]
-        if missing:
-            raise KeyError(f"INSERT: column(s) {missing} do not exist")
-        bad = [c for c in listed if c in generated]
-        if bad:
-            raise ValueError(
-                f"cannot insert a non-DEFAULT value into generated "
-                f"column(s) {bad} of {name!r}"
-            )
-        if len(set(listed)) != len(listed):
-            raise ValueError("INSERT: column list has duplicates")
-        src = engine.sql(m.group("stmt"))
-        if len(src.columns) != len(listed):
-            raise ValueError(
-                f"INSERT has {len(src.columns)} expression(s) for "
-                f"{len(listed)} column(s)"
-            )
-        renamed = src.toDF(*[f"__c_{c}" for c in listed])
-        # expand to the full insertable column order: listed columns
-        # take the source values, unlisted take their declared
-        # DEFAULT expression (NULL when none — parse_utilcmd.cpp
-        # attribute defaults), the identity column is omitted so
-        # insert_into assigns the sequence
-        defaults = meta.get("column_defaults") or {}
-        fields = [
-            f for f in target.schema.fields
-            if f.name not in generated
-            and (f.name != auto_col or auto_col in listed)
-        ]
-        expanded = cast_to(renamed.select(
-            *[F.col(f"__c_{f.name}") if f.name in listed
-              else F.expr(defaults[f.name]) if f.name in defaults
-              else F.lit(None) for f in fields]
-        ), fields)
-        captured = mt.insert_into(
-            name, expanded,
-            transform=lambda d: fire_insert_triggers(engine, name, d),
-            capture=bool(m.group("ret")),
-        )
-        if m.group("ret"):
-            return _returning_frame(engine, captured, m.group("ret"))
-        return status_frame(engine.spark, ("INSERT", name), "tag STRING, tbl STRING")
-    m = _REPLACE_INTO.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        return _handle_replace_into(engine, m)
-    m = _INSERT.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        from .rls import check_privilege
-        from .triggers import fire_insert_triggers
-
-        name = m.group("name")
-        check_privilege(engine, name, "insert")
-        captured = engine.managed_tables.insert_into(
-            name, engine.sql(m.group("stmt")),
-            transform=lambda d: fire_insert_triggers(engine, name, d),
-            capture=bool(m.group("ret")),
-            ignore_errors=ignore_hint,
-        )
-        if m.group("ret"):
-            # the inserted rows post-cast and post-trigger, as PG's
-            # INSERT RETURNING
-            return _returning_frame(engine, captured, m.group("ret"))
-        if ignore_hint:
-            return status_frame(engine.spark, ("INSERT", m.group("name").lower(),
-                  int(getattr(engine.managed_tables,
-                              "last_insert_skipped", 0))), "tag STRING, tbl STRING, skipped BIGINT",)
-        return status_frame(engine.spark, ("INSERT", m.group("name").lower()), "tag STRING, tbl STRING")
-    m = _UPDATE_FROM.match(query)
-    if (
-        m
-        and m.group("name").lower() in engine.managed_tables.tables
-        # the matched FROM is top-level only when SET's text balances
-        and close_paren(f"({m.group('sets')})", 0)
-        == len(m.group("sets")) + 1
-    ):
-        return _handle_update_from(engine, m)
-    m = _DELETE_USING.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        return _handle_delete_using(engine, m)
-    m = _UPDATE.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        # ModifyTable UPDATE (nodeModifyTable.cpp) as copy-on-write:
-        # CASE WHEN <where> THEN <expr> ELSE <col> END per SET clause,
-        # one relation rewrite — the columnar UPDATE shape (the
-        # reference's CStore UPDATE is likewise delete+append)
-        from .rls import check_privilege, role_predicate
-        from .triggers import fire_update_triggers
-
-        name = m.group("name").lower()
-        check_privilege(engine, name, "update")
-        df = engine.managed_tables.scan(name)
-        where = m.group("where") or "TRUE"
-        cond = F.expr(where)
-        # rewriteRlsPolicy.cpp applies policy quals to UPDATE scans
-        # too: a restricted role may only modify rows it can see
-        rls_pred = role_predicate(engine, name)
-        if rls_pred is not None:
-            cond = cond & rls_pred
-        sets = dict(_split_set_clauses(m.group("sets")))
-        if ignore_hint:
-            # UPDATE /*+ ignore_error */ (sql_ignore): rows whose NEW
-            # enum value would abort keep their OLD values — the hit
-            # condition narrows to valid rows, the skipped count is
-            # the difference (one more count, hint path only)
-            enum_cols = (engine.managed_tables.tables[name]
-                         .get("enum_cols") or {})
-            n_want = df.filter(cond).count()
-            for c, texpr in sets.items():
-                tname = enum_cols.get(c)
-                if not tname:
-                    continue
-                labels = engine.user_types[tname]["labels"]
-                arr = ("array(" + ", ".join(f"'{v}'" for v in labels)
-                       + ")")
-                cond = cond & F.expr(
-                    f"(({texpr}) IS NULL OR array_contains({arr},"
-                    f" CAST(({texpr}) AS STRING)))"
-                )
-        by_name = {f.name: f for f in df.schema.fields}
-        gen_cols = engine.managed_tables.tables[name].get("generated") or {}
-        bad = [c for c in sets if c in gen_cols]
-        if bad:
-            # nodeModifyTable.cpp: stored generated columns are
-            # engine-computed; direct SET is refused
-            raise ValueError(
-                f"cannot update generated column(s) {bad} of {name!r}"
-            )
-        cols = []
-        for f in df.schema.fields:
-            if f.name in sets:
-                cols.append(
-                    F.when(cond, F.expr(sets[f.name]).cast(f.dataType))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                cols.append(F.col(f.name))
-        # the hit flag is computed in the SAME projection as the SET
-        # CASEs, over OLD values — re-evaluating the WHERE on the
-        # updated frame would see NEW values ("SET v = v + 1 WHERE
-        # v = 10" must still hit), for triggers and RETURNING alike
-        flag = "__upd_hit"
-        updated_f = df.select(*cols, cond.alias(flag))
-        # ExecComputeStoredGenerated: recompute stored generated
-        # columns from the post-SET tuple on the hit rows
-        for gcol, gexpr in gen_cols.items():
-            updated_f = updated_f.withColumn(
-                gcol,
-                F.when(F.col(flag), F.expr(gexpr))
-                .otherwise(F.col(gcol))
-                .cast(by_name[gcol].dataType),
-            )
-        updated_f = fire_update_triggers(
-            engine, name, updated_f, F.col(flag),
-            set_cols=set(sets), schema=by_name,
-        )
-        returning = None
-        if m.group("ret"):
-            # NEW row values of the hit rows, as PG's UPDATE RETURNING
-            returning = _returning_frame(
-                engine, updated_f.filter(F.col(flag)).drop(flag),
-                m.group("ret"),
-            )
-        hits = FlagCount(updated_f, flag)
-        engine.managed_tables.rewrite(name, hits.frame.drop(flag))
-        n_hit = hits.value()
-        if returning is not None:
-            return returning
-        if ignore_hint:
-            return status_frame(engine.spark, ("UPDATE", name, n_hit, n_want - n_hit), "tag STRING, tbl STRING, rows BIGINT, skipped BIGINT",)
-        return status_frame(engine.spark, ("UPDATE", name, n_hit), "tag STRING, tbl STRING, rows BIGINT")
-    m = _DELETE.match(query)
-    if m and m.group("name").lower() in engine.managed_tables.tables:
-        # ModifyTable DELETE: keep the complement, rewrite — at scale
-        # this touches only files whose rowgroup stats can contain
-        # matches (Spark prunes the scan on the predicate)
-        from .rls import check_privilege, role_predicate
-
-        name = m.group("name").lower()
-        check_privilege(engine, name, "delete")
-        df = engine.managed_tables.scan(name)
-        where = m.group("where")
-        # policy quals apply to DELETE scans as well: a restricted role
-        # may only delete rows its policies expose
-        rls_pred = role_predicate(engine, name)
-        cond = F.expr(where) if where is not None else F.lit(True)
-        if rls_pred is not None:
-            cond = cond & rls_pred
-        returning = None
-        if m.group("ret"):
-            # OLD row values, as PG's DELETE RETURNING
-            returning = _returning_frame(
-                engine, df.filter(cond), m.group("ret")
-            )
-        flag = "__del_hit"
-        doomed = FlagCount(df.select("*", cond.alias(flag)), flag)
-        fc = F.col(flag)
-        engine.managed_tables.rewrite(
-            name, doomed.frame.filter(~fc | fc.isNull()).drop(flag)
-        )
-        n_del = doomed.value()
-        if returning is not None:
-            return returning
-        return status_frame(engine.spark, ("DELETE", name, n_del), "tag STRING, tbl STRING, rows BIGINT")
     m = _DROP_TABLE.match(query)
     if m and (
         m.group("name").lower() in engine.managed_tables.tables

@@ -290,7 +290,8 @@ _MERGE_RE = _re.compile(
     r"\s+(?P<clauses>WHEN\s+.+?)\s*;?\s*$",
     _re.IGNORECASE | _re.DOTALL,
 )
-_WHEN_SPLIT = _re.compile(r"\bWHEN\s+", _re.IGNORECASE)
+# a clause starts at WHEN [NOT] MATCHED, not at the WHEN of a CASE
+_WHEN_CLAUSE = _re.compile(r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)", _re.IGNORECASE)
 _M_UPDATE = _re.compile(
     r"^MATCHED\s*(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+UPDATE\s+SET\s+"
     r"(?P<sets>.+)$",
@@ -363,7 +364,7 @@ def try_handle_stmt(engine, query: str):
     if src_text.startswith("("):
         source = engine.sql(src_text[1:-1])
     else:
-        source = engine.table(src_text.lower())
+        source = engine.spark.table(src_text.lower())
     talias = (m.group("talias") or m.group("target")).lower()
     salias = (m.group("salias") or
               (src_text if not src_text.startswith("(") else "s")).lower()
@@ -401,7 +402,7 @@ def try_handle_stmt(engine, query: str):
     insert_values: dict[str, Column] | None = None
     update_pos: int | None = None
     delete_pos: int | None = None
-    for pos, clause in enumerate(split_top(m.group("clauses"), r"\bWHEN\b")):
+    for pos, clause in enumerate(split_top(m.group("clauses"), _WHEN_CLAUSE)):
         cm = _M_UPDATE.match(clause)
         if cm:
             if update_sets is not None:

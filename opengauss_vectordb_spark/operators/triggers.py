@@ -1,6 +1,6 @@
 """Row triggers on managed tables — the contrib/spi trigger family
-(CREATE TRIGGER, commands/trigger.cpp) re-expressed as INSERT-pipeline
-column transforms.
+(CREATE TRIGGER, commands/trigger.cpp) re-expressed as column
+transforms on the INSERT and UPDATE pipelines.
 
 The reference ships three canonical SPI trigger procedures:
   * moddatetime(col)      — stamp a timestamp column on insert/update
@@ -19,11 +19,13 @@ codegen'd literal projection, and the FK check is one anti-join against
 the referenced key column (broadcast when small, shuffle otherwise —
 AQE decides), instead of the reference's per-row SPI probe.
 
-Triggers fire in name order (PG's documented multi-trigger order) on
-the SQL INSERT INTO path.  UPDATE-path stamping goes through MERGE,
-which materializes a new version through the same managed-table writer;
-only the INSERT event is routed here (the reference's moddatetime is
-most commonly BEFORE UPDATE — the transform is identical).
+Triggers fire in name order (PG's documented multi-trigger order).
+Every INSERT form (VALUES, SELECT, a column list, DEFAULT VALUES)
+fires the BEFORE INSERT ones through ``fire_insert_triggers`` on the
+cast batch; both UPDATE forms (plain and FROM) fire the BEFORE UPDATE
+ones through ``fire_update_triggers``, which stamps only the hit rows
+and checks only the fk columns the SET list touched.  MERGE, ON
+DUPLICATE KEY UPDATE and REPLACE INTO fire none.
 
 Determinism knobs: ``engine.trigger_clock`` (None → current_timestamp)
 and ``engine.session_user`` (None → sparkContext.sparkUser()).

@@ -4911,3 +4911,159 @@ def test_similar_to_dow_and_small_macros(spark):
     assert one("SELECT quote_nullable('x')") == "'x'"
     assert one("SELECT getdate()") is not None
     assert one("SELECT localtimestamp") is not None
+
+
+def _mtp_rows(eng, q):
+    return sorted(tuple(r) for r in eng.sql(q).collect())
+
+
+def _mtp_update_literal_where(eng):
+    eng.sql("CREATE TABLE mtp_a (k INT, s STRING)")
+    eng.sql("INSERT INTO mtp_a VALUES (1, 'x'), (2, 'y')")
+    r = eng.sql("UPDATE mtp_a SET s = 'a WHERE b' WHERE k = 1").collect()
+    assert r[0].rows == 1
+    assert _mtp_rows(eng, "SELECT k, s FROM mtp_a") \
+        == [(1, "a WHERE b"), (2, "y")]
+
+
+def _mtp_delete_literal_returning(eng):
+    eng.sql("CREATE TABLE mtp_b AS SELECT 1 AS k, 'x RETURNING y' AS s"
+            " UNION ALL SELECT 2, 'z'")
+    r = eng.sql("DELETE FROM mtp_b WHERE s = 'x RETURNING y'").collect()
+    assert r[0].rows == 1
+    assert _mtp_rows(eng, "SELECT k, s FROM mtp_b") == [(2, "z")]
+
+
+def _mtp_insert_literal_returning(eng):
+    eng.sql("CREATE TABLE mtp_c (k INT, s STRING)")
+    eng.sql("INSERT INTO mtp_c VALUES (3, 'p RETURNING q')")
+    assert _mtp_rows(eng, "SELECT k, s FROM mtp_c") \
+        == [(3, "p RETURNING q")]
+
+
+def _mtp_delete_using_literal(eng):
+    eng.sql("CREATE TABLE mtp_d AS SELECT 1 AS k UNION ALL SELECT 2")
+    eng.sql("CREATE TABLE mtp_ds AS SELECT 2 AS k")
+    r = eng.sql("DELETE FROM mtp_d USING mtp_ds s WHERE mtp_d.k = s.k"
+                " AND 'x RETURNING y' <> ''").collect()
+    assert r[0].rows == 1
+    assert _mtp_rows(eng, "SELECT k FROM mtp_d") == [(1,)]
+
+
+def _mtp_update_from_fires_trigger(eng):
+    eng.sql("CREATE TABLE mtp_e (k INT, v INT, ts TIMESTAMP)")
+    eng.sql("INSERT INTO mtp_e VALUES (1, 10, NULL), (2, 20, NULL)")
+    eng.sql("CREATE TABLE mtp_es AS SELECT 2 AS k, 99 AS nv")
+    eng.sql("CREATE TRIGGER mtp_stamp BEFORE UPDATE ON mtp_e"
+            " FOR EACH ROW EXECUTE PROCEDURE moddatetime(ts)")
+    eng.trigger_clock = "2024-01-15 10:30:00"
+    eng.sql("UPDATE mtp_e SET v = s.nv FROM mtp_es s WHERE mtp_e.k = s.k")
+    got = _mtp_rows(eng, "SELECT k, v, CAST(ts AS STRING) FROM mtp_e")
+    assert got == [(1, 10, None), (2, 99, "2024-01-15 10:30:00")]
+
+
+def _mtp_insert_column_list_ignore_error(eng):
+    eng.sql("CREATE TYPE mtp_mood AS ENUM ('sad', 'ok')")
+    eng.sql("CREATE TABLE mtp_f (k INT, m mtp_mood)")
+    r = eng.sql("INSERT /*+ ignore_error */ INTO mtp_f (k, m)"
+                " VALUES (3, 'ok'), (4, 'angry')").collect()[0]
+    assert r.skipped == 1
+    assert _mtp_rows(eng, "SELECT k, m FROM mtp_f") == [(3, "ok")]
+
+
+def _mtp_update_from_ignore_error(eng):
+    eng.sql("CREATE TYPE mtp_mood2 AS ENUM ('sad', 'ok')")
+    eng.sql("CREATE TABLE mtp_g (k INT, m mtp_mood2)")
+    eng.sql("INSERT INTO mtp_g VALUES (1, 'sad'), (2, 'sad')")
+    eng.sql("CREATE TABLE mtp_gs AS SELECT 1 AS k, 'ok' AS nm"
+            " UNION ALL SELECT 2, 'angry'")
+    r = eng.sql("UPDATE /*+ ignore_error */ mtp_g SET m = s.nm"
+                " FROM mtp_gs s WHERE mtp_g.k = s.k").collect()[0]
+    assert (r.rows, r.skipped) == (1, 1)
+    assert _mtp_rows(eng, "SELECT k, m FROM mtp_g") \
+        == [(1, "ok"), (2, "sad")]
+
+
+def _mtp_update_alias(eng):
+    eng.sql("CREATE TABLE mtp_h AS SELECT 1 AS k, 0 AS v"
+            " UNION ALL SELECT 2, 0")
+    r = eng.sql("UPDATE mtp_h AS t SET v = 7 WHERE t.k = 1").collect()
+    assert r[0].rows == 1
+    assert _mtp_rows(eng, "SELECT k, v FROM mtp_h") == [(1, 7), (2, 0)]
+
+
+def _mtp_default_values_fires_trigger(eng):
+    eng.sql("CREATE TABLE mtp_i (k INT, ts TIMESTAMP)")
+    eng.sql("CREATE TRIGGER mtp_istamp BEFORE INSERT ON mtp_i"
+            " FOR EACH ROW EXECUTE PROCEDURE moddatetime(ts)")
+    eng.trigger_clock = "2024-01-15 10:30:00"
+    eng.sql("INSERT INTO mtp_i DEFAULT VALUES")
+    assert _mtp_rows(eng, "SELECT k, CAST(ts AS STRING) FROM mtp_i") \
+        == [(None, "2024-01-15 10:30:00")]
+
+
+def _mtp_merge_case_when(eng):
+    eng.sql("CREATE TABLE mtp_j (k INT, v INT)")
+    eng.sql("INSERT INTO mtp_j VALUES (1, 1), (3, 3), (9, 9)")
+    eng.sql(
+        "MERGE INTO mtp_j t USING region s ON t.k = s.r_regionkey"
+        " WHEN MATCHED THEN UPDATE SET v = CASE WHEN s.r_regionkey > 2"
+        " THEN 100 ELSE 0 END"
+        " WHEN NOT MATCHED THEN INSERT VALUES (s.r_regionkey, -1)"
+    )
+    assert _mtp_rows(eng, "SELECT k, v FROM mtp_j") == [
+        (0, -1), (1, 0), (2, -1), (3, 100), (4, -1), (9, 9)]
+
+
+def _mtp_merge_from_managed_table(eng):
+    eng.sql("CREATE TABLE mtp_k (k INT, v INT)")
+    eng.sql("INSERT INTO mtp_k VALUES (1, 1), (2, 2)")
+    eng.sql("CREATE TABLE mtp_ks (k INT, v INT)")
+    eng.sql("INSERT INTO mtp_ks VALUES (2, 20), (5, 50)")
+    eng.sql(
+        "MERGE INTO mtp_k t USING mtp_ks s ON t.k = s.k"
+        " WHEN MATCHED THEN UPDATE SET v = s.v"
+        " WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)"
+    )
+    assert _mtp_rows(eng, "SELECT k, v FROM mtp_k") \
+        == [(1, 1), (2, 20), (5, 50)]
+
+
+def _mtp_upsert_literal(eng):
+    eng.sql("CREATE TABLE mtp_l (k BIGINT PRIMARY KEY, note STRING)")
+    eng.sql("INSERT INTO mtp_l VALUES (1, 'a')")
+    eng.sql("INSERT INTO mtp_l VALUES (1, 'b'), (2, 'c')"
+            " ON DUPLICATE KEY UPDATE note = 'keep k'")
+    assert _mtp_rows(eng, "SELECT k, note FROM mtp_l") \
+        == [(1, "keep k"), (2, "c")]
+
+
+_MODIFY_TABLE_CASES = {
+    f.__name__.removeprefix("_mtp_"): f for f in (
+        _mtp_update_literal_where,
+        _mtp_delete_literal_returning,
+        _mtp_insert_literal_returning,
+        _mtp_delete_using_literal,
+        _mtp_update_from_fires_trigger,
+        _mtp_insert_column_list_ignore_error,
+        _mtp_update_from_ignore_error,
+        _mtp_update_alias,
+        _mtp_default_values_fires_trigger,
+        _mtp_upsert_literal,
+        _mtp_merge_case_when,
+        _mtp_merge_from_managed_table,
+    )
+}
+
+
+@pytest.mark.parametrize("case", list(_MODIFY_TABLE_CASES))
+def test_modify_table_forms_agree(spark, tmp_path, case):
+    """Every INSERT, UPDATE and DELETE spelling (plain, column list,
+    DEFAULT VALUES, FROM, USING, an aliased target, the ignore_error
+    hint) goes through one clause split and one handler per verb:
+    keywords inside literals do not cut a clause, and triggers and
+    the hint apply to every form.  MERGE splits its WHEN list only at
+    WHEN [NOT] MATCHED and reads a managed source table."""
+    eng = Engine(spark, SF_CORRECT)
+    eng.managed_tables.root = str(tmp_path)
+    _MODIFY_TABLE_CASES[case](eng)
