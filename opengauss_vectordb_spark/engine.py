@@ -36,6 +36,7 @@ from __future__ import annotations
 import glob
 import os
 import re
+import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1001,7 +1002,7 @@ class Engine:
         # ivfflat.probes and hnsw.ef_search from here
         self._gucs: dict[str, int | str] = {}
         # contrib/pg_stat_statements analogue: normalized-statement
-        # call counters and the serving handler, queryable as
+        # call counters, serving handler and time, queryable as
         # SELECT * FROM pg_stat_statements
         self._stmt_stats: dict[str, dict] = {}
         # materialized views (commands/matview.cpp) + prepared
@@ -1118,6 +1119,7 @@ class Engine:
         (utility statements return a one-row status frame, as psql
         shows a command tag), and DROP INDEX deregisters it.  The
         statement table is described in the module docstring."""
+        t0 = time.perf_counter()
         for rewrite in REWRITES:
             query = rewrite(self, query)
         if not _EXPLAIN.match(query):
@@ -1127,19 +1129,22 @@ class Engine:
         if view is not None:
             return view
         stat = self._record_statement(query)
-        for name, handler in STATEMENTS:
-            out = handler(self, query)
+        try:
+            for name, handler in STATEMENTS:
+                out = handler(self, query)
+                if out is not None:
+                    stat["handler"] = name
+                    return out
+            out = self._maybe_route_ann_select(query)
             if out is not None:
-                stat["handler"] = name
-                return out
-        out = self._maybe_route_ann_select(query)
-        if out is not None:
-            stat["handler"] = "ann_route"
+                stat["handler"] = "ann_route"
+                return self._maybe_log_plan(out, query)
+            query = rewrite_call_sites(self, query)
+            out = self.spark.sql(translate(query))
+            stat["handler"] = "spark_sql"
             return self._maybe_log_plan(out, query)
-        query = rewrite_call_sites(self, query)
-        out = self.spark.sql(translate(query))
-        stat["handler"] = "spark_sql"
-        return self._maybe_log_plan(out, query)
+        finally:
+            stat["total_ms"] += (time.perf_counter() - t0) * 1000
 
     def _maybe_log_plan(self, df: DataFrame, query: str) -> DataFrame:
         """contrib/auto_explain analogue: capture the formatted physical
@@ -1166,25 +1171,32 @@ class Engine:
 
         qid = hashlib.md5(norm.encode()).hexdigest()[:16]
         ent = self._stmt_stats.setdefault(
-            qid, {"query": norm, "calls": 0, "handler": None}
+            qid, {"query": norm, "calls": 0, "handler": None,
+                  "total_ms": 0.0}
         )
         ent["calls"] += 1
         return ent
 
     def stat_statements(self) -> DataFrame:
         """The pg_stat_statements view: one row per normalized
-        statement with its call count and the statement-table row that
-        served its latest call (plans/rows/timing columns are
-        execution-side metrics Spark exposes through its own UI/metrics
-        system; the statement-normalization bookkeeping is what the
-        contrib module adds and what is reproduced here)."""
+        statement with its call count, the statement-table row that
+        served its latest call, and ``total_ms``/``mean_ms``: the wall
+        time Engine.sql spent serving it, over all calls and per call.
+        Engine.sql returns a SELECT's frame unexecuted, so a SELECT's
+        time is its frame build (rewrites, handler, Spark analysis),
+        not its execution; an eager statement (DDL, DML, SET) runs
+        inside Engine.sql and its time is the whole statement.  Plan
+        and row counts are execution-side metrics that Spark exposes
+        through its own UI and metrics system."""
         rows = [
-            (qid, e["query"], e["calls"], e["handler"])
+            (qid, e["query"], e["calls"], e["handler"], e["total_ms"],
+             e["total_ms"] / e["calls"])
             for qid, e in sorted(self._stmt_stats.items())
         ]
         return self.spark.createDataFrame(
             rows,
-            "queryid STRING, query STRING, calls BIGINT, handler STRING",
+            "queryid STRING, query STRING, calls BIGINT, handler STRING,"
+            " total_ms DOUBLE, mean_ms DOUBLE",
         )
 
     def _alter_index(self, name: str, new: str | None = None,

@@ -11,6 +11,15 @@ Semantics deltas handled (SURVEY.md §7 "hard positions"):
   * division by zero errors in PG, NULL in Spark → pg_checked_div keeps
     the Spark NULL but is explicit about it
   * vector distance operators under their datavec names
+
+How the macros are written:
+  * ``register_pg_functions`` creates them in ``_SQL_MACROS``' insertion
+    order, so a macro comes after every macro its body calls.
+  * Spark inlines a called macro's whole body at each call, so a macro
+    calls another at most once.  A macro that needs a value more than
+    once takes it as the parameter of a helper macro, which binds it
+    once: ``age`` is ``pg_age_text(pg_age_parts(a, b))``.
+    ``tests/test_pg_functions.py`` checks both rules.
 """
 
 from __future__ import annotations
@@ -321,8 +330,8 @@ _SQL_MACROS = {
 
 
 # sessions already carrying the function layer (strong refs: an id()
-# is never reused for a live session) — the 12 DDLs are static, so one
-# install per session suffices and each later Engine() skips ~0.6 s
+# is never reused for a live session) — the DDLs are static, so one
+# install per session suffices and each later Engine() skips them
 _REGISTERED: dict[int, SparkSession] = {}
 
 
@@ -332,65 +341,9 @@ def register_pg_functions(spark: SparkSession) -> None:
     if hit is not None and hit is spark:
         return
     _REGISTERED[id(spark)] = spark
-    # ordering matters: later macros call earlier ones
-    for name in (
-        "strpos",
-        "inner_product",
-        "l2_distance",
-        "cosine_distance",
-        "l1_distance",
-        "vector_dims",
-        "vector_norm",
-        "l2_normalize",
-        "subvector",
-        "binary_quantize",
-        "pg_div",
-        "pg_to_number",
-        "pg_typename",
-        "pg_sleep",
-        "hll_hash_integer",
-        "hll_hash_bigint",
-        "hll_hash_text",
-        "hll_empty",
-        "hll_add",
-        "hll_print",
-        "array_length",
-        "lengthb",
-        "nlssort",
-        "to_tsvector",
-        "array_upper",
-        "array_replace",
-        "pg_size_pretty",
-        "pg_advisory_lock",
-        "pg_advisory_lock_shared",
-        "pg_advisory_unlock",
-        "pg_advisory_unlock_shared",
-        "opengauss_version",
-        "clock_timestamp",
-        "statement_timestamp",
-        "transaction_timestamp",
-        "isfinite",
-        "string_to_array",
-        "array_to_string",
-        "to_hex",
-        "quote_ident",
-        "quote_literal",
-        "pg_age_parts",
-        "age",
-        "to_binary_float",
-        "to_binary_double",
-        "ts_lexize",
-        "quote_nullable",
-        "getdate",
-        "substrb",
-        "datalength",
-        "gs_encrypt_aes128",
-        "gs_decrypt_aes128",
-        "xml_escape",
-        "xml_escape_attr",
-        "xmlcomment",
-    ):
-        spark.sql(_SQL_MACROS[name])
+    # insertion order: every macro follows the macros it calls
+    for ddl in _SQL_MACROS.values():
+        spark.sql(ddl)
 
 
 # ---------------------------------------------------------------------------
@@ -835,42 +788,56 @@ def _age_parts_sql() -> str:
     )
 
 
-def _age_sql() -> str:
-    """age(a, b) → PG's postgres-style interval text over
-    pg_age_parts (interval_out: nonzero year/mon/day words, a
-    sign-prefixed zero-padded HH:MM:SS[.ffffff] time part shown when
-    nonzero or when everything is zero)."""
-    p = "pg_age_parts(a, b)"
+def _age_sql() -> tuple[str, str]:
+    """age(a, b) → PG's postgres-style interval text over pg_age_parts
+    (interval_out: nonzero year/mon/day words, a sign-prefixed
+    zero-padded HH:MM:SS[.ffffff] time part shown when nonzero or when
+    everything is zero).  Returns two macros: ``pg_age_text(p)``
+    renders the text from the field struct, which it reads 26 times,
+    and ``age`` is ``pg_age_text(pg_age_parts(a, b))``, NULL when
+    either argument is.  Spark binds a SQL function's argument once,
+    so age evaluates the borrow cascade once, as timestamp_age does in
+    one C pass.  Calling pg_age_parts(a, b) at each field read instead
+    would inline its whole body 26 times: seconds of analysis per
+    session, and a driver heap exhausted by a column argument."""
     def word(f, w):
-        v = f"{p}.{f}"
+        v = f"p.{f}"
         return (f"CASE WHEN {v} != 0 THEN concat({v}, ' {w}',"
                 f" CASE WHEN abs({v}) != 1 THEN 's' ELSE '' END)"
                 " END")
-    t_nonzero = (f"({p}.hours != 0 OR {p}.mins != 0 OR {p}.secs != 0.0)")
-    all_zero = (f"({p}.years = 0 AND {p}.mons = 0 AND {p}.days = 0"
+    t_nonzero = "(p.hours != 0 OR p.mins != 0 OR p.secs != 0.0)"
+    all_zero = ("(p.years = 0 AND p.mons = 0 AND p.days = 0"
                 f" AND NOT {t_nonzero})")
-    frac = f"CAST(round((abs({p}.secs) % 1.0) * 1000000) AS BIGINT)"
+    frac = "CAST(round((abs(p.secs) % 1.0) * 1000000) AS BIGINT)"
     secs_txt = (
-        f"concat(lpad(CAST(floor(abs({p}.secs)) AS BIGINT), 2, '0'),"
+        "concat(lpad(CAST(floor(abs(p.secs)) AS BIGINT), 2, '0'),"
         f" CASE WHEN {frac} > 0 THEN"
         f" concat('.', regexp_replace(lpad({frac}, 6, '0'),"
         " '0+$', '')) ELSE '' END)"
     )
     time_txt = (
-        f"concat(CASE WHEN {p}.hours < 0 OR {p}.mins < 0"
-        f" OR {p}.secs < 0 THEN '-' ELSE '' END,"
-        f" lpad(abs({p}.hours), 2, '0'), ':',"
-        f" lpad(abs({p}.mins), 2, '0'), ':', {secs_txt})"
+        "concat(CASE WHEN p.hours < 0 OR p.mins < 0"
+        " OR p.secs < 0 THEN '-' ELSE '' END,"
+        " lpad(abs(p.hours), 2, '0'), ':',"
+        f" lpad(abs(p.mins), 2, '0'), ':', {secs_txt})"
     )
-    return (
-        "CREATE OR REPLACE TEMPORARY FUNCTION age"
-        "(a TIMESTAMP, b TIMESTAMP) RETURNS STRING RETURN "
+    text = (
+        "CREATE OR REPLACE TEMPORARY FUNCTION pg_age_text"
+        "(p STRUCT<years: INT, mons: INT, days: INT, hours: INT,"
+        " mins: INT, secs: DOUBLE>) RETURNS STRING RETURN "
         "concat_ws(' ', "
         f"{word('years', 'year')}, {word('mons', 'mon')},"
         f" {word('days', 'day')},"
         f" CASE WHEN {t_nonzero} OR {all_zero} THEN {time_txt} END)"
     )
+    # strict, as PG's age: pg_age_parts(NULL, b) reads greatest and
+    # least of one value and would render '00:00:00'
+    age = ("CREATE OR REPLACE TEMPORARY FUNCTION age"
+           "(a TIMESTAMP, b TIMESTAMP) RETURNS STRING RETURN "
+           "CASE WHEN a IS NOT NULL AND b IS NOT NULL"
+           " THEN pg_age_text(pg_age_parts(a, b)) END")
+    return text, age
 
 
 _SQL_MACROS["pg_age_parts"] = _age_parts_sql()
-_SQL_MACROS["age"] = _age_sql()
+_SQL_MACROS["pg_age_text"], _SQL_MACROS["age"] = _age_sql()

@@ -395,7 +395,8 @@ def test_knn_default_probes_match_the_sql_text(spark, tmp_path):
 def test_pg_stat_statements_names_the_handler(spark, tmp_path):
     """pg_stat_statements' handler column names the statement-table row
     that served each statement, including the ANN router and the
-    spark.sql fall-through."""
+    spark.sql fall-through; total_ms and mean_ms carry the time
+    Engine.sql spent serving it."""
     eng = Engine(spark, SF_CORRECT)
     eng.managed_tables.root = str(tmp_path)
     eng.sql("CREATE TABLE hv (id bigserial PRIMARY KEY, embedding vector(3))")
@@ -404,8 +405,14 @@ def test_pg_stat_statements_names_the_handler(spark, tmp_path):
     eng.sql("SELECT id FROM hv ORDER BY embedding <-> '[1,2,3]' LIMIT 1"
             ).collect()
     eng.sql("SELECT count(*) AS n FROM orders").collect()
-    handler = {r.query: r.handler for r in
-               eng.sql("SELECT * FROM pg_stat_statements").collect()}
+    for k in (7, 9):  # one normalized statement, two calls
+        eng.sql(f"SELECT count(*) AS n FROM orders WHERE o_orderkey > {k}")
+    stats = eng.sql("SELECT * FROM pg_stat_statements").collect()
+    handler = {r.query: r.handler for r in stats}
+    for r in stats:
+        assert r.total_ms >= 0 and r.mean_ms >= 0, r
+        assert r.mean_ms == pytest.approx(r.total_ms / r.calls), r
+    assert {r.calls for r in stats} == {1, 2}
     assert handler["CREATE TABLE hv (id bigserial PRIMARY KEY,"
                    " embedding vector(?))"] == "tables"
     assert handler["SET hnsw.ef_search TO ?"] == "guc_set"

@@ -15,7 +15,9 @@ contracts that let them skip their metadata jobs:
   its shards' graphs from the worker's cache instead of shuffling the
   graph table;
 * building a routed search's frame takes a few dozen py4j round trips,
-  not hundreds.
+  not hundreds;
+* starting an Engine on a fresh session runs one job per catalog table
+  and leaves one user function per SQL macro.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opengauss_vectordb_spark.engine import Engine
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _job_infos(spark, fn):
@@ -223,6 +225,21 @@ def test_routed_searches_build_in_few_py4j_round_trips(spark, eng):
         assert len(df.collect()) == 10
         if index:
             eng.sql(f"DROP INDEX {index}")
+
+
+def test_engine_startup_runs_one_job_per_catalog_table(spark):
+    """Engine() on a fresh session runs one Spark job per catalog table
+    (its parquet schema inference) and none for the SQL macros, whose
+    CREATE FUNCTION only analyses the body, and leaves exactly the
+    macros as the session's user functions."""
+    from opengauss_vectordb_spark import catalog
+    from opengauss_vectordb_spark.functions.pg_compat import _SQL_MACROS
+
+    session = spark.newSession()
+    _, n = _jobs(session, lambda: Engine(session, SF_CORRECT))
+    assert n == len(catalog.TABLES)
+    funcs = session.sql("SHOW USER FUNCTIONS").collect()
+    assert sorted(r[0] for r in funcs) == sorted(_SQL_MACROS)
 
 
 def test_exhaustive_filtered_hnsw_reads_shard_rankings(spark, tmp_path):

@@ -340,3 +340,150 @@ def test_sql_vector_functions_are_the_kernels(spark):
     op = eng.sql("SELECT v <=> '[1,2,3]' AS d FROM (SELECT array(0D, 0D, 0D)"
                  " AS v) t").collect()
     assert op[0].d is not None and math.isnan(op[0].d)
+
+
+def _macro_calls():
+    """{macro: {other macro it calls: number of calls}} over the
+    bodies of _SQL_MACROS (the text after RETURN)."""
+    import re
+
+    from opengauss_vectordb_spark.functions.pg_compat import _SQL_MACROS
+
+    calls = {}
+    for name, ddl in _SQL_MACROS.items():
+        body = re.split(r"\bRETURN\b", ddl, maxsplit=1)[1]
+        counts = {m: len(re.findall(rf"(?<![\w.]){m}\s*\(", body))
+                  for m in _SQL_MACROS if m != name}
+        calls[name] = {m: n for m, n in counts.items() if n}
+    return calls
+
+
+def test_macro_calls_are_registered_earlier_and_bound_once():
+    """register_pg_functions creates the macros in _SQL_MACROS' order,
+    so each macro's callees must come first.  A callee called more
+    than once has its whole body inlined at every call: age once
+    spelled pg_age_parts(a, b) 26 times, which cost seconds of
+    analysis per session and the driver heap on a column argument.  A
+    macro that needs a value more than once passes it to a helper
+    macro's parameter instead."""
+    calls = _macro_calls()
+    order = {name: i for i, name in enumerate(calls)}
+    for name, callees in calls.items():
+        for callee, n in callees.items():
+            assert order[callee] < order[name], (name, callee)
+            assert n == 1, (name, callee, n)
+
+
+def _inline_age_ddl(name):
+    """age as it was spelled before pg_age_text: pg_age_text's body
+    with every field read of its parameter replaced by a call of
+    pg_age_parts(a, b)."""
+    import re
+
+    from opengauss_vectordb_spark.functions.pg_compat import _SQL_MACROS
+
+    body = re.split(r"\bRETURN\b", _SQL_MACROS["pg_age_text"], maxsplit=1)[1]
+    return (f"CREATE OR REPLACE TEMPORARY FUNCTION {name}"
+            "(a TIMESTAMP, b TIMESTAMP) RETURNS STRING RETURN"
+            + re.sub(r"\bp\.", "pg_age_parts(a, b).", body))
+
+
+def test_age_binds_parts_once_and_matches_inline_spelling(spark):
+    """age(a, b) = pg_age_text(pg_age_parts(a, b)) renders what the
+    inline spelling rendered on the borrow cases, NULL for a NULL
+    argument, and runs over a
+    column of 2,000 timestamps on the default driver heap, where the
+    inline spelling's count(DISTINCT ...) dies at 20 rows
+    (test_inline_age_exhausts_driver_heap)."""
+    from opengauss_vectordb_spark.engine import Engine
+
+    eng = Engine(spark, SF_CORRECT)
+    spark.sql(_inline_age_ddl("age_inline"))
+    pairs = [
+        ("2001-04-10", "1957-06-13"),
+        ("2001-03-01", "2001-01-30"),
+        ("2001-01-01", "2001-01-01"),
+        ("2001-01-01 10:20:30.5", "2001-01-01"),
+        ("1957-06-13", "2001-04-10"),
+        ("2001-01-02", "2000-12-31 23:00:00"),
+        ("2001-03-31", "2001-02-28"),  # month ends
+        ("2001-05-31", "2001-04-30 12:00:00"),
+        ("2004-03-01", "2004-02-29"),  # leap day
+        ("2005-02-28", "2004-02-29"),
+        ("2001-01-01 00:00:01.25", "2001-01-01 00:00:00.75"),
+        ("2001-01-01 00:00:00", "2001-01-01 00:00:01.5"),  # negative secs
+        (None, "2001-01-01"),
+    ]
+    values = ", ".join(
+        "(" + ", ".join("NULL" if t is None else f"TIMESTAMP '{t}'"
+                        for t in pair) + ")"
+        for pair in pairs)
+    got = eng.sql(
+        "SELECT age(a, b) AS new, age_inline(a, b) AS old"
+        f" FROM VALUES {values} AS v(a, b)").collect()
+    assert len(got) == len(pairs)
+    for pair, r in zip(pairs[:-1], got):
+        assert r.new == r.old, (pair, r)
+    # PG's age is strict; the inline spelling rendered a NULL argument
+    # as a zero interval
+    assert (got[-1].new, got[-1].old) == (None, "00:00:00")
+    assert got[8].new == "1 day" and got[11].new == "-00:00:01.5"
+
+    gen = ("SELECT timestamp_micros(946684800000000"
+           " + pmod(id * 982451653, 1000000000) * 1000003) AS ts,"
+           " timestamp_micros(946684800000000"
+           " + pmod(id * 373587883, 1000000000) * 1000003) AS ts2"
+           " FROM range(2000)")
+    rows = eng.sql(
+        "SELECT ts, ts2, age(ts, TIMESTAMP '2020-01-01 00:00:00') AS lit,"
+        f" age(ts, ts2) AS col FROM ({gen}) g").collect()
+    assert len(rows) == 2000
+    distinct = eng.sql(
+        "SELECT count(DISTINCT age(ts, TIMESTAMP '2020-01-01 00:00:00')),"
+        f" count(DISTINCT age(ts, ts2)) FROM ({gen}) g").first()
+    assert tuple(distinct) == (len({r.lit for r in rows}),
+                               len({r.col for r in rows}))
+    assert all(r.lit is not None and r.col is not None for r in rows)
+    for r in rows[:3]:
+        assert r.lit == eng.sql(
+            f"SELECT age(TIMESTAMP '{r.ts}',"
+            " TIMESTAMP '2020-01-01 00:00:00')").first()[0]
+        assert r.col == eng.sql(
+            f"SELECT age(TIMESTAMP '{r.ts}', TIMESTAMP '{r.ts2}')"
+        ).first()[0]
+
+
+_INLINE_AGE_CHILD = """
+import sys
+from opengauss_vectordb_spark.functions.pg_compat import _SQL_MACROS
+from opengauss_vectordb_spark.session import get_spark
+
+spark = get_spark(app_name="inline-age", shuffle_partitions=2)
+spark.sql(_SQL_MACROS["pg_age_parts"])
+spark.sql(sys.argv[1])
+spark.sql("SELECT count(DISTINCT age_inline(timestamp_seconds(id * 86413),"
+          " TIMESTAMP '2020-01-01 00:00:00')) FROM range(20)").collect()
+"""
+
+
+@pytest.mark.slow
+def test_inline_age_exhausts_driver_heap(tmp_path):
+    """count(DISTINCT ...) of the inline spelling of age over a 20-row
+    column exhausts the default 1 GB driver heap.  It runs in a child process so that the
+    OutOfMemoryError stops the child's SparkContext, not this
+    session's."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items()
+           if k != "SPARK_DRIVER_MEMORY"}
+    env["PYTHONPATH"] = repo
+    env["SPARK_GRAFT_CPUS"] = "2"
+    child = subprocess.run(
+        [sys.executable, "-c", _INLINE_AGE_CHILD,
+         _inline_age_ddl("age_inline")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert child.returncode != 0
+    assert "OutOfMemoryError" in child.stdout + child.stderr
