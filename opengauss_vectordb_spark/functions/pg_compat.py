@@ -778,13 +778,16 @@ def _age_parts_sql() -> str:
         "CREATE OR REPLACE TEMPORARY FUNCTION pg_age_parts"
         "(a TIMESTAMP, b TIMESTAMP) RETURNS "
         "STRUCT<years: INT, mons: INT, days: INT, hours: INT,"
-        " mins: INT, secs: DOUBLE> RETURN named_struct("
+        " mins: INT, secs: DOUBLE> RETURN"
+        # strict: greatest and least skip a NULL, so without the guard
+        # pg_age_parts(NULL, b) would difference b with itself
+        " CASE WHEN a IS NOT NULL AND b IS NOT NULL THEN named_struct("
         f"'years', CAST({sign} * {y1} AS INT),"
         f" 'mons', CAST({sign} * {mo1} AS INT),"
         f" 'days', CAST({sign} * {d2} AS INT),"
         f" 'hours', CAST({sign} * {h1} AS INT),"
         f" 'mins', CAST({sign} * {mi1} AS INT),"
-        f" 'secs', CAST({sign} AS DOUBLE) * {s1})"
+        f" 'secs', CAST({sign} AS DOUBLE) * {s1}) END"
     )
 
 
@@ -830,8 +833,7 @@ def _age_sql() -> tuple[str, str]:
         f" {word('days', 'day')},"
         f" CASE WHEN {t_nonzero} OR {all_zero} THEN {time_txt} END)"
     )
-    # strict, as PG's age: pg_age_parts(NULL, b) reads greatest and
-    # least of one value and would render '00:00:00'
+    # strict, as PG's age: pg_age_text renders a NULL struct as ''
     age = ("CREATE OR REPLACE TEMPORARY FUNCTION age"
            "(a TIMESTAMP, b TIMESTAMP) RETURNS STRING RETURN "
            "CASE WHEN a IS NOT NULL AND b IS NOT NULL"

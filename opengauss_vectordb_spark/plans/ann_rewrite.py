@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.index_lifecycle import AccessMethod
+from ..vector.distance import query_distance
 from ..vector.exact import knn as exact_knn
 from ..vector.hnsw import DEFAULT_EF_SEARCH, HnswIndex
 from ..vector.ivf import IvfIndex
@@ -71,7 +72,7 @@ class AnnCatalog:
         metric: str = "l2",
         probes: int | None = None,
         id_col: str | None = None,
-        ef_search: int | None = None,
+        ef_search: int | None = DEFAULT_EF_SEARCH,
         where=None,
     ) -> DataFrame:
         """The ORDER BY distance LIMIT k entry point, with an optional
@@ -79,11 +80,16 @@ class AnnCatalog:
         metric matches serves it — mirroring how the reference's
         planner only uses an index whose opclass matches the ORDER BY
         operator — and the exact scan otherwise.  IVF applies ``where``
-        inside its pruned scan (probes default to lists // 10); HNSW
+        inside its pruned scan (probes default to lists // 10).  HNSW
         fans the beam out per shard (probes ↔ ef_search is the knob
-        split, as in datavec's GUCs) and joins ids back to ``df`` so the
-        routed result carries the same columns as the IVF/exact paths,
-        post-filtering through ``search_filtered`` under a ``where``."""
+        split, as in datavec's GUCs; ``ef_search=None`` is the
+        unbounded, exact beam) and picks candidate ids by graph
+        distance: the k nearest, or under ``where`` the over-fetched
+        candidates the filter prunes (at an unbounded beam, the exact
+        filtered top k of ``search_filtered``).  One join-back then
+        reads the candidates' rows from ``df`` and ranks them by the
+        metric's distance kernel, so the routed result carries the
+        same columns and distances as the IVF and exact paths."""
         hit = self.entry(table_name, vec_col, metric)
         if hit is None:
             base = df if where is None else df.filter(where)
@@ -98,21 +104,25 @@ class AnnCatalog:
             )
         if id_col is None:
             raise ValueError("HNSW routing needs id_col to join back")
-        ef = ef_search if ef_search is not None else DEFAULT_EF_SEARCH
+        if where is None:
+            hits = idx.search(spark, qvec, k=k, ef_search=ef_search)
+        elif ef_search is None:
+            hits = idx.search_filtered(
+                spark, df, id_col, where, qvec, k=k, ef_search=None,
+            ).select(F.col(id_col).alias("id"))
+        else:
+            # the over-fetched ids are collected, so the filter runs in
+            # the join-back's scan: no broadcast of the hits
+            hits = idx.filter_candidates(spark, qvec, k, ef_search)
+        ids = [r.id for r in hits.collect()]
+        rows = df.filter(f"`{id_col}` IN ({','.join(map(str, ids))})"
+                         if ids else "FALSE")
         if where is not None:
-            return idx.search_filtered(spark, df, id_col, where, qvec, k=k,
-                                       ef_search=ef)
-        ids = [r.id for r in idx.search(spark, qvec, k=k,
-                                        ef_search=ef).collect()]
-        from ..vector.distance import DISTANCES, as_double, dlit_sql
-
-        dist = DISTANCES[metric](as_double(vec_col), dlit_sql(qvec))
+            rows = rows.filter(where)
         # the limit makes the sort a TakeOrderedAndProject (one
         # job); a bare orderBy plans a range-partitioned full sort
         return (
-            df.filter(f"`{id_col}` IN ({','.join(map(str, ids))})"
-                      if ids else "FALSE")
-            .withColumn("distance", dist)
+            rows.withColumn("distance", query_distance(metric, vec_col, qvec))
             .orderBy(F.col("distance").asc(), F.col(id_col).asc())
             .limit(k)
         )

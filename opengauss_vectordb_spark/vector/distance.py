@@ -25,9 +25,17 @@ Python-lambda API (``F.aggregate(F.zip_with(...))``), one kernel cost
 about 50 ms of round trips to build; the parsed text is the same
 Catalyst tree. Operands appear only outside the kernels' lambda
 bodies, whose variables are ``_x``, ``_y``, ``_acc`` and ``_v``.
+
+``METRICS`` decides, per metric, how a column meets a query vector:
+the column's operand cast (double for the float metrics, bigint words
+for hamming), the query's literal and the kernel.  ``query_distance``
+spells it for the exact scan, the IVF scan and the HNSW join-back.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -37,6 +45,12 @@ def as_double(col: str) -> str:
     """SQL text of column ``col`` cast to array<double>, so accumulation
     is double IEEE."""
     return f"CAST(`{col}` AS ARRAY<DOUBLE>)"
+
+
+def as_bigint(col: str) -> str:
+    """SQL text of column ``col`` cast to array<bigint>: packed bit
+    words stay integers, as the XOR kernels need."""
+    return f"CAST(`{col}` AS ARRAY<BIGINT>)"
 
 
 def dlit_array(values) -> Column:
@@ -193,9 +207,34 @@ l1_distance = _column(l1_distance_sql)
 hamming_distance = _column(hamming_distance_sql)
 jaccard_distance = _column(jaccard_distance_sql)
 
-DISTANCES = {
-    "l2": l2_distance,
-    "ip": neg_inner_product,
-    "cosine": cosine_distance,
-    "l1": l1_distance,
+
+class Metric(NamedTuple):
+    """How a column is compared with a query vector under one metric:
+    the column's operand cast, the query's literal and the kernel."""
+
+    operand: Callable[[str], str]
+    literal: Callable[[Sequence], str]
+    kernel: Callable[[str, str], str]
+
+
+METRICS = {
+    "l2": Metric(as_double, dlit_sql, l2_distance_sql),
+    "ip": Metric(as_double, dlit_sql, neg_inner_product_sql),
+    "cosine": Metric(as_double, dlit_sql, cosine_distance_sql),
+    "l1": Metric(as_double, dlit_sql, l1_distance_sql),
+    # bit(n) as packed words (bit_hamming_ops): integer XOR-popcount
+    "hamming": Metric(as_bigint, llit_sql, hamming_distance_sql),
 }
+
+
+def query_distance_sql(metric: str, col: str, qvec: Sequence) -> str:
+    """SQL text of ``metric``'s distance from column ``col`` to the
+    query vector ``qvec``."""
+    m = METRICS[metric]
+    return m.kernel(m.operand(col), m.literal(qvec))
+
+
+query_distance = _column(query_distance_sql)
+
+# each metric's kernel over two operands given as SQL text
+DISTANCES = {name: _column(m.kernel) for name, m in METRICS.items()}

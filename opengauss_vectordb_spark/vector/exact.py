@@ -17,7 +17,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .distance import DISTANCES, as_double, dlit_sql
+from .distance import DISTANCES, as_double, query_distance
 
 
 def knn(
@@ -33,11 +33,12 @@ def knn(
 
     NULL vectors are excluded, matching the reference's index behavior
     (`test/sql/hnsw_vector.sql:10-17`: NULLs never surface in ANN results).
-    Ties are broken by ``id_col`` for determinism.  The filter and the
-    distance are each one parsed SQL text, so the frame builds in a
-    handful of py4j round trips.
+    Ties are broken by ``id_col`` for determinism.  ``metric`` is any
+    of ``distance.METRICS``, hamming over packed bit words included.
+    The filter and the distance are each one parsed SQL text, so the
+    frame builds in a handful of py4j round trips.
     """
-    dist = DISTANCES[metric](as_double(vec_col), dlit_sql(qvec))
+    dist = query_distance(metric, vec_col, qvec)
     out = df.filter(f"`{vec_col}` IS NOT NULL").withColumn(dist_alias, dist)
     # nulls_last guards the ordering even if a distance degenerates to
     # NULL (e.g. null array elements): default ASC is NULLS FIRST, which

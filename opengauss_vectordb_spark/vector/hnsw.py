@@ -69,6 +69,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .distance import METRICS
+
 DEFAULT_M = 16  # hnsw.h:33
 MAX_M = 100  # hnsw.h:34
 DEFAULT_EF_CONSTRUCTION = 64  # hnsw.h:35
@@ -85,8 +87,6 @@ MAX_INDEX_DIM = 2000  # hnsw.h:12
 # applied to BOTH insert (better wiring) and search: 0.905 → 0.995 on
 # the same corpus. ef=1 recovers the paper's exact descent.
 DEFAULT_DESCENT_EF = 8
-
-_METRICS = ("l2", "ip", "cosine", "l1", "hamming")
 
 GRAPH_SCHEMA = (
     "shard INT, id BIGINT, vec ARRAY<DOUBLE>, level INT, "
@@ -450,8 +450,8 @@ class HnswIndex:
     def __init__(self, path: str, metric: str = "l2", m: int = DEFAULT_M,
                  ef_construction: int = DEFAULT_EF_CONSTRUCTION,
                  shards: int = 8):
-        if metric not in _METRICS:
-            raise ValueError(f"metric must be one of {_METRICS}")
+        if metric not in METRICS:
+            raise ValueError(f"metric must be one of {tuple(METRICS)}")
         if not 2 <= m <= MAX_M:
             raise ValueError(f"m must be in [2, {MAX_M}] (hnsw.h:34)")
         self.path = path
@@ -732,6 +732,23 @@ class HnswIndex:
         shutil.rmtree(staging, ignore_errors=True)
         self._graph_changed()
 
+    def filter_candidates(self, spark: SparkSession, qvec: Sequence[float],
+                          k: int, ef_search: int | None,
+                          overfetch: int = 4) -> DataFrame:
+        """(id, distance) of the hits a post-filter keeps ``k`` of,
+        ranked by the graph: the nearest k·overfetch at a beam at least
+        that wide, or under ``ef_search=None`` every shard's FULL
+        ranking, so the post-filter can never run out of candidates —
+        exact at any selectivity (gate configuration, not a scale
+        pattern).  The full rankings are read as they come: no global
+        sort of every node's distance (range-partitioning Exchange plus
+        Sort) runs before the filter."""
+        if ef_search is None:
+            return self._shard_hits(spark, qvec, 2**31 - 1, None)
+        fetch_k = max(k * overfetch, k)
+        return self.search(spark, qvec, k=fetch_k,
+                           ef_search=max(ef_search, fetch_k))
+
     def search_filtered(self, spark: SparkSession, base: DataFrame,
                         id_col: str, where, qvec: Sequence[float],
                         k: int = 10,
@@ -748,18 +765,7 @@ class HnswIndex:
         configuration); at bounded ef, raise ``overfetch``/``ef_search``
         for selective predicates, exactly as the reference's docs
         instruct."""
-        if ef_search is None:
-            # exhaustive: every shard returns its FULL ranking, so the
-            # post-filter can never run out of candidates — exact at any
-            # selectivity (gate configuration, not a scale pattern).
-            # The rankings are read as they come: the final cut below
-            # orders the survivors, so no global sort of every node's
-            # distance (range-partitioning Exchange plus Sort) runs first
-            hits = self._shard_hits(spark, qvec, 2**31 - 1, None)
-        else:
-            fetch_k = max(k * overfetch, k)
-            hits = self.search(spark, qvec, k=fetch_k,
-                               ef_search=max(ef_search, fetch_k))
+        hits = self.filter_candidates(spark, qvec, k, ef_search, overfetch)
         hits = hits.withColumnRenamed("id", "_hit_id")
         joined = base.join(
             hits, base[id_col] == F.col("_hit_id")

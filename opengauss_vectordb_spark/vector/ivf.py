@@ -46,14 +46,13 @@ from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from .distance import (
     DISTANCES,
+    METRICS,
     as_double,
-    dlit_sql,
     dot_product_sql,
-    hamming_distance,
     hamming_distance_sql,
     l2_norm_sql,
     l2_squared_sql,
-    llit_sql,
+    query_distance,
 )
 
 DEFAULT_LISTS = 100  # ivfflat.h:43
@@ -134,7 +133,7 @@ def _centroid_dists(vec: str, centroids: np.ndarray, metric: str) -> str:
     layout) and integer-valued centroid rows: distance = popcount(XOR)
     per word, a pure JVM integer kernel (bit_hamming_ops,
     bitutils.cpp)."""
-    row_sql = llit_sql if metric == "hamming" else dlit_sql
+    row_sql = METRICS[metric].literal
     cents = "array(" + ",".join(row_sql(c) for c in centroids) + ")"
     if metric == "hamming":
         dist = hamming_distance_sql(vec, "_c")
@@ -148,15 +147,6 @@ def _centroid_dists(vec: str, centroids: np.ndarray, metric: str) -> str:
         # euclidean space and ranks lists by the search metric)
         dist = l2_squared_sql(vec, "_c")
     return f"transform({cents}, _c -> {dist})"
-
-
-def label_vector(vec_col: str, metric: str) -> str:
-    """SQL text of the column list assignment labels: hamming operates
-    on the packed bigint words directly (a double cast would break the
-    XOR kernel); float metrics accumulate in double."""
-    if metric == "hamming":
-        return f"CAST(`{vec_col}` AS ARRAY<BIGINT>)"
-    return as_double(vec_col)
 
 
 def assign_lists_expr(
@@ -312,10 +302,8 @@ class IvfIndex:
     def __init__(self, path: str, metric: str = "l2", lists: int = DEFAULT_LISTS):
         if not 1 <= lists <= MAX_LISTS:
             raise ValueError(f"lists must be in [1, {MAX_LISTS}]")
-        if metric not in DISTANCES and metric != "hamming":
-            raise ValueError(
-                f"metric must be one of {sorted(DISTANCES) + ['hamming']}"
-            )
+        if metric not in METRICS:
+            raise ValueError(f"metric must be one of {sorted(METRICS)}")
         self.path = path
         self.metric = metric
         self.lists = lists
@@ -382,7 +370,7 @@ class IvfIndex:
 
         labeled = clean.withColumn(
             "list_id",
-            F.explode(assign_lists_expr(label_vector(vec_col, metric),
+            F.explode(assign_lists_expr(METRICS[metric].operand(vec_col),
                                         centroids, metric, spill_epsilon)),
         )
         (
@@ -473,11 +461,7 @@ class IvfIndex:
         ).drop("list_id")
         if where is not None:
             pruned = pruned.filter(where)
-        vec = label_vector(vec_col, self.metric)
-        if self.metric == "hamming":
-            d = hamming_distance(vec, llit_sql(qvec))
-        else:
-            d = DISTANCES[self.metric](vec, dlit_sql(qvec))
+        d = query_distance(self.metric, vec_col, qvec)
         order = [F.col("distance").asc_nulls_last()]
         if id_col:
             order.append(F.col(id_col).asc())

@@ -16,7 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ivf import IvfIndex, assign_lists_expr, label_vector
+from .distance import METRICS
+from .ivf import IvfIndex, assign_lists_expr
 
 
 def _invalidate(index: IvfIndex) -> None:
@@ -48,7 +49,7 @@ def append_to_index(
         "list_id",
         F.explode(
             assign_lists_expr(
-                label_vector(vec_col, index.metric), cents, index.metric,
+                METRICS[index.metric].operand(vec_col), cents, index.metric,
                 spill_epsilon,
             )
         ),
@@ -149,7 +150,7 @@ def rebuild(
     sits in two lists; the refit reads each row once, from the list of
     its nearest current centroid."""
     nearest = assign_lists_expr(
-        label_vector(vec_col, index.metric), index.centroids(spark),
+        METRICS[index.metric].operand(vec_col), index.centroids(spark),
         index.metric, 1.0,
     )[0]
     current = (

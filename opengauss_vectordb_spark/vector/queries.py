@@ -7,11 +7,45 @@ DuckDB oracle spelled as the identical arithmetic so results hash-match.
 Distances are computed on doubles with the same fold order in both
 engines; displayed distances are rounded to 4 decimals while the ORDER BY
 ranks on the exact value.
+
+The index gates are rows of one runner, ``_index_gate``: each builds
+an IVF or HNSW index and searches it through ``AnnCatalog.topk``, the
+path the SQL text routes, at the exhaustive operating point (probes =
+lists, an unbounded beam), where it must equal the exact scan.  A row
+gives only what differs:
+
+=================================  =======  =======  ==========  ==================  =================
+row                                am       metric   column      where / maintenance  output
+=================================  =======  =======  ==========  ==================  =================
+ivf_search_exhaustive              ivfflat  l2       embedding   (cached layout)     distance DOUBLE
+ivf_filtered_full                  ivfflat  l2       embedding   label % 5 = 2       distance DOUBLE
+ivf_append_then_search             ivfflat  l2       embedding   append + compact    distance DOUBLE
+ann_route_topk                     ivfflat  l2       embedding   (cached layout)     distance DOUBLE
+ivf_search_cosine_exhaustive       ivfflat  cosine   embedding                       distance DOUBLE
+ivf_search_ip_exhaustive           ivfflat  ip       embedding                       distance DOUBLE
+ivf_delete_then_search             ivfflat  l2       embedding   vacuum_delete       distance DOUBLE
+ivf_search_halfvec_exhaustive      ivfflat  l2       halfvec                         distance DOUBLE
+ivf_search_bit_exhaustive          ivfflat  hamming  bit words                       hamming BIGINT
+hnsw_search_exhaustive             hnsw     l2       embedding                       distance DOUBLE
+hnsw_search_l1_exhaustive          hnsw     l1       embedding                       distance DOUBLE
+hnsw_search_bit_exhaustive         hnsw     hamming  bit words                       hamming BIGINT
+hnsw_search_halfvec_exhaustive     hnsw     l2       halfvec                         distance DOUBLE
+hnsw_search_sparsevec_exhaustive   hnsw     ip       sparsified                      distance DOUBLE
+hnsw_filtered_search               hnsw     l2       embedding   label = 3           distance DOUBLE
+hnsw_delete_then_search            hnsw     l2       embedding   vacuum_delete       distance DOUBLE
+=================================  =======  =======  ==========  ==================  =================
+
+A new index gate is one more row.  The batch-join gates
+(``ivf_knn_join_full``, ``hnsw_knn_join_exhaustive``) and the property
+gates (``ivf_search_probed``, ``knn_pq_rerank``) search other paths.
 """
 
 from __future__ import annotations
 
+import contextlib
 import math
+import shutil
+import tempfile
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -70,19 +104,33 @@ def _spark_qlit():
     return dlit_array(QUERY_VEC)
 
 
-def _knn_query(name: str, dist_col_fn, sql_dist: str):
-    @query(
-        name,
-        f"""
+def _knn_oracle(sql_dist: str, pred: str | None = None) -> str:
+    """DuckDB text of the exact top 10 by ``sql_dist``, a distance over
+    ``e`` (the embedding as doubles) and ``q`` (QUERY_VEC), among the
+    rows with an embedding and, when given, ``pred``."""
+    extra = f" AND {pred}" if pred else ""
+    return f"""
         WITH scored AS (
           SELECT vec_id, label, {sql_dist} AS d
           FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-                WHERE embedding IS NOT NULL)
+                WHERE embedding IS NOT NULL{extra})
         )
         SELECT vec_id, label, ROUND(d, 4) AS distance
         FROM scored ORDER BY d, vec_id LIMIT 10
-        """,
-    )
+        """
+
+
+# the oracle spellings of <-> / <=> / <#> / <+>
+_SQL_L2 = _sql_sq_l2("e", "q")
+_SQL_COSINE = (
+    f"1.0 - {_sql_dot('e', 'q')} / ({_sql_norm('e')} * {_sql_norm('q')})"
+)
+_SQL_NEG_IP = f"-({_sql_dot('e', 'q')})"
+_SQL_L1 = _sql_l1("e", "q")
+
+
+def _knn_query(name: str, dist_col_fn, sql_dist: str):
+    @query(name, _knn_oracle(sql_dist))
     def _q(spark, sf_dir):
         emb = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
         d = dist_col_fn(_SPARK_E, _SPARK_Q)
@@ -98,16 +146,12 @@ def _knn_query(name: str, dist_col_fn, sql_dist: str):
 
 
 # <-> / <=> / <#> / <+> — the four datavec float-vector distances
-knn_l2 = _knn_query("knn_l2", l2_distance, _sql_sq_l2("e", "q"))
-knn_cosine = _knn_query(
-    "knn_cosine",
-    cosine_distance,
-    f"1.0 - {_sql_dot('e', 'q')} / ({_sql_norm('e')} * {_sql_norm('q')})",
-)
+knn_l2 = _knn_query("knn_l2", l2_distance, _SQL_L2)
+knn_cosine = _knn_query("knn_cosine", cosine_distance, _SQL_COSINE)
 knn_inner_product = _knn_query(
-    "knn_inner_product", neg_inner_product, f"-({_sql_dot('e', 'q')})"
+    "knn_inner_product", neg_inner_product, _SQL_NEG_IP
 )
-knn_l1 = _knn_query("knn_l1", l1_distance, _sql_l1("e", "q"))
+knn_l1 = _knn_query("knn_l1", l1_distance, _SQL_L1)
 
 
 # --------------------------------------------------------------------------
@@ -286,9 +330,7 @@ _SQL_WORDS = (
 )
 
 
-@query(
-    "knn_hamming_binary",
-    f"""
+_HAMMING_ORACLE = f"""
     WITH q AS (SELECT {_SQL_WORDS.format(v=_SQL_Q)} AS qw),
          v AS (SELECT vec_id, label, {_SQL_WORDS.format(v=_E)} AS ew
                FROM embeddings WHERE embedding IS NOT NULL)
@@ -297,8 +339,15 @@ _SQL_WORDS = (
                 i -> bit_count(xor(ew[i], qw[i])))) AS BIGINT) AS hamming
     FROM v, q
     ORDER BY hamming, vec_id LIMIT 10
-    """,
-)
+    """
+# QUERY_VEC's binary_quantize words: bit j of word w is element 32w+j > 0
+_QUERY_WORDS = [
+    sum(1 << j for j in range(32) if QUERY_VEC[32 * w + j] > 0)
+    for w in range(DIM // 32)
+]
+
+
+@query("knn_hamming_binary", _HAMMING_ORACLE)
 def knn_hamming_binary(spark, sf_dir):
     from .distance import hamming_distance
     from .types import binary_quantize_sql
@@ -447,21 +496,21 @@ def _sql_fp16(x: str = "x") -> str:
     )
 
 
-@query(
-    "knn_l2_halfvec",
-    f"""
+_HALFVEC_ORACLE = f"""
     WITH h AS (
       SELECT vec_id, label,
              list_transform({_E}, x -> {_sql_fp16('x')}) AS e,
              {_SQL_Q} AS q
       FROM embeddings WHERE embedding IS NOT NULL
     ), scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d FROM h
+      SELECT vec_id, label, {_SQL_L2} AS d FROM h
     )
     SELECT vec_id, label, ROUND(d, 4) AS distance
     FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
-)
+    """
+
+
+@query("knn_l2_halfvec", _HALFVEC_ORACLE)
 def knn_l2_halfvec(spark, sf_dir):
     from .types import halfvec_quantize
 
@@ -580,26 +629,116 @@ def _ivf_index(spark, sf_dir):
     return idx
 
 
-@query(
-    "ivf_search_exhaustive",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+@contextlib.contextmanager
+def _scratch_dir(spark, prefix: str):
+    """A fresh local directory for an index a gate builds, removed when
+    the gate returns: the gate must materialise its rows first."""
+    tmp = tempfile.mkdtemp(prefix=prefix, dir=_local_scratch(spark))
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+# the indexed columns the gates project from embeddings
+def _halfvec():
+    from .types import halfvec_quantize
+
+    return halfvec_quantize(F.col("embedding"))
+
+
+def _bit_words():
+    from .types import binary_quantize_words
+
+    return binary_quantize_words(_SPARK_E)
+
+
+def _sparsified():
+    return F.expr(f"transform({_SPARK_E}, _x -> CASE WHEN abs(_x) >"
+                  f" {_SPARSE_T}D THEN _x ELSE 0.0D END)")
+
+
+def _index_gate(name: str, oracle: str, am: str, metric: str = "l2", *,
+                doc: str, col: str = "embedding", project=None,
+                where: str | None = None, hold_out: str | None = None,
+                delete: str | None = None,
+                out: tuple[str, str] = ("distance", "DOUBLE"),
+                qvec=QUERY_VEC, cached: bool = False):
+    """Register one index gate: build an ``am`` index (``ivfflat`` or
+    ``hnsw``) of ``metric`` over ``col`` of embeddings' rows, then
+    search it through ``AnnCatalog.topk``, the path the SQL text
+    routes, at the exhaustive operating point (probes = lists, an
+    unbounded beam), where the index must return the exact top 10.
+
+    ``project`` makes ``col`` from embeddings (a function returning
+    the Column); ``where`` is a SQL filter on the search; ``hold_out``
+    is the SQL predicate of rows left out of the build, then appended
+    and compacted; ``delete`` is the SQL predicate, over the index
+    layout, of rows vacuum-deleted after the build (the IVF data rows;
+    the HNSW graph's ``id``).  The result is vec_id, label and the
+    rounded distance as ``out`` (name, type).  A ``cached`` row searches
+    the shared ``_ivf_index`` layout and stays lazy; any other row
+    builds into a scratch directory and returns its collected rows."""
+    out_col, out_type = out
+
+    def search(spark, idx, rows):
+        from ..plans.ann_rewrite import AnnCatalog
+
+        catalog = AnnCatalog()
+        catalog.register("embeddings", col, idx)
+        if catalog.entry("embeddings", col, metric) is None:
+            raise RuntimeError(f"{name}: the index does not serve {metric}")
+        got = catalog.topk(
+            spark, "embeddings", rows, col, qvec, k=10, metric=metric,
+            probes=_IVF_LISTS, id_col="vec_id", ef_search=None,
+            where=F.expr(where) if where else None,
+        )
+        return got.select(
+            "vec_id", "label", F.round("distance", 4).alias(out_col)
+        ).orderBy(out_col, "vec_id")
+
+    def gate(spark, sf_dir):
+        from .hnsw import HnswIndex
+        from .ivf import IvfIndex
+        from .maintenance import append_to_index, compact, vacuum_delete
+
+        emb = table(spark, sf_dir, "embeddings")
+        if cached:
+            return search(spark, _ivf_index(spark, sf_dir), emb)
+        rows = emb.filter("embedding IS NOT NULL")
+        if project is not None:
+            rows = rows.select("vec_id", "label", project().alias(col))
+        with _scratch_dir(spark, f"{name}_") as path:
+            built = rows.filter(f"NOT ({hold_out})") if hold_out else rows
+            if am == "hnsw":
+                idx = HnswIndex.build(built, col, path, id_col="vec_id",
+                                      metric=metric, shards=4)
+            else:
+                idx = IvfIndex.build(built, col, path, metric=metric,
+                                     lists=_IVF_LISTS, max_iter=30)
+            if hold_out:
+                append_to_index(spark, idx, rows.filter(hold_out), col)
+                compact(spark, idx)
+            if delete and am == "hnsw":
+                idx.vacuum_delete(spark, F.expr(delete))
+            elif delete:
+                vacuum_delete(spark, idx, F.expr(delete))
+            return spark.createDataFrame(
+                search(spark, idx, rows).collect(),
+                f"vec_id BIGINT, label INT, {out_col} {out_type}",
+            )
+
+    gate.__name__, gate.__doc__ = name, doc
+    return query(name, oracle)(gate)
+
+
+ivf_search_exhaustive = _index_gate(
+    "ivf_search_exhaustive", _knn_oracle(_SQL_L2), "ivfflat", cached=True,
+    doc="""The IVF index at probes = lists, where the probed search is
+    exhaustive and must EQUAL the exact scan (ivfscan.cpp degenerate
+    case; the t/003 probes=lists recall=1.0 row of BASELINE.md), so it
+    shares the exact-knn oracle.""",
 )
-def ivf_search_exhaustive(spark, sf_dir):
-    idx = _ivf_index(spark, sf_dir)
-    out = idx.search(
-        spark, QUERY_VEC, "embedding", k=10, probes=_IVF_LISTS, id_col="vec_id"
-    )
-    return out.select(
-        "vec_id", "label", F.round("distance", 4).alias("distance")
-    ).orderBy("distance", "vec_id")
 
 
 @query(
@@ -796,18 +935,7 @@ def vector_cast_roundtrip(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query(
-    "knn_l2_filtered",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL AND label = 3)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
-)
+@query("knn_l2_filtered", _knn_oracle(_SQL_L2, "label = 3"))
 def knn_l2_filtered(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.col("label") == 3)
@@ -938,7 +1066,7 @@ def knn_binary_rerank(spark, sf_dir):
     )
 
 
-@query(
+ivf_filtered_full = _index_gate(
     "ivf_filtered_full",
     f"""
     WITH t AS (
@@ -946,31 +1074,18 @@ def knn_binary_rerank(spark, sf_dir):
       WHERE embedding IS NOT NULL AND label % 5 = 2
     )
     SELECT vec_id, label,
-           ROUND({_sql_sq_l2("e", "q")}, 4) AS distance
-    FROM t ORDER BY {_sql_sq_l2("e", "q")}, vec_id LIMIT 10
+           ROUND({_SQL_L2}, 4) AS distance
+    FROM t ORDER BY {_SQL_L2}, vec_id LIMIT 10
     """,
-)
-def ivf_filtered_full(spark, sf_dir):
-    """Filtered ANN through the IVF index path
+    "ivfflat", where="label % 5 = 2", cached=True,
+    doc="""Filtered ANN through the IVF index path
     (t/009_ivfflat_filtering.pl) at probes = lists, where the probed
     search is exact by construction: the label predicate is applied
     inside the pruned scan before the top-k heap (IvfIndex.search
     `where`), and the DuckDB brute-force filtered top-k oracle checks
     the whole route. At production probes the same plan reads
-    probes/lists of the corpus, filter included."""
-    idx = _ivf_index(spark, sf_dir)
-    out = idx.search(
-        spark,
-        QUERY_VEC,
-        "embedding",
-        k=10,
-        probes=_IVF_LISTS,
-        id_col="vec_id",
-        where=F.col("label") % 5 == 2,
-    )
-    return out.select(
-        "vec_id", "label", F.round("distance", 4).alias("distance")
-    ).orderBy("distance", "vec_id")
+    probes/lists of the corpus, filter included.""",
+)
 
 
 _PQ_BOOKS: dict = {}
@@ -1173,20 +1288,10 @@ def embedding_norm_outliers(spark, sf_dir):
     )
 
 
-@query(
-    "ivf_append_then_search",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
-)
-def ivf_append_then_search(spark, sf_dir):
-    """Online index maintenance, gated end-to-end (ivfinsert/ivfvacuum
+ivf_append_then_search = _index_gate(
+    "ivf_append_then_search", _knn_oracle(_SQL_L2), "ivfflat",
+    hold_out="vec_id % 5 = 0",
+    doc="""Online index maintenance, gated end-to-end (ivfinsert/ivfvacuum
     analogue — SURVEY §2.8 maintenance row): build the IVF index on 80%
     of the corpus, APPEND the held-out 20% through the insert path
     (labels new vectors with the EXISTING centroids, appends partition
@@ -1194,55 +1299,13 @@ def ivf_append_then_search(spark, sf_dir):
     per-append small files, then search at probes=lists. At full probes
     the probed search is exact by construction, so the DuckDB flat-scan
     top-10 over the WHOLE table hash-checks the entire maintenance
-    path: a lost or double-counted appended row changes the result."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-    from .maintenance import append_to_index, compact
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    tmp = tempfile.mkdtemp(prefix="ivf_append_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            base, "embedding", tmp, metric="l2", lists=_IVF_LISTS, max_iter=30
-        )
-        append_to_index(spark, idx, delta, "embedding")
-        compact(spark, idx)
-        out = idx.search(
-            spark, QUERY_VEC, "embedding", k=10, probes=_IVF_LISTS,
-            id_col="vec_id",
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.round("distance", 4).alias("distance")
-            )
-            .orderBy("distance", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, distance DOUBLE",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "ann_route_topk",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    path: a lost or double-counted appended row changes the result.""",
 )
-def ann_route_topk(spark, sf_dir):
-    """Query-shape routing gated end-to-end (SURVEY §2.8 routing row;
+
+
+ann_route_topk = _index_gate(
+    "ann_route_topk", _knn_oracle(_SQL_L2), "ivfflat", cached=True,
+    doc="""Query-shape routing gated end-to-end (SURVEY §2.8 routing row;
     datavec--0.7.2.sql:353-403 FOR ORDER BY opclasses + ivfflat.cpp:72
     cost gate): an AnnCatalog with an index registered on
     (embeddings, embedding) must route the ORDER BY distance LIMIT k
@@ -1251,142 +1314,34 @@ def ann_route_topk(spark, sf_dir):
     routed search is exact, so the flat-scan oracle hash-checks the
     routed plan's values. The metric-mismatch guard (an L2 index must
     not serve a cosine ORDER BY) is pinned in
-    tests/test_plan_quality.py::test_ann_catalog_routes_to_ivf."""
-    from ..plans.ann_rewrite import AnnCatalog
-
-    idx = _ivf_index(spark, sf_dir)
-    catalog = AnnCatalog()
-    catalog.register("embeddings", "embedding", idx)
-    if catalog.lookup("embeddings", "embedding") is None:
-        raise RuntimeError("ANN catalog failed to register the index")
-    emb = table(spark, sf_dir, "embeddings")
-    out = catalog.topk(
-        spark,
-        "embeddings",
-        emb,
-        "embedding",
-        QUERY_VEC,
-        k=10,
-        metric="l2",
-        probes=_IVF_LISTS,
-        id_col="vec_id",
-    )
-    return out.select(
-        "vec_id", "label", F.round("distance", 4).alias("distance")
-    ).orderBy("distance", "vec_id")
-
-
-@query(
-    "ivf_search_cosine_exhaustive",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label,
-             1.0 - {_sql_dot('e', 'q')} / ({_sql_norm('e')} * {_sql_norm('q')})
-               AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    tests/test_plan_quality.py::test_ann_catalog_routes_to_ivf.""",
 )
-def ivf_search_cosine_exhaustive(spark, sf_dir):
-    """Cosine-metric IVF search gated end-to-end (datavec's
+
+
+ivf_search_cosine_exhaustive = _index_gate(
+    "ivf_search_cosine_exhaustive", _knn_oracle(_SQL_COSINE), "ivfflat",
+    "cosine",
+    doc="""Cosine-metric IVF search gated end-to-end (datavec's
     vector_cosine_ops opclass — the second of the three FOR ORDER BY
     operator classes; L2 and the probed path are gated separately).
     The cosine index normalizes its training sample and ranks probe
     centroids by cosine; at probes=lists the search is exact, so the
-    brute-force cosine oracle hash-checks metric plumbing end to end."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="ivf_cos_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            emb, "embedding", tmp, metric="cosine", lists=_IVF_LISTS,
-            max_iter=30,
-        )
-        out = idx.search(
-            spark, QUERY_VEC, "embedding", k=10, probes=_IVF_LISTS,
-            id_col="vec_id",
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.round("distance", 4).alias("distance")
-            )
-            .orderBy("distance", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, distance DOUBLE",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "ivf_search_ip_exhaustive",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, -({_sql_dot('e', 'q')}) AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    brute-force cosine oracle hash-checks metric plumbing end to end.""",
 )
-def ivf_search_ip_exhaustive(spark, sf_dir):
-    """Inner-product IVF search gated end-to-end — the third and last
+
+
+ivf_search_ip_exhaustive = _index_gate(
+    "ivf_search_ip_exhaustive", _knn_oracle(_SQL_NEG_IP), "ivfflat", "ip",
+    doc="""Inner-product IVF search gated end-to-end — the third and last
     FOR ORDER BY opclass (vector_ip_ops; negative inner product so
     larger dot products rank first, the datavec index-order
-    convention). Exact at probes=lists; brute-force -dot oracle."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="ivf_ip_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            emb, "embedding", tmp, metric="ip", lists=_IVF_LISTS, max_iter=30
-        )
-        out = idx.search(
-            spark, QUERY_VEC, "embedding", k=10, probes=_IVF_LISTS,
-            id_col="vec_id",
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.round("distance", 4).alias("distance")
-            )
-            .orderBy("distance", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, distance DOUBLE",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_search_exhaustive",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    convention). Exact at probes=lists; brute-force -dot oracle.""",
 )
-def hnsw_search_exhaustive(spark, sf_dir):
-    """HNSW as a real index structure, gated end-to-end (hnswbuild.cpp /
+
+
+hnsw_search_exhaustive = _index_gate(
+    "hnsw_search_exhaustive", _knn_oracle(_SQL_L2), "hnsw",
+    doc="""HNSW as a real index structure, gated end-to-end (hnswbuild.cpp /
     hnswutils.cpp:724,958,1207 / hnswscan.cpp — the second of datavec's
     two ANN access methods; until round 4 this engine covered the
     capability with exact+IVF only, SURVEY §2.8 substitute position).
@@ -1399,110 +1354,28 @@ def hnsw_search_exhaustive(spark, sf_dir):
     construction and the flat-scan oracle hash-checks build + storage +
     descent + merge end to end; ef_search=40 recall bars at the
     reference's t/012 thresholds live in tests/test_hnsw_recall.py.
-    Displayed distances recompute through the JVM fold kernel so the
-    rounding matches the oracle's list_sum fold order."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="hnsw_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            emb, "embedding", tmp, id_col="vec_id", metric="l2", shards=4
-        )
-        ids = [r.id for r in idx.search(spark, QUERY_VEC, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    l2_distance(_SPARK_E, _SPARK_Q),
-                    4,
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_search_l1_exhaustive",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_l1('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    Displayed distances recompute through the JVM fold kernel (topk's
+    join-back) so the rounding matches the oracle's list_sum fold
+    order.""",
 )
-def hnsw_search_l1_exhaustive(spark, sf_dir):
-    """The vector_l1_ops opclass through HNSW (datavec--0.7.2.sql:
+
+
+hnsw_search_l1_exhaustive = _index_gate(
+    "hnsw_search_l1_exhaustive", _knn_oracle(_SQL_L1), "hnsw", "l1",
+    doc="""The vector_l1_ops opclass through HNSW (datavec--0.7.2.sql:
     362-403): L1 is an HNSW-ONLY FOR ORDER BY class in the reference —
     IVFFlat declares l2/ip/cosine but not L1 — so this query is the
     capability a reference user loses if the engine only ships IVF.
     Same exact-by-construction configuration as hnsw_search_exhaustive
     (unbounded beam over connectivity-repaired shards), Manhattan
-    metric end to end; brute-force L1 oracle."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="hnsw_l1_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            emb, "embedding", tmp, id_col="vec_id", metric="l1", shards=4
-        )
-        ids = [r.id for r in idx.search(spark, QUERY_VEC, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    l1_distance(_SPARK_E, _SPARK_Q),
-                    4,
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "ivf_delete_then_search",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL AND vec_id % 7 <> 0)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    metric end to end; brute-force L1 oracle.""",
 )
-def ivf_delete_then_search(spark, sf_dir):
-    """Vacuum / bulk-delete parity, gated end-to-end (`ivfvacuum.cpp`
+
+
+ivf_delete_then_search = _index_gate(
+    "ivf_delete_then_search", _knn_oracle(_SQL_L2, "vec_id % 7 <> 0"),
+    "ivfflat", delete="vec_id % 7 = 0",
+    doc="""Vacuum / bulk-delete parity, gated end-to-end (`ivfvacuum.cpp`
     IvfflatBulkDeleteScan, `hnswvacuum.cpp` — with append this
     completes the index maintenance triple append/vacuum/rebuild):
     build the IVF index on the full corpus, vacuum-delete every
@@ -1510,36 +1383,8 @@ def ivf_delete_then_search(spark, sf_dir):
     then search at probes=lists. Exact by construction at full probes,
     so the oracle — a flat scan EXCLUDING the deleted rows — detects a
     ghost (deleted row still served) or an over-delete equally: either
-    changes the top-10 hash."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-    from .maintenance import vacuum_delete
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="ivf_vacuum_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            emb, "embedding", tmp, metric="l2", lists=_IVF_LISTS, max_iter=30
-        )
-        vacuum_delete(spark, idx, F.col("vec_id") % 7 == 0)
-        out = idx.search(
-            spark, QUERY_VEC, "embedding", k=10, probes=_IVF_LISTS,
-            id_col="vec_id",
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.round("distance", 4).alias("distance")
-            )
-            .orderBy("distance", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, distance DOUBLE",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    changes the top-10 hash.""",
+)
 
 
 # three deterministic query vectors for the HNSW batch join gate
@@ -1584,16 +1429,12 @@ def hnsw_knn_join_exhaustive(spark, sf_dir):
     window oracle hash-checks the batch path end to end. Displayed
     distances recompute through the JVM fold kernel to match the
     oracle's list_sum fold order."""
-    import shutil
-    import tempfile
-
     from .hnsw import HnswIndex
 
     emb = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    tmp = tempfile.mkdtemp(prefix="hnsw_join_gate_", dir=_local_scratch(spark))
-    try:
+    with _scratch_dir(spark, "hnsw_join_gate_") as tmp:
         idx = HnswIndex.build(
             emb, "embedding", tmp, id_col="vec_id", metric="l2", shards=4
         )
@@ -1623,27 +1464,12 @@ def hnsw_knn_join_exhaustive(spark, sf_dir):
         return spark.createDataFrame(
             out.collect(), "qid INT, id BIGINT, distance DOUBLE, rn INT"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-@query(
-    "ivf_search_halfvec_exhaustive",
-    f"""
-    WITH h AS (
-      SELECT vec_id, label,
-             list_transform({_E}, x -> {_sql_fp16('x')}) AS e,
-             {_SQL_Q} AS q
-      FROM embeddings WHERE embedding IS NOT NULL
-    ), scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d FROM h
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
-)
-def ivf_search_halfvec_exhaustive(spark, sf_dir):
-    """IVFFlat over halfvec — the halfvec_l2_ops index opclass
+ivf_search_halfvec_exhaustive = _index_gate(
+    "ivf_search_halfvec_exhaustive", _HALFVEC_ORACLE, "ivfflat",
+    col="emb_h", project=_halfvec,
+    doc="""IVFFlat over halfvec — the halfvec_l2_ops index opclass
     (`test/sql/ivfflat_halfvec.sql`; halfvec.h:55-70): the index is
     built on the fp16 ROUND-TRIPPED vectors (storage semantics: what
     the reference stores in halfvec pages is what k-means clusters and
@@ -1652,55 +1478,15 @@ def ivf_search_halfvec_exhaustive(spark, sf_dir):
     half rounding arithmetically (the knn_l2_halfvec quantizer,
     verified bit-identical to numpy float16). An engine that indexed
     the fp32 originals instead would rank by the wrong values and
-    hash-mismatch."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-    from .types import halfvec_quantize
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    halved = emb.select(
-        "vec_id", "label", halfvec_quantize(F.col("embedding")).alias("emb_h")
-    )
-    tmp = tempfile.mkdtemp(prefix="ivf_half_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            halved, "emb_h", tmp, metric="l2", lists=_IVF_LISTS, max_iter=30
-        )
-        out = idx.search(
-            spark, QUERY_VEC, "emb_h", k=10, probes=_IVF_LISTS,
-            id_col="vec_id",
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.round("distance", 4).alias("distance")
-            )
-            .orderBy("distance", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, distance DOUBLE",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_search_bit_exhaustive",
-    f"""
-    WITH q AS (SELECT {_SQL_WORDS.format(v=_SQL_Q)} AS qw),
-         v AS (SELECT vec_id, label, {_SQL_WORDS.format(v=_E)} AS ew
-               FROM embeddings WHERE embedding IS NOT NULL)
-    SELECT vec_id, label,
-           CAST(list_sum(list_transform(range(1, 3),
-                i -> bit_count(xor(ew[i], qw[i])))) AS BIGINT) AS hamming
-    FROM v, q
-    ORDER BY hamming, vec_id LIMIT 10
-    """,
+    hash-mismatch.""",
 )
-def hnsw_search_bit_exhaustive(spark, sf_dir):
-    """HNSW over bit vectors — the bit_hamming_ops opclass
+
+
+hnsw_search_bit_exhaustive = _index_gate(
+    "hnsw_search_bit_exhaustive", _HAMMING_ORACLE, "hnsw", "hamming",
+    col="bits", project=_bit_words, out=("hamming", "BIGINT"),
+    qvec=_QUERY_WORDS,
+    doc="""HNSW over bit vectors — the bit_hamming_ops opclass
     (`test/sql/hnsw_bit.sql`; bitvec.cpp / datavec--0.7.2.sql:720-735),
     completing the index×type matrix: the graph is built directly on
     the binary_quantize'd word representation with XOR-popcount as the
@@ -1708,107 +1494,23 @@ def hnsw_search_bit_exhaustive(spark, sf_dir):
     oracle ranks by the same packed-word popcount arithmetic. Hamming
     ties are dense (integer distances over 64 bits), so the (distance,
     vec_id) total order both engines share is what makes the top-10
-    hash-stable."""
-    import shutil
-    import tempfile
-
-    from .distance import hamming_distance, llit_sql
-    from .hnsw import HnswIndex
-    from .types import binary_quantize_words
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    bits = emb.select(
-        "vec_id", "label", binary_quantize_words(_SPARK_E).alias("bits"),
-    )
-    qwords_df = spark.range(1).select(
-        binary_quantize_words(_SPARK_Q).alias("qw")
-    )
-    qwords = [int(w) for w in qwords_df.first().qw]
-    tmp = tempfile.mkdtemp(prefix="hnsw_bit_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            bits, "bits", tmp, id_col="vec_id", metric="hamming", shards=4
-        )
-        ids = [r.id for r in idx.search(spark, qwords, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            bits.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                hamming_distance("bits", llit_sql(qwords)).alias("hamming"),
-            )
-            .orderBy("hamming", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, hamming BIGINT"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_search_halfvec_exhaustive",
-    f"""
-    WITH h AS (
-      SELECT vec_id, label,
-             list_transform({_E}, x -> {_sql_fp16('x')}) AS e,
-             {_SQL_Q} AS q
-      FROM embeddings WHERE embedding IS NOT NULL
-    ), scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d FROM h
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    hash-stable.""",
 )
-def hnsw_search_halfvec_exhaustive(spark, sf_dir):
-    """HNSW over halfvec — halfvec_l2_ops through the graph access
+
+
+hnsw_search_halfvec_exhaustive = _index_gate(
+    "hnsw_search_halfvec_exhaustive", _HALFVEC_ORACLE, "hnsw",
+    col="emb_h", project=_halfvec,
+    doc="""HNSW over halfvec — halfvec_l2_ops through the graph access
     method (`test/sql/hnsw_halfvec.sql`): graph built on the fp16
     round-tripped vectors, exhaustive beam ⇒ exact over the quantized
     values, oracle replays IEEE-754 half rounding (the knn_l2_halfvec
     quantizer). With bit (hamming) and the four float opclasses this
-    completes HNSW's indexable-type matrix."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-    from .types import halfvec_quantize
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    halved = emb.select(
-        "vec_id", "label", halfvec_quantize(F.col("embedding")).alias("emb_h")
-    )
-    tmp = tempfile.mkdtemp(prefix="hnsw_half_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            halved, "emb_h", tmp, id_col="vec_id", metric="l2", shards=4
-        )
-        ids = [r.id for r in idx.search(spark, QUERY_VEC, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            halved.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    l2_distance(as_double("emb_h"), _SPARK_Q), 4
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    completes HNSW's indexable-type matrix.""",
+)
 
 
-@query(
+hnsw_search_sparsevec_exhaustive = _index_gate(
     "hnsw_search_sparsevec_exhaustive",
     f"""
     WITH s AS (
@@ -1818,14 +1520,13 @@ def hnsw_search_halfvec_exhaustive(spark, sf_dir):
              {_SQL_Q} AS q
       FROM embeddings WHERE embedding IS NOT NULL
     ), scored AS (
-      SELECT vec_id, label, -({_sql_dot('e', 'q')}) AS d FROM s
+      SELECT vec_id, label, {_SQL_NEG_IP} AS d FROM s
     )
     SELECT vec_id, label, ROUND(d, 4) AS distance
     FROM scored ORDER BY d, vec_id LIMIT 10
     """,
-)
-def hnsw_search_sparsevec_exhaustive(spark, sf_dir):
-    """HNSW over sparsevec — sparsevec_ip_ops through the graph access
+    "hnsw", "ip", col="emb_s", project=_sparsified,
+    doc="""HNSW over sparsevec — sparsevec_ip_ops through the graph access
     method (`test/sql/hnsw_sparsevec.sql`; sparsevec.h:44-55): vectors
     are threshold-sparsified (the sparsevec_dot_topk representation),
     the graph ranks by negative inner product over the sparse values,
@@ -1833,120 +1534,28 @@ def hnsw_search_sparsevec_exhaustive(spark, sf_dir):
     dense form (64-d here; a production sparse corpus would carry
     indices+values pairs into the shard task instead — same plumbing,
     different codec), while the ORACLE computes on the sparsified
-    values directly, so densification errors would hash-mismatch."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    e = F.expr(_SPARK_E)
-    sparse = F.transform(
-        e, lambda x: F.when(F.abs(x) > _SPARSE_T, x).otherwise(F.lit(0.0))
-    )
-    sp = emb.select("vec_id", "label", sparse.alias("emb_s"))
-    tmp = tempfile.mkdtemp(prefix="hnsw_sparse_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            sp, "emb_s", tmp, id_col="vec_id", metric="ip", shards=4
-        )
-        ids = [r.id for r in idx.search(spark, QUERY_VEC, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            sp.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    neg_inner_product("emb_s", _SPARK_Q), 4
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "ivf_search_bit_exhaustive",
-    f"""
-    WITH q AS (SELECT {_SQL_WORDS.format(v=_SQL_Q)} AS qw),
-         v AS (SELECT vec_id, label, {_SQL_WORDS.format(v=_E)} AS ew
-               FROM embeddings WHERE embedding IS NOT NULL)
-    SELECT vec_id, label,
-           CAST(list_sum(list_transform(range(1, 3),
-                i -> bit_count(xor(ew[i], qw[i])))) AS BIGINT) AS hamming
-    FROM v, q
-    ORDER BY hamming, vec_id LIMIT 10
-    """,
+    values directly, so densification errors would hash-mismatch.""",
 )
-def ivf_search_bit_exhaustive(spark, sf_dir):
-    """IVFFlat over bit vectors — bit_hamming_ops through the inverted
+
+
+ivf_search_bit_exhaustive = _index_gate(
+    "ivf_search_bit_exhaustive", _HAMMING_ORACLE, "ivfflat", "hamming",
+    col="bits", project=_bit_words, out=("hamming", "BIGINT"),
+    qvec=_QUERY_WORDS,
+    doc="""IVFFlat over bit vectors — bit_hamming_ops through the inverted
     lists (`test/sql/ivfflat_bit.sql`), the LAST cell of the reference's
     index×type matrix: k-means runs in the relaxed 0/1-per-bit space,
     centers binarize back to packed words (each list centroid is itself
     a bit vector), and labeling/probe-ranking/scan are pure XOR-popcount
     integer kernels — no float cast anywhere in the path. Exact at
-    probes=lists; the packed-word popcount oracle hash-checks it."""
-    import shutil
-    import tempfile
-
-    from .ivf import IvfIndex
-    from .types import binary_quantize_words
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    bits = emb.select(
-        "vec_id", "label", binary_quantize_words(_SPARK_E).alias("bits"),
-    )
-    qwords = [
-        int(w)
-        for w in spark.range(1)
-        .select(binary_quantize_words(_SPARK_Q).alias("qw"))
-        .first()
-        .qw
-    ]
-    tmp = tempfile.mkdtemp(prefix="ivf_bit_gate_", dir=_local_scratch(spark))
-    try:
-        idx = IvfIndex.build(
-            bits, "bits", tmp, metric="hamming", lists=_IVF_LISTS,
-            max_iter=30,
-        )
-        out = idx.search(
-            spark, qwords, "bits", k=10, probes=_IVF_LISTS, id_col="vec_id"
-        )
-        return spark.createDataFrame(
-            out.select(
-                "vec_id", "label", F.col("distance").alias("hamming")
-            )
-            .orderBy("hamming", "vec_id")
-            .collect(),
-            "vec_id BIGINT, label INT, hamming BIGINT",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_filtered_search",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL AND label = 3)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    probes=lists; the packed-word popcount oracle hash-checks it.""",
 )
-def hnsw_filtered_search(spark, sf_dir):
-    """Filtered ANN through HNSW (t/017_hnsw_filtering.pl): the 0.7.x
+
+
+hnsw_filtered_search = _index_gate(
+    "hnsw_filtered_search", _knn_oracle(_SQL_L2, "label = 3"), "hnsw",
+    where="label = 3",
+    doc="""Filtered ANN through HNSW (t/017_hnsw_filtering.pl): the 0.7.x
     reference post-filters beam candidates against the quals and tells
     users to raise ef_search for selective predicates;
     HnswIndex.search_filtered is the same contract (over-fetch → join
@@ -1954,98 +1563,22 @@ def hnsw_filtered_search(spark, sf_dir):
     where every shard returns its full ranking and the post-filter is
     exact at ANY selectivity (label = 3 keeps ~12% of rows) — the
     WHERE-inside flat-scan oracle hash-checks it. Bounded-ef recall
-    behavior is pinned in tests/test_hnsw_recall.py."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="hnsw_filt_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            emb, "embedding", tmp, id_col="vec_id", metric="l2", shards=4
-        )
-        got = idx.search_filtered(
-            spark, emb, "vec_id", F.col("label") == 3, QUERY_VEC, k=10,
-            ef_search=None,
-        )
-        ids = [r.vec_id for r in got.select("vec_id").collect()]
-        out = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    l2_distance(_SPARK_E, _SPARK_Q),
-                    4,
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@query(
-    "hnsw_delete_then_search",
-    f"""
-    WITH scored AS (
-      SELECT vec_id, label, {_sql_sq_l2('e', 'q')} AS d
-      FROM (SELECT vec_id, label, {_E} AS e, {_SQL_Q} AS q FROM embeddings
-            WHERE embedding IS NOT NULL AND vec_id % 7 <> 0)
-    )
-    SELECT vec_id, label, ROUND(d, 4) AS distance
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """,
+    behavior is pinned in tests/test_hnsw_recall.py.""",
 )
-def hnsw_delete_then_search(spark, sf_dir):
-    """HNSW vacuum gated end-to-end (hnswvacuum.cpp: dead tuples leave
+
+
+hnsw_delete_then_search = _index_gate(
+    "hnsw_delete_then_search", _knn_oracle(_SQL_L2, "vec_id % 7 <> 0"),
+    "hnsw", delete="id % 7 = 0",
+    doc="""HNSW vacuum gated end-to-end (hnswvacuum.cpp: dead tuples leave
     every neighbor list, the entry moves if it died, connectivity is
     repaired): build on the full corpus, vacuum-delete vec_id % 7 == 0
     through the per-shard unlink pass, search with the unbounded beam.
     Exact by construction over the survivors, so the flat-scan-minus-
     deleted oracle catches ghosts, over-deletes, AND dangling-edge
     breakage (a node reachable only through a deleted neighbor would
-    vanish from the exhaustive beam and change the top-10)."""
-    import shutil
-    import tempfile
-
-    from .hnsw import HnswIndex
-
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="hnsw_vac_gate_", dir=_local_scratch(spark))
-    try:
-        idx = HnswIndex.build(
-            emb, "embedding", tmp, id_col="vec_id", metric="l2", shards=4
-        )
-        idx.vacuum_delete(spark, F.col("id") % 7 == 0)
-        ids = [r.id for r in idx.search(spark, QUERY_VEC, k=10,
-                                        ef_search=None).collect()]
-        out = (
-            emb.filter(F.col("vec_id").isin(ids))
-            .select(
-                "vec_id",
-                "label",
-                F.round(
-                    l2_distance(_SPARK_E, _SPARK_Q),
-                    4,
-                ).alias("distance"),
-            )
-            .orderBy("distance", "vec_id")
-        )
-        return spark.createDataFrame(
-            out.collect(), "vec_id BIGINT, label INT, distance DOUBLE"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    vanish from the exhaustive beam and change the top-10).""",
+)
 
 
 # Four deterministic query "token" vectors for the late-interaction

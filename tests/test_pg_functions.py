@@ -424,9 +424,9 @@ def test_age_binds_parts_once_and_matches_inline_spelling(spark):
     assert len(got) == len(pairs)
     for pair, r in zip(pairs[:-1], got):
         assert r.new == r.old, (pair, r)
-    # PG's age is strict; the inline spelling rendered a NULL argument
-    # as a zero interval
-    assert (got[-1].new, got[-1].old) == (None, "00:00:00")
+    # PG's age is strict; the inline spelling has no guard of its own,
+    # so it renders pg_age_parts' NULL struct as the empty text
+    assert (got[-1].new, got[-1].old) == (None, "")
     assert got[8].new == "1 day" and got[11].new == "-00:00:01.5"
 
     gen = ("SELECT timestamp_micros(946684800000000"
@@ -451,6 +451,21 @@ def test_age_binds_parts_once_and_matches_inline_spelling(spark):
         assert r.col == eng.sql(
             f"SELECT age(TIMESTAMP '{r.ts}', TIMESTAMP '{r.ts2}')"
         ).first()[0]
+
+
+def test_pg_age_parts_is_null_on_a_null_argument(spark):
+    """pg_age_parts is strict: greatest and least skip a NULL, so
+    unguarded it would difference the other argument with itself."""
+    from opengauss_vectordb_spark.functions.pg_compat import _SQL_MACROS
+
+    spark.sql(_SQL_MACROS["pg_age_parts"])
+    got = spark.sql(
+        "SELECT pg_age_parts(NULL, TIMESTAMP '2001-01-01') IS NULL,"
+        " pg_age_parts(TIMESTAMP '2001-01-01', NULL) IS NULL,"
+        " pg_age_parts(TIMESTAMP '2001-04-10', TIMESTAMP '1957-06-13')"
+    ).first()
+    assert (got[0], got[1]) == (True, True)
+    assert (got[2].years, got[2].mons, got[2].days) == (43, 9, 27)
 
 
 _INLINE_AGE_CHILD = """
